@@ -20,16 +20,9 @@ plan never knew which vocab it ran over):
 - ``E_START_ID``/``E_END_ID``/``PAD_ID``: the marker/pad ids downstream
   operators compare against (now 30522/30523/0).
 - ``tokenize_pieces(text)``: the token-string stream (tests/debugging).
-
-``_PIECE`` is NOT the WordPiece surface — it is the char-offset word
-scanner the numpy encoder backend uses to map mention spans to token
-positions (scoring/scorer.py doc_encoder_logits); WordPiece itself does
-not preserve offsets.
 """
 
 from __future__ import annotations
-
-import re
 
 from .wordpiece import (  # noqa: F401  (re-exported seam surface)
     ADDED_TOKENS,
@@ -45,9 +38,6 @@ from .wordpiece import (  # noqa: F401  (re-exported seam surface)
     tokenize,
     wordpiece,
 )
-
-# word/number/punct scanner with char offsets (encoder-backend span maps)
-_PIECE = re.compile(r"\[/?e\]|[a-z0-9]+|[^\sa-z0-9]")
 
 
 def piece_to_id(piece: str) -> int:

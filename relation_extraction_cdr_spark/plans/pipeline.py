@@ -105,7 +105,18 @@ def score_candidates(
 
     ``fused``: evidence+featurize+score in one Arrow round-trip (the
     production path); fused=False runs the three modular stages.
+
+    ``scorer_backend``: "stub" (the trigger-rule decision) or "electra"
+    (the same decision, the exact-architecture document-level encoder
+    modulating the probability tail).  The modular path is the stub
+    oracle only.
     """
+    allowed = ("stub", "electra") if fused else ("stub",)
+    if scorer_backend not in allowed:
+        raise ValueError(
+            f"scorer_backend={scorer_backend!r} with fused={fused}: "
+            f"expected one of {allowed}"
+        )
     docs = extracted_docs(pages)
     # empty-gazetteer fail-fast lives inside _mesh_artifacts: a silently
     # successful no-op run (zero mentions -> zero triples) is an
@@ -194,7 +205,7 @@ def score_candidates(
         )
     evidence = select_evidence(with_text, extract_inter=True, splitter=sentence_splitter)
     features = featurize(evidence)
-    return score_pairs(features, backend=scorer_backend)
+    return score_pairs(features)
 
 
 def materialize_triples(scored: DataFrame) -> DataFrame:

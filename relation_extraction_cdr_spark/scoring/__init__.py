@@ -1,1 +1,1 @@
-"""Pair scoring: deterministic stub scorer (CI) + optional ONNX path."""
+"""Pair scoring: deterministic stub scorer (CI) + exact-architecture ELECTRA."""

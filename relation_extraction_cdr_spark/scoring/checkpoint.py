@@ -27,7 +27,7 @@ These are model-artifact operations, not dataflow (SURVEY §2.1 S12
 "model artifact distribution via --py-files/object store; not a data
 sink"): driver-side npz files, shipped to executors via the existing
 (config, seed, npz_path) plug point in scoring (pool_features /
-OnnxScorer seam), never shuffled.
+score_fulltext), never shuffled.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Exact ELECTRA entity-pair architecture in numpy (SURVEY §2.9 M1-M3).
 
-This is the REAL scorer architecture of the reference — not the
-mini-encoder FLOPs analog (scorer.py `_encode_doc`) — transcribed layer
+This is the REAL scorer architecture of the reference, transcribed layer
 by layer from the model the reference's ``train_sentence`` entry point
 builds (``ElectraModelEntitySentenceClassification``,
 reference electra_model.py:535-553 __init__, :563-690 forward):

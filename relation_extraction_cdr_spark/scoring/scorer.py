@@ -3,17 +3,18 @@
 The reference scores each candidate pair with an ELECTRA encoder + entity
 -pair head (electra_model.py:563-734): one encoder pass per document
 scores all its pairs (the ``is_full_sample`` shape at :711-734).  Real
-model weights are not shipped with this engine; scoring is pluggable:
+model weights are not shipped with this engine; ``scorer_backend`` picks
+one of two scorers:
 
-- ``StubScorer`` (default, CI): deterministic, model-free — consumes
-  exactly the feature tensors a real model would (token_ids +
-  entity_mask + pair codes) and emits logits-like probabilities.  Its
-  decision rule: positive iff a causal trigger token ("induc*") occurs
-  between the two entity spans of the evidence.  This keeps the entire
-  distributed plan (batching, masks, span gathers) real while the matrix
-  multiply is faked.
-- ``OnnxScorer``: same batch contract, runs an ONNX Runtime session per
-  executor (import-gated; onnxruntime is not installed in this sandbox).
+- ``stub`` (default, CI): deterministic, model-free — consumes exactly
+  the feature tensors a real model would (token_ids + entity_mask + pair
+  codes).  Its decision rule: positive iff a causal trigger token
+  ("induc*") occurs between the two entity spans of the evidence.  This
+  keeps the entire distributed plan (batching, masks, span gathers) real
+  while the matrix multiply is faked.
+- ``electra``: the same decision, with the exact-architecture
+  document-level forward (``_fullsample_margins``, seeded weights or a
+  converted .npz checkpoint) modulating the probability tail.
 
 Batch shape: Arrow batches via ``mapInPandas``; per-batch numpy span
 gathers (the segment-mean pooling of electra_model.py:618-641 would
@@ -130,8 +131,9 @@ def _score_rows(pdf: pd.DataFrame) -> pd.DataFrame:
     )
     prob = np.where(pred == 1, 0.9, 0.05) + jit
     if "enc_logit" in pdf.columns:
-        # numpy-encoder backend: the encoder logit deterministically
-        # modulates the probability tail (decision unchanged)
+        # electra backend: the document-level encoder margin
+        # deterministically modulates the probability tail (decision
+        # unchanged); NaN (pair outside the 512-token window) adds nothing
         enc = pdf["enc_logit"].to_numpy(np.float64)
         prob = prob + np.where(np.isnan(enc), 0.0, 1e-9 * np.tanh(enc))
     return pd.DataFrame(
@@ -148,56 +150,89 @@ def _score_rows(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def score_pairs(features: DataFrame, backend: str = "stub") -> DataFrame:
-    """features (FEATURES_SCHEMA) -> scored pairs (SCORED_SCHEMA).
-
-    backend="electra" runs the EXACT reference architecture
-    (scoring/electra.py: embeddings -> 12-layer encoder -> first-token
-    span pooling -> concat -> dense/gelu/out_proj) with seeded weights
-    per executor — here in the NON-full-sample shape (one padded
-    sequence per candidate row, the train_sentence entry point,
-    electra_model.py:676-690), matching this modular path's row-level
-    input; the fused doc-level path (fused_score_docs) uses the
-    is_full_sample document-level forward instead.  The emitted
-    DECISION stays the deterministic trigger rule (CI needs exact P/R
-    without real checkpoint weights) while the real head logit
-    modulates the probability tail — identical plumbing to what loading
-    converted weights via ElectraWeights.load_npz would score with.
-    For raw logits as the output (the kernel made load-bearing), see
-    ``score_fulltext``."""
-    if backend == "onnx":  # pragma: no cover - not available in sandbox
-        try:
-            import onnxruntime  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "onnxruntime is not installed; export the reference "
-                "entity-pair head (electra_model.py:563-734) to ONNX and "
-                "install onnxruntime to enable this backend"
-            ) from e
-    use_electra = backend == "electra"
+def score_pairs(features: DataFrame) -> DataFrame:
+    """features (FEATURES_SCHEMA) -> scored pairs (SCORED_SCHEMA) by the
+    stub decision rule.  This is the modular (``fused=False``) path, kept
+    as the oracle the fused stage is tested against; the encoder runs
+    only at document level (``fused_score_docs`` and ``score_fulltext``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_electra and len(pdf):
-                pdf = pdf.assign(enc_logit=_electra_margins(pdf))
             yield _score_rows(pdf)
 
     return features.mapInPandas(run, schema=SCORED_SCHEMA)
-
-
-def _electra_weights():
-    """Executor-global exact-architecture weights (seeded, deterministic
-    — electra.resolve_weights memoizes per process, the same
-    lazy-init-once pattern a broadcast ONNX session uses)."""
-    from .electra import DEFAULT_CONFIG, resolve_weights
-
-    return resolve_weights(DEFAULT_CONFIG, seed=0)
 
 
 FULLSAMPLE_SCHEMA = (
     "url string, chem_mesh string, dis_mesh string, label int, "
     "logit_neg double, logit_pos double, margin double"
 )
+
+
+def _fullsample_margins(w, docs: pd.DataFrame, batch_size: int = 8) -> pd.DataFrame:
+    """The is_full_sample document-level forward (electra_model.py:711-734)
+    that every document-level scorer here runs: FULLTEXT_SCHEMA rows ->
+    FULLSAMPLE_SCHEMA rows, one per REAL pair (ONE encoder pass per
+    document scores ALL its pairs).
+
+    Batching is EQUAL-LENGTH-GROUPED (electra.length_grouped_batches):
+    documents of the same exact token length share encoder batches of
+    up to ``batch_size``, then pooling and the pair head run per
+    document at the document's OWN shapes ([C, T] pooling GEMM,
+    [n_pairs, 2H] head GEMM).  Under this shape discipline the emitted
+    floats are BIT-IDENTICAL to the one-document-at-a-time path at any
+    ``batch_size`` and any partitioning / Arrow-chunk layout (pinned by
+    tests/test_electra.py::test_score_fulltext_batched_bit_identical) —
+    the batch only widens the encoder GEMMs' row dimension, which never
+    changes a row's result; length padding WOULD (see
+    length_grouped_batches).  label_length is each document's own real
+    pair count, so no pad pairs are ever computed.  perfbench/layers.py
+    profiles this function by name (``electra.forward_s``)."""
+    from .electra import (
+        encoder_forward,
+        length_grouped_batches,
+        pad_stack,
+        pair_head,
+        pool_pairs_one,
+    )
+
+    cols = [c.split(" ")[0] for c in FULLSAMPLE_SCHEMA.split(", ")]
+    if not len(docs):
+        return pd.DataFrame(columns=cols)
+    tids = [list(x) for x in docs["token_ids"]]
+    ems = [list(x) for x in docs["entity_mask"]]
+    ccs = [list(x) for x in docs["chem_codes"]]
+    dcs = [list(x) for x in docs["dis_codes"]]
+    labels = [np.asarray(x, np.int64) for x in docs["labels"]]
+    urls = docs["url"].to_numpy()
+    cms_all = [list(x) for x in docs["chem_meshes"]]
+    dms_all = [list(x) for x in docs["dis_meshes"]]
+    frames: list[pd.DataFrame] = []
+    for sel in length_grouped_batches([len(t) for t in tids], batch_size):
+        ids, att, msk = pad_stack([tids[i] for i in sel], [ems[i] for i in sel])
+        hidden = encoder_forward(w, ids, att)
+        for j, i in enumerate(sel):
+            ll = len(labels[i])
+            pooled = pool_pairs_one(hidden[j], msk[j], ccs[i], dcs[i], ll)
+            logits = pair_head(w, pooled)  # [ll, 2]
+            cms, dms = cms_all[i], dms_all[i]
+            # pair order matches the reference's generate_code_pairs
+            # nesting (chem-major)
+            margins = logits[:, 1] - logits[:, 0]  # float32
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "url": np.repeat(urls[i], ll),
+                        "chem_mesh": np.repeat(np.asarray(cms, object), len(dms)),
+                        "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
+                        "label": labels[i],
+                        "logit_neg": logits[:, 0].astype(np.float64),
+                        "logit_pos": logits[:, 1].astype(np.float64),
+                        "margin": margins.astype(np.float64),
+                    }
+                )
+            )
+    return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=cols)
 
 
 def score_fulltext(
@@ -209,128 +244,18 @@ def score_fulltext(
 ) -> DataFrame:
     """Document-level exact-architecture scoring: FULLTEXT_SCHEMA rows
     (operators/features.fulltext_features) -> one row per REAL pair with
-    the is_full_sample logits (electra_model.py:711-734 via
-    scoring/electra — ONE encoder pass per document scores ALL its
-    pairs).
-
-    Batching is EQUAL-LENGTH-GROUPED (electra.length_grouped_batches):
-    documents of the same exact token length share encoder batches of
-    up to ``batch_size``, then pooling and the pair head run per
-    document at the document's OWN shapes ([C, T] pooling GEMM,
-    [n_pairs, 2H] head GEMM).  Under this shape discipline the emitted
-    float values are BIT-IDENTICAL to the one-document-at-a-time path
-    at any ``batch_size`` and any partitioning / Arrow-chunk layout
-    (pinned by tests/test_electra.py::
-    test_score_fulltext_batched_bit_identical) — the batch only widens
-    the encoder GEMMs' row dimension, which never changes a row's
-    result; length padding WOULD (see length_grouped_batches).
-    label_length is each document's own real pair count, so no pad
-    pairs are ever computed.  Weights are lazy per executor from
-    (config, seed) or the .npz plug point."""
+    the is_full_sample logits, via ``_fullsample_margins`` (bit-identical
+    at any ``batch_size`` and partitioning).  Weights are lazy per
+    executor from (config, seed) or the .npz plug point."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .electra import (
-            DEFAULT_CONFIG,
-            encoder_forward,
-            length_grouped_batches,
-            pad_stack,
-            pair_head,
-            pool_pairs_one,
-            resolve_weights,
-        )
+        from .electra import DEFAULT_CONFIG, resolve_weights
 
         w = resolve_weights(config or DEFAULT_CONFIG, seed, npz_path)
-        cols = [c.split(" ")[0] for c in FULLSAMPLE_SCHEMA.split(", ")]
-        empty = pd.DataFrame(columns=cols)
         for pdf in batches:
-            if not len(pdf):
-                yield empty
-                continue
-            tids = [list(x) for x in pdf["token_ids"]]
-            ems = [list(x) for x in pdf["entity_mask"]]
-            ccs = [list(x) for x in pdf["chem_codes"]]
-            dcs = [list(x) for x in pdf["dis_codes"]]
-            labels = [np.asarray(x, np.int64) for x in pdf["labels"]]
-            urls = pdf["url"].to_numpy()
-            cms_all = [list(x) for x in pdf["chem_meshes"]]
-            dms_all = [list(x) for x in pdf["dis_meshes"]]
-            frames: list[pd.DataFrame] = []
-            for sel in length_grouped_batches([len(t) for t in tids], batch_size):
-                ids, att, msk = pad_stack([tids[i] for i in sel], [ems[i] for i in sel])
-                hidden = encoder_forward(w, ids, att)
-                for j, i in enumerate(sel):
-                    ll = len(labels[i])
-                    pooled = pool_pairs_one(hidden[j], msk[j], ccs[i], dcs[i], ll)
-                    logits = pair_head(w, pooled)  # [ll, 2]
-                    cms, dms = cms_all[i], dms_all[i]
-                    # vectorized output assembly: pair order matches the
-                    # reference's generate_code_pairs nesting (chem-major)
-                    margins = logits[:, 1] - logits[:, 0]  # float32, as before
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "url": np.repeat(urls[i], ll),
-                                "chem_mesh": np.repeat(
-                                    np.asarray(cms, object), len(dms)
-                                ),
-                                "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
-                                "label": labels[i],
-                                "logit_neg": logits[:, 0].astype(np.float64),
-                                "logit_pos": logits[:, 1].astype(np.float64),
-                                "margin": margins.astype(np.float64),
-                            }
-                        )
-                    )
-            yield pd.concat(frames, ignore_index=True) if frames else empty
+            yield _fullsample_margins(w, pdf, batch_size)
 
     return fulltext.mapInPandas(run, schema=FULLSAMPLE_SCHEMA)
-
-
-def _fullsample_margins(
-    fulltext_rows: list[dict], batch_size: int = 8
-) -> dict[tuple[str, str, str], float]:
-    """Run the is_full_sample document-level forward over featurized
-    fulltext rows; returns {(url, chem_mesh, dis_mesh): margin}.  One
-    encoder pass per document scores all its pairs
-    (electra_model.py:711-734)."""
-    from .electra import full_sample_forward
-
-    w = _electra_weights()
-    out: dict[tuple[str, str, str], float] = {}
-    for lo in range(0, len(fulltext_rows), batch_size):
-        chunk = fulltext_rows[lo : lo + batch_size]
-        ll = max(len(r["labels"]) for r in chunk)
-        logits = full_sample_forward(
-            w,
-            [r["token_ids"] for r in chunk],
-            [r["entity_mask"] for r in chunk],
-            [r["chem_codes"] for r in chunk],
-            [r["dis_codes"] for r in chunk],
-            label_length=ll,
-        )
-        for b, r in enumerate(chunk):
-            k = 0
-            for cm in r["chem_meshes"]:
-                for dm in r["dis_meshes"]:
-                    out[(r["url"], cm, dm)] = float(logits[b, k, 1] - logits[b, k, 0])
-                    k += 1
-    return out
-
-
-def _electra_margins(pdf: pd.DataFrame) -> np.ndarray:
-    """Real-architecture positive-class logit margin per feature row
-    (the non-full-sample forward: one padded batch per micro-chunk,
-    sequence_padding.py semantics)."""
-    from .electra import score_candidates
-
-    logits = score_candidates(
-        _electra_weights(),
-        [list(x) for x in pdf["token_ids"]],
-        [list(x) for x in pdf["entity_mask"]],
-        [int(x) for x in pdf["chem_code"]],
-        [int(x) for x in pdf["dis_code"]],
-    )
-    return logits[:, 1] - logits[:, 0]
 
 
 ALPS_SCHEMA = "url string, kind string, e1 string, e2 string, margin double"
@@ -464,47 +389,20 @@ def fused_score_docs(
     label_pairs |> levi_filter |> select_evidence |> featurize |>
     score_pairs) — pytest-verified.
     """
-    from ..functions.tokenize import _PIECE, piece_to_id as _pid
     from ..operators.candidates import levi_rejected_py
     from ..operators.evidence import DocIndex, select_evidence_py
-    from ..operators.features import featurize_py
+    from ..operators.features import featurize_py, fulltext_featurize_py
     from ..operators.mentions import detect_mentions_py
 
     tree_map = tree_map or {}
-    use_encoder = backend == "numpy"
     use_electra = backend == "electra"
-
-    def doc_encoder_logits(text: str, pair_spans):
-        """One encoder pass per document (is_full_sample shape,
-        electra_model.py:711-734): encode all doc tokens once, mean-pool
-        each pair's mention-span hidden states, dot-product pair logits."""
-        import bisect
-
-        spans = [(m.start(), m.group(0)) for m in _PIECE.finditer(text.lower())]
-        if not spans:
-            return [0.0] * len(pair_spans)
-        ids = np.fromiter((_pid(p) for _, p in spans), dtype=np.int64)
-        starts = [s for s, _ in spans]
-        hidden = _encode_doc(ids)
-
-        def pool(char_spans):
-            idxs = []
-            for cs, ce in char_spans:
-                lo = bisect.bisect_left(starts, cs)
-                hi = bisect.bisect_left(starts, ce)
-                idxs.extend(range(lo, hi))
-            if not idxs:
-                return None
-            return hidden[idxs].mean(axis=0)
-
-        out = []
-        for cspans, dspans in pair_spans:
-            c, d = pool(cspans), pool(dspans)
-            out.append(float(np.dot(c, d)) if c is not None and d is not None else 0.0)
-        return out
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in SCORED_SCHEMA.split(", ")]
+        if use_electra:
+            from .electra import DEFAULT_CONFIG, resolve_weights
+
+            w = resolve_weights(DEFAULT_CONFIG, seed=0)
         for pdf in batches:
             feat_rows = []
             fulltext_rows: list[dict] = []
@@ -547,14 +445,10 @@ def fused_score_docs(
                     else set()
                 )
                 if use_electra:
-                    from ..operators.features import fulltext_featurize_py
-
                     ft = fulltext_featurize_py(r.text, ents, gold)
                     if ft is not None:
                         fulltext_rows.append({"url": r.url, **ft})
                 doc = DocIndex(r.text, sentence_splitter)
-                doc_row0 = len(feat_rows)
-                pair_spans = []
                 for c in chems:
                     for d in diss:
                         key = (c["mesh_id"], d["mesh_id"])
@@ -586,14 +480,6 @@ def fused_score_docs(
                              "dis_mesh": d["mesh_id"], "label": label,
                              "evidence_type": ev["evidence_type"], **feat}
                         )
-                        if use_encoder:
-                            pair_spans.append((cpos, dpos))
-                if use_encoder and pair_spans:
-                    # one encoder pass for the whole document's pairs
-                    for row, logit in zip(
-                        feat_rows[doc_row0:], doc_encoder_logits(r.text, pair_spans)
-                    ):
-                        row["enc_logit"] = logit
             if feat_rows:
                 fdf = pd.DataFrame(feat_rows)
                 if use_electra:
@@ -604,7 +490,10 @@ def fused_score_docs(
                     # by (url, chem, dis).  Pairs whose entity was
                     # truncated out of the 512-token fulltext window
                     # keep enc_logit = NaN (prob tail unmodulated).
-                    margins = _fullsample_margins(fulltext_rows)
+                    fs = _fullsample_margins(w, pd.DataFrame(fulltext_rows))
+                    margins = dict(
+                        zip(zip(fs["url"], fs["chem_mesh"], fs["dis_mesh"]), fs["margin"])
+                    )
                     fdf = fdf.assign(
                         enc_logit=[
                             margins.get((u, c, d), float("nan"))
@@ -618,53 +507,3 @@ def fused_score_docs(
                 yield pd.DataFrame(columns=cols)
 
     return doc_payload.mapInPandas(run, schema=SCORED_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# numpy mini-encoder backend: models the REAL scorer's compute shape
-# ---------------------------------------------------------------------------
-# The production scorer is an ELECTRA encoder + entity-pair head run as
-# ONNX batch inference (electra_model.py:563-734): one encoder pass per
-# document scores all its pairs.  ``onnxruntime`` is not available in
-# this environment, so the "numpy" backend reproduces the same compute
-# shape with seeded deterministic weights: embedding lookup -> 2 dense
-# tanh layers (hidden 96) over the document tokens -> mean-pooled entity
-# span reps -> pair dot-product logit.  The DECISION still comes from the
-# deterministic trigger rule (CI needs exact P/R), but the encoder's
-# logit deterministically modulates the reported probability, and the
-# FLOPs per document are representative — which is what makes throughput
-# and scaling measurements meaningful.
-
-_NP_WEIGHTS: dict | None = None
-_VOCAB_MOD = 32768
-_HIDDEN = 96
-
-
-def _np_weights() -> dict:
-    global _NP_WEIGHTS
-    if _NP_WEIGHTS is None:
-        rng = np.random.default_rng(42)
-        _NP_WEIGHTS = {
-            "emb": (rng.standard_normal((_VOCAB_MOD, _HIDDEN)) * 0.05).astype(np.float32),
-            "w1": (rng.standard_normal((_HIDDEN, _HIDDEN)) * 0.1).astype(np.float32),
-            "w2": (rng.standard_normal((_HIDDEN, _HIDDEN)) * 0.1).astype(np.float32),
-        }
-    return _NP_WEIGHTS
-
-
-def _encode_doc(token_ids: np.ndarray) -> np.ndarray:
-    """[T] ids -> [T, H] hidden states (the M1 analog)."""
-    w = _np_weights()
-    h = w["emb"][token_ids % _VOCAB_MOD]
-    h = np.tanh(h @ w["w1"])
-    h = np.tanh(h @ w["w2"])
-    return h
-
-
-def _pair_logit(hidden: np.ndarray, mask: np.ndarray, chem_code: int, dis_code: int) -> float:
-    """Mean-pooled span reps (A3/M3) -> dot-product pair head (M2)."""
-    c = hidden[mask == chem_code]
-    d = hidden[mask == dis_code]
-    if len(c) == 0 or len(d) == 0:
-        return 0.0
-    return float(np.dot(c.mean(axis=0), d.mean(axis=0)))

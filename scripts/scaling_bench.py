@@ -54,11 +54,12 @@ n = pages.count()
 mesh = datagen.mesh_df(spark)
 
 def run_once(df):
-    # numpy backend: per-doc encoder compute representative of the real
-    # ONNX scorer (the stub alone is unrealistically cheap, which makes a
-    # single machine memory-bandwidth-bound instead of compute-bound)
+    # electra backend: the exact-architecture document-level encoder is
+    # the real per-doc compute (the stub alone is unrealistically cheap,
+    # which makes a single machine memory-bandwidth-bound instead of
+    # compute-bound)
     scored = score_candidates(df, mesh, salt_partitions=PARTS,
-                              scorer_backend="numpy")
+                              scorer_backend="electra")
     triples = materialize_triples(scored)
     return triples.count()
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from relation_extraction_cdr_spark.plans.pipeline import (
     adjacency,
@@ -22,6 +23,19 @@ def test_extracted_text_byte_identity(spark, fixtures):
     joined = docs.join(pages.select("url", F.col("text").alias("expect")), "url")
     bad = joined.where(F.col("text") != F.lower(F.col("expect"))).count()
     assert bad == 0
+
+
+@pytest.mark.parametrize(
+    "backend, fused",
+    [("numpy", True), ("onnx", True), ("elektra", True), ("electra", False)],
+)
+def test_unknown_scorer_backend_rejected(spark, fixtures, mesh, backend, fused):
+    """Only "stub" and "electra" are scorer backends, and the modular
+    (fused=False) path is the stub oracle only: anything else raises
+    instead of silently running the stub."""
+    pages, _, _ = fixtures
+    with pytest.raises(ValueError, match="scorer_backend"):
+        score_candidates(pages, mesh, scorer_backend=backend, fused=fused)
 
 
 def test_url_level_pr(spark, fixtures, mesh):
