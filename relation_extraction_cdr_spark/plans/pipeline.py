@@ -26,6 +26,8 @@ gold joins exist only in eval mode.
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -49,35 +51,24 @@ def extracted_docs(pages: DataFrame, lang: str | None = None) -> DataFrame:
     )
 
 
-# Caches created by score_candidates live for the app unless released:
-# each call unpersists the previous call's intermediates (single-pipeline
-# lifecycle; concurrent pipelines in one driver should pass
-# persist_intermediates=False and manage their own).  The gazetteer memo
-# avoids re-deriving the static MeSH artifacts (gazetteer plan, isEmpty
-# probe, 58k-row dict collect) once per foreachBatch micro-batch.
-_prev_caches: list = []
-_gaz_memo: dict = {}
-
-
+# One static mesh dimension per app in practice: the memo avoids
+# re-deriving the gazetteer plan and its 58k-row dict collect once per
+# resume bucket or foreachBatch micro-batch.  DataFrame defines no
+# __eq__/__hash__, so the key is the mesh_tree object's identity.
+@functools.lru_cache(maxsize=1)
 def _mesh_artifacts(mesh_tree, mesh_type_col):
-    key = (id(mesh_tree), mesh_type_col)
-    hit = _gaz_memo.get(key)
-    if hit is not None and hit[0] is mesh_tree:
-        return hit[1], hit[2], hit[3]
     from ..operators.mentions import gazetteer_dict
 
     gaz = gazetteer(mesh_tree, type_col=mesh_type_col)
-    if gaz.isEmpty():
+    gd = gazetteer_dict(gaz)
+    if not gd:
         raise ValueError(
             "empty gazetteer: no mesh rows produced a Chemical/Disease "
             f"type (mesh_type_col={mesh_type_col!r}). Pass "
             "mesh_type_col='type' for fixture-shaped mesh tables, or "
             "None for the real 2017 MeSH tree (D*/C* branch letters)."
         )
-    gd = gazetteer_dict(gaz)
-    max_words = max((t.count(" ") + 1 for t in gd), default=1)
-    _gaz_memo.clear()  # one static mesh dimension per app in practice
-    _gaz_memo[key] = (mesh_tree, gaz, gd, max_words)
+    max_words = max(t.count(" ") + 1 for t in gd)
     return gaz, gd, max_words
 
 
@@ -91,17 +82,14 @@ def score_candidates(
     salt_partitions: int | None = None,
     heavy_doc_chars: int = 20_000,
     fused: bool = True,
-    persist_intermediates: bool = True,
     sentence_splitter: str = "regex",
 ) -> DataFrame:
     """pages -> scored pairs (one row per candidate with pred/prob).
 
-    ``persist_intermediates``: the entity inventory feeds BOTH sides of
-    the per-doc cross join (and, in eval mode, the Levi joins) — without
-    persistence every reference re-derives the whole mention-detection
-    subtree (window + broadcast join), multiplying the dominant stage.
-    MEMORY_AND_DISK: the inventory is orders of magnitude smaller than
-    pages, and spills safely at scale.
+    Persists nothing: the returned DataFrame is a plain plan, so any
+    number of pipelines can share one driver or outlive a SparkSession
+    restart.  A caller that reuses the result across actions caches it
+    itself.
 
     ``fused``: evidence+featurize+score in one Arrow round-trip (the
     production path); fused=False runs the three modular stages.
@@ -122,9 +110,6 @@ def score_candidates(
     # successful no-op run (zero mentions -> zero triples) is an
     # expensive nothing at corpus scale
     gaz, gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
-    if persist_intermediates:
-        while _prev_caches:
-            _prev_caches.pop().unpersist()
 
     if fused:
         # doc-level fused path: the document text crosses the shuffle and
@@ -157,13 +142,10 @@ def score_candidates(
             # redistributed by url-hash (a ~1% shuffle); the light
             # majority flows through narrow.  union of the two branches
             # is itself narrow.  The branches are filter-complements of
-            # the SAME payload: persist it so extraction (and the gold
-            # join) fills once instead of once per union child.
-            if persist_intermediates:
-                from pyspark import StorageLevel
-
-                payload = payload.persist(StorageLevel.MEMORY_AND_DISK)
-                _prev_caches.append(payload)
+            # the same payload, so both scan the pages and run the
+            # JVM-side text extraction: persisting the payload would save
+            # that only by caching the whole extracted corpus, a cache
+            # that outlives the call and that nobody owns.
             heavy = F.length("text") > heavy_doc_chars
             payload = payload.where(~heavy).unionByName(
                 payload.where(heavy).repartition(
@@ -183,12 +165,6 @@ def score_candidates(
 
     mentions = detect_mentions(docs, gaz)
     inventory = entity_inventory(mentions)
-
-    if persist_intermediates:
-        from pyspark import StorageLevel
-
-        inventory = inventory.persist(StorageLevel.MEMORY_AND_DISK)
-        _prev_caches.append(inventory)
     pairs = candidate_pairs(inventory)
     if gold is not None:
         pairs = label_pairs(pairs, gold)

@@ -972,46 +972,22 @@ def _wordpiece_cte() -> str:
 """
 
 
-# Memoized helper DataFrames, keyed per Spark application (+ sf_dir).
-# createDataFrame yields a NEW ExistingRDD identity per call, so two
-# textually identical helper plans are NOT canonically equal — without
-# memoization every query call re-fills its own copy of the persisted
-# mentions/cooc caches instead of sharing one.
-_HELPER_MEMO: dict = {}
-
-
-def _memo(spark, key, build):
-    app = spark.sparkContext.applicationId
-    # evict entries from stopped applications: a long-lived process that
-    # cycles SparkSessions would otherwise accumulate dead-JVM
-    # DataFrame references per application id forever
-    for stale in [k for k in _HELPER_MEMO if k[0] != app]:
-        del _HELPER_MEMO[stale]
-    full_key = (app, key)
-    if full_key not in _HELPER_MEMO:
-        _HELPER_MEMO[full_key] = build()
-    return _HELPER_MEMO[full_key]
+# The doc-family helpers are plain functions: every call builds a new
+# DataFrame, and Spark's CacheManager shares the persisted ones because
+# two builds are canonically equal plans (sameResult).  That holds only
+# for deterministic leaves: the gazetteer dimensions are an inline VALUES
+# table (LocalRelation), not createDataFrame, whose fresh ExistingRDD
+# per call would make every build a new cache entry.
+_GAZ_TABLE = f"VALUES {_GAZ_VALUES} AS gaz(term, mesh_id, type, tree_number)"
 
 
 def _doc_gazetteer(spark):
-    return _memo(
-        spark,
-        "gaz",
-        lambda: spark.createDataFrame(
-            [(t, m, ty) for t, m, ty, _ in _GAZ_ROWS],
-            "term string, mesh_id string, type string",
-        ),
-    )
+    return spark.sql(f"SELECT term, mesh_id, type FROM {_GAZ_TABLE}")
 
 
 def _doc_tree_map(spark):
-    return _memo(
-        spark,
-        "tree_map",
-        lambda: spark.createDataFrame(
-            [(m, [tr]) for _, m, _, tr in _GAZ_ROWS],
-            "mesh_id string, tree_numbers array<string>",
-        ),
+    return spark.sql(
+        f"SELECT mesh_id, array(tree_number) AS tree_numbers FROM {_GAZ_TABLE}"
     )
 
 
@@ -1020,23 +996,20 @@ def _doc_mentions(spark, sf_dir):
 
     from ..operators.mentions import detect_mentions
 
-    def build():
-        t = _t(spark, sf_dir, "documents")
-        docs = t["documents"].select(
-            F.col("doc_id").alias("url"), F.lower(F.col("text")).alias("text")
-        )
-        # persisted: the cooc queries reference mentions on BOTH sides of
-        # the chem x dis join, and predicate pushdown (type filter below
-        # the window exchange) defeats ReusedExchange — without the
-        # persist the whole detection subtree (scan + explode + broadcast
-        # join + window) runs twice, doubling the dominant stage at
-        # corpus scale.  Memoized so every query in the family holds the
-        # SAME DataFrame and therefore the same cache entry.
-        return detect_mentions(docs, _doc_gazetteer(spark)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    return _memo(spark, ("mentions", sf_dir), build)
+    t = _t(spark, sf_dir, "documents")
+    docs = t["documents"].select(
+        F.col("doc_id").alias("url"), F.lower(F.col("text")).alias("text")
+    )
+    # persisted: the cooc queries reference mentions on BOTH sides of
+    # the chem x dis join, and predicate pushdown (type filter below
+    # the window exchange) defeats ReusedExchange — without the
+    # persist the whole detection subtree (scan + explode + broadcast
+    # join + window) runs twice, doubling the dominant stage at
+    # corpus scale.  Every query in the family rebuilds the same plan,
+    # so all of them hit one cache entry.
+    return detect_mentions(docs, _doc_gazetteer(spark)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
 
 def _doc_cooc(spark, sf_dir):
@@ -1049,23 +1022,20 @@ def _doc_cooc(spark, sf_dir):
     """
     from pyspark import StorageLevel
 
-    def build():
-        m = _doc_mentions(spark, sf_dir)
-        chem = m.where(F.col("type") == "Chemical").select(
-            "url", F.col("mesh_id").alias("chem_mesh"), F.col("start").alias("cstart")
-        )
-        dis = m.where(F.col("type") == "Disease").select(
-            "url", F.col("mesh_id").alias("dis_mesh"), F.col("start").alias("dstart")
-        )
-        return (
-            chem.join(dis, "url")
-            .where(F.abs(F.col("cstart") - F.col("dstart")) <= _COOC_WINDOW)
-            .select("url", "chem_mesh", "dis_mesh")
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-
-    return _memo(spark, ("cooc", sf_dir), build)
+    m = _doc_mentions(spark, sf_dir)
+    chem = m.where(F.col("type") == "Chemical").select(
+        "url", F.col("mesh_id").alias("chem_mesh"), F.col("start").alias("cstart")
+    )
+    dis = m.where(F.col("type") == "Disease").select(
+        "url", F.col("mesh_id").alias("dis_mesh"), F.col("start").alias("dstart")
+    )
+    return (
+        chem.join(dis, "url")
+        .where(F.abs(F.col("cstart") - F.col("dstart")) <= _COOC_WINDOW)
+        .select("url", "chem_mesh", "dis_mesh")
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
 @register(
@@ -4277,37 +4247,34 @@ def _doc_fulltext(spark, sf_dir):
     """Document-level (is_full_sample) features over the corpus:
     make_example_fulltext semantics (operators/features.fulltext_features)
     with entities from the gazetteer mentions and gold from the cooc
-    window.  Memoized+persisted — q87/q89 share the subtree."""
+    window.  Persisted — q87/q89 share the subtree."""
     from pyspark import StorageLevel
 
     from ..operators.features import fulltext_features
 
-    def build():
-        m = _doc_mentions(spark, sf_dir)
-        ents = (
-            m.groupBy("url", "mesh_id", "type")
-            .agg(F.array_sort(F.collect_list(F.struct("start", "end"))).alias("positions"))
-            .groupBy("url")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("mesh_id", "type", "positions"))
-                ).alias("entities")
-            )
+    m = _doc_mentions(spark, sf_dir)
+    ents = (
+        m.groupBy("url", "mesh_id", "type")
+        .agg(F.array_sort(F.collect_list(F.struct("start", "end"))).alias("positions"))
+        .groupBy("url")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("mesh_id", "type", "positions"))
+            ).alias("entities")
         )
-        gold = _doc_cooc(spark, sf_dir).groupBy("url").agg(
-            F.array_sort(F.collect_list(F.struct("chem_mesh", "dis_mesh"))).alias(
-                "gold_pairs"
-            )
+    )
+    gold = _doc_cooc(spark, sf_dir).groupBy("url").agg(
+        F.array_sort(F.collect_list(F.struct("chem_mesh", "dis_mesh"))).alias(
+            "gold_pairs"
         )
-        t = _t(spark, sf_dir, "documents")
-        docs = t["documents"].select(
-            F.col("doc_id").cast("string").alias("url"),
-            F.lower(F.col("text")).alias("text"),
-        )
-        payload = docs.join(ents, "url").join(gold, "url", "left")
-        return fulltext_features(payload).persist(StorageLevel.MEMORY_AND_DISK)
-
-    return _memo(spark, ("fulltext", sf_dir), build)
+    )
+    t = _t(spark, sf_dir, "documents")
+    docs = t["documents"].select(
+        F.col("doc_id").cast("string").alias("url"),
+        F.lower(F.col("text")).alias("text"),
+    )
+    payload = docs.join(ents, "url").join(gold, "url", "left")
+    return fulltext_features(payload).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 @register("q87_fullsample_logits")  # rows-only: numpy encoder not SQL-expressible

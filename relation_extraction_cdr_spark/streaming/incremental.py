@@ -135,9 +135,10 @@ def stream_pages(
         stream = stream_dedup(stream, watermark=dedup_watermark)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # mesh artifacts (gazetteer plan, isEmpty probe, dict collect)
-        # are memoized per mesh_tree inside score_candidates, so a
-        # long-running stream pays them once, not once per trigger
+        # the mesh artifacts (gazetteer plan and dict collect) are an
+        # lru_cache keyed on the mesh_tree object, so a long-running
+        # stream pays them once, not once per trigger; score_candidates
+        # persists nothing, so no micro-batch leaves a cache behind
         scored = score_candidates(batch_df, mesh_tree, **pipeline_kwargs)
         (
             scored.withColumn("batch_id", F.lit(batch_id))

@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -78,6 +84,79 @@ def test_salted_repartition_runs(spark, fixtures, mesh):
     pages, _, gold = fixtures
     scored = score_candidates(pages, mesh, gold=gold, salt_partitions=8)
     assert scored.count() > 0
+
+
+def test_empty_gazetteer_fails_fast_and_is_not_cached(spark, fixtures, mesh):
+    """A mesh table that yields no Chemical/Disease term raises instead
+    of running an expensive no-op pipeline; the failure is not memoized,
+    so it raises again and the real mesh still scores afterwards."""
+    pages, _, _ = fixtures
+    empty = mesh.limit(0)
+    for _ in range(2):
+        with pytest.raises(ValueError, match="empty gazetteer"):
+            score_candidates(pages, empty)
+    assert score_candidates(pages, mesh).where("pred=1").count() > 0
+
+
+def test_interleaved_pipelines_leak_no_cache(spark, fixtures, mesh):
+    """Two salted pipelines built in one driver and collected in
+    interleaved order each return exactly their isolated rows, and
+    neither leaves a persisted RDD behind."""
+    pages, _, _ = fixtures
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    page_sets = [pages.where(half == 0), pages.where(half == 1)]
+    kw = {"salt_partitions": 4, "heavy_doc_chars": 175}  # both branches carry rows
+
+    def build(p):
+        return score_candidates(p, mesh, **kw)
+
+    isolated = [sorted(build(p).collect()) for p in page_sets]
+    assert all(isolated) and isolated[0] != isolated[1]
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    a, b = (build(p) for p in page_sets)
+    assert sorted(a.collect()) == isolated[0]
+    assert sorted(b.collect()) == isolated[1]
+    assert sorted(a.collect()) == isolated[0]
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= before
+
+
+_RESTART_SCRIPT = textwrap.dedent(
+    """
+    from relation_extraction_cdr_spark import datagen
+    from relation_extraction_cdr_spark.plans.pipeline import (
+        materialize_triples,
+        score_candidates,
+    )
+    from relation_extraction_cdr_spark.session import spark_session
+
+    counts = []
+    for _ in range(2):
+        spark = spark_session("restart")
+        spark.sparkContext.setLogLevel("ERROR")
+        pages = datagen.gen_pages_df(spark, 30)
+        scored = score_candidates(pages, datagen.mesh_df(spark), salt_partitions=4)
+        counts.append(materialize_triples(scored).count())
+        spark.stop()
+    print("COUNTS", *counts)
+    """
+)
+
+
+def test_pipeline_survives_session_restart():
+    """A salted pipeline run, spark.stop(), a new session and the same
+    run again in one process: the second call must not touch state of
+    the stopped session (it once unpersisted the dead session's payload
+    and died with a NullPointerException in BlockManagerMaster)."""
+    repo = Path(__file__).resolve().parent.parent
+    env = dict(os.environ, PYTHONPATH=str(repo), SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("COUNTS")][-1]
+    first, second = map(int, line.split()[1:])
+    assert first > 0 and first == second
 
 
 def test_pipeline_survives_poison_rows(spark, mesh):

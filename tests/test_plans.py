@@ -101,15 +101,21 @@ def test_q01_column_pruning(spark):
     assert all(n <= 8 for n in facts.scan_columns), facts.read_schemas
 
 
-def test_doc_family_helpers_are_memoized(spark):
-    """Regression: createDataFrame yields a fresh ExistingRDD identity per
-    call, so two identically-built helper plans are never canonically
-    equal and persisted caches silently stop being shared.  The helpers
-    must return the SAME DataFrame object per (app, sf_dir)."""
+def test_doc_family_helpers_share_one_cache(spark):
+    """Regression: the doc-family helpers rebuild their DataFrame on every
+    call and leave the sharing of their persisted subtrees to Spark's
+    CacheManager, which matches canonically equal plans.  A leaf with a
+    fresh identity per build (createDataFrame's ExistingRDD) would make
+    every build a new, separately filled cache entry."""
     from relation_extraction_cdr_spark.plans import queries as Q
 
-    sf = "/root/testdata/sf0.001"
-    assert Q._doc_mentions(spark, sf) is Q._doc_mentions(spark, sf)
-    assert Q._doc_cooc(spark, sf) is Q._doc_cooc(spark, sf)
-    assert Q._doc_gazetteer(spark) is Q._doc_gazetteer(spark)
-    assert Q._doc_tree_map(spark) is Q._doc_tree_map(spark)
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    for helper in (Q._doc_mentions, Q._doc_cooc, Q._doc_fulltext):
+        first, second = helper(spark, SF_DIR), helper(spark, SF_DIR)
+        assert first.sameSemantics(second), helper.__name__
+        first.count()
+        filled = persistent_rdds()
+        second.count()
+        assert persistent_rdds() == filled, helper.__name__
