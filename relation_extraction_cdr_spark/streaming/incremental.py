@@ -12,6 +12,12 @@ Resume = anti-join pending buckets against the checkpoint — processed
 buckets are never recomputed and the final triple table is byte-identical
 to an uninterrupted run (pytest-verified).
 
+Bookkeeping costs one Spark job per run plus one small append per
+bucket, and starts no Python task: ``url_count`` for every pending
+bucket comes from a single ``groupBy("bucket").count()``, ``row_count``
+from an ``Observation`` attached to the bucket's scoring write, and the
+lineage row is a ``spark.range(1)`` projection built in the JVM.
+
 On a real cluster each bucket is itself a distributed job over many
 executors; n_buckets controls restart granularity, not parallelism.
 A Structured Streaming variant (`stream_pages`) expresses the same plan
@@ -25,7 +31,7 @@ import os
 from datetime import datetime
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 CHECKPOINT_SCHEMA = (
     "run_id string, stage string, partition_id int, url_count long, "
@@ -41,17 +47,22 @@ def bucketed(pages: DataFrame, n_buckets: int) -> DataFrame:
 
 def completed_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str, stage: str) -> set[int]:
     """Bucket ids with committed lineage rows.  The not-yet-created case
-    is detected by attempting the read, NOT os.path.exists — the lineage
-    URI is usually remote (hdfs://, s3a://) where a driver-local stat is
-    always False and would silently disable resume on a cluster."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        cp = spark.read.parquet(checkpoint_dir)
-    except AnalysisException:
+    is detected with the Hadoop FileSystem of the checkpoint URI, NOT
+    os.path.exists — the lineage URI is usually remote (hdfs://, s3a://)
+    where a driver-local stat is always False and would silently disable
+    resume on a cluster.  (Catching the read's AnalysisException instead
+    makes Spark log a listener stack trace once any Observation has run
+    in the session.)  The read takes CHECKPOINT_SCHEMA, so an existing
+    but empty directory yields no buckets and no footer is inferred."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(path):
         return set()
     rows = (
-        cp.where((F.col("run_id") == run_id) & (F.col("stage") == stage))
+        spark.read.schema(CHECKPOINT_SCHEMA)
+        .parquet(checkpoint_dir)
+        .where((F.col("run_id") == run_id) & (F.col("stage") == stage))
         .select("partition_id")
         .distinct()
         .collect()
@@ -73,29 +84,47 @@ def run_resumable(
     """Process pages bucket-by-bucket with lineage; returns the scored
     pairs read back from ``out_dir``.
 
+    Per pending bucket the only Spark work is the scoring write and the
+    lineage append.  ``url_count`` comes from one ``groupBy("bucket")``
+    count job over all pending buckets (a bucket with no pages reads 0);
+    ``row_count`` from an ``Observation`` on the scoring write, read
+    after the write commits (it counts the committed result stage, so
+    task retries do not inflate it); the lineage row is built in the JVM,
+    so bookkeeping starts no Python task.
+
     ``fail_after``: test hook — raise after N buckets to simulate a kill.
     """
+    # imported at call time: instrumentation wraps it by module attribute
     from ..plans.pipeline import score_candidates
 
     pages_b = bucketed(pages, n_buckets)
     done = completed_buckets(spark, checkpoint_dir, run_id, "score")
-    processed = 0
-    for b in range(n_buckets):
-        if b in done:
-            continue
+    pending = [b for b in range(n_buckets) if b not in done]
+    url_counts = (
+        {r["bucket"]: r["count"] for r in pages_b.groupBy("bucket").count().collect()}
+        if pending
+        else {}
+    )
+    for processed, b in enumerate(pending):
         if fail_after is not None and processed >= fail_after:
             raise RuntimeError(f"simulated kill after {processed} buckets")
         part = pages_b.where(F.col("bucket") == b).drop("bucket")
-        url_count = part.count()
         scored = score_candidates(part, mesh_tree, **pipeline_kwargs)
-        scored.write.mode("overwrite").parquet(os.path.join(out_dir, f"bucket={b}"))
-        row_count = spark.read.parquet(os.path.join(out_dir, f"bucket={b}")).count()
-        lineage = spark.createDataFrame(
-            [(run_id, "score", b, url_count, row_count, datetime.now())],
-            CHECKPOINT_SCHEMA,
+        rows = Observation()
+        scored.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"bucket={b}")
+        )
+        # CHECKPOINT_SCHEMA's row as a JVM projection: createDataFrame
+        # would parallelize it over defaultParallelism Python tasks
+        lineage = spark.range(1).select(
+            F.lit(run_id).alias("run_id"),
+            F.lit("score").alias("stage"),
+            F.lit(b).cast("int").alias("partition_id"),
+            F.lit(url_counts.get(b, 0)).cast("long").alias("url_count"),
+            F.lit(rows.get["n"]).cast("long").alias("row_count"),
+            F.lit(datetime.now()).alias("written_at"),
         )
         lineage.write.mode("append").parquet(checkpoint_dir)
-        processed += 1
     return spark.read.parquet(os.path.join(out_dir, "bucket=*"))
 
 
