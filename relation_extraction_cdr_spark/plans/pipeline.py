@@ -2,26 +2,22 @@
 
 Lifecycle (SURVEY §3.1 Spark equivalent):
 
-    pages --extract_text(JVM)--> docs
-          --broadcast gazetteer join--> mentions
-          --groupBy inventory / per-doc cross join / Levi anti-join--> pairs
-          --mapInPandas--> evidence --mapInPandas--> features
-          --salted repartition + mapInPandas scorer--> scored
+    pages --extract_text(JVM)--> docs(url, text)
+          [--left join gold_pairs (eval mode)]
+          [--url-hash repartition of heavy docs (salt_partitions)]
+          --ONE mapInPandas per doc (scoring.scorer.fused_score_docs):
+            mentions -> pairs + Levi filter -> evidence -> features
+            -> scorer--> scored
           --groupBy dedup--> triples + adjacency
 
 Shuffle budget (scale analysis, 100 TB target):
-  1. mention window (partition by url)               — unavoidable, keyed
-     on the unique url so perfectly spread
-  2. inventory groupBy(url, mesh_id)                 — same key family;
-     AQE coalesces
-  3. pairs equi-join on url                          — co-partitioned with
-     (2) so Catalyst reuses the exchange
-  4. salted repartition before scoring               — explicit, spreads
-     long-doc skew at pair granularity
-  5. final triple groupBy(chem, dis)                 — output is tiny
-     relative to input (dimension-bounded)
-Everything else is narrow.  The gazetteer/tree dimensions are broadcast;
-gold joins exist only in eval mode.
+  1. heavy-doc salt repartition (only with ``salt_partitions``) — moves
+     only the pages longer than HEAVY_DOC_CHARS (~1%), keyed on url
+  2. final triple groupBy(chem, dis) — output is tiny relative to input
+     (dimension-bounded)
+  In eval mode the gold table adds a groupBy(url) and its join to the
+  docs.  Everything else is narrow: the gazetteer and tree dimensions
+  ride in the UDF closure as plain dicts.
 """
 
 from __future__ import annotations
@@ -32,12 +28,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.text import extract_text
-from ..operators.candidates import candidate_pairs, label_pairs, levi_filter
-from ..operators.evidence import select_evidence
-from ..operators.features import featurize
-from ..operators.mentions import detect_mentions, entity_inventory
-from ..scoring.scorer import score_pairs
+from ..scoring.scorer import fused_score_docs
 from ..sources.mesh import gazetteer, tree_multimap
+
+# Pages longer than this many characters are "heavy": with
+# ``salt_partitions`` set they are spread by url hash before scoring.
+HEAVY_DOC_CHARS = 20_000
 
 
 def extracted_docs(pages: DataFrame, lang: str | None = None) -> DataFrame:
@@ -80,8 +76,6 @@ def score_candidates(
     use_levi: bool = True,
     scorer_backend: str = "stub",
     salt_partitions: int | None = None,
-    heavy_doc_chars: int = 20_000,
-    fused: bool = True,
     sentence_splitter: str = "regex",
 ) -> DataFrame:
     """pages -> scored pairs (one row per candidate with pred/prob).
@@ -91,97 +85,60 @@ def score_candidates(
     restart.  A caller that reuses the result across actions caches it
     itself.
 
-    ``fused``: evidence+featurize+score in one Arrow round-trip (the
-    production path); fused=False runs the three modular stages.
+    The whole per-document decision runs in ONE narrow python stage,
+    ``fused_score_docs``, so the document text crosses the Arrow
+    boundary once.
 
     ``scorer_backend``: "stub" (the trigger-rule decision) or "electra"
     (the same decision, the exact-architecture document-level encoder
-    modulating the probability tail).  The modular path is the stub
-    oracle only.
+    modulating the probability tail).
     """
-    allowed = ("stub", "electra") if fused else ("stub",)
+    allowed = ("stub", "electra")
     if scorer_backend not in allowed:
         raise ValueError(
-            f"scorer_backend={scorer_backend!r} with fused={fused}: "
-            f"expected one of {allowed}"
+            f"scorer_backend={scorer_backend!r}: expected one of {allowed}"
         )
-    docs = extracted_docs(pages)
     # empty-gazetteer fail-fast lives inside _mesh_artifacts: a silently
     # successful no-op run (zero mentions -> zero triples) is an
     # expensive nothing at corpus scale
-    gaz, gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
+    _gaz, gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
 
-    if fused:
-        # doc-level fused path: the document text crosses the shuffle and
-        # the Arrow boundary ONCE; mention detection (broadcast gazetteer
-        # dict, detect_mentions_py — same semantics as the relational
-        # operator), pair generation, Levi filter, evidence selection,
-        # featurization and scoring all run in a SINGLE narrow python
-        # stage per doc (the reference's is_full_sample batching shape,
-        # electra_model.py:711-734).  The only exchanges in the whole
-        # pipeline are the optional salt repartition and the final
-        # dimension-bounded triple groupBy.
-        from ..scoring.scorer import fused_score_docs
-
-        payload = docs
-        if gold is not None:
-            gold_arr = gold.groupBy("url").agg(
-                F.collect_list(F.struct("chem_mesh", "dis_mesh")).alias("gold_pairs")
-            )
-            payload = payload.join(gold_arr, "url", "left")
-        else:
-            payload = payload.withColumn(
-                "gold_pairs",
-                F.lit(None).cast("array<struct<chem_mesh:string,dis_mesh:string>>"),
-            )
-        if salt_partitions:
-            # SKEW-AWARE salting: shuffling every page would move the
-            # whole corpus (at 100 TB, the whole 100 TB) through the
-            # exchange just to protect against a skewed tail.  Instead
-            # only documents above the heavy-length threshold are
-            # redistributed by url-hash (a ~1% shuffle); the light
-            # majority flows through narrow.  union of the two branches
-            # is itself narrow.  The branches are filter-complements of
-            # the same payload, so both scan the pages and run the
-            # JVM-side text extraction: persisting the payload would save
-            # that only by caching the whole extracted corpus, a cache
-            # that outlives the call and that nobody owns.
-            heavy = F.length("text") > heavy_doc_chars
-            payload = payload.where(~heavy).unionByName(
-                payload.where(heavy).repartition(
-                    salt_partitions, F.xxhash64("url")
-                )
-            )
-        tm = (
-            {r["mesh_id"]: list(r["tree_numbers"]) for r in tree_multimap(mesh_tree).collect()}
-            if gold is not None and use_levi
-            else None
-        )
-        return fused_score_docs(
-            payload, tree_map=tm, use_levi=use_levi,
-            gazetteer=gd, max_term_words=max_words,
-            backend=scorer_backend, sentence_splitter=sentence_splitter,
-        )
-
-    mentions = detect_mentions(docs, gaz)
-    inventory = entity_inventory(mentions)
-    pairs = candidate_pairs(inventory)
+    payload = extracted_docs(pages)
     if gold is not None:
-        pairs = label_pairs(pairs, gold)
-        if use_levi:
-            pairs = levi_filter(pairs, gold, tree_multimap(mesh_tree))
-    else:
-        pairs = pairs.withColumn("label", F.lit(0))
-    with_text = pairs.join(docs, "url")
-    if salt_partitions:
-        # salted spread of one long document's pairs across executors:
-        # the hash key includes the pair so skew splits at pair granularity
-        with_text = with_text.repartition(
-            salt_partitions, F.xxhash64("url", "chem_mesh", "dis_mesh")
+        gold_arr = gold.groupBy("url").agg(
+            F.collect_list(F.struct("chem_mesh", "dis_mesh")).alias("gold_pairs")
         )
-    evidence = select_evidence(with_text, extract_inter=True, splitter=sentence_splitter)
-    features = featurize(evidence)
-    return score_pairs(features)
+        payload = payload.join(gold_arr, "url", "left")
+    else:
+        payload = payload.withColumn(
+            "gold_pairs",
+            F.lit(None).cast("array<struct<chem_mesh:string,dis_mesh:string>>"),
+        )
+    if salt_partitions:
+        # SKEW-AWARE salting: shuffling every page would move the whole
+        # corpus (at 100 TB, the whole 100 TB) through the exchange just
+        # to protect against a skewed tail.  Instead only documents above
+        # HEAVY_DOC_CHARS are redistributed by url-hash (a ~1% shuffle);
+        # the light majority flows through narrow.  union of the two
+        # branches is itself narrow.  The branches are filter-complements
+        # of the same payload, so both scan the pages and run the
+        # JVM-side text extraction: persisting the payload would save
+        # that only by caching the whole extracted corpus, a cache that
+        # outlives the call and that nobody owns.
+        heavy = F.length("text") > HEAVY_DOC_CHARS
+        payload = payload.where(~heavy).unionByName(
+            payload.where(heavy).repartition(salt_partitions, F.xxhash64("url"))
+        )
+    tm = (
+        {r["mesh_id"]: list(r["tree_numbers"]) for r in tree_multimap(mesh_tree).collect()}
+        if gold is not None and use_levi
+        else None
+    )
+    return fused_score_docs(
+        payload, tree_map=tm, use_levi=use_levi,
+        gazetteer=gd, max_term_words=max_words,
+        backend=scorer_backend, sentence_splitter=sentence_splitter,
+    )
 
 
 def materialize_triples(scored: DataFrame) -> DataFrame:

@@ -18,9 +18,12 @@ one of two scorers:
 
 Batch shape: Arrow batches via ``mapInPandas``; per-batch numpy span
 gathers (the segment-mean pooling of electra_model.py:618-641 would
-operate on the same gathered indices).  Before scoring, the pipeline
-salts-and-repartitions on xxhash64(url, chem, dis) so one pathologically
-long document's pairs spread across executors (BASELINE north_star).
+operate on the same gathered indices).  The whole per-document decision
+runs in ONE mapInPandas stage (``fused_score_docs``); with
+``salt_partitions`` the pipeline first repartitions only the documents
+longer than plans.pipeline.HEAVY_DOC_CHARS on xxhash64(url), so a
+cluster of pathologically long documents spreads across executors
+(BASELINE north_star).
 """
 
 from __future__ import annotations
@@ -152,8 +155,8 @@ def _score_rows(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def score_pairs(features: DataFrame) -> DataFrame:
     """features (FEATURES_SCHEMA) -> scored pairs (SCORED_SCHEMA) by the
-    stub decision rule.  This is the modular (``fused=False``) path, kept
-    as the oracle the fused stage is tested against; the encoder runs
+    stub decision rule.  The last step of the relational operator chain
+    that tests/test_fused.py pins the fused stage to; the encoder runs
     only at document level (``fused_score_docs`` and ``score_fulltext``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -169,36 +172,29 @@ FULLSAMPLE_SCHEMA = (
 )
 
 
-def _fullsample_margins(w, docs: pd.DataFrame, batch_size: int = 8) -> pd.DataFrame:
-    """The is_full_sample document-level forward (electra_model.py:711-734)
-    that every document-level scorer here runs: FULLTEXT_SCHEMA rows ->
-    FULLSAMPLE_SCHEMA rows, one per REAL pair (ONE encoder pass per
-    document scores ALL its pairs).
+def fullsample_pooled(
+    w, docs: pd.DataFrame, batch_size: int = 8
+) -> Iterator[tuple[pd.DataFrame, np.ndarray]]:
+    """The is_full_sample document-level loop (electra_model.py:711-734)
+    every document-level consumer here runs: per FULLTEXT_SCHEMA row,
+    the (url, chem_mesh, dis_mesh, label) frame of its REAL pairs and
+    their [n_pairs, 2H] all-match pooled concat (ONE encoder pass per
+    document pools ALL its pairs).  Shared by ``_fullsample_margins``
+    (inference) and train.pool_fulltext_features (doc-level training).
 
     Batching is EQUAL-LENGTH-GROUPED (electra.length_grouped_batches):
     documents of the same exact token length share encoder batches of
-    up to ``batch_size``, then pooling and the pair head run per
-    document at the document's OWN shapes ([C, T] pooling GEMM,
-    [n_pairs, 2H] head GEMM).  Under this shape discipline the emitted
-    floats are BIT-IDENTICAL to the one-document-at-a-time path at any
-    ``batch_size`` and any partitioning / Arrow-chunk layout (pinned by
-    tests/test_electra.py::test_score_fulltext_batched_bit_identical) —
-    the batch only widens the encoder GEMMs' row dimension, which never
-    changes a row's result; length padding WOULD (see
+    up to ``batch_size``, then pooling runs per document at the
+    document's OWN [C, T] shape.  Under this shape discipline every
+    pooled row is BIT-IDENTICAL to the one-document-at-a-time path at
+    any ``batch_size`` and any partitioning / Arrow-chunk layout (pinned
+    by tests/test_electra.py::test_score_fulltext_batched_bit_identical)
+    — the batch only widens the encoder GEMMs' row dimension, which
+    never changes a row's result; length padding WOULD (see
     length_grouped_batches).  label_length is each document's own real
-    pair count, so no pad pairs are ever computed.  perfbench/layers.py
-    profiles this function by name (``electra.forward_s``)."""
-    from .electra import (
-        encoder_forward,
-        length_grouped_batches,
-        pad_stack,
-        pair_head,
-        pool_pairs_one,
-    )
+    pair count, so no pad pairs are ever computed."""
+    from .electra import encoder_forward, length_grouped_batches, pad_stack, pool_pairs_one
 
-    cols = [c.split(" ")[0] for c in FULLSAMPLE_SCHEMA.split(", ")]
-    if not len(docs):
-        return pd.DataFrame(columns=cols)
     tids = [list(x) for x in docs["token_ids"]]
     ems = [list(x) for x in docs["entity_mask"]]
     ccs = [list(x) for x in docs["chem_codes"]]
@@ -207,31 +203,47 @@ def _fullsample_margins(w, docs: pd.DataFrame, batch_size: int = 8) -> pd.DataFr
     urls = docs["url"].to_numpy()
     cms_all = [list(x) for x in docs["chem_meshes"]]
     dms_all = [list(x) for x in docs["dis_meshes"]]
-    frames: list[pd.DataFrame] = []
     for sel in length_grouped_batches([len(t) for t in tids], batch_size):
         ids, att, msk = pad_stack([tids[i] for i in sel], [ems[i] for i in sel])
         hidden = encoder_forward(w, ids, att)
         for j, i in enumerate(sel):
             ll = len(labels[i])
-            pooled = pool_pairs_one(hidden[j], msk[j], ccs[i], dcs[i], ll)
-            logits = pair_head(w, pooled)  # [ll, 2]
             cms, dms = cms_all[i], dms_all[i]
             # pair order matches the reference's generate_code_pairs
-            # nesting (chem-major)
-            margins = logits[:, 1] - logits[:, 0]  # float32
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "url": np.repeat(urls[i], ll),
-                        "chem_mesh": np.repeat(np.asarray(cms, object), len(dms)),
-                        "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
-                        "label": labels[i],
-                        "logit_neg": logits[:, 0].astype(np.float64),
-                        "logit_pos": logits[:, 1].astype(np.float64),
-                        "margin": margins.astype(np.float64),
-                    }
-                )
+            # nesting (chem-major), the order labels were built in
+            keys = pd.DataFrame(
+                {
+                    "url": np.repeat(urls[i], ll),
+                    "chem_mesh": np.repeat(np.asarray(cms, object), len(dms)),
+                    "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
+                    "label": labels[i],
+                }
             )
+            yield keys, pool_pairs_one(hidden[j], msk[j], ccs[i], dcs[i], ll)
+
+
+def _fullsample_margins(w, docs: pd.DataFrame, batch_size: int = 8) -> pd.DataFrame:
+    """FULLTEXT_SCHEMA rows -> FULLSAMPLE_SCHEMA rows, one per REAL pair:
+    ``fullsample_pooled`` then the pair head per document at its own
+    [n_pairs, 2H] shape, so the logits keep its bit-identity at any
+    batch size and partitioning.  perfbench/layers.py profiles this
+    function by name (``electra.forward_s``)."""
+    from .electra import pair_head
+
+    cols = [c.split(" ")[0] for c in FULLSAMPLE_SCHEMA.split(", ")]
+    if not len(docs):
+        return pd.DataFrame(columns=cols)
+    frames: list[pd.DataFrame] = []
+    for keys, pooled in fullsample_pooled(w, docs, batch_size):
+        logits = pair_head(w, pooled)  # [n_pairs, 2]
+        margins = logits[:, 1] - logits[:, 0]  # float32
+        frames.append(
+            keys.assign(
+                logit_neg=logits[:, 0].astype(np.float64),
+                logit_pos=logits[:, 1].astype(np.float64),
+                margin=margins.astype(np.float64),
+            )
+        )
     return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=cols)
 
 
@@ -353,41 +365,39 @@ def score_alps_3way(
 
 def fused_score_docs(
     doc_payload: DataFrame,
+    gazetteer: dict[str, list[tuple[str, str]]],
+    max_term_words: int,
     tree_map: dict[str, list[str]] | None = None,
     use_levi: bool = True,
-    extract_inter: bool = True,
-    gazetteer: dict[str, list[tuple[str, str]]] | None = None,
-    max_term_words: int = 1,
     backend: str = "stub",
     sentence_splitter: str = "regex",
 ) -> DataFrame:
-    """Doc-level fused stage: candidate pairs + Levi filter + evidence +
-    featurize + score for ALL of a document's pairs in one pass — the
-    reference's own batching shape ("one encoder pass per document scores
-    all its pairs", electra_model.py:711-734 / SURVEY §3.3).
+    """Doc-level fused stage: mention detection + candidate pairs + Levi
+    filter + evidence + featurize + score for ALL of a document's pairs
+    in one pass — the reference's own batching shape ("one encoder pass
+    per document scores all its pairs", electra_model.py:711-734 /
+    SURVEY §3.3).
 
     Input: one row per document
-      (url, text, entities array<struct<mesh_id, positions, rep_text,
-       type>>, gold_pairs array<struct<chem_mesh, dis_mesh>> | null)
+      (url, text, gold_pairs array<struct<chem_mesh, dis_mesh>> | null)
 
     Scale rationale: the document text crosses the shuffle and the Arrow
     boundary ONCE per document instead of once per pair — at ~3 KB/page
     and tens of pairs/page that is an order of magnitude less data
     movement than a pair-level join, and it keeps the python stage
-    compute-bound (the scaling-efficiency criterion).  ``tree_map`` (the
-    MeSH multimap) rides along in the UDF closure — a few MB, the same
-    payload a broadcast variable would carry.
-
-    With ``gazetteer`` set, the input payload needs only (url, text
-    [, gold_pairs]) and mention detection itself runs in this same pass
+    compute-bound (the scaling-efficiency criterion).  ``gazetteer``
+    (the surface-form dict, longest term ``max_term_words`` words) and
+    ``tree_map`` (the MeSH multimap) ride along in the UDF closure — a
+    few MB, the same payload a broadcast variable would carry.  Mention
+    detection runs in this same pass
     (operators.mentions.detect_mentions_py — semantics identical to the
-    relational operator), making the whole pipeline a SINGLE narrow
-    python stage: no token explode, no per-doc window shuffle.
+    relational operator), so no token explode and no per-doc window
+    shuffle precede it.
 
-    Semantically identical to the modular relational path
+    Semantically identical to the relational operator chain
     (detect_mentions |> entity_inventory |> candidate_pairs |>
     label_pairs |> levi_filter |> select_evidence |> featurize |>
-    score_pairs) — pytest-verified.
+    score_pairs) — pinned by tests/test_fused.py.
     """
     from ..operators.candidates import levi_rejected_py
     from ..operators.evidence import DocIndex, select_evidence_py
@@ -412,22 +422,19 @@ def fused_score_docs(
                 # never crash the stage (no mentions => no pairs anyway)
                 if r.text is None or not r.text:
                     continue
-                if gazetteer is not None:
-                    inv: dict[str, dict] = {}
-                    for m in detect_mentions_py(r.text, gazetteer, max_term_words):
-                        e = inv.setdefault(
-                            m["mesh_id"],
-                            {"mesh_id": m["mesh_id"], "type": m["type"],
-                             "positions": [], "rep_text": m["mention_text"],
-                             "_last": -1},
-                        )
-                        e["positions"].append({"start": m["start"], "end": m["end"]})
-                        if m["start"] > e["_last"]:  # last-mention-wins rep
-                            e["rep_text"] = m["mention_text"]
-                            e["_last"] = m["start"]
-                    ents = list(inv.values())
-                else:
-                    ents = list(r.entities)
+                inv: dict[str, dict] = {}
+                for m in detect_mentions_py(r.text, gazetteer, max_term_words):
+                    e = inv.setdefault(
+                        m["mesh_id"],
+                        {"mesh_id": m["mesh_id"], "type": m["type"],
+                         "positions": [], "rep_text": m["mention_text"],
+                         "_last": -1},
+                    )
+                    e["positions"].append({"start": m["start"], "end": m["end"]})
+                    if m["start"] > e["_last"]:  # last-mention-wins rep
+                        e["rep_text"] = m["mention_text"]
+                        e["_last"] = m["start"]
+                ents = list(inv.values())
                 chems = [e for e in ents if e["type"] == "Chemical"]
                 diss = [e for e in ents if e["type"] == "Disease"]
                 if not chems or not diss:
@@ -460,7 +467,7 @@ def fused_score_docs(
                         ev = select_evidence_py(
                             r.text, c["mesh_id"], d["mesh_id"], cpos, dpos,
                             c["rep_text"], d["rep_text"], label,
-                            extract_inter=extract_inter, sents=doc.sents,
+                            sents=doc.sents,
                             pos_index=doc.index_for(
                                 [p for p, _ in cpos] + [p for p, _ in dpos]
                             ),

@@ -115,6 +115,7 @@ from .electra import (
     pad_stack,
     resolve_weights,
 )
+from .scorer import fullsample_pooled
 
 # fixed-point scales: feat/activation lane 2^14 (quantum 6e-5 on values
 # |x| ≲ 128), gradient lane 2^16 (quantum 1.5e-5 on values |dz| ≲ 4),
@@ -134,17 +135,6 @@ GRAD_ROW_SCHEMA = "chunk int, g array<long>, loss_q long, n_valid long"
 # --------------------------------------------------------------------------
 # frozen-encoder feature extraction
 # --------------------------------------------------------------------------
-
-
-def _weights_for(config_key: tuple, seed: int, npz_path: str | None) -> ElectraWeights:
-    """Shared weight-sourcing dispatch (electra.resolve_weights, which
-    memoizes per process) keyed by the config's field tuple so a plain
-    tuple can cross the UDF closure."""
-    return resolve_weights(ElectraConfig(*config_key), seed, npz_path)
-
-
-def _config_key(cfg: ElectraConfig) -> tuple:
-    return tuple(getattr(cfg, f) for f in cfg.__dataclass_fields__)
 
 
 def pool_features(
@@ -195,10 +185,10 @@ def pool_features(
     """
     if pooling not in ("first_token", "run_mean", "all_match"):
         raise ValueError(f"unknown pooling {pooling!r}")
-    key, pad_id = _config_key(config), 0
+    pad_id = 0
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = _weights_for(key, seed, npz_path)
+        w = resolve_weights(config, seed, npz_path)
         hs = w.config.hidden_size
         for pdf in batches:
             if pdf.empty:
@@ -279,8 +269,8 @@ def pool_fulltext_features(
     ``train_full_sample`` / ``train_sentence(train_with_full_sample=
     True)``): ONE frozen-encoder pass per document yields the pooled
     [2H] feature for ALL of its (chem, dis) pairs via the is_full_sample
-    all-match pooling (electra.full_sample_pooled — the exact pooling
-    of electra_model.py:626-641, :711-734).
+    all-match pooling (the exact pooling of electra_model.py:626-641,
+    :711-734).
 
     Only REAL pairs are emitted.  The reference pads every document's
     pair list to the batch label width and feeds the pad pairs (label
@@ -292,62 +282,22 @@ def pool_fulltext_features(
     pad pairs are never even pooled; real-pair features are identical
     at any width because ``pool_pairs_one`` is a per-pair gather.
 
-    Batching is EQUAL-LENGTH-GROUPED (electra.length_grouped_batches),
-    exactly like ``scorer.score_fulltext``: documents of the same exact
-    token length share encoder batches of up to ``batch_size``, then
-    pooling runs per document at the document's own [C, T] shape.
+    The loop is ``scorer.fullsample_pooled``, the one ``score_fulltext``
+    runs: EQUAL-LENGTH-GROUPED encoder batches of up to ``batch_size``,
+    then pooling per document at the document's own [C, T] shape.
     Every emitted feature is BIT-IDENTICAL to its ``batch_size=1``
     result at any batch size / partitioning / Arrow-chunk layout, so
     the doc-level training path is layout-independent end-to-end (the
     head's reductions downstream are already exact int64/decimal)."""
 
-    key = _config_key(config)  # plain tuple crosses the UDF closure
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .electra import pool_pairs_one
-
-        w = _weights_for(key, seed, npz_path)
-        cols = ["url", "chem_mesh", "dis_mesh", "label", "feat"]
-        empty = pd.DataFrame(columns=cols)
+        w = resolve_weights(config, seed, npz_path)
+        empty = pd.DataFrame(columns=["url", "chem_mesh", "dis_mesh", "label", "feat"])
         for pdf in batches:
-            if not len(pdf):
-                yield empty
-                continue
-            tids = [list(x) for x in pdf["token_ids"]]
-            ems = [list(x) for x in pdf["entity_mask"]]
-            ccs = [list(x) for x in pdf["chem_codes"]]
-            dcs = [list(x) for x in pdf["dis_codes"]]
-            labels = [np.asarray(x, np.int32) for x in pdf["labels"]]
-            urls = pdf["url"].to_numpy()
-            cms_all = [list(x) for x in pdf["chem_meshes"]]
-            dms_all = [list(x) for x in pdf["dis_meshes"]]
-            frames: list[pd.DataFrame] = []
-            for sel in length_grouped_batches([len(t) for t in tids], batch_size):
-                ids, att, msk = pad_stack(
-                    [tids[i] for i in sel], [ems[i] for i in sel]
-                )
-                hidden = encoder_forward(w, ids, att)
-                for j, i in enumerate(sel):
-                    ll = len(labels[i])
-                    pooled = pool_pairs_one(hidden[j], msk[j], ccs[i], dcs[i], ll)
-                    cms, dms = cms_all[i], dms_all[i]
-                    # pair order matches generate_code_pairs nesting
-                    # (chem-major), the order labels were built in
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "url": np.repeat(urls[i], ll),
-                                "chem_mesh": np.repeat(
-                                    np.asarray(cms, object), len(dms)
-                                ),
-                                "dis_mesh": np.tile(
-                                    np.asarray(dms, object), len(cms)
-                                ),
-                                "label": labels[i],
-                                "feat": list(pooled.astype(np.float32)),
-                            }
-                        )
-                    )
+            frames = [
+                keys.assign(feat=list(pooled.astype(np.float32)))
+                for keys, pooled in fullsample_pooled(w, pdf, batch_size)
+            ]
             yield pd.concat(frames, ignore_index=True) if frames else empty
 
     return fulltext.mapInPandas(run, schema=POOLED_SCHEMA)

@@ -4,7 +4,7 @@ since big pages arrive together in segments — compare the fused pipeline
 with the skew-aware salting OFF vs ON.
 
 Salting design under test (plans/pipeline.py score_candidates): only
-documents above heavy_doc_chars are repartitioned by url-hash (a ~1%
+documents above HEAVY_DOC_CHARS are repartitioned by url-hash (a ~1%
 shuffle); the light majority never crosses an exchange. OFF = every
 partition keeps its input layout, so the heavy cluster becomes a
 straggler tail.
@@ -100,7 +100,7 @@ runs each, warm-up excluded.
 
 speedup from salting: **{unsalted / salted:.2f}x**
 
-The salting path shuffles ONLY documents longer than heavy_doc_chars
+The salting path shuffles ONLY documents longer than HEAVY_DOC_CHARS
 (~{n_heavy}/{n} of rows here, ~1%): the light majority stays narrow, so
 the exchange moves a tiny fraction of the corpus while the straggler
 tail is spread across all executors. At 100 TB the same threshold rule

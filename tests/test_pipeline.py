@@ -11,6 +11,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 import pytest
 
+from relation_extraction_cdr_spark.plans import pipeline
 from relation_extraction_cdr_spark.plans.pipeline import (
     adjacency,
     extracted_docs,
@@ -31,17 +32,13 @@ def test_extracted_text_byte_identity(spark, fixtures):
     assert bad == 0
 
 
-@pytest.mark.parametrize(
-    "backend, fused",
-    [("numpy", True), ("onnx", True), ("elektra", True), ("electra", False)],
-)
-def test_unknown_scorer_backend_rejected(spark, fixtures, mesh, backend, fused):
-    """Only "stub" and "electra" are scorer backends, and the modular
-    (fused=False) path is the stub oracle only: anything else raises
-    instead of silently running the stub."""
+@pytest.mark.parametrize("backend", ["numpy", "onnx", "elektra"])
+def test_unknown_scorer_backend_rejected(spark, fixtures, mesh, backend):
+    """Only "stub" and "electra" are scorer backends: anything else
+    raises instead of silently running the stub."""
     pages, _, _ = fixtures
     with pytest.raises(ValueError, match="scorer_backend"):
-        score_candidates(pages, mesh, scorer_backend=backend, fused=fused)
+        score_candidates(pages, mesh, scorer_backend=backend)
 
 
 def test_url_level_pr(spark, fixtures, mesh):
@@ -80,10 +77,21 @@ def test_scorer_no_gold_mode(spark, fixtures, mesh):
     assert scored.where("pred=1").count() > 0
 
 
-def test_salted_repartition_runs(spark, fixtures, mesh):
+def test_salted_repartition_runs(spark, fixtures, mesh, monkeypatch):
+    """Salting only moves documents: with a threshold that makes about
+    half the fixture pages heavy, the salted run returns exactly the
+    unsalted rows for both scorer backends."""
     pages, _, gold = fixtures
-    scored = score_candidates(pages, mesh, gold=gold, salt_partitions=8)
-    assert scored.count() > 0
+    monkeypatch.setattr(pipeline, "HEAVY_DOC_CHARS", 175)
+    n_heavy = extracted_docs(pages).where(F.length("text") > 175).count()
+    assert 0 < n_heavy < pages.count()  # both union branches carry rows
+    for backend in ("stub", "electra"):
+        plain = score_candidates(pages, mesh, gold=gold, scorer_backend=backend)
+        salted = score_candidates(
+            pages, mesh, gold=gold, scorer_backend=backend, salt_partitions=4
+        )
+        expect = sorted(plain.collect())
+        assert expect and sorted(salted.collect()) == expect, backend
 
 
 def test_empty_gazetteer_fails_fast_and_is_not_cached(spark, fixtures, mesh):
@@ -98,17 +106,17 @@ def test_empty_gazetteer_fails_fast_and_is_not_cached(spark, fixtures, mesh):
     assert score_candidates(pages, mesh).where("pred=1").count() > 0
 
 
-def test_interleaved_pipelines_leak_no_cache(spark, fixtures, mesh):
+def test_interleaved_pipelines_leak_no_cache(spark, fixtures, mesh, monkeypatch):
     """Two salted pipelines built in one driver and collected in
     interleaved order each return exactly their isolated rows, and
     neither leaves a persisted RDD behind."""
     pages, _, _ = fixtures
     half = F.pmod(F.xxhash64("url"), F.lit(2))
     page_sets = [pages.where(half == 0), pages.where(half == 1)]
-    kw = {"salt_partitions": 4, "heavy_doc_chars": 175}  # both branches carry rows
+    monkeypatch.setattr(pipeline, "HEAVY_DOC_CHARS", 175)  # both branches carry rows
 
     def build(p):
-        return score_candidates(p, mesh, **kw)
+        return score_candidates(p, mesh, salt_partitions=4)
 
     isolated = [sorted(build(p).collect()) for p in page_sets]
     assert all(isolated) and isolated[0] != isolated[1]
