@@ -278,9 +278,9 @@ def png_decode(payload: bytes) -> np.ndarray:
     grey, 8/16-bit grey+alpha / RGB / RGBA, 1/2/4/8-bit palette (PLTE +
     optional tRNS -> RGB/RGBA), Adam7 interlacing, every scanline
     filter type.  Palette output is uint8 RGB, or RGBA when tRNS is
-    present; other color types return the file's own channel count at
-    its own depth — sub-byte greyscale comes back RAW (0..2^d-1,
-    unscaled)."""
+    present; other color types (whose tRNS is skipped) return the
+    file's own channel count at its own depth — sub-byte greyscale
+    comes back RAW (0..2^d-1, unscaled)."""
     if payload[:8] != PNG_MAGIC:
         raise ValueError("not a PNG: bad signature")
     pos = 8
@@ -321,14 +321,10 @@ def png_decode(payload: bytes) -> np.ndarray:
             ch = _CHANNELS[color]
         elif tag == b"PLTE":
             plte = np.frombuffer(body, np.uint8).reshape(-1, 3)
-        elif tag == b"tRNS":
-            if color != 3:
-                # for grey/RGB the chunk holds 16-bit sample values, a
-                # different layout than the palette alpha bytes below —
-                # a documented seam, not a silent drop (PNG 11.3.2)
-                raise NotImplementedError(
-                    f"png_decode: tRNS for color type {color}"
-                )
+        elif tag == b"tRNS" and color == 3:
+            # grey/RGB tRNS holds one 16-bit transparent sample value
+            # (PNG 11.3.2); those outputs carry no alpha plane, so the
+            # chunk is skipped like any other ancillary chunk
             trns = np.frombuffer(body, np.uint8)
         elif tag == b"IDAT":
             idat.extend(body)
@@ -651,6 +647,11 @@ def avi_encode(frames: np.ndarray, fps: int = 10) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+# real AVIs nest LISTs at most ~4 deep (RIFF > hdrl > strl, movi > rec);
+# the cap keeps a crafted deep nest from exhausting the Python stack
+_AVI_MAX_LIST_DEPTH = 16
+
+
 def avi_decode(payload: bytes) -> tuple[np.ndarray, float]:
     """Uncompressed AVI bytes -> ((n, h, w, 3) uint8 RGB frames, fps).
     Walks the RIFF tree for avih (dims), strh (rate/scale), strf
@@ -663,11 +664,13 @@ def avi_decode(payload: bytes) -> tuple[np.ndarray, float]:
     stream_type = b""  # fccType of the enclosing strl's strh
     frames: list[np.ndarray] = []
 
-    def walk(lo: int, hi: int) -> None:
+    def walk(lo: int, hi: int, depth: int) -> None:
         # offset-based walk: no intermediate byte copies — a large
         # uncompressed AVI would otherwise be duplicated per nesting
         # level (payload -> LIST body -> movi body -> frame)
         nonlocal w, h, fps, stream_type
+        if depth > _AVI_MAX_LIST_DEPTH:
+            raise ValueError(f"AVI: LIST nesting deeper than {_AVI_MAX_LIST_DEPTH}")
         p = lo
         while p + 8 <= hi:
             fourcc = payload[p : p + 4]
@@ -675,7 +678,7 @@ def avi_decode(payload: bytes) -> tuple[np.ndarray, float]:
             d0, d1 = p + 8, min(p + 8 + ln, hi)
             p += 8 + ln + (ln & 1)
             if fourcc == b"LIST":
-                walk(d0 + 4, d1)
+                walk(d0 + 4, d1, depth + 1)
             elif fourcc == b"avih":
                 vals = struct.unpack("<14I", payload[d0 : d0 + 56])
                 w, h = vals[8], vals[9]
@@ -710,7 +713,7 @@ def avi_decode(payload: bytes) -> tuple[np.ndarray, float]:
                 bgr = rows[:, : w * 3].reshape(h, w, 3)
                 frames.append(bgr[::-1, :, ::-1].copy())  # top-down, RGB
 
-    walk(12, len(payload))
+    walk(12, len(payload), 0)
     if w is None or not frames:
         raise ValueError("AVI: missing headers or frames")
     return np.stack(frames), fps

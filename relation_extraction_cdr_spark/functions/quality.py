@@ -1,5 +1,6 @@
 """Text-analysis column functions for training-data curation:
-language-ID, quality scoring, token counting, document fingerprinting.
+language-ID, quality signals (word count, punctuation ratio), document
+fingerprinting.
 
 All pure JVM column expressions (whole-stage codegen, no Python):
 every function here is also expressible in ANSI SQL, which is how the
@@ -37,17 +38,13 @@ def padded_text(text: Column) -> Column:
 
 
 def _count_padded(padded: Column, word: str) -> Column:
+    """Occurrences of a space-delimited word, counted via length delta
+    after removal (the same trick in the SQL oracle)."""
     needle = f" {word} "
     return (
         (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(" "))))
         / (len(needle) - 1)
     ).cast("int")
-
-
-def _count_word(text: Column, word: str) -> Column:
-    """Occurrences of a space-delimited word: counted via length delta
-    after removal (identical trick in the SQL oracle)."""
-    return _count_padded(padded_text(text), word)
 
 
 def lang_scores(text: Column = None, *, padded: Column = None) -> dict[str, Column]:
@@ -73,32 +70,10 @@ def word_count(text: Column) -> Column:
     return F.size(F.split(F.trim(text), r"\s+"))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     """punctuation chars / total chars (4-decimal fixed point)."""
     punct = F.length(F.regexp_replace(text, r"[^.!?,;:]", ""))
     return F.round(punct / F.greatest(F.length(text), F.lit(1)), 4)
-
-
-def stopword_ratio(text: Column, lang: str = "en", *, padded: Column = None) -> Column:
-    """Pass ``padded`` (a bound padded_text column) in hot paths so the
-    marker counters share one padded copy — same trap as detect_lang."""
-    p = padded if padded is not None else padded_text(text)
-    hits = sum((_count_padded(p, w) for w in LANG_MARKERS[lang]), F.lit(0))
-    return F.round(hits / F.greatest(word_count(text), F.lit(1)), 4)
-
-
-def quality_score(text: Column, *, padded: Column = None) -> Column:
-    """Composite curation score in [0,1]: length band + stopword presence
-    - punctuation excess.  The exact formula is the contract."""
-    wc = word_count(text)
-    len_term = F.least(wc / F.lit(100.0), F.lit(1.0))
-    stop_term = F.least(stopword_ratio(text, padded=padded) * 5, F.lit(1.0))
-    punct_term = F.least(punct_ratio(text) * 5, F.lit(1.0))
-    return F.round((len_term * 0.5 + stop_term * 0.4 - punct_term * 0.1 + 0.1), 4)
 
 
 def fingerprint(text: Column, length: int = 16) -> Column:

@@ -160,16 +160,6 @@ def normalize_ws(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def whitespace_tokens(col: Column) -> Column:
-    """Reference token model for distance computation: split(' ')
-    (text_utils.py:15 splits on a single space)."""
-    return F.split(col, " ")
-
-
 # a BPE-ish word/punct tokenizer used by token-counting analytics; the
 # regex is the contract (deterministic, language-agnostic)
 BPEISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
-
-
-def bpeish_token_count(col: Column) -> Column:
-    return F.size(F.regexp_extract_all(col, F.lit(BPEISH_PATTERN), 0))

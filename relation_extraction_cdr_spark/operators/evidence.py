@@ -57,10 +57,6 @@ EVIDENCE_SCHEMA = (
 )
 
 
-def _check_position(start: int, sent_start: int, sent: str) -> bool:
-    return sent_start <= start <= sent_start + len(sent) - 1
-
-
 def _token_distance(chem_code: str, chem_start: int, dis_code: str,
                     dis_start: int, sent: str, sent_start: int) -> int:
     # earlier entity's END computed with the length of its MESH CODE

@@ -522,7 +522,7 @@ def q16(spark, sf_dir):
 # 5. text analysis (lang-ID, quality, tokens, fingerprint) — F-family + ext
 # ---------------------------------------------------------------------------
 
-def _sql_count_word(word: str) -> str:
+def _sql_count_padded(word: str) -> str:
     needle = f" {word} "
     return (
         f"CAST((LENGTH(p) - LENGTH(REPLACE(p, '{needle}', ' '))) / {len(needle) - 1} AS INT)"
@@ -534,7 +534,7 @@ def _sql_lang_scores() -> str:
     functions.quality.lang_scores)."""
     score_cols = []
     for lang, words in Q.LANG_MARKERS.items():
-        expr = " + ".join(_sql_count_word(w) for w in words)
+        expr = " + ".join(_sql_count_padded(w) for w in words)
         score_cols.append(f"({expr}) AS s_{lang}")
     return (
         "SELECT doc_id, "
@@ -3549,7 +3549,7 @@ def q75(spark, sf_dir):
              LENGTH(REGEXP_REPLACE(text, '[^.!?,;:]', '', 'g'))
                / GREATEST(LENGTH(text), 1) AS punct_ratio
       FROM (SELECT b.*,
-                   {', '.join(f"({' + '.join(_sql_count_word(w) for w in ws)}) AS x_{lang}"
+                   {', '.join(f"({' + '.join(_sql_count_padded(w) for w in ws)}) AS x_{lang}"
                               for lang, ws in Q.LANG_MARKERS.items())}
             FROM base b))
     SELECT doc_id, detected_lang,
@@ -4280,13 +4280,13 @@ def _doc_fulltext(spark, sf_dir):
 @register("q87_fullsample_logits")  # rows-only: numpy encoder not SQL-expressible
 def q87(spark, sf_dir):
     """The is_full_sample document-level forward made LOAD-BEARING
-    (reference electra_model.py:711-734 via scoring/electra.
-    full_sample_forward): ONE encoder pass per document scores ALL its
+    (reference electra_model.py:711-734 via scoring/scorer.
+    score_fulltext): ONE encoder pass per document scores ALL its
     (chem, dis) pairs — the engine's preferred batching shape — and the
     OUTPUT IS THE LOGITS THEMSELVES, quantized to exact micro-units.
-    Parity vs the literal port is pinned by
-    tests/test_electra.py::test_full_sample_forward_parity; the Spark
-    twin (distributed == local single-doc kernel) by
+    Parity of the same kernel (scorer.fullsample_pooled + electra.
+    pair_head) vs the literal port is pinned in tests/test_electra.py;
+    the Spark twin (distributed == local single-doc kernel) by
     tests/test_electra.py::test_score_fulltext_spark_matches_local_twin.
     Rows-only: DuckDB cannot run the encoder.
 
@@ -4340,8 +4340,9 @@ def q89(spark, sf_dir):
     """ALPS 3-way tanh pair head (reference electra_model.py:273-411):
     run-counting mean pooling + branch-ordered concat + dense/TANH/
     out_proj, one row per exercisable -1 branch per document, logits in
-    exact micro-units.  Forward parity:
-    tests/test_electra.py::test_alps_forward_parity."""
+    exact micro-units.  Its kernel (electra.alps_pooled +
+    AlpsHead.apply) is parity-tested against the literal port in
+    tests/test_electra.py."""
     from ..scoring.scorer import score_alps_3way
 
     scored = score_alps_3way(
@@ -4514,7 +4515,7 @@ def q91(spark, sf_dir):
     over the corpus: documents -> gazetteer mentions -> fulltext
     (is_full_sample) features -> ONE frozen-encoder pass per document
     pooling ALL its (chem, dis) pairs (scoring/train.
-    pool_fulltext_features over electra.full_sample_pooled, the exact
+    pool_fulltext_features over scorer.fullsample_pooled, the exact
     pooling of electra_model.py:626-641) -> 3 full-batch epochs of the
     reference AdamW rule with the integer-exact gradient fold.  Same
     output contract as q86: (epoch, loss_q, n_valid, params_checksum),

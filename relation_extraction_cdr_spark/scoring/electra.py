@@ -16,9 +16,14 @@ reference electra_model.py:535-553 __init__, :563-690 forward):
   LayerNorm (transformers 2.11 modeling_bert.BertLayer)
 - extended attention mask: (1 - mask) * -10000.0
   (modeling_utils.get_extended_attention_mask)
-- FIRST-TOKEN span pooling: the entity embedding is the hidden state of
-  the first position whose entity_mask equals the entity's code
-  (get_entity_embedding, electra_model.py:618-624)
+- span pooling, in the reference's three variants: FIRST-TOKEN, the
+  hidden state of the first position whose entity_mask equals the
+  entity's code (get_entity_embedding, electra_model.py:618-624;
+  ``first_token_pool``); ALL-MATCH, the mean over every matching
+  position (get_all_entity_embedding, :626-641, the is_full_sample
+  pooler; ``all_match_pool`` / ``pool_pairs_one``); and RUN-COUNTING,
+  the sum over matches divided by the number of runs (:205-219, the
+  ALPS pooler; ``run_counting_mean_pool``)
 - pair head: concat(chem, dis) -> dropout -> dense(embedding_size*2,
   embedding_size*2) -> gelu -> dropout -> out_proj(-> 2)
   (electra_model.py:544-546 init, :676-690 apply; gelu per the inline
@@ -40,6 +45,14 @@ Weights: seeded-random by default (truncated-normal-free
 normal(0, initializer_range) per transformers 2.11 _init_weights;
 LayerNorm weight=1 bias=0), or loaded from an .npz file — the plug
 point for converted real checkpoint weights, which are not shipped.
+
+Each head runs through ONE length-grouped production kernel, built
+from the pieces here: the pair head on is_full_sample pooling in
+scorer.fullsample_pooled (the fused electra stage, score_fulltext and
+doc-level training), on first-token pooling in train.pool_features;
+the ALPS head on ``alps_pooled`` in scorer.score_alps_3way; the NER
+head in ``ner_forward``.  The literal-port parity tests
+(tests/test_electra.py) pin those kernels directly.
 
 GELU: x * 0.5 * (1 + erf(x / sqrt(2))).  numpy has no erf; the engine
 uses the Abramowitz-Stegun 7.1.26 rational approximation (|err| <=
@@ -317,7 +330,7 @@ def pair_head(w: ElectraWeights, pooled_concat: np.ndarray) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # pooling variants (A3 closure) — reference electra_model.py:205-219,
-# :626-641 — and the is_full_sample document-level forward (:711-734)
+# :626-641 — and the is_full_sample pair pooling (:711-734)
 # ---------------------------------------------------------------------------
 
 
@@ -385,74 +398,6 @@ def generate_code_pairs(
     return ccs, dcs
 
 
-def full_sample_forward(
-    w: ElectraWeights,
-    token_ids: list[list[int]],
-    entity_masks: list[list[int]],
-    chem_code_lists: list[list[int]],
-    dis_code_lists: list[list[int]],
-    label_length: int,
-    pad_id: int = 0,
-) -> np.ndarray:
-    """The ``is_full_sample`` document-level forward
-    (electra_model.py:711-734): ONE encoder pass per document scores
-    ALL of its (chem, dis) pairs.  Returns [B, label_length, 2] logits.
-
-    Per document: pairs come from ``generate_code_pairs``; each side of
-    a pair pools via ``all_match_pool`` (mean over ALL positions whose
-    mask equals the code); the concat feeds the same gelu pair head.
-    Padding pairs carry code -1, and — faithfully to the reference —
-    code -1 pools over the PADDING positions of the mask (sequence
-    padding fills masks with -1), yielding the mean pad-state for short
-    documents and zeros for full-length ones.
-
-    Vectorization: the per-(doc, code) means are one boolean-matrix
-    GEMM per document ([C, T] @ [T, H]), the head one GEMM per batch —
-    no per-position python."""
-    B = len(token_ids)
-    if B == 0:
-        return np.zeros((0, label_length, 2), np.float32)
-    pooled = full_sample_pooled(
-        w, token_ids, entity_masks, chem_code_lists, dis_code_lists,
-        label_length, pad_id,
-    )
-    hs2 = pooled.shape[-1]
-    return pair_head(w, pooled.reshape(B * label_length, hs2)).reshape(
-        B, label_length, 2
-    )
-
-
-def full_sample_pooled(
-    w: ElectraWeights,
-    token_ids: list[list[int]],
-    entity_masks: list[list[int]],
-    chem_code_lists: list[list[int]],
-    dis_code_lists: list[list[int]],
-    label_length: int,
-    pad_id: int = 0,
-) -> np.ndarray:
-    """The pooled pair features of the is_full_sample forward, BEFORE
-    the head: [B, label_length, 2H] concat(all_match chem mean,
-    all_match dis mean) per pair — shared by ``full_sample_forward``
-    (inference) and ``train.pool_fulltext_features`` (the levi trainer's
-    doc-level training granularity)."""
-    B = len(token_ids)
-    if B == 0:
-        return np.zeros((0, label_length, 2 * w.config.hidden_size), np.float32)
-    # att = (x != pad_id) in the levi trainer
-    ids, att, msk = pad_stack(token_ids, entity_masks, pad_id)
-
-    hidden = encoder_forward(w, ids, att)  # [B, T, H]
-    hs = hidden.shape[-1]
-
-    pooled = np.zeros((B, label_length, 2 * hs), np.float32)
-    for b in range(B):
-        pooled[b] = pool_pairs_one(
-            hidden[b], msk[b], chem_code_lists[b], dis_code_lists[b], label_length
-        )
-    return pooled
-
-
 def pool_pairs_one(
     hidden_b: np.ndarray,
     msk_b: np.ndarray,
@@ -460,10 +405,13 @@ def pool_pairs_one(
     dis_codes: list[int],
     label_length: int,
 ) -> np.ndarray:
-    """One document's is_full_sample pair pooling ([T, H] hidden + [T]
-    mask -> [label_length, 2H] concat of all-match means) — the loop
-    body of ``full_sample_pooled``, shared with the equal-length-grouped
-    scorer path so both compute the pooling with the SAME ops."""
+    """One document's is_full_sample pair pooling (electra_model.py:
+    711-734): [T, H] hidden + [T] mask -> [label_length, 2H] concat of
+    the all-match chem and dis means of each ``generate_code_pairs``
+    pair.  Pad pairs carry code -1 and, faithfully to the reference,
+    pool the -1 PADDING positions of the mask.  The per-(code) means
+    are one boolean-matrix GEMM ([C, T] @ [T, H]).  Run per document
+    by scorer.fullsample_pooled, the one is_full_sample loop."""
     hs = hidden_b.shape[-1]
     ccs, dcs = generate_code_pairs(list(chem_codes), list(dis_codes), label_length)
     if len(ccs) != label_length:
@@ -612,31 +560,6 @@ class AlpsHead:
         return x @ self.out_w + self.out_b
 
 
-def alps_forward(
-    w: ElectraWeights,
-    head: AlpsHead,
-    token_ids: list[list[int]],
-    entity_masks: list[list[int]],
-    chem_codes: list[int],
-    dis_codes: list[int],
-    other_codes: list[int],
-    pad_id: int = 0,
-) -> np.ndarray:
-    """ALPS 3-way forward (electra_model.py:306-411): encoder once per
-    padded batch; per row exactly ONE of (chem, dis, other) codes is -1
-    and the OTHER TWO pool via the run-counting mean
-    (``run_counting_mean_pool``); concat order follows :385-399 —
-    chem==-1 -> (disease, other); dis==-1 -> (chemical, other);
-    other==-1 -> (chemical, disease) — then the tanh head.  Returns
-    [N, 2] logits."""
-    n = len(token_ids)
-    if n == 0:
-        return np.zeros((0, 2), np.float32)
-    return head.apply(
-        alps_pooled(w, token_ids, entity_masks, chem_codes, dis_codes, other_codes, pad_id)
-    )
-
-
 def alps_pooled(
     w: ElectraWeights,
     token_ids: list[list[int]],
@@ -646,10 +569,14 @@ def alps_pooled(
     other_codes: list[int],
     pad_id: int = 0,
 ) -> np.ndarray:
-    """The [N, 2H] pooled concat of the ALPS forward BEFORE the tanh
-    head — split out so the equal-length-grouped scorer path can batch
-    the encoder while applying the head per row at the same M=1 GEMM
-    shape the one-row-at-a-time path uses (bit-determinism)."""
+    """ALPS 3-way pooling (electra_model.py:306-411): encoder once per
+    padded batch; per row exactly ONE of (chem, dis, other) codes is -1
+    and the OTHER TWO pool via ``run_counting_mean_pool``; concat order
+    follows :385-399 — chem==-1 -> (disease, other); dis==-1 ->
+    (chemical, other); other==-1 -> (chemical, disease).  Returns the
+    [N, 2H] concat that ``AlpsHead.apply`` turns into logits;
+    scorer.score_alps_3way batches the encoder by equal length and
+    applies the head per row at M=1 (bit-determinism)."""
     n = len(token_ids)
     ids, att, msk = pad_stack(token_ids, entity_masks, pad_id)
     hidden = encoder_forward(w, ids, att)
@@ -668,108 +595,8 @@ def alps_pooled(
             b = run_counting_mean_pool(hidden[i], msk[i], dc)
         if a is None or b is None:
             # the reference would crash (None / count); degenerate rows
-            # keep a zero concat like the pair-head scorer's rule
+            # keep a zero concat, train.pool_features' rule
             continue
         pooled[i, :hs] = a
         pooled[i, hs:] = b
     return pooled
-
-
-@dataclass
-class ClsHead:
-    """ElectraModelSentenceClassification head (reference
-    electra_model.py:426-428): dense(256, 256) -> GELU -> out_proj(256,
-    2) over the CLS (position-0) hidden state, with dropout(0.1) before
-    the dense and before the out_proj (identity at inference).  256 is
-    hardcoded in the reference (= hidden_size with the runnable small
-    config); here the shape follows hidden_size so any consistent
-    config runs, with the literal 256 at that config — the same rule
-    AlpsHead applies to its hardcoded 512.
-
-    DEAD CODE in the reference, pinned: the class is imported by all
-    three trainers (cdr_trainer.py:7, cdr_trainer_levi.py:7,
-    gda_trainer.py:7-8) but never instantiated by ANY of them — every
-    constructed model is one of ElectraModelClassification /
-    ElectraModelEntitySentenceClassification /
-    ElectraModelEntityTokenClassification (plus the ALPS variant), so
-    no reference entry point reaches this forward.  The math is ported
-    and parity-tested anyway (tests/test_electra.py::
-    test_cls_pool_forward_parity) and the import-only status is pinned
-    mechanically (::test_cls_pool_dead_in_reference), mirroring the J9
-    dead-loop pin in scoring/checkpoint.py."""
-
-    dense_w: np.ndarray
-    dense_b: np.ndarray
-    out_w: np.ndarray
-    out_b: np.ndarray
-
-    @classmethod
-    def seeded(cls, config: ElectraConfig = DEFAULT_CONFIG, seed: int = 0) -> "ClsHead":
-        rng = np.random.default_rng(seed)
-        h, s = config.hidden_size, config.initializer_range
-        return cls(
-            rng.normal(0.0, s, (h, h)).astype(np.float32),
-            np.zeros(h, np.float32),
-            rng.normal(0.0, s, (h, 2)).astype(np.float32),
-            np.zeros(2, np.float32),
-        )
-
-    def apply(self, cls_hidden: np.ndarray) -> np.ndarray:
-        x = cls_hidden @ self.dense_w + self.dense_b
-        x = gelu(x)
-        return x @ self.out_w + self.out_b
-
-
-def cls_pool_forward(
-    w: ElectraWeights,
-    head: ClsHead,
-    token_ids: list[list[int]],
-    pad_id: int = 0,
-) -> np.ndarray:
-    """CLS-pool sentence classification forward (electra_model.py:
-    485-529): embeddings -> encoder over the padded batch, take
-    ``sequence_output[:, 0, :]`` (the [CLS] position), then dropout ->
-    dense -> gelu ("although BERT uses tanh here, it seems Electra
-    authors used gelu here", :528) -> dropout -> out_proj.  Dropouts
-    are identity at inference.  Returns [N, 2] logits.  See ClsHead for
-    the dead-code pin."""
-    n = len(token_ids)
-    if n == 0:
-        return np.zeros((0, 2), np.float32)
-    ids, att, _ = pad_stack(token_ids, None, pad_id)
-    hidden = encoder_forward(w, ids, att)
-    return head.apply(hidden[:, 0, :])
-
-
-def score_candidates(
-    w: ElectraWeights,
-    token_ids: list[list[int]],
-    entity_masks: list[list[int]],
-    chem_codes: list[int],
-    dis_codes: list[int],
-    batch_size: int = 16,
-    pad_id: int = 0,
-) -> np.ndarray:
-    """The full non-full-sample forward over N candidate rows:
-    pad+stack per micro-batch (sequence_padding.py:18-44 semantics:
-    ids pad = tokenizer pad id, mask pad = -1), encoder once per batch,
-    first-token pooling per row, pair head.  Returns [N, 2] logits."""
-    n = len(token_ids)
-    hs = w.config.hidden_size
-    out = np.zeros((n, 2), np.float32)
-    for lo in range(0, n, batch_size):
-        hi = min(lo + batch_size, n)
-        b = hi - lo
-        ids, att, msk = pad_stack(token_ids[lo:hi], entity_masks[lo:hi], pad_id)
-        hidden = encoder_forward(w, ids, att)
-        # vectorized first_token_pool; a row missing EITHER code keeps
-        # a fully-zero concat (degenerate row — head still runs)
-        mc = msk == np.asarray(chem_codes[lo:hi], np.int64)[:, None]
-        md = msk == np.asarray(dis_codes[lo:hi], np.int64)[:, None]
-        has = mc.any(axis=1) & md.any(axis=1)
-        rows = np.arange(b)
-        pooled = np.zeros((b, 2 * hs), np.float32)
-        pooled[has, :hs] = hidden[rows[has], mc.argmax(axis=1)[has]]
-        pooled[has, hs:] = hidden[rows[has], md.argmax(axis=1)[has]]
-        out[lo:hi] = pair_head(w, pooled)
-    return out

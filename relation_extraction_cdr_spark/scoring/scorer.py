@@ -153,19 +153,6 @@ def _score_rows(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def score_pairs(features: DataFrame) -> DataFrame:
-    """features (FEATURES_SCHEMA) -> scored pairs (SCORED_SCHEMA) by the
-    stub decision rule.  The last step of the relational operator chain
-    that tests/test_fused.py pins the fused stage to; the encoder runs
-    only at document level (``fused_score_docs`` and ``score_fulltext``)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _score_rows(pdf)
-
-    return features.mapInPandas(run, schema=SCORED_SCHEMA)
-
-
 FULLSAMPLE_SCHEMA = (
     "url string, chem_mesh string, dis_mesh string, label int, "
     "logit_neg double, logit_pos double, margin double"
@@ -294,8 +281,8 @@ def score_alps_3way(
     kinds borrow the document's second entity of the opposite type as
     the deterministic stand-in — the FORWARD (run-counting mean pooling
     + branch-ordered concat + dense/tanh/out_proj) is the exact ALPS
-    kernel either way, parity-pinned by
-    tests/test_electra.py::test_alps_forward_parity."""
+    kernel either way: ``alps_pooled`` + ``AlpsHead.apply``, which
+    tests/test_electra.py pins to the literal port."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .electra import (
@@ -397,7 +384,7 @@ def fused_score_docs(
     Semantically identical to the relational operator chain
     (detect_mentions |> entity_inventory |> candidate_pairs |>
     label_pairs |> levi_filter |> select_evidence |> featurize |>
-    score_pairs) — pinned by tests/test_fused.py.
+    ``_score_rows``), which tests/test_fused.py composes as its oracle.
     """
     from ..operators.candidates import levi_rejected_py
     from ..operators.evidence import DocIndex, select_evidence_py

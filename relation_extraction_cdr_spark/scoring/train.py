@@ -174,10 +174,9 @@ def pool_features(
     pipeline layout-independent: pooled features exact per row, and
     everything downstream already reduces in quantized int64 /
     decimal(38,0).  Rows missing EITHER code in the mask pool to an
-    all-zero concat — the same degenerate-row rule as scoring
-    (score_candidates: ``has = mc.any & md.any``), so a head trained on
-    pooled features sees the identical feature vector at inference (no
-    train/serve skew).
+    all-zero concat (``has = mc.any & md.any``): the reference would
+    pool ``None`` there, so every degenerate row gets one fixed feature
+    vector instead.
 
     Executor-side weights are reconstructed lazily per process from
     (config, seed) or the .npz plug point — nothing large crosses the
@@ -217,7 +216,7 @@ def pool_features(
                 # vectorized span pooling (variants of electra.py's
                 # first_token_pool / run_counting_mean_pool /
                 # all_match_pool); a row missing EITHER code keeps a
-                # fully-zero concat — score_candidates' degenerate rule
+                # fully-zero concat (the degenerate rule above)
                 rows = np.arange(b)
                 mc = mrows == ccs[gi, None]
                 md = mrows == dcs[gi, None]

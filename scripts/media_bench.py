@@ -19,10 +19,12 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, ".")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from relation_extraction_cdr_spark.functions.codecs import (  # noqa: E402
     avi_decode,
@@ -196,8 +198,7 @@ def main() -> None:
         "",
     ]
     out = "\n".join(lines)
-    with open("BENCH/MEDIA.md", "w") as f:
-        f.write(out)
+    (REPO / "BENCH" / "MEDIA.md").write_text(out)
     print(json.dumps(rows))
     print("wrote BENCH/MEDIA.md", file=sys.stderr)
 

@@ -235,18 +235,3 @@ def alps_forward_one(
     x = entity_embedding @ head.dense_w + head.dense_b
     x = np.tanh(x)
     return x @ head.out_w + head.out_b
-
-
-def cls_pool_forward_one(w, head, input_ids, attention_mask):
-    """ElectraModelSentenceClassification.forward (electra_model.py:
-    485-529) for one example: encoder, CLS hidden state
-    (sequence_output[:, 0, :]), dropout (identity at eval) -> dense ->
-    gelu (:528 — "although BERT uses tanh here...") -> dropout ->
-    out_proj.  NOTE: this class is DEAD CODE in the reference (imported
-    by the trainers, never instantiated); transcribed only to pin the
-    math of relation_extraction_cdr_spark.scoring.electra.cls_pool_forward."""
-    h = encode_one(w, input_ids, attention_mask)
-    x = h[0]  # sequence_output_cls for a single example
-    x = x @ head.dense_w + head.dense_b
-    x = gelu_exact(x)
-    return x @ head.out_w + head.out_b

@@ -95,26 +95,49 @@ def test_encoder_parity_projected():
         assert np.allclose(got, href, atol=5e-5), f"row {r}"
 
 
-def test_full_forward_parity():
+def test_full_forward_parity(spark):
     """Full model (encoder + first-token pooling + pair head) on an
-    embedding==hidden config, batched engine vs naive port, including
-    padded batching effects."""
+    embedding==hidden config: the production first-token kernel
+    (train.pool_features, then electra.pair_head) vs the naive port."""
+    from relation_extraction_cdr_spark.operators.features import FEATURES_SCHEMA
+    from relation_extraction_cdr_spark.scoring.train import pool_features
+
     w = E.ElectraWeights.seeded(CONSISTENT, seed=2)
     ids, masks, chems, diss = _batch(CONSISTENT)
-    logits = E.score_candidates(w, ids, masks, chems, diss, batch_size=2)
+    feats = spark.createDataFrame(
+        [
+            (f"u{r}", "c", "d", 0, "intra", ids[r], masks[r], chems[r], diss[r])
+            for r in range(len(ids))
+        ],
+        FEATURES_SCHEMA,
+    )
+    pooled = {
+        row["url"]: np.array(row["feat"], np.float32)
+        for row in pool_features(
+            feats, config=CONSISTENT, seed=2, batch_size=2, pooling="first_token"
+        ).collect()
+    }
+    assert len(pooled) == len(ids)
     for r in range(len(ids)):
+        logits = E.pair_head(w, pooled[f"u{r}"][None, :])[0]
         _, lref = P.forward_one(w, ids[r], [1] * len(ids[r]), masks[r], chems[r], diss[r])
-        assert np.allclose(logits[r], lref, atol=5e-5), f"row {r}: {logits[r]} vs {lref}"
+        assert np.allclose(logits, lref, atol=5e-5), f"row {r}: {logits} vs {lref}"
 
 
 def test_padding_invariance():
-    """Padding must not change a row's logits: the additive -10000 mask
-    keeps attention off pad positions (get_extended_attention_mask)."""
+    """Padding must not change a row's hidden states: the additive
+    -10000 mask keeps attention off pad positions
+    (get_extended_attention_mask).  A ragged pad_stack batch through
+    encoder_forward == each row run alone, on every row's real prefix."""
     w = E.ElectraWeights.seeded(CONSISTENT, seed=3)
-    ids, masks, chems, diss = _batch(CONSISTENT)
-    solo = E.score_candidates(w, ids[:1], masks[:1], chems[:1], diss[:1], batch_size=1)
-    batched = E.score_candidates(w, ids, masks, chems, diss, batch_size=3)
-    assert np.allclose(solo[0], batched[0], atol=5e-5)
+    ids, masks, _, _ = _batch(CONSISTENT)
+    assert len({len(x) for x in ids}) > 1  # the batch really pads
+    bids, batt, _ = E.pad_stack(ids, masks)
+    batched = E.encoder_forward(w, bids, batt)
+    for r, x in enumerate(ids):
+        sids, satt, _ = E.pad_stack([x], [masks[r]])
+        solo = E.encoder_forward(w, sids, satt)[0]
+        assert np.allclose(solo, batched[r, : len(x)], atol=5e-5), f"row {r}"
 
 
 def test_first_token_pooling_semantics():
@@ -133,8 +156,18 @@ def test_head_dimension_note():
     cdr_trainer.py:224)."""
     w = E.ElectraWeights.seeded(SMALL, seed=4)
     ids, masks, chems, diss = _batch(SMALL)
+    bids, batt, bmsk = E.pad_stack(ids, masks)
+    hidden = E.encoder_forward(w, bids, batt)
+    pooled = np.stack([
+        np.concatenate([
+            E.first_token_pool(hidden[r], bmsk[r], chems[r]),
+            E.first_token_pool(hidden[r], bmsk[r], diss[r]),
+        ])
+        for r in range(len(ids))
+    ])
+    assert pooled.shape[1] == 2 * SMALL.hidden_size != 2 * SMALL.embedding_size
     with pytest.raises(ValueError):
-        E.score_candidates(w, ids, masks, chems, diss)
+        E.pair_head(w, pooled)
 
 
 def test_seeded_weights_deterministic():
@@ -231,30 +264,51 @@ def _fulltext_batch(config):
     return ids, masks, [c for c, _ in codes], [d for _, d in codes]
 
 
+def _fulltext_frame(ids, masks, ccs, dcs):
+    """FULLTEXT_SCHEMA rows (url d<b>) for scorer.fullsample_pooled."""
+    import pandas as pd
+
+    return pd.DataFrame({
+        "url": [f"d{b}" for b in range(len(ids))],
+        "token_ids": ids,
+        "entity_mask": masks,
+        "chem_codes": ccs,
+        "dis_codes": dcs,
+        "labels": [[0] * (len(c) * len(d)) for c, d in zip(ccs, dcs)],
+        "chem_meshes": [[f"C{x}" for x in c] for c in ccs],
+        "dis_meshes": [[f"D{x}" for x in d] for d in dcs],
+    })
+
+
 def test_full_sample_forward_parity():
-    """is_full_sample (electra_model.py:711-734): batched engine ==
-    literal per-doc port fed the SAME padded arrays (pad pairs pool the
-    -1 pad positions, faithfully)."""
+    """is_full_sample (electra_model.py:711-734): the production loop
+    (scorer.fullsample_pooled, then electra.pair_head) == the literal
+    per-doc port on each unpadded document at its real pair count."""
+    from relation_extraction_cdr_spark.scoring.scorer import fullsample_pooled
+
     w = E.ElectraWeights.seeded(CONSISTENT, seed=13)
     ids, masks, ccs, dcs = _fulltext_batch(CONSISTENT)
-    L = 3  # doc0 has 2 pairs (1 pad), doc1 has 2... doc1: 1 chem x 2 dis = 2
-    got = E.full_sample_forward(w, ids, masks, ccs, dcs, label_length=L)
-    assert got.shape == (2, L, 2)
-    t = max(len(x) for x in ids)
-    for b in range(2):
-        pad = t - len(ids[b])
-        pids = list(ids[b]) + [0] * pad
-        patt = [1] * len(ids[b]) + [0] * pad
-        pmask = list(masks[b]) + [-1] * pad
-        ref = P.forward_full_sample_one(w, pids, patt, pmask, ccs[b], dcs[b], L)
-        assert np.allclose(got[b], ref, atol=5e-5), f"doc {b}"
+    seen = []
+    for keys, pooled in fullsample_pooled(w, _fulltext_frame(ids, masks, ccs, dcs)):
+        b = int(keys["url"].iloc[0][1:])
+        n_pairs = len(ccs[b]) * len(dcs[b])
+        got = E.pair_head(w, pooled)
+        assert got.shape == (n_pairs, 2)
+        ref = P.forward_full_sample_one(
+            w, ids[b], [1] * len(ids[b]), masks[b], ccs[b], dcs[b], n_pairs
+        )
+        assert np.allclose(got, ref, atol=5e-5), f"doc {b}"
+        seen.append(b)
+    assert sorted(seen) == [0, 1]
 
 
 def test_full_sample_label_length_overflow_raises():
     w = E.ElectraWeights.seeded(CONSISTENT, seed=13)
     ids, masks, ccs, dcs = _fulltext_batch(CONSISTENT)
+    bids, batt, bmsk = E.pad_stack([ids[1]], [masks[1]])  # doc1: 2 pairs
+    hidden = E.encoder_forward(w, bids, batt)
     with pytest.raises(ValueError):
-        E.full_sample_forward(w, ids, masks, ccs, dcs, label_length=1)
+        E.pool_pairs_one(hidden[0], bmsk[0], ccs[1], dcs[1], label_length=1)
 
 
 def test_ner_forward_parity():
@@ -291,8 +345,9 @@ def test_ner_forward_parity():
 
 def test_alps_forward_parity():
     """ALPS 3-way tanh head (electra_model.py:306-411): run-counting
-    pooling + branch-ordered concat + tanh; engine == port for each of
-    the three -1 branches."""
+    pooling + branch-ordered concat + tanh; the production kernel
+    (alps_pooled, then AlpsHead.apply) == port for each of the three -1
+    branches."""
     w = E.ElectraWeights.seeded(CONSISTENT, seed=16)
     head = E.AlpsHead.seeded(CONSISTENT, seed=17)
     ids, masks, _, _ = _fulltext_batch(CONSISTENT)
@@ -302,11 +357,11 @@ def test_alps_forward_parity():
         (ids[1], masks[1], 1, -1, 3),   # dis == -1
         (ids[1], masks[1], -1, 2, 3),   # chem == -1
     ]
-    got = E.alps_forward(
-        w, head,
+    got = head.apply(E.alps_pooled(
+        w,
         [r[0] for r in rows], [r[1] for r in rows],
         [r[2] for r in rows], [r[3] for r in rows], [r[4] for r in rows],
-    )
+    ))
     t = max(len(r[0]) for r in rows)
     for i, (tid, msk, cc, dc, oc) in enumerate(rows):
         pad = t - len(tid)
@@ -319,18 +374,22 @@ def test_alps_forward_parity():
 
 
 def test_score_fulltext_spark_matches_local_twin(spark, fixtures, mesh):
-    """Distributed is_full_sample scoring == the same kernel run
-    locally per document: one row per real pair, margins equal to the
-    single-doc forward (padding differences bounded by float32 GEMM
-    noise)."""
+    """Distributed is_full_sample scoring == the same kernel
+    (scorer._fullsample_margins) run locally one document at a time:
+    one row per real pair, margins equal to the single-doc forward
+    (padding differences bounded by float32 GEMM noise)."""
     from relation_extraction_cdr_spark.operators.features import fulltext_features
     from relation_extraction_cdr_spark.operators.mentions import detect_mentions
     from relation_extraction_cdr_spark.plans.pipeline import (
         _mesh_artifacts,
         extracted_docs,
     )
-    from relation_extraction_cdr_spark.scoring.scorer import score_fulltext
+    from relation_extraction_cdr_spark.scoring.scorer import (
+        _fullsample_margins,
+        score_fulltext,
+    )
 
+    import pandas as pd
     import pyspark.sql.functions as F
 
     cfg = E.ElectraConfig(
@@ -358,18 +417,10 @@ def test_score_fulltext_spark_matches_local_twin(spark, fixtures, mesh):
     w = E.ElectraWeights.seeded(cfg, seed=6)
     expect: dict[tuple, tuple] = {}
     for r in local_rows:
-        ll = len(r["labels"])
-        logits = E.full_sample_forward(
-            w, [list(r["token_ids"])], [list(r["entity_mask"])],
-            [list(r["chem_codes"])], [list(r["dis_codes"])], label_length=ll,
-        )
-        k = 0
-        for cm in r["chem_meshes"]:
-            for dm in r["dis_meshes"]:
-                expect[(r["url"], cm, dm)] = (
-                    int(r["labels"][k]), float(logits[0, k, 1] - logits[0, k, 0])
-                )
-                k += 1
+        one = _fullsample_margins(w, pd.DataFrame([r.asDict()]))
+        assert len(one) == len(r["labels"])
+        for x in one.itertuples(index=False):
+            expect[(x.url, x.chem_mesh, x.dis_mesh)] = (int(x.label), float(x.margin))
 
     got = score_fulltext(ft.repartition(4), config=cfg, seed=6).collect()
     assert len(got) == len(expect) > 0
@@ -474,38 +525,6 @@ def test_resolve_weights_rescans_overwritten_npz(tmp_path):
     assert not np.array_equal(first.p[key], second.p[key])
 
 
-def test_cls_pool_forward_parity():
-    """ClsHead / cls_pool_forward (the reference's dead
-    ElectraModelSentenceClassification, electra_model.py:414-529) match
-    the literal per-example transcription on ragged batches."""
-    import numpy as np
-
-    from relation_extraction_cdr_spark.scoring.electra import (
-        ClsHead,
-        ElectraConfig,
-        ElectraWeights,
-        cls_pool_forward,
-    )
-    from tests.reference_ports.electra_port import cls_pool_forward_one
-
-    cfg = ElectraConfig(
-        vocab_size=30524, embedding_size=16, hidden_size=16,
-        num_hidden_layers=2, num_attention_heads=2, intermediate_size=32,
-    )
-    w = ElectraWeights.seeded(cfg, seed=12)
-    head = ClsHead.seeded(cfg, seed=5)
-    rng = np.random.default_rng(3)
-    token_ids = [
-        [int(x) for x in rng.integers(1, 30000, size=n)] for n in (4, 9, 7, 12)
-    ]
-    got = cls_pool_forward(w, head, token_ids)
-    assert got.shape == (4, 2)
-    for i, ids in enumerate(token_ids):
-        want = cls_pool_forward_one(w, head, ids, [1] * len(ids))
-        np.testing.assert_allclose(got[i], want, rtol=0, atol=2e-5)
-    assert len(cls_pool_forward(w, head, [])) == 0
-
-
 import os as _os  # noqa: E402
 import re as _re  # noqa: E402
 
@@ -516,10 +535,11 @@ import pytest as _pytest  # noqa: E402
     not _os.path.isdir("/root/reference"), reason="reference tree absent"
 )
 def test_cls_pool_dead_in_reference():
-    """Mechanical pin of the dead-code reading (the J9-style pin):
-    ElectraModelSentenceClassification is IMPORTED by the trainers but
-    never CONSTRUCTED anywhere in the reference — neither a direct call
-    nor a from_pretrained on the class."""
+    """Why the CLS-pool head is not ported (the J9-style pin):
+    ElectraModelSentenceClassification (electra_model.py:414-529) is
+    IMPORTED by the trainers but never CONSTRUCTED anywhere in the
+    reference — neither a direct call nor a from_pretrained on the
+    class — so no reference entry point reaches its forward."""
     uses = []
     for root, _dirs, files in _os.walk("/root/reference"):
         for fname in files:

@@ -3,6 +3,10 @@ exactly."""
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
+
 from relation_extraction_cdr_spark.operators.candidates import (
     candidate_pairs,
     label_pairs,
@@ -19,7 +23,7 @@ from relation_extraction_cdr_spark.plans.pipeline import (
     extracted_docs,
     score_candidates,
 )
-from relation_extraction_cdr_spark.scoring.scorer import score_pairs
+from relation_extraction_cdr_spark.scoring.scorer import SCORED_SCHEMA, _score_rows
 from relation_extraction_cdr_spark.sources.mesh import tree_multimap
 
 
@@ -29,6 +33,17 @@ def _rows(df):
          r["pred"], round(r["prob"], 9))
         for r in df.collect()
     )
+
+
+def score_pairs(features):
+    """features (FEATURES_SCHEMA) -> scored pairs (SCORED_SCHEMA) by the
+    stub decision rule: the oracle chain's last step."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _score_rows(pdf)
+
+    return features.mapInPandas(run, schema=SCORED_SCHEMA)
 
 
 def _relational_chain(pages, mesh, gold):

@@ -41,11 +41,14 @@ def test_unknown_kind_raises():
 
 def test_media_survives_poison_payloads(spark):
     """100 TB media hygiene (mirror of test_pipeline_survives_poison_
-    rows): truncated PNG, bad-CRC PNG, and an MJPG (compressed) AVI
+    rows): truncated PNG, bad-CRC PNG, an MJPG (compressed) AVI and an
+    AVI of 3000 nested LISTs (a recursion bomb for the RIFF walk)
     mixed into a healthy batch must NOT kill the mapInPandas stage —
     healthy features come back bit-unchanged vs a poison-free run and
     every poison row is quarantined with a decode_err string, an empty
     feature vector, and n_frames=0."""
+    import struct
+
     import numpy as np
 
     from relation_extraction_cdr_spark.functions.codecs import (
@@ -67,6 +70,10 @@ def test_media_survives_poison_payloads(spark):
     mjpg_avi = bytearray(avi)
     i = mjpg_avi.find(b"strf")
     mjpg_avi[i + 8 + 16 : i + 8 + 20] = b"MJPG"  # biCompression
+    nest = b""
+    for _ in range(3000):
+        nest = b"LIST" + struct.pack("<I", len(nest) + 4) + b"junk" + nest
+    nested_avi = b"RIFF" + struct.pack("<I", len(nest) + 4) + b"AVI " + nest
 
     healthy = [
         (0, "image", bytearray(png)),
@@ -78,6 +85,7 @@ def test_media_survives_poison_payloads(spark):
         (10, "image", bytearray(truncated_png)),
         (11, "image", bytearray(bad_crc_png)),
         (12, "video", bytearray(mjpg_avi)),
+        (13, "video", bytearray(nested_avi)),
     ]
 
     def mk(rows):
@@ -91,7 +99,7 @@ def test_media_survives_poison_payloads(spark):
         r["media_id"]: r
         for r in MM.extract_features(mk(healthy + poison)).collect()
     }
-    assert len(mixed) == 7
+    assert len(mixed) == 8
     for mid, r in clean.items():
         assert r["decode_err"] is None
         assert mixed[mid]["feature"] == r["feature"]  # bit-identical
@@ -100,7 +108,8 @@ def test_media_survives_poison_payloads(spark):
     assert "truncated" in mixed[10]["decode_err"]
     assert "CRC" in mixed[11]["decode_err"]
     assert "NotImplementedError" in mixed[12]["decode_err"]
-    for mid in (10, 11, 12):
+    assert mixed[13]["decode_err"].startswith("ValueError: AVI: LIST nesting")
+    for mid in (10, 11, 12, 13):
         assert mixed[mid]["feature"] == [] and mixed[mid]["n_frames"] == 0
 
 
@@ -913,10 +922,10 @@ class TestCodecs:
     def test_png_truncated_and_foreign_trns(self):
         """Hostile-input contract: a PNG cut mid-chunk raises the
         codec's ValueError (never struct.error, and never a misreported
-        'bad CRC' on a short final chunk), and tRNS on a grey/RGB file
-        — where the chunk holds 16-bit sample values, not palette
-        alphas — raises the documented-seam NotImplementedError instead
-        of being silently dropped."""
+        'bad CRC' on a short final chunk).  tRNS on a grey or RGB file
+        — where the chunk holds a 16-bit sample value, not palette
+        alphas (PNG 11.3.2) — is skipped: the file decodes to exactly
+        the pixels of the same file without it, with no alpha plane."""
         import struct
         import zlib
 
@@ -942,15 +951,28 @@ class TestCodecs:
                 + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
             )
 
-        grey = struct.pack(">IIBBBBB", 2, 1, 8, 0, 0, 0, 0)
-        blob = (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", grey)
-            + chunk(b"tRNS", struct.pack(">H", 99))
-            + chunk(b"IDAT", zlib.compress(bytes([0, 7, 9])))
-            + chunk(b"IEND", b"")
-        )
-        with pytest.raises(NotImplementedError, match="tRNS for color type 0"):
-            png_decode(blob)
+        def png(color, ch, rows, trns):
+            w = len(rows[0]) // ch
+            ihdr = struct.pack(">IIBBBBB", w, len(rows), 8, color, 0, 0, 0)
+            raw = b"".join(b"\x00" + bytes(r) for r in rows)  # filter None
+            extra = chunk(b"tRNS", trns) if trns else b""
+            return (
+                b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + extra
+                + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
+            )
+
+        grey = [[0, 99, 255], [7, 8, 9]]
+        rgb = [[1, 2, 3, 40, 50, 60], [200, 100, 0, 9, 9, 9]]
+        for color, ch, rows, trns in (
+            (0, 1, grey, struct.pack(">H", 99)),
+            (2, 3, rgb, struct.pack(">HHH", 40, 50, 60)),
+        ):
+            plain = png_decode(png(color, ch, rows, None))
+            with_trns = png_decode(png(color, ch, rows, trns))
+            assert with_trns.dtype == plain.dtype == np.uint8
+            assert with_trns.shape == plain.shape == (2, len(rows[0]) // ch, ch)
+            assert np.array_equal(with_trns, plain)
+            assert plain.reshape(2, -1).tolist() == rows
 
     def test_avi_audio_stream_strf_ignored(self):
         """An AVI that carries an audio stream alongside the video one

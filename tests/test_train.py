@@ -370,7 +370,7 @@ class TestPoolFeatures:
             c = first_token_pool(hidden, msk, int(src["chem_code"]))
             d = first_token_pool(hidden, msk, int(src["dis_code"]))
             # degenerate rows (either code absent) pool to an all-zero
-            # concat — the score_candidates rule, pinned in BOTH paths
+            # concat, in pool_features and here alike
             expect = np.zeros(2 * hs, np.float32)
             if c is not None and d is not None:
                 expect[:hs] = c
@@ -444,10 +444,11 @@ class TestPoolFeatures:
     ):
         """The levi trainer's document granularity
         (cdr_trainer_levi.py:316-390): pool_fulltext_features ==
-        electra.full_sample_pooled run locally per document (bit-equal
-        at batch_size=1), and a head trained on the doc-level rows is
-        bit-identical across parallelism — the same allreduce contract
-        as the sentence-level path."""
+        scorer.fullsample_pooled run locally one document at a time
+        (bit-equal at batch_size=1), and a head trained on the
+        doc-level rows is bit-identical across parallelism — the same
+        allreduce contract as the sentence-level path."""
+        import pandas as pd
         import pyspark.sql.functions as F
 
         from relation_extraction_cdr_spark.operators.features import (
@@ -458,10 +459,8 @@ class TestPoolFeatures:
             _mesh_artifacts,
             extracted_docs,
         )
-        from relation_extraction_cdr_spark.scoring.electra import (
-            ElectraWeights,
-            full_sample_pooled,
-        )
+        from relation_extraction_cdr_spark.scoring.electra import ElectraWeights
+        from relation_extraction_cdr_spark.scoring.scorer import fullsample_pooled
         from relation_extraction_cdr_spark.scoring.train import (
             pool_fulltext_features,
         )
@@ -496,19 +495,10 @@ class TestPoolFeatures:
         w = ElectraWeights.seeded(tiny_cfg, seed=7)
         expect: dict[tuple, tuple] = {}
         for r in local:
-            ll = len(r["labels"])
-            pooled = full_sample_pooled(
-                w, [list(r["token_ids"])], [list(r["entity_mask"])],
-                [list(r["chem_codes"])], [list(r["dis_codes"])],
-                label_length=ll,
-            )
-            k = 0
-            for cm in r["chem_meshes"]:
-                for dm in r["dis_meshes"]:
-                    expect[(r["url"], cm, dm)] = (
-                        int(r["labels"][k]), pooled[0, k].copy()
-                    )
-                    k += 1
+            ((keys, pooled),) = fullsample_pooled(w, pd.DataFrame([r.asDict()]))
+            assert len(keys) == len(r["labels"])
+            for k, x in enumerate(keys.itertuples(index=False)):
+                expect[(x.url, x.chem_mesh, x.dis_mesh)] = (int(x.label), pooled[k].copy())
 
         got = pool_fulltext_features(
             ft.repartition(3), config=tiny_cfg, seed=7, batch_size=1
