@@ -39,6 +39,47 @@ FEATURES_SCHEMA = (
 )
 
 
+def _encoded_marker_mask(
+    text: str,
+    ids: list[int],
+    codes: list[str],
+    use_entity_token: bool,
+    cut: int | None = None,
+) -> tuple[list[int], list[int], dict[str, int]] | None:
+    """The module docstring's entity mask + label encoding for ``ids`` =
+    ``text`` with markers inserted; span i carries ``codes[i]`` (later
+    spans the last).  Returns (ids[:cut], encoded mask, value -> code),
+    or None when ``text`` holds a literal ``[e]``/``[/e]``: that span was
+    never inserted, has no code and would desync the mask from the ids."""
+    lowered = text.lower()
+    if "[e]" in lowered or "[/e]" in lowered:
+        return None
+    ids = ids[:cut]
+    mask: list[str] = []
+    i = 0
+    span = 0
+    while i < len(ids):
+        if ids[i] != E_START_ID:
+            mask.append("O")
+            i += 1
+        else:
+            code = codes[min(span, len(codes) - 1)]
+            if use_entity_token:
+                mask.append(code)
+            i += 1
+            while i < len(ids) and ids[i] != E_END_ID:
+                mask.append(code)
+                i += 1
+            if use_entity_token:
+                mask.append(code)
+            span += 1
+            i += 1
+    if not use_entity_token:
+        ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
+    classes, enc = np.unique(np.array(mask, dtype=object), return_inverse=True)
+    return ids, [int(x) for x in enc], {c: j for j, c in enumerate(classes)}
+
+
 def featurize_py(
     sentence: str,
     sent_pos: int,
@@ -65,30 +106,10 @@ def featurize_py(
     ids = encode(t)
     if len(ids) > max_len:
         return None
-    mask: list[str] = []
-    i = 0
-    ent = 0
-    while i < len(ids):
-        if ids[i] != E_START_ID:
-            mask.append("O")
-            i += 1
-        else:
-            code = first if ent == 0 else second
-            if use_entity_token:
-                mask.append(code)
-            i += 1
-            while i < len(ids) and ids[i] != E_END_ID:
-                mask.append(code)
-                i += 1
-            if use_entity_token:
-                mask.append(code)
-            ent += 1
-            i += 1
-    if not use_entity_token:
-        ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
-    # LabelEncoder: dense rank over lexicographically sorted classes
-    classes, enc = np.unique(np.array(mask, dtype=object), return_inverse=True)
-    lookup = {c: j for j, c in enumerate(classes)}
+    marked = _encoded_marker_mask(sentence, ids, [first, second], use_entity_token)
+    if marked is None:
+        return None
+    ids, enc, lookup = marked
     if chem_mesh not in lookup or dis_mesh not in lookup:
         # pathological offsets (e.g. a find()-failure span from the
         # reproduced inter_window quirk) can corrupt a marker so an
@@ -97,7 +118,7 @@ def featurize_py(
         return None
     return dict(
         token_ids=ids,
-        entity_mask=[int(x) for x in enc],
+        entity_mask=enc,
         chem_code=int(lookup[chem_mesh]),
         dis_code=int(lookup[dis_mesh]),
     )
@@ -126,97 +147,65 @@ def fulltext_featurize_py(
       the window then cut BACK to just after the last [/e] inside it
       (W5, cdr_dataset.py:477-481; a window with no [/e] drops the doc
       — the reference would IndexError on ``e_end_last_idx[-1]``)
-    - mask: 'O' outside marker spans, the entity's mesh code inside
-      (markers included iff use_entity_token; with False the marker ids
-      are filtered from the token list, cdr_dataset.py:506-507)
+    - mask + LabelEncoder: ``_encoded_marker_mask`` (cdr_dataset.py:
+      506-507, 533-535), which also re-encodes both code lists
     - chem/dis code lists: the doc's codes of that type FILTERED to
       those present in the (possibly truncated) mask, chem in entity
       order, dis deduped preserving first-appearance order
       (cdr_dataset.py:519-530); labels follow the same chem-outer /
       dis-inner cross order, 1 iff the pair is in ``gold_pairs``
-    - LabelEncoder over the mask strings (dense rank of sorted distinct
-      values) re-encodes mask + both code lists (cdr_dataset.py:533-535)
 
     Returns token_ids / entity_mask / encoded code lists / labels plus
     the mesh-id lists in pair order (so logits can be joined back).
     """
-    entities_pos = []
-    for e in entities:
-        for p in e["positions"]:
-            entities_pos.append(
-                {"code": e["mesh_id"], "start": int(p["start"]), "end": int(p["end"])}
-            )
-    if not entities_pos:
+    spans = sorted(
+        ((int(p["start"]), int(p["end"]), e["mesh_id"])
+         for e in entities for p in e["positions"]),
+        key=lambda sp: sp[0],
+    )
+    if not spans:
         return None
-    entities_pos.sort(key=lambda p: p["start"])
     t = text
-    for p in reversed(entities_pos):
-        s, e_ = p["start"], p["end"]
+    for s, e_, _ in reversed(spans):
         t = t[:s] + " [E] " + t[s:e_] + " [/E] " + t[e_:]
     ids = encode(t)
+    cut = None
     if len(ids) > max_len:
-        subset = ids[:max_len]
-        last_end = -1
-        for i, x in enumerate(subset):
-            if x == E_END_ID:
-                last_end = i
-        if last_end < 0:
+        window = ids[:max_len]
+        if E_END_ID not in window:
             return None
-        ids = subset[: last_end + 1]
-    mask: list[str] = []
-    i = 0
-    span = 0
-    while i < len(ids):
-        if ids[i] != E_START_ID:
-            mask.append("O")
-            i += 1
-        else:
-            code = entities_pos[span]["code"]
-            if use_entity_token:
-                mask.append(code)
-            i += 1
-            while i < len(ids) and ids[i] != E_END_ID:
-                mask.append(code)
-                i += 1
-            if use_entity_token:
-                mask.append(code)
-            span += 1
-            i += 1
-    if not use_entity_token:
-        ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
-    present = set(mask)
+        cut = max_len - window[::-1].index(E_END_ID)  # just after the last [/e]
+    marked = _encoded_marker_mask(
+        text, ids, [c for _, _, c in spans], use_entity_token, cut
+    )
+    if marked is None:
+        return None
+    ids, enc, lookup = marked
     # one entity per mesh_id (the reference inventory is a dict keyed by
     # mesh_id, so duplicates cannot exist there; caller-supplied entity
     # lists CAN repeat an id — last type wins, like the dict overwrite —
     # and the ordered dedup keeps labels aligned with the
     # chem_meshes × dis_meshes pair order the scorer reconstructs)
-    types: dict[str, str] = {}
-    ordered_ids: list[str] = []
-    for e in entities:
-        if e["mesh_id"] not in types:
-            ordered_ids.append(e["mesh_id"])
-        types[e["mesh_id"]] = e["type"]
-    chem_all = [m for m in ordered_ids if types[m] == "Chemical"]
-    dis_all = [m for m in ordered_ids if types[m] == "Disease"]
+    types = {e["mesh_id"]: e["type"] for e in entities}
+    chem_all = [m for m, typ in types.items() if typ == "Chemical"]
+    dis_all = [m for m, typ in types.items() if typ == "Disease"]
     gold = set(gold_pairs)
     chem_meshes: list[str] = []
     dis_meshes: list[str] = []
     labels: list[int] = []
     for c in chem_all:
-        if c in present:
+        if c in lookup:
             chem_meshes.append(c)
             for d in dis_all:
-                if d in present:
+                if d in lookup:
                     if d not in dis_meshes:
                         dis_meshes.append(d)
                     labels.append(1 if (c, d) in gold else 0)
     if not chem_meshes or not dis_meshes:
         return None
-    classes, enc = np.unique(np.array(mask, dtype=object), return_inverse=True)
-    lookup = {c: j for j, c in enumerate(classes)}
     return dict(
         token_ids=[int(x) for x in ids],
-        entity_mask=[int(x) for x in enc],
+        entity_mask=enc,
         chem_codes=[int(lookup[c]) for c in chem_meshes],
         dis_codes=[int(lookup[d]) for d in dis_meshes],
         labels=labels,

@@ -223,3 +223,17 @@ def detect_mentions_py(
         else:
             max_end = max(max_end, end)
     return out
+
+
+def entity_inventory_py(mentions: list[dict]) -> list[dict]:
+    """``entity_inventory`` over one document's ``detect_mentions_py``
+    output (pytest-verified equal), entities in first-mention order.
+    Its starts strictly increase, so the reference's per-mention dict
+    overwrite (cdr_dataset.py:72-75) is the last-mention rule."""
+    inv: dict[str, dict] = {}
+    for m in mentions:
+        e = inv.setdefault(m["mesh_id"], {"mesh_id": m["mesh_id"], "positions": []})
+        e["positions"].append({"start": m["start"], "end": m["end"]})
+        e["rep_text"] = m["mention_text"]
+        e["type"] = m["type"]
+    return list(inv.values())

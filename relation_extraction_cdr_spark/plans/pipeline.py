@@ -73,7 +73,6 @@ def score_candidates(
     mesh_tree: DataFrame,
     gold: DataFrame | None = None,
     mesh_type_col: str | None = "type",
-    use_levi: bool = True,
     scorer_backend: str = "stub",
     salt_partitions: int | None = None,
     sentence_splitter: str = "regex",
@@ -131,11 +130,11 @@ def score_candidates(
         )
     tm = (
         {r["mesh_id"]: list(r["tree_numbers"]) for r in tree_multimap(mesh_tree).collect()}
-        if gold is not None and use_levi
-        else None
+        if gold is not None
+        else {}
     )
     return fused_score_docs(
-        payload, tree_map=tm, use_levi=use_levi,
+        payload, tree_map=tm,
         gazetteer=gd, max_term_words=max_words,
         backend=scorer_backend, sentence_splitter=sentence_splitter,
     )

@@ -19,7 +19,8 @@ one of two scorers:
 Batch shape: Arrow batches via ``mapInPandas``; per-batch numpy span
 gathers (the segment-mean pooling of electra_model.py:618-641 would
 operate on the same gathered indices).  The whole per-document decision
-runs in ONE mapInPandas stage (``fused_score_docs``); with
+runs in ONE mapInPandas stage: ``fused_score_docs`` loops over the
+Spark-free kernel ``score_document`` (inventory: ``entity_inventory_py``); with
 ``salt_partitions`` the pipeline first repartitions only the documents
 longer than plans.pipeline.HEAVY_DOC_CHARS on xxhash64(url), so a
 cluster of pathologically long documents spreads across executors
@@ -36,6 +37,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.tokenize import vocab_id
+from ..operators.candidates import levi_rejected_py
+from ..operators.evidence import DocIndex, select_evidence_py
+from ..operators.features import featurize_py, fulltext_featurize_py
+from ..operators.mentions import detect_mentions_py, entity_inventory_py
 
 SCORED_SCHEMA = (
     "url string, chem_mesh string, dis_mesh string, label int, "
@@ -350,20 +355,79 @@ def score_alps_3way(
     return fulltext.mapInPandas(run, schema=ALPS_SCHEMA)
 
 
+def score_document(
+    url: str,
+    text: str | None,
+    gold_pairs: list[tuple[str, str]],
+    gazetteer: dict[str, list[tuple[str, str]]],
+    max_term_words: int,
+    tree_map: dict[str, list[str]],
+    sentence_splitter: str = "regex",
+    fulltext: bool = False,
+) -> tuple[list[dict], dict | None]:
+    """One document's decision, Spark-free, in the reference's order
+    (cdr_dataset.py:54-75, text_utils.py:54-150): mentions, inventory,
+    (chem, dis) pairs, Levi filter, evidence, featurize.  Returns its
+    FEATURES rows and, with ``fulltext`` (the electra backend), its
+    FULLTEXT_SCHEMA row or None."""
+    rows: list[dict] = []
+    # poison-row guard: extract_text yields NULL for pages whose html
+    # strips to empty and text is NULL (no mentions => no pairs anyway)
+    if not text:
+        return rows, None
+    ents = entity_inventory_py(detect_mentions_py(text, gazetteer, max_term_words))
+    chems = [e for e in ents if e["type"] == "Chemical"]
+    diss = [e for e in ents if e["type"] == "Disease"]
+    if not chems or not diss:
+        return rows, None
+    ft = fulltext_featurize_py(text, ents, gold_pairs) if fulltext else None
+    pairs = [(c, d) for c in chems for d in diss]
+    keys = [(c["mesh_id"], d["mesh_id"]) for c, d in pairs]
+    rejected = levi_rejected_py(keys, gold_pairs, tree_map) if gold_pairs else set()
+    gold_set = set(gold_pairs)
+    doc = DocIndex(text, sentence_splitter)
+    for (c, d), key in zip(pairs, keys):
+        if key in rejected:
+            continue
+        label = 1 if key in gold_set else 0
+        cpos = [(int(p["start"]), int(p["end"])) for p in c["positions"]]
+        dpos = [(int(p["start"]), int(p["end"])) for p in d["positions"]]
+        ev = select_evidence_py(
+            text, c["mesh_id"], d["mesh_id"], cpos, dpos,
+            c["rep_text"], d["rep_text"], label,
+            sents=doc.sents,
+            pos_index=doc.index_for([p for p, _ in cpos] + [p for p, _ in dpos]),
+        )
+        if ev is None:
+            continue
+        feat = featurize_py(
+            ev["sentence"], ev["sent_pos"] or 0,
+            c["mesh_id"], d["mesh_id"],
+            ev["chem_start"], ev["chem_end"],
+            ev["dis_start"], ev["dis_end"],
+        )
+        if feat is None:
+            continue
+        rows.append(
+            {"url": url, "chem_mesh": c["mesh_id"], "dis_mesh": d["mesh_id"],
+             "label": label, "evidence_type": ev["evidence_type"], **feat}
+        )
+    return rows, (None if ft is None else {"url": url, **ft})
+
+
 def fused_score_docs(
     doc_payload: DataFrame,
     gazetteer: dict[str, list[tuple[str, str]]],
     max_term_words: int,
-    tree_map: dict[str, list[str]] | None = None,
-    use_levi: bool = True,
+    tree_map: dict[str, list[str]],
     backend: str = "stub",
     sentence_splitter: str = "regex",
 ) -> DataFrame:
-    """Doc-level fused stage: mention detection + candidate pairs + Levi
-    filter + evidence + featurize + score for ALL of a document's pairs
-    in one pass — the reference's own batching shape ("one encoder pass
-    per document scores all its pairs", electra_model.py:711-734 /
-    SURVEY §3.3).
+    """Doc-level fused stage: ``score_document`` (mentions +
+    ``entity_inventory_py`` + pairs + Levi filter + evidence + featurize)
+    per document and one ``_score_rows`` per Arrow batch, ALL of a
+    document's pairs in one pass — the reference's own batching shape
+    ("one encoder pass per document", electra_model.py:711-734).
 
     Input: one row per document
       (url, text, gold_pairs array<struct<chem_mesh, dis_mesh>> | null)
@@ -386,16 +450,9 @@ def fused_score_docs(
     label_pairs |> levi_filter |> select_evidence |> featurize |>
     ``_score_rows``), which tests/test_fused.py composes as its oracle.
     """
-    from ..operators.candidates import levi_rejected_py
-    from ..operators.evidence import DocIndex, select_evidence_py
-    from ..operators.features import featurize_py, fulltext_featurize_py
-    from ..operators.mentions import detect_mentions_py
-
-    tree_map = tree_map or {}
     use_electra = backend == "electra"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in SCORED_SCHEMA.split(", ")]
         if use_electra:
             from .electra import DEFAULT_CONFIG, resolve_weights
 
@@ -404,100 +461,37 @@ def fused_score_docs(
             feat_rows = []
             fulltext_rows: list[dict] = []
             for r in pdf.itertuples(index=False):
-                # poison-row guard: extract_text yields NULL for pages
-                # whose html strips to empty and text is NULL — skip,
-                # never crash the stage (no mentions => no pairs anyway)
-                if r.text is None or not r.text:
-                    continue
-                inv: dict[str, dict] = {}
-                for m in detect_mentions_py(r.text, gazetteer, max_term_words):
-                    e = inv.setdefault(
-                        m["mesh_id"],
-                        {"mesh_id": m["mesh_id"], "type": m["type"],
-                         "positions": [], "rep_text": m["mention_text"],
-                         "_last": -1},
-                    )
-                    e["positions"].append({"start": m["start"], "end": m["end"]})
-                    if m["start"] > e["_last"]:  # last-mention-wins rep
-                        e["rep_text"] = m["mention_text"]
-                        e["_last"] = m["start"]
-                ents = list(inv.values())
-                chems = [e for e in ents if e["type"] == "Chemical"]
-                diss = [e for e in ents if e["type"] == "Disease"]
-                if not chems or not diss:
-                    continue
                 gold = (
                     [(g["chem_mesh"], g["dis_mesh"]) for g in r.gold_pairs]
                     if r.gold_pairs is not None
                     else []
                 )
-                gold_set = set(gold)
-                pairs = [(c["mesh_id"], d["mesh_id"]) for c in chems for d in diss]
-                rejected = (
-                    levi_rejected_py(pairs, gold, tree_map)
-                    if gold and use_levi
-                    else set()
+                rows, ft = score_document(
+                    r.url, r.text, gold, gazetteer, max_term_words, tree_map,
+                    sentence_splitter, fulltext=use_electra,
                 )
-                if use_electra:
-                    ft = fulltext_featurize_py(r.text, ents, gold)
-                    if ft is not None:
-                        fulltext_rows.append({"url": r.url, **ft})
-                doc = DocIndex(r.text, sentence_splitter)
-                for c in chems:
-                    for d in diss:
-                        key = (c["mesh_id"], d["mesh_id"])
-                        if key in rejected:
-                            continue
-                        label = 1 if key in gold_set else 0
-                        cpos = [(int(p["start"]), int(p["end"])) for p in c["positions"]]
-                        dpos = [(int(p["start"]), int(p["end"])) for p in d["positions"]]
-                        ev = select_evidence_py(
-                            r.text, c["mesh_id"], d["mesh_id"], cpos, dpos,
-                            c["rep_text"], d["rep_text"], label,
-                            sents=doc.sents,
-                            pos_index=doc.index_for(
-                                [p for p, _ in cpos] + [p for p, _ in dpos]
-                            ),
-                        )
-                        if ev is None:
-                            continue
-                        feat = featurize_py(
-                            ev["sentence"], ev["sent_pos"] or 0,
-                            c["mesh_id"], d["mesh_id"],
-                            ev["chem_start"], ev["chem_end"],
-                            ev["dis_start"], ev["dis_end"],
-                        )
-                        if feat is None:
-                            continue
-                        feat_rows.append(
-                            {"url": r.url, "chem_mesh": c["mesh_id"],
-                             "dis_mesh": d["mesh_id"], "label": label,
-                             "evidence_type": ev["evidence_type"], **feat}
-                        )
-            if feat_rows:
-                fdf = pd.DataFrame(feat_rows)
-                if use_electra:
-                    # exact-architecture DOCUMENT-LEVEL forward (the
-                    # is_full_sample shape, electra_model.py:711-734):
-                    # one encoder pass per doc scores all its pairs;
-                    # margins join back to the surviving feature rows
-                    # by (url, chem, dis).  Pairs whose entity was
-                    # truncated out of the 512-token fulltext window
-                    # keep enc_logit = NaN (prob tail unmodulated).
-                    fs = _fullsample_margins(w, pd.DataFrame(fulltext_rows))
-                    margins = dict(
-                        zip(zip(fs["url"], fs["chem_mesh"], fs["dis_mesh"]), fs["margin"])
-                    )
-                    fdf = fdf.assign(
-                        enc_logit=[
-                            margins.get((u, c, d), float("nan"))
-                            for u, c, d in zip(
-                                fdf["url"], fdf["chem_mesh"], fdf["dis_mesh"]
-                            )
-                        ]
-                    )
-                yield _score_rows(fdf)
-            else:
-                yield pd.DataFrame(columns=cols)
+                feat_rows += rows
+                if ft is not None:
+                    fulltext_rows.append(ft)
+            fdf = pd.DataFrame(feat_rows)
+            if use_electra and feat_rows:
+                # exact-architecture DOCUMENT-LEVEL forward (the
+                # is_full_sample shape, electra_model.py:711-734):
+                # one encoder pass per doc scores all its pairs;
+                # margins join back to the surviving feature rows
+                # by (url, chem, dis).  Pairs whose entity was
+                # truncated out of the 512-token fulltext window
+                # keep enc_logit = NaN (prob tail unmodulated).
+                fs = _fullsample_margins(w, pd.DataFrame(fulltext_rows))
+                margins = dict(
+                    zip(zip(fs["url"], fs["chem_mesh"], fs["dis_mesh"]), fs["margin"])
+                )
+                fdf = fdf.assign(
+                    enc_logit=[
+                        margins.get((u, c, d), float("nan"))
+                        for u, c, d in zip(fdf["url"], fdf["chem_mesh"], fdf["dis_mesh"])
+                    ]
+                )
+            yield _score_rows(fdf)
 
     return doc_payload.mapInPandas(run, schema=SCORED_SCHEMA)

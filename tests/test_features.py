@@ -10,7 +10,10 @@ from relation_extraction_cdr_spark.functions.tokenize import (
     piece_to_id,
     tokenize_pieces,
 )
-from relation_extraction_cdr_spark.operators.features import featurize_py
+from relation_extraction_cdr_spark.operators.features import (
+    featurize_py,
+    fulltext_featurize_py,
+)
 
 
 def test_tokenizer_markers():
@@ -85,10 +88,6 @@ def test_fulltext_dual_typed_mesh_keeps_labels_aligned():
     caller-supplied entity lists — the reference inventory is a dict)
     must not desync labels from the chem_meshes × dis_meshes pair order:
     last type wins (the dict-overwrite rule) and every id appears once."""
-    from relation_extraction_cdr_spark.operators.features import (
-        fulltext_featurize_py,
-    )
-
     text = "aspirin xeno xeno tremor."
     ents = [
         {"mesh_id": "C1", "type": "Chemical",
@@ -109,3 +108,28 @@ def test_fulltext_dual_typed_mesh_keeps_labels_aligned():
     assert len(feat["labels"]) == len(feat["chem_meshes"]) * len(feat["dis_meshes"])
     assert feat["labels"] == [0, 1]  # (C1,X) negative, (C1,D1) gold
     assert len(feat["chem_codes"]) == 1 and len(feat["dis_codes"]) == 2
+
+
+def test_literal_marker_in_text_drops_row():
+    """Page text holding the tokenizer's own ``[e]``/``[/e]`` marker
+    tokens would add a marker span the featurizer did not insert (a
+    mask longer than the ids, or a span with no code): both featurizers
+    drop such a row instead of emitting a desynced mask or raising."""
+    for junk in ("[e]", "[/e]", "[E] [/E]"):
+        sent = f"lithium induced tremor {junk} in rats."
+        ds = sent.find("tremor")
+        assert featurize_py(sent, 0, "D910001", "D010001", 0, 7, ds, ds + 6) is None
+        ents = [
+            {"mesh_id": "D910001", "type": "Chemical",
+             "positions": [{"start": 0, "end": 7}]},
+            {"mesh_id": "D010001", "type": "Disease",
+             "positions": [{"start": ds, "end": ds + 6}]},
+        ]
+        assert fulltext_featurize_py(sent, ents, []) is None
+        # the literal marker AFTER the fulltext window's last [/e] still
+        # drops the document
+        long_text = sent.replace(junk, "word " * 600 + junk)
+        assert fulltext_featurize_py(long_text, ents, [], max_len=64) is None
+    clean = "lithium induced tremor in rats."
+    assert featurize_py(clean, 0, "D910001", "D010001", 0, 7, 16, 22) is not None
+    assert fulltext_featurize_py(clean, ents, []) is not None

@@ -3,10 +3,12 @@ exactly."""
 
 from __future__ import annotations
 
+from datetime import datetime
 from typing import Iterator
 
 import pandas as pd
 
+from relation_extraction_cdr_spark import datagen
 from relation_extraction_cdr_spark.operators.candidates import (
     candidate_pairs,
     label_pairs,
@@ -23,8 +25,25 @@ from relation_extraction_cdr_spark.plans.pipeline import (
     extracted_docs,
     score_candidates,
 )
-from relation_extraction_cdr_spark.scoring.scorer import SCORED_SCHEMA, _score_rows
+from relation_extraction_cdr_spark.scoring.scorer import (
+    SCORED_SCHEMA,
+    _score_rows,
+    score_document,
+)
 from relation_extraction_cdr_spark.sources.mesh import tree_multimap
+
+# DX is a Chemical through "alphazine" and a Disease through "betaosis"
+# (the real MeSH tree types a descriptor by tree number, so one with
+# both D* and C* numbers is both).  The LAST mention types the entity,
+# so the page's only candidates are (DD, DG) and the gold (DD, DX).
+DUAL_MESH = [  # (tree_number, mesh_id, term, type)
+    ("D40.100", "DX", "alphazine", "Chemical"),
+    ("C40.100", "DX", "betaosis", "Disease"),
+    ("C20.100", "DG", "gammitis", "Disease"),
+    ("D30.100", "DD", "deltamide", "Chemical"),
+]
+DUAL_URL = "https://dual.example/1"
+DUAL_TEXT = "alphazine induced gammitis in rats. deltamide induced betaosis in rats."
 
 
 def _rows(df):
@@ -55,7 +74,72 @@ def _relational_chain(pages, mesh, gold):
     return score_pairs(featurize(select_evidence(pairs.join(docs, "url"))))
 
 
+def _dual_typed_inputs(spark):
+    html = f"<html><body><p>{DUAL_TEXT}</p></body></html>".encode()
+    pages = spark.createDataFrame(
+        [(DUAL_URL, datetime(2024, 1, 1), html, DUAL_TEXT, "en")], datagen.PAGES_SCHEMA
+    )
+    mesh = spark.createDataFrame(
+        DUAL_MESH, "tree_number string, mesh_id string, term string, type string"
+    )
+    gold = spark.createDataFrame([(DUAL_URL, "DD", "DX")], datagen.GOLD_RELATIONS_SCHEMA)
+    return pages, mesh, gold
+
+
 def test_fused_equals_modular(spark, fixtures, mesh):
     pages, _, gold = fixtures
     fused = score_candidates(pages, mesh, gold=gold)
     assert _rows(fused) == _rows(_relational_chain(pages, mesh, gold))
+
+    pages, mesh, gold = _dual_typed_inputs(spark)
+    oracle = _rows(_relational_chain(pages, mesh, gold))
+    assert [r[1:4] + r[5:6] for r in oracle] == [("DD", "DG", 0, 0), ("DD", "DX", 1, 1)]
+    assert _rows(score_candidates(pages, mesh, gold=gold)) == oracle
+
+
+def _gazetteer(mesh_rows):
+    gaz: dict[str, list[tuple[str, str]]] = {}
+    for _tree, mesh_id, term, typ in mesh_rows:
+        gaz.setdefault(term, []).append((mesh_id, typ))
+    return gaz, max(t.count(" ") + 1 for t in gaz)
+
+
+def test_score_document_kernel():
+    """The per-document kernel runs without Spark: generator documents
+    emit exactly their gold pairs as label 1, each predicted positive;
+    empty text and a page with one entity type emit nothing; the
+    dual-typed page keeps DX's last-mention type in both outputs."""
+    gaz, max_words = _gazetteer(datagen.gen_mesh_rows() + DUAL_MESH)
+
+    def score(url, text, gold=()):
+        return score_document(
+            url, text, list(gold), gaz, max_words, {}, fulltext=True
+        )
+
+    assert score("https://e/1", "") == ([], None)
+    assert score("https://e/2", None) == ([], None)
+    pages, _, relations = datagen.gen_corpus(12)
+    chem_only = pages[3][3][: pages[3][3].index(".") + 1]
+    assert "was administered" in chem_only
+    assert score(pages[3][0], chem_only) == ([], None)
+    n_positive = 0
+    for url, _ts, _html, text, _lang in pages:
+        gold = sorted((c, d) for u, c, d in relations if u == url)
+        rows, ft = score(url, text, gold)
+        if not gold:
+            continue
+        scored = _score_rows(pd.DataFrame(rows))
+        positive = scored[scored["label"] == 1]
+        assert sorted(zip(positive["chem_mesh"], positive["dis_mesh"])) == gold, url
+        assert (positive["pred"] == 1).all(), url
+        assert sum(ft["labels"]) == len(gold), url
+        n_positive += len(gold)
+    assert n_positive >= 10
+
+    rows, ft = score(DUAL_URL, DUAL_TEXT, [("DD", "DX")])
+    assert [(r["chem_mesh"], r["dis_mesh"], r["label"]) for r in rows] == [
+        ("DD", "DX", 1), ("DD", "DG", 0)
+    ]
+    assert (ft["chem_meshes"], ft["dis_meshes"], ft["labels"]) == (
+        ["DD"], ["DX", "DG"], [1, 0]
+    )

@@ -7,6 +7,8 @@ import pyspark.sql.functions as F
 from relation_extraction_cdr_spark.operators.mentions import (
     detect_mentions,
     detect_mentions_py,
+    entity_inventory,
+    entity_inventory_py,
     gazetteer_dict,
 )
 from relation_extraction_cdr_spark.plans.pipeline import extracted_docs
@@ -25,12 +27,22 @@ def test_python_matcher_equals_relational(spark, fixtures, mesh):
         relational.setdefault(r["url"], set()).add(
             (r["mesh_id"], r["start"], r["end"], r["mention_text"])
         )
+    inventory = {}
+    for r in entity_inventory(detect_mentions(docs, gaz)).collect():
+        inventory.setdefault(r["url"], set()).add(
+            (r["mesh_id"], tuple((p["start"], p["end"]) for p in r["positions"]),
+             r["rep_text"], r["type"])
+        )
     for row in docs.collect():
-        got = {
-            (m["mesh_id"], m["start"], m["end"], m["mention_text"])
-            for m in detect_mentions_py(row["text"], gd, max_words)
-        }
+        mentions = detect_mentions_py(row["text"], gd, max_words)
+        got = {(m["mesh_id"], m["start"], m["end"], m["mention_text"]) for m in mentions}
         assert got == relational.get(row["url"], set()), row["url"]
+        got_inv = {
+            (e["mesh_id"], tuple((p["start"], p["end"]) for p in e["positions"]),
+             e["rep_text"], e["type"])
+            for e in entity_inventory_py(mentions)
+        }
+        assert got_inv == inventory.get(row["url"], set()), row["url"]
 
 
 def test_python_matcher_on_documents_table(spark):

@@ -169,9 +169,10 @@ def test_pipeline_survives_session_restart():
 
 def test_pipeline_survives_poison_rows(spark, mesh):
     """100 TB hygiene: null text, empty text, whitespace-only, unicode
-    junk, an unannotated 200 KB monster, and a null lang must flow
-    through the fused pipeline without crashing it or perturbing the
-    triples of the healthy rows."""
+    junk, an unannotated 200 KB monster, a page holding the tokenizer's
+    literal ``[e]`` marker, and a null lang must flow through the fused
+    pipeline on both scorer backends without crashing it or perturbing
+    the triples of the healthy rows."""
     import pyspark.sql.functions as F
 
     from relation_extraction_cdr_spark import datagen
@@ -194,6 +195,7 @@ def test_pipeline_survives_poison_rows(spark, mesh):
             ("https://p/3", "   "),
             ("https://p/4", "é中文 \U0001f600 aspirin induced headache."),
             ("https://p/5", "x" * 200_000),
+            ("https://p/6", "lithium induced tremor [e] in rats."),
         ],
         "url string, text string",
     ).select(
@@ -204,16 +206,17 @@ def test_pipeline_survives_poison_rows(spark, mesh):
         F.lit(None).cast("string").alias("lang"),
     )
     mixed = pages.unionByName(poison)
-    got = {
-        (r["subj"], r["obj"])
-        for r in materialize_triples(
-            score_candidates(mixed, mesh, salt_partitions=8)
-        ).collect()
-    }
-    # healthy-row triples unchanged AND nothing new: none of the poison
-    # surfaces ('aspirin'/'headache' included) exist in the gazetteer,
-    # so the result must be exactly the baseline
-    assert got == baseline, f"poison rows perturbed the triples: {got ^ baseline}"
+    for backend in ("stub", "electra"):
+        scored = score_candidates(
+            mixed, mesh, scorer_backend=backend, salt_partitions=8
+        )
+        got = {(r["subj"], r["obj"]) for r in materialize_triples(scored).collect()}
+        # healthy-row triples unchanged AND nothing new: 'aspirin' and
+        # 'headache' are not in the gazetteer, and the [e] page is
+        # dropped at featurize, so the result must be exactly the
+        # baseline (the backends share the decision)
+        assert got == baseline, (backend, got ^ baseline)
+        assert scored.where(F.col("url").startswith("https://p/")).count() == 0
 
 
 def test_pipeline_default_path_survives_null_text(spark, mesh):
