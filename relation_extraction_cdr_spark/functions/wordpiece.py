@@ -309,6 +309,13 @@ def token_to_id(token: str) -> int:
     return VOCAB.get(token, UNK_ID)
 
 
+def vocab_id(token: str) -> int | None:
+    """id if the token is genuinely in the vocabulary/added set, else
+    None — use when building token-id match sets so out-of-vocab words
+    can never alias to [UNK] and match every unknown token."""
+    return ADDED_TOKENS.get(token, VOCAB.get(token))
+
+
 def convert_tokens_to_ids(tokens: list[str]) -> list[int]:
     return [token_to_id(t) for t in tokens]
 

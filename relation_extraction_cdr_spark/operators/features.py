@@ -30,13 +30,21 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions.tokenize import E_END_ID, E_START_ID, encode
+from ..functions.wordpiece import E_END_ID, E_START_ID, encode
 
 FEATURES_SCHEMA = (
     "url string, chem_mesh string, dis_mesh string, label int, "
     "evidence_type string, token_ids array<int>, entity_mask array<int>, "
     "chem_code int, dis_code int"
 )
+
+
+def has_literal_marker(text: str) -> bool:
+    """True when ``text`` itself holds the tokenizer's ``[e]``/``[/e]``
+    marker token (any case): encoding it adds a marker the featurizer
+    never inserted, so every featurizer drops such a row."""
+    lowered = text.lower()
+    return "[e]" in lowered or "[/e]" in lowered
 
 
 def _encoded_marker_mask(
@@ -51,8 +59,7 @@ def _encoded_marker_mask(
     spans the last).  Returns (ids[:cut], encoded mask, value -> code),
     or None when ``text`` holds a literal ``[e]``/``[/e]``: that span was
     never inserted, has no code and would desync the mask from the ids."""
-    lowered = text.lower()
-    if "[e]" in lowered or "[/e]" in lowered:
+    if has_literal_marker(text):
         return None
     ids = ids[:cut]
     mask: list[str] = []

@@ -182,7 +182,7 @@ def _decode(payload: bytes, kind: str) -> np.ndarray:
                         im = im.convert("RGB")
                     arr = np.asarray(im)
             except Exception as e:
-                if type(e).__name__ == "UnidentifiedImageError":
+                if isinstance(e, Image.UnidentifiedImageError):
                     return _fake_decode(payload, kind)
                 # identified but undecodable: quarantine contract
                 raise ValueError(f"accel image decode failed: {e}") from e

@@ -20,11 +20,13 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.tokenize import E_END_ID, E_START_ID, encode
+from ..functions.wordpiece import E_END_ID, E_START_ID, encode
+from .features import has_literal_marker
 
 NER_SCHEMA = (
     "url string, token_ids array<int>, entity_token_idx array<int>, "
@@ -36,7 +38,11 @@ TYPE_LABELS = {"Chemical": 0, "Disease": 1}
 
 def ner_featurize_py(text: str, mentions: list[dict], max_len: int = 512) -> dict | None:
     """mentions: [{'start','end','type'}]; returns token_ids +
-    per-marked-span first-token index + type labels."""
+    per-marked-span first-token index + type labels, or None when no
+    span survives or the text holds a literal marker (a span with no
+    mention would shift every later label)."""
+    if has_literal_marker(text):
+        return None
     ms = sorted(mentions, key=lambda m: int(m["start"]))
     t = text
     for m in reversed(ms):
@@ -92,20 +98,46 @@ def ner_features(docs_with_mentions: DataFrame, max_len: int = 512) -> DataFrame
 NER_SCORED_SCHEMA = "url string, span_idx int, label int, pred int, margin double"
 
 
+def _ner_margins(w, head, feats: pd.DataFrame) -> pd.DataFrame:
+    """NER_SCHEMA rows -> NER_SCORED_SCHEMA rows: one encoder pass per
+    document (electra.encoded), the hidden states gathered at its
+    marked spans' entity-token indices, and the token head per document
+    at [n_spans, H], so every margin is bit-identical at any
+    partitioning."""
+    from ..scoring.electra import encoded
+
+    cols = [c.split(" ")[0] for c in NER_SCORED_SCHEMA.split(", ")]
+    eidx = feats["entity_token_idx"].tolist()
+    labels = feats["labels"].tolist()
+    urls = feats["url"].to_numpy()
+    frames: list[pd.DataFrame] = []
+    for i, hidden in encoded(w, feats["token_ids"].tolist()):
+        lg = head.apply(hidden[np.asarray(eidx[i], np.int64)])  # [n_spans, 2]
+        n = lg.shape[0]
+        frames.append(
+            pd.DataFrame(
+                {
+                    "url": np.repeat(urls[i], n),
+                    "span_idx": np.arange(n, dtype=np.int32),
+                    "label": np.asarray(labels[i], np.int32),
+                    "pred": lg.argmax(axis=1).astype(np.int32),
+                    "margin": (lg[:, 1] - lg[:, 0]).astype(np.float64),
+                }
+            )
+        )
+    return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=cols)
+
+
 def score_types(
     ner_feats: DataFrame, config=None, seed: int = 0, head_seed: int = 1,
-    batch_size: int = 8, npz_path: str | None = None,
+    npz_path: str | None = None,
 ) -> DataFrame:
     """NER token-classification forward (SURVEY §2.9 M2 variant;
-    reference electra_model.py:767-829): encoder once per EQUAL-LENGTH
-    doc batch (electra.length_grouped_batches — same-length documents
-    share encoder batches of up to ``batch_size``, so pad_stack never
-    pads and the emitted floats are bit-identical to the per-document
-    result at any batch size / partitioning / Arrow-chunk layout, the
-    same shape discipline as scorer.score_fulltext), hidden states
-    gathered at each marked span's entity-token index, dense -> gelu ->
-    out_proj type head.  One output row per span: gold label, argmax
-    pred, positive-class margin.
+    reference electra_model.py:767-829) via ``_ner_margins``: encoder
+    hidden states from the one equal-length-grouped loop, gathered at
+    each marked span's entity-token index, dense -> gelu -> out_proj
+    type head per document.  One output row per span: gold label,
+    argmax pred, positive-class margin.
 
     Encoder weights come from the shared per-executor dispatch
     (electra.resolve_weights: ``npz_path`` for converted real weights,
@@ -115,51 +147,13 @@ def score_types(
     tests/test_electra.py::test_ner_forward_parity."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..scoring.electra import (
-            DEFAULT_CONFIG,
-            NerHead,
-            length_grouped_batches,
-            ner_forward,
-            resolve_weights,
-        )
+        from ..scoring.electra import DEFAULT_CONFIG, NerHead, resolve_weights
 
         cfg = config or DEFAULT_CONFIG
         w = resolve_weights(cfg, seed, npz_path)
         head = NerHead.seeded(cfg, head_seed)
-        cols = ["url", "span_idx", "label", "pred", "margin"]
-        empty = pd.DataFrame(columns=cols)
         for pdf in batches:
-            if not len(pdf):
-                yield empty
-                continue
-            tids = [list(x) for x in pdf["token_ids"]]
-            eidx = [list(x) for x in pdf["entity_token_idx"]]
-            labels = [np.asarray(x, np.int32) for x in pdf["labels"]]
-            urls = pdf["url"].to_numpy()
-            frames: list[pd.DataFrame] = []
-            for sel in length_grouped_batches([len(t) for t in tids], batch_size):
-                logits = ner_forward(
-                    w, head, [tids[i] for i in sel], [eidx[i] for i in sel]
-                )
-                for j, i in enumerate(sel):
-                    lg = logits[j]  # [n_spans, 2]
-                    n = lg.shape[0]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "url": np.repeat(urls[i], n),
-                                "span_idx": np.arange(n, dtype=np.int32),
-                                "label": labels[i],
-                                "pred": lg.argmax(axis=1).astype(np.int32),
-                                "margin": (lg[:, 1] - lg[:, 0]).astype(
-                                    np.float64
-                                ),
-                            }
-                        )
-                    )
-            yield pd.concat(frames, ignore_index=True) if frames else empty
+            yield _ner_margins(w, head, pdf)
 
     return ner_feats.mapInPandas(run, schema=NER_SCORED_SCHEMA)
 

@@ -4290,12 +4290,11 @@ def q87(spark, sf_dir):
     tests/test_electra.py::test_score_fulltext_spark_matches_local_twin.
     Rows-only: DuckDB cannot run the encoder.
 
-    Batching: EQUAL-LENGTH-GROUPED (scoring/electra.
-    length_grouped_batches) — same-length documents share encoder
-    batches of 8 while pooling and the head run per document at the
-    document's own shapes, so the emitted micro-unit logits are
-    BIT-IDENTICAL to the round-3 one-document-at-a-time values under
-    ANY batch size / partitioning / Arrow-chunk layout (pinned by
+    Batching: EQUAL-LENGTH-GROUPED (scoring/electra.encoded) —
+    same-length documents share encoder batches while pooling and the
+    head run per document at the document's own shapes, so the emitted
+    micro-unit logits are BIT-IDENTICAL to the one-document-at-a-time
+    values under ANY partitioning / Arrow-chunk layout (pinned by
     tests/test_electra.py::test_score_fulltext_batched_bit_identical).
     Length PADDING would not be safe: it perturbs real-position hidden
     states at ~5e-7, which the head amplifies past the 1e-6 output
@@ -4303,7 +4302,7 @@ def q87(spark, sf_dir):
     from ..scoring.scorer import score_fulltext
 
     scored = score_fulltext(
-        _doc_fulltext(spark, sf_dir), config=_kernel_cfg(), seed=3, batch_size=8
+        _doc_fulltext(spark, sf_dir), config=_kernel_cfg(), seed=3
     )
     return scored.select(
         "url", "chem_mesh", "dis_mesh", "label",
@@ -4317,8 +4316,9 @@ def q88(spark, sf_dir):
     electra_model.py:767-829 + the cdr_trainer.py:333-370 macro report):
     q48's exact feature rows -> encoder -> gather at entity-start tokens
     -> dense/gelu/out_proj -> per-class P/R/F1 in integer PPM + macro
-    row, computed as ONE dimension-bounded aggregation.  Forward parity:
-    tests/test_electra.py::test_ner_forward_parity."""
+    row, computed as ONE dimension-bounded aggregation.  The head runs
+    per document, so preds are bit-deterministic under any layout (see
+    q87).  Forward parity: tests/test_electra.py::test_ner_forward_parity."""
     from ..operators.ner import docs_with_mentions, macro_report, ner_features, score_types
 
     m = _doc_mentions(spark, sf_dir)
@@ -4329,9 +4329,7 @@ def q88(spark, sf_dir):
     feats = ner_features(
         docs_with_mentions(docs, m.select("url", "start", "end", "type"))
     )
-    scored = score_types(
-        feats, config=_kernel_cfg(), seed=3, head_seed=4, batch_size=1
-    )  # per-doc padding: preds bit-deterministic under any layout (see q87)
+    scored = score_types(feats, config=_kernel_cfg(), seed=3, head_seed=4)
     return macro_report(scored)
 
 
@@ -4340,14 +4338,14 @@ def q89(spark, sf_dir):
     """ALPS 3-way tanh pair head (reference electra_model.py:273-411):
     run-counting mean pooling + branch-ordered concat + dense/TANH/
     out_proj, one row per exercisable -1 branch per document, logits in
-    exact micro-units.  Its kernel (electra.alps_pooled +
+    exact micro-units, bit-deterministic under any layout (see q87).
+    Its kernel (scorer._alps_margins: electra.alps_pooled +
     AlpsHead.apply) is parity-tested against the literal port in
     tests/test_electra.py."""
     from ..scoring.scorer import score_alps_3way
 
     scored = score_alps_3way(
-        _doc_fulltext(spark, sf_dir), config=_kernel_cfg(), seed=3, head_seed=5,
-        batch_size=8,  # equal-length-grouped: bit-deterministic (see q87)
+        _doc_fulltext(spark, sf_dir), config=_kernel_cfg(), seed=3, head_seed=5
     )
     return scored.select(
         "url", "kind", "e1", "e2",
@@ -4519,9 +4517,9 @@ def q91(spark, sf_dir):
     pooling of electra_model.py:626-641) -> 3 full-batch epochs of the
     reference AdamW rule with the integer-exact gradient fold.  Same
     output contract as q86: (epoch, loss_q, n_valid, params_checksum),
-    bit-deterministic at any parallelism — batch_size=1 pads each doc
-    to its own length so the pooled float32 features are
-    layout-invariant (see q87), and the gradient allreduce is the
+    bit-deterministic at any parallelism — equal-length-grouped encoder
+    batches keep the pooled float32 features layout-invariant (see
+    q87), and the gradient allreduce is the
     pytest-proven decimal(38,0) fold.  Scale shape: encoder cost is one
     pass per document (not per pair), embarrassingly parallel; the
     training shuffle moves fixed-size gradient chunks only,
@@ -4530,7 +4528,7 @@ def q91(spark, sf_dir):
     from ..scoring.train import pool_fulltext_features, train_pair_head
 
     pooled = pool_fulltext_features(
-        _doc_fulltext(spark, sf_dir), config=_kernel_cfg(), seed=3, batch_size=1
+        _doc_fulltext(spark, sf_dir), config=_kernel_cfg(), seed=3
     )
     res = train_pair_head(
         pooled, epochs=3, optimizer="adamw", ignore_index=None, seed=2,

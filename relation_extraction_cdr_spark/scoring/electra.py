@@ -46,12 +46,14 @@ normal(0, initializer_range) per transformers 2.11 _init_weights;
 LayerNorm weight=1 bias=0), or loaded from an .npz file — the plug
 point for converted real checkpoint weights, which are not shipped.
 
-Each head runs through ONE length-grouped production kernel, built
-from the pieces here: the pair head on is_full_sample pooling in
+Every consumer reads its hidden states from ONE encoder loop,
+``encoded`` (equal-length groups of up to ``ENCODER_BATCH`` documents,
+the only caller of ``encoder_forward``), then pools and applies its head
+per document: the pair head on is_full_sample pooling in
 scorer.fullsample_pooled (the fused electra stage, score_fulltext and
 doc-level training), on first-token pooling in train.pool_features;
 the ALPS head on ``alps_pooled`` in scorer.score_alps_3way; the NER
-head in ``ner_forward``.  The literal-port parity tests
+head in ner.score_types.  The literal-port parity tests
 (tests/test_electra.py) pin those kernels directly.
 
 GELU: x * 0.5 * (1 + erf(x / sqrt(2))).  numpy has no erf; the engine
@@ -67,6 +69,7 @@ import os
 from dataclasses import dataclass
 from functools import lru_cache
 from pathlib import Path
+from typing import Iterator
 
 import numpy as np
 
@@ -458,6 +461,25 @@ def length_grouped_batches(lengths: list[int], batch_size: int) -> list[list[int
     return out
 
 
+# documents per encoder_forward call; any value gives bit-identical
+# hidden states (length_grouped_batches), this one bounds the activations
+ENCODER_BATCH = 8
+
+
+def encoded(w: ElectraWeights, token_ids: list) -> Iterator[tuple[int, np.ndarray]]:
+    """The one encoder loop: yields ``(i, [T_i, H] hidden)`` for every
+    document ``token_ids[i]``, running ``encoder_forward`` once per
+    equal-length group of up to ``ENCODER_BATCH`` documents (so
+    ``pad_stack`` never pads).  Documents come out in
+    ``length_grouped_batches`` order; each hidden state is bit-identical
+    to the document's one-at-a-time forward."""
+    for sel in length_grouped_batches([len(t) for t in token_ids], ENCODER_BATCH):
+        ids, att, _ = pad_stack([token_ids[i] for i in sel])
+        hidden = encoder_forward(w, ids, att)
+        for j, i in enumerate(sel):
+            yield i, hidden[j]
+
+
 # ---------------------------------------------------------------------------
 # NER token-classification head (electra_model.py:736-829) and the ALPS
 # 3-way tanh head (:273-411) — M2 variants beyond the train_sentence head
@@ -496,38 +518,6 @@ class NerHead:
         return x @ self.out_w + self.out_b
 
 
-def ner_forward(
-    w: ElectraWeights,
-    head: NerHead,
-    token_ids: list[list[int]],
-    entity_token_idx: list[list[int]],
-    pad_id: int = 0,
-) -> list[np.ndarray]:
-    """Batched NER forward (electra_model.py:767-829): encoder once per
-    padded batch, gather each document's hidden states at its marked
-    entity-token indices, apply the token head.  Returns one [n_spans_i,
-    2] logit array per document (span counts vary per doc)."""
-    B = len(token_ids)
-    if B == 0:
-        return []
-    ids, att, _ = pad_stack(token_ids, None, pad_id)
-    hidden = encoder_forward(w, ids, att)
-    # flatten all (doc, span) gathers into ONE head GEMM
-    doc_of = np.concatenate(
-        [np.full(len(ix), b, np.int64) for b, ix in enumerate(entity_token_idx)]
-    ) if any(len(ix) for ix in entity_token_idx) else np.zeros(0, np.int64)
-    pos = np.concatenate(
-        [np.asarray(ix, np.int64) for ix in entity_token_idx]
-    ) if len(doc_of) else np.zeros(0, np.int64)
-    logits = head.apply(hidden[doc_of, pos]) if len(doc_of) else np.zeros((0, 2), np.float32)
-    out: list[np.ndarray] = []
-    off = 0
-    for ix in entity_token_idx:
-        out.append(logits[off : off + len(ix)])
-        off += len(ix)
-    return out
-
-
 @dataclass
 class AlpsHead:
     """ElectraModelClassificationALPS head (electra_model.py:284-287):
@@ -561,42 +551,32 @@ class AlpsHead:
 
 
 def alps_pooled(
-    w: ElectraWeights,
-    token_ids: list[list[int]],
-    entity_masks: list[list[int]],
-    chem_codes: list[int],
-    dis_codes: list[int],
-    other_codes: list[int],
-    pad_id: int = 0,
+    hidden: np.ndarray,
+    entity_mask: np.ndarray,
+    chem_code: int,
+    dis_code: int,
+    other_code: int,
 ) -> np.ndarray:
-    """ALPS 3-way pooling (electra_model.py:306-411): encoder once per
-    padded batch; per row exactly ONE of (chem, dis, other) codes is -1
-    and the OTHER TWO pool via ``run_counting_mean_pool``; concat order
-    follows :385-399 — chem==-1 -> (disease, other); dis==-1 ->
-    (chemical, other); other==-1 -> (chemical, disease).  Returns the
-    [N, 2H] concat that ``AlpsHead.apply`` turns into logits;
-    scorer.score_alps_3way batches the encoder by equal length and
-    applies the head per row at M=1 (bit-determinism)."""
-    n = len(token_ids)
-    ids, att, msk = pad_stack(token_ids, entity_masks, pad_id)
-    hidden = encoder_forward(w, ids, att)
+    """ALPS 3-way pooling (electra_model.py:306-411) of one row over its
+    document's [T, H] hidden states: exactly ONE of (chem, dis, other)
+    codes is -1 and the OTHER TWO pool via ``run_counting_mean_pool``;
+    concat order follows :385-399 — chem==-1 -> (disease, other);
+    dis==-1 -> (chemical, other); other==-1 -> (chemical, disease).
+    Returns the [2H] concat that ``AlpsHead.apply`` turns into logits
+    (scorer.score_alps_3way applies it per row at M=1)."""
     hs = hidden.shape[-1]
-    pooled = np.zeros((n, 2 * hs), np.float32)
-    for i in range(n):
-        cc, dc, oc = int(chem_codes[i]), int(dis_codes[i]), int(other_codes[i])
-        if cc == -1:
-            a = run_counting_mean_pool(hidden[i], msk[i], dc)
-            b = run_counting_mean_pool(hidden[i], msk[i], oc)
-        elif dc == -1:
-            a = run_counting_mean_pool(hidden[i], msk[i], cc)
-            b = run_counting_mean_pool(hidden[i], msk[i], oc)
-        else:  # other_code == -1
-            a = run_counting_mean_pool(hidden[i], msk[i], cc)
-            b = run_counting_mean_pool(hidden[i], msk[i], dc)
-        if a is None or b is None:
-            # the reference would crash (None / count); degenerate rows
-            # keep a zero concat, train.pool_features' rule
-            continue
-        pooled[i, :hs] = a
-        pooled[i, hs:] = b
+    if chem_code == -1:
+        codes = (dis_code, other_code)
+    elif dis_code == -1:
+        codes = (chem_code, other_code)
+    else:  # other_code == -1
+        codes = (chem_code, dis_code)
+    a, b = (run_counting_mean_pool(hidden, entity_mask, int(c)) for c in codes)
+    pooled = np.zeros(2 * hs, np.float32)
+    if a is None or b is None:
+        # the reference would crash (None / count); degenerate rows
+        # keep a zero concat, train.pool_features' rule
+        return pooled
+    pooled[:hs] = a
+    pooled[hs:] = b
     return pooled

@@ -36,7 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions.tokenize import vocab_id
+from ..functions.wordpiece import vocab_id
 from ..operators.candidates import levi_rejected_py
 from ..operators.evidence import DocIndex, select_evidence_py
 from ..operators.features import featurize_py, fulltext_featurize_py
@@ -47,7 +47,7 @@ SCORED_SCHEMA = (
     "evidence_type string, pred int, prob double"
 )
 
-# causal-trigger WordPiece ids; vocab_id (not piece_to_id) so an
+# causal-trigger WordPiece ids; vocab_id (not token_to_id) so an
 # out-of-vocab surface form can never alias to [UNK] and make every
 # unknown token a trigger.  "induces" max-munches to induce+##s, so the
 # in-vocab stems cover all inflections the corpus generator emits.
@@ -164,9 +164,7 @@ FULLSAMPLE_SCHEMA = (
 )
 
 
-def fullsample_pooled(
-    w, docs: pd.DataFrame, batch_size: int = 8
-) -> Iterator[tuple[pd.DataFrame, np.ndarray]]:
+def fullsample_pooled(w, docs: pd.DataFrame) -> Iterator[tuple[pd.DataFrame, np.ndarray]]:
     """The is_full_sample document-level loop (electra_model.py:711-734)
     every document-level consumer here runs: per FULLTEXT_SCHEMA row,
     the (url, chem_mesh, dis_mesh, label) frame of its REAL pairs and
@@ -174,59 +172,52 @@ def fullsample_pooled(
     document pools ALL its pairs).  Shared by ``_fullsample_margins``
     (inference) and train.pool_fulltext_features (doc-level training).
 
-    Batching is EQUAL-LENGTH-GROUPED (electra.length_grouped_batches):
-    documents of the same exact token length share encoder batches of
-    up to ``batch_size``, then pooling runs per document at the
-    document's OWN [C, T] shape.  Under this shape discipline every
-    pooled row is BIT-IDENTICAL to the one-document-at-a-time path at
-    any ``batch_size`` and any partitioning / Arrow-chunk layout (pinned
-    by tests/test_electra.py::test_score_fulltext_batched_bit_identical)
-    — the batch only widens the encoder GEMMs' row dimension, which
-    never changes a row's result; length padding WOULD (see
-    length_grouped_batches).  label_length is each document's own real
-    pair count, so no pad pairs are ever computed."""
-    from .electra import encoder_forward, length_grouped_batches, pad_stack, pool_pairs_one
+    Hidden states come from electra.encoded, the one equal-length-grouped
+    encoder loop; pooling runs per document at the document's OWN
+    [C, T] shape, so every pooled row is BIT-IDENTICAL to the
+    one-document-at-a-time path at any partitioning / Arrow-chunk layout
+    (pinned by tests/test_electra.py::test_score_fulltext_batched_bit_identical).
+    label_length is each document's own real pair count, so no pad
+    pairs are ever computed."""
+    from .electra import encoded, pool_pairs_one
 
-    tids = [list(x) for x in docs["token_ids"]]
-    ems = [list(x) for x in docs["entity_mask"]]
+    ems = docs["entity_mask"].tolist()
     ccs = [list(x) for x in docs["chem_codes"]]
     dcs = [list(x) for x in docs["dis_codes"]]
     labels = [np.asarray(x, np.int64) for x in docs["labels"]]
     urls = docs["url"].to_numpy()
     cms_all = [list(x) for x in docs["chem_meshes"]]
     dms_all = [list(x) for x in docs["dis_meshes"]]
-    for sel in length_grouped_batches([len(t) for t in tids], batch_size):
-        ids, att, msk = pad_stack([tids[i] for i in sel], [ems[i] for i in sel])
-        hidden = encoder_forward(w, ids, att)
-        for j, i in enumerate(sel):
-            ll = len(labels[i])
-            cms, dms = cms_all[i], dms_all[i]
-            # pair order matches the reference's generate_code_pairs
-            # nesting (chem-major), the order labels were built in
-            keys = pd.DataFrame(
-                {
-                    "url": np.repeat(urls[i], ll),
-                    "chem_mesh": np.repeat(np.asarray(cms, object), len(dms)),
-                    "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
-                    "label": labels[i],
-                }
-            )
-            yield keys, pool_pairs_one(hidden[j], msk[j], ccs[i], dcs[i], ll)
+    for i, hidden in encoded(w, docs["token_ids"].tolist()):
+        ll = len(labels[i])
+        cms, dms = cms_all[i], dms_all[i]
+        # pair order matches the reference's generate_code_pairs
+        # nesting (chem-major), the order labels were built in
+        keys = pd.DataFrame(
+            {
+                "url": np.repeat(urls[i], ll),
+                "chem_mesh": np.repeat(np.asarray(cms, object), len(dms)),
+                "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
+                "label": labels[i],
+            }
+        )
+        msk = np.asarray(ems[i], np.int64)
+        yield keys, pool_pairs_one(hidden, msk, ccs[i], dcs[i], ll)
 
 
-def _fullsample_margins(w, docs: pd.DataFrame, batch_size: int = 8) -> pd.DataFrame:
+def _fullsample_margins(w, docs: pd.DataFrame) -> pd.DataFrame:
     """FULLTEXT_SCHEMA rows -> FULLSAMPLE_SCHEMA rows, one per REAL pair:
     ``fullsample_pooled`` then the pair head per document at its own
     [n_pairs, 2H] shape, so the logits keep its bit-identity at any
-    batch size and partitioning.  perfbench/layers.py profiles this
-    function by name (``electra.forward_s``)."""
+    partitioning.  perfbench/layers.py profiles this function by name
+    (``electra.forward_s``)."""
     from .electra import pair_head
 
     cols = [c.split(" ")[0] for c in FULLSAMPLE_SCHEMA.split(", ")]
     if not len(docs):
         return pd.DataFrame(columns=cols)
     frames: list[pd.DataFrame] = []
-    for keys, pooled in fullsample_pooled(w, docs, batch_size):
+    for keys, pooled in fullsample_pooled(w, docs):
         logits = pair_head(w, pooled)  # [n_pairs, 2]
         margins = logits[:, 1] - logits[:, 0]  # float32
         frames.append(
@@ -244,20 +235,19 @@ def score_fulltext(
     config=None,
     seed: int = 0,
     npz_path: str | None = None,
-    batch_size: int = 8,
 ) -> DataFrame:
     """Document-level exact-architecture scoring: FULLTEXT_SCHEMA rows
     (operators/features.fulltext_features) -> one row per REAL pair with
     the is_full_sample logits, via ``_fullsample_margins`` (bit-identical
-    at any ``batch_size`` and partitioning).  Weights are lazy per
-    executor from (config, seed) or the .npz plug point."""
+    at any partitioning).  Weights are lazy per executor from (config,
+    seed) or the .npz plug point."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .electra import DEFAULT_CONFIG, resolve_weights
 
         w = resolve_weights(config or DEFAULT_CONFIG, seed, npz_path)
         for pdf in batches:
-            yield _fullsample_margins(w, pdf, batch_size)
+            yield _fullsample_margins(w, pdf)
 
     return fulltext.mapInPandas(run, schema=FULLSAMPLE_SCHEMA)
 
@@ -265,12 +255,38 @@ def score_fulltext(
 ALPS_SCHEMA = "url string, kind string, e1 string, e2 string, margin double"
 
 
+def _alps_margins(w, head, docs: pd.DataFrame) -> pd.DataFrame:
+    """FULLTEXT_SCHEMA rows -> ALPS_SCHEMA rows: one encoder pass per
+    document (electra.encoded), then per exercisable -1 branch
+    ``alps_pooled`` over the document's hidden states and
+    ``AlpsHead.apply`` at M=1, so every margin is bit-identical at any
+    partitioning."""
+    from .electra import alps_pooled, encoded
+
+    cols = [c.split(" ")[0] for c in ALPS_SCHEMA.split(", ")]
+    out: list[tuple] = []
+    for i, hidden in encoded(w, docs["token_ids"].tolist()):
+        r = docs.iloc[i]
+        cms, dms = list(r["chem_meshes"]), list(r["dis_meshes"])
+        ccs, dcs = list(r["chem_codes"]), list(r["dis_codes"])
+        # (kind, chem, dis, other code, e1, e2) per -1 branch
+        kinds = [("chem_dis", ccs[0], dcs[0], -1, cms[0], dms[0])]
+        if len(ccs) > 1:
+            kinds.append(("other_dis", -1, dcs[0], ccs[1], cms[1], dms[0]))
+        if len(dcs) > 1:
+            kinds.append(("other_chem", ccs[0], -1, dcs[1], dms[1], cms[0]))
+        msk = np.asarray(r["entity_mask"], np.int64)
+        for kind, cc, dc, oc, e1, e2 in kinds:
+            logits = head.apply(alps_pooled(hidden, msk, cc, dc, oc)[None, :])[0]
+            out.append((r["url"], kind, e1, e2, float(logits[1] - logits[0])))
+    return pd.DataFrame(out, columns=cols)
+
+
 def score_alps_3way(
     fulltext: DataFrame,
     config=None,
     seed: int = 0,
     head_seed: int = 2,
-    batch_size: int = 8,
     npz_path: str | None = None,
 ) -> DataFrame:
     """ALPS 3-way tanh-head scoring (reference electra_model.py:273-411)
@@ -286,71 +302,20 @@ def score_alps_3way(
     kinds borrow the document's second entity of the opposite type as
     the deterministic stand-in — the FORWARD (run-counting mean pooling
     + branch-ordered concat + dense/tanh/out_proj) is the exact ALPS
-    kernel either way: ``alps_pooled`` + ``AlpsHead.apply``, which
-    tests/test_electra.py pins to the literal port."""
+    kernel either way: ``_alps_margins`` (``alps_pooled`` +
+    ``AlpsHead.apply``), which tests/test_electra.py pins to the literal
+    port."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .electra import (
-            DEFAULT_CONFIG,
-            AlpsHead,
-            alps_pooled,
-            length_grouped_batches,
-            resolve_weights,
-        )
+        from .electra import DEFAULT_CONFIG, AlpsHead, resolve_weights
 
         cfg = config or DEFAULT_CONFIG
         # encoder weights via the shared .npz plug point; the ALPS head
         # has no converted-checkpoint layout, so it stays seeded
         w = resolve_weights(cfg, seed, npz_path)
         head = AlpsHead.seeded(cfg, head_seed)
-        cols = ["url", "kind", "e1", "e2", "margin"]
         for pdf in batches:
-            rows: list[dict] = []
-            for r in pdf.itertuples(index=False):
-                cms, dms = list(r.chem_meshes), list(r.dis_meshes)
-                ccs, dcs = list(r.chem_codes), list(r.dis_codes)
-                base = dict(token_ids=list(r.token_ids), mask=list(r.entity_mask))
-                rows.append(
-                    {**base, "url": r.url, "kind": "chem_dis",
-                     "cc": ccs[0], "dc": dcs[0], "oc": -1,
-                     "e1": cms[0], "e2": dms[0]}
-                )
-                if len(ccs) > 1:
-                    rows.append(
-                        {**base, "url": r.url, "kind": "other_dis",
-                         "cc": -1, "dc": dcs[0], "oc": ccs[1],
-                         "e1": cms[1], "e2": dms[0]}
-                    )
-                if len(dcs) > 1:
-                    rows.append(
-                        {**base, "url": r.url, "kind": "other_chem",
-                         "cc": ccs[0], "dc": -1, "oc": dcs[1],
-                         "e1": dms[1], "e2": cms[0]}
-                    )
-            out = []
-            # equal-length-grouped encoder batches + per-row (M=1) head:
-            # bit-identical to the one-row-at-a-time path at any
-            # batch_size / partition layout (see score_fulltext)
-            for sel in length_grouped_batches(
-                [len(x["token_ids"]) for x in rows], batch_size
-            ):
-                chunk = [rows[i] for i in sel]
-                pooled = alps_pooled(
-                    w,
-                    [x["token_ids"] for x in chunk],
-                    [x["mask"] for x in chunk],
-                    [x["cc"] for x in chunk],
-                    [x["dc"] for x in chunk],
-                    [x["oc"] for x in chunk],
-                )
-                for i, x in enumerate(chunk):
-                    logits = head.apply(pooled[i : i + 1])[0]
-                    out.append(
-                        {"url": x["url"], "kind": x["kind"], "e1": x["e1"],
-                         "e2": x["e2"],
-                         "margin": float(logits[1] - logits[0])}
-                    )
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
+            yield _alps_margins(w, head, pdf)
 
     return fulltext.mapInPandas(run, schema=ALPS_SCHEMA)
 

@@ -20,10 +20,10 @@ Design (and why it scales to 10^12 docs / 1000 executors):
    first-token span pooling (reference electra_model.py:618-624) inside
    ``mapInPandas`` — the expensive O(corpus) stage, embarrassingly
    parallel, executed once and persisted.  Output: one ``[2H]`` float
-   feature row per candidate pair.  Pooling batches are EQUAL-LENGTH-
-   GROUPED (electra.length_grouped_batches), so every pooled feature
-   is bit-identical to its batch_size=1 result at any batch size,
-   partitioning, or Arrow-chunk layout — the invariance guarantee
+   feature row per candidate pair.  Encoder batches are EQUAL-LENGTH-
+   GROUPED (electra.encoded), so every pooled feature is bit-identical
+   to its one-row-at-a-time result at any partitioning or Arrow-chunk
+   layout — the invariance guarantee
    below therefore holds END-TO-END from raw features, not merely
    downstream of a fixed pooling layout.
 2. ``head_grad_rows`` + ``aggregate_grads``: per epoch, head params are
@@ -109,10 +109,9 @@ from .electra import (
     ElectraConfig,
     ElectraWeights,
     _erf,
-    encoder_forward,
+    encoded,
+    first_token_pool,
     gelu,
-    length_grouped_batches,
-    pad_stack,
     resolve_weights,
 )
 from .scorer import fullsample_pooled
@@ -137,121 +136,64 @@ GRAD_ROW_SCHEMA = "chunk int, g array<long>, loss_q long, n_valid long"
 # --------------------------------------------------------------------------
 
 
+def _first_token_features(w: ElectraWeights, feats: pd.DataFrame) -> pd.DataFrame:
+    """FEATURES_SCHEMA rows -> POOLED_SCHEMA rows: hidden states from
+    the one encoder loop (electra.encoded), then ``first_token_pool`` of
+    each code; a row missing EITHER code keeps an all-zero concat."""
+    hs = w.config.hidden_size
+    out = np.zeros((len(feats), 2 * hs), np.float32)
+    msks = feats["entity_mask"].tolist()
+    ccs = feats["chem_code"].tolist()
+    dcs = feats["dis_code"].tolist()
+    for i, hidden in encoded(w, feats["token_ids"].tolist()):
+        m = np.asarray(msks[i], np.int64)
+        c = first_token_pool(hidden, m, int(ccs[i]))
+        d = first_token_pool(hidden, m, int(dcs[i]))
+        if c is not None and d is not None:
+            out[i, :hs] = c
+            out[i, hs:] = d
+    return pd.DataFrame(
+        {
+            "url": feats["url"].values,
+            "chem_mesh": feats["chem_mesh"].values,
+            "dis_mesh": feats["dis_mesh"].values,
+            "label": feats["label"].astype("int32").values,
+            "feat": list(out),
+        }
+    )
+
+
 def pool_features(
     features: DataFrame,
     config: ElectraConfig = DEFAULT_CONFIG,
     seed: int = 0,
     npz_path: str | None = None,
-    batch_size: int = 16,
-    pooling: str = "first_token",
 ) -> DataFrame:
-    """FEATURES_SCHEMA rows -> POOLED_SCHEMA rows.
+    """FEATURES_SCHEMA rows -> POOLED_SCHEMA rows via
+    ``_first_token_features``: the frozen encoder, then first-token span
+    pooling (the train_sentence entry point, electra_model.py:618-624);
+    the ``[2H]`` concat(chem, dis) is the pair head's input (reference
+    electra_model.py:671-675).
 
-    ``pooling`` selects the reference's span-pooling variant (A3/M3) —
-    the head trains identically either way, and every variant keeps the
-    bit-determinism contract (see the layout-independence note below):
-
-    - "first_token" (default): hidden state at the FIRST position whose
-      mask equals the code — the train_sentence entry point
-      (electra_model.py:618-624)
-    - "run_mean": sum over ALL matching positions ÷ number of
-      contiguous runs (electra_model.py:205-219 / the ALPS pooler
-      :360-377)
-    - "all_match": mean over ALL matching positions (the is_full_sample
-      pooler, electra_model.py:626-641, with its dead first-of-run
-      branch pinned)
-
-    Runs the frozen encoder once per EQUAL-LENGTH micro-batch
-    (electra.length_grouped_batches — rows of the same exact token
-    length share an encoder batch, so pad_stack never pads and every
-    GEMM runs at each row's own K/T shape) and the selected span
-    pooling per row; the ``[2H]`` concat(chem, dis) is the pair head's
-    input (reference electra_model.py:671-675).  Under this shape
-    discipline each row's pooled feature is BIT-IDENTICAL to its
-    ``batch_size=1`` result at any batch size, partitioning, or
-    Arrow-chunk layout (the batch only widens the GEMM row dimension;
-    see length_grouped_batches), which makes the ENTIRE training
+    Hidden states come from electra.encoded, the one equal-length-grouped
+    encoder loop, and pooling is a per-row gather, so each row's pooled
+    feature is BIT-IDENTICAL to its one-row-at-a-time result at any
+    partitioning or Arrow-chunk layout, which makes the ENTIRE training
     pipeline layout-independent: pooled features exact per row, and
     everything downstream already reduces in quantized int64 /
     decimal(38,0).  Rows missing EITHER code in the mask pool to an
-    all-zero concat (``has = mc.any & md.any``): the reference would
-    pool ``None`` there, so every degenerate row gets one fixed feature
-    vector instead.
+    all-zero concat: the reference would pool ``None`` there, so every
+    degenerate row gets one fixed feature vector instead.
 
     Executor-side weights are reconstructed lazily per process from
     (config, seed) or the .npz plug point — nothing large crosses the
     closure; this is the broadcast-once-per-executor idiom.
     """
-    if pooling not in ("first_token", "run_mean", "all_match"):
-        raise ValueError(f"unknown pooling {pooling!r}")
-    pad_id = 0
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = resolve_weights(config, seed, npz_path)
-        hs = w.config.hidden_size
         for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(
-                    columns=["url", "chem_mesh", "dis_mesh", "label", "feat"]
-                )
-                continue
-            n = len(pdf)
-            toks = pdf["token_ids"].tolist()
-            msks = pdf["entity_mask"].tolist()
-            ccs = np.asarray(pdf["chem_code"].tolist(), np.int64)
-            dcs = np.asarray(pdf["dis_code"].tolist(), np.int64)
-            feats = np.zeros((n, 2 * hs), np.float32)
-            for sel in length_grouped_batches(
-                [len(t) for t in toks], batch_size
-            ):
-                gi = np.asarray(sel, np.int64)
-                b = len(sel)
-                # shared pad+stack (reference sequence_padding.py
-                # semantics; electra.pad_stack, no per-row python) —
-                # a no-op pad here: every row in sel has the same length
-                ids, att, mrows = pad_stack(
-                    [toks[i] for i in sel], [msks[i] for i in sel], pad_id
-                )
-                hidden = encoder_forward(w, ids, att)
-                # vectorized span pooling (variants of electra.py's
-                # first_token_pool / run_counting_mean_pool /
-                # all_match_pool); a row missing EITHER code keeps a
-                # fully-zero concat (the degenerate rule above)
-                rows = np.arange(b)
-                mc = mrows == ccs[gi, None]
-                md = mrows == dcs[gi, None]
-                has = mc.any(axis=1) & md.any(axis=1)
-
-                def pool(m: np.ndarray) -> np.ndarray:
-                    if pooling == "first_token":
-                        return hidden[rows[has], m.argmax(axis=1)[has]]
-                    sums = np.einsum(
-                        "bt,bth->bh", m[has].astype(np.float32), hidden[has]
-                    )
-                    if pooling == "all_match":
-                        cnt = m[has].sum(axis=1)
-                    else:  # run_mean: contiguous-run count per row
-                        starts = m & ~np.concatenate(
-                            [np.zeros((b, 1), bool), m[:, :-1]], axis=1
-                        )
-                        cnt = starts[has].sum(axis=1)
-                    return (sums / cnt[:, None].astype(np.float32)).astype(
-                        np.float32
-                    )
-
-                blk = feats[gi]
-                blk[has, :hs] = pool(mc)
-                blk[has, hs:] = pool(md)
-                feats[gi] = blk
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].values,
-                    "chem_mesh": pdf["chem_mesh"].values,
-                    "dis_mesh": pdf["dis_mesh"].values,
-                    "label": pdf["label"].astype("int32").values,
-                    "feat": list(feats),
-                }
-            )
+            yield _first_token_features(w, pdf)
 
     return features.mapInPandas(run, schema=POOLED_SCHEMA)
 
@@ -261,7 +203,6 @@ def pool_fulltext_features(
     config: ElectraConfig = DEFAULT_CONFIG,
     seed: int = 0,
     npz_path: str | None = None,
-    batch_size: int = 8,
 ) -> DataFrame:
     """FULLTEXT_SCHEMA rows -> POOLED_SCHEMA rows at the levi trainer's
     DOCUMENT granularity (reference cdr_trainer_levi.py:316-390
@@ -282,12 +223,12 @@ def pool_fulltext_features(
     at any width because ``pool_pairs_one`` is a per-pair gather.
 
     The loop is ``scorer.fullsample_pooled``, the one ``score_fulltext``
-    runs: EQUAL-LENGTH-GROUPED encoder batches of up to ``batch_size``,
-    then pooling per document at the document's own [C, T] shape.
-    Every emitted feature is BIT-IDENTICAL to its ``batch_size=1``
-    result at any batch size / partitioning / Arrow-chunk layout, so
-    the doc-level training path is layout-independent end-to-end (the
-    head's reductions downstream are already exact int64/decimal)."""
+    runs: electra.encoded's equal-length-grouped encoder batches, then
+    pooling per document at the document's own [C, T] shape.  Every
+    emitted feature is BIT-IDENTICAL to its one-document-at-a-time
+    result at any partitioning / Arrow-chunk layout, so the doc-level
+    training path is layout-independent end-to-end (the head's
+    reductions downstream are already exact int64/decimal)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = resolve_weights(config, seed, npz_path)
@@ -295,7 +236,7 @@ def pool_fulltext_features(
         for pdf in batches:
             frames = [
                 keys.assign(feat=list(pooled.astype(np.float32)))
-                for keys, pooled in fullsample_pooled(w, pdf, batch_size)
+                for keys, pooled in fullsample_pooled(w, pdf)
             ]
             yield pd.concat(frames, ignore_index=True) if frames else empty
 

@@ -113,9 +113,7 @@ def test_full_forward_parity(spark):
     )
     pooled = {
         row["url"]: np.array(row["feat"], np.float32)
-        for row in pool_features(
-            feats, config=CONSISTENT, seed=2, batch_size=2, pooling="first_token"
-        ).collect()
+        for row in pool_features(feats, config=CONSISTENT, seed=2).collect()
     }
     assert len(pooled) == len(ids)
     for r in range(len(ids)):
@@ -312,10 +310,12 @@ def test_full_sample_label_length_overflow_raises():
 
 
 def test_ner_forward_parity():
-    """NER token head (electra_model.py:767-829): gather at entity
-    token indices + dense/gelu/out_proj; batched engine == per-doc
-    port."""
-    from relation_extraction_cdr_spark.operators.ner import ner_featurize_py
+    """NER token head (electra_model.py:767-829): the production
+    per-document kernel (ner._ner_margins: electra.encoded, gather at
+    the entity-token indices, dense/gelu/out_proj) == per-doc port."""
+    import pandas as pd
+
+    from relation_extraction_cdr_spark.operators.ner import _ner_margins, ner_featurize_py
 
     w = E.ElectraWeights.seeded(CONSISTENT, seed=14)
     head = E.NerHead.seeded(CONSISTENT, seed=15)
@@ -329,48 +329,52 @@ def test_ner_forward_parity():
             dict(start=28, end=36, type="Disease"),
         ]),
     ]
-    feats = [ner_featurize_py(t, ms) for t, ms in texts]
-    ids = [f["token_ids"] for f in feats]
-    idx = [f["entity_token_idx"] for f in feats]
-    got = E.ner_forward(w, head, ids, idx)
-    t = max(len(x) for x in ids)
-    for b in range(2):
-        pad = t - len(ids[b])
+    feats = pd.DataFrame([ner_featurize_py(t, ms) for t, ms in texts])
+    feats.insert(0, "url", ["d0", "d1"])
+    got = _ner_margins(w, head, feats)
+    for b, f in feats.iterrows():
         ref = P.ner_forward_one(
-            w, head, list(ids[b]) + [0] * pad, [1] * len(ids[b]) + [0] * pad, idx[b]
+            w, head, f["token_ids"], [1] * len(f["token_ids"]), f["entity_token_idx"]
         )
-        assert got[b].shape == (len(idx[b]), 2)
-        assert np.allclose(got[b], ref, atol=5e-5), f"doc {b}"
+        rows = got[got["url"] == f["url"]].sort_values("span_idx")
+        assert list(rows["label"]) == f["labels"]
+        assert np.allclose(rows["margin"], ref[:, 1] - ref[:, 0], atol=1e-4), f"doc {b}"
+        assert (rows["pred"] == (rows["margin"] > 0)).all()
 
 
 def test_alps_forward_parity():
     """ALPS 3-way tanh head (electra_model.py:306-411): run-counting
-    pooling + branch-ordered concat + tanh; the production kernel
-    (alps_pooled, then AlpsHead.apply) == port for each of the three -1
-    branches."""
+    pooling + branch-ordered concat + tanh; the production per-document
+    kernel (scorer._alps_margins: electra.encoded, alps_pooled, then
+    AlpsHead.apply) == port for each of the three -1 branches."""
+    from relation_extraction_cdr_spark.scoring.scorer import _alps_margins
+
     w = E.ElectraWeights.seeded(CONSISTENT, seed=16)
     head = E.AlpsHead.seeded(CONSISTENT, seed=17)
     ids, masks, _, _ = _fulltext_batch(CONSISTENT)
-    # rows over doc0 (codes 1,2 present; 1 has TWO runs) and doc1 (1,2,3)
-    rows = [
-        (ids[0], masks[0], 1, 2, -1),   # other == -1
-        (ids[1], masks[1], 1, -1, 3),   # dis == -1
-        (ids[1], masks[1], -1, 2, 3),   # chem == -1
+    # (ids, mask, chem codes, dis codes): doc0 (code 1 has TWO runs),
+    # then doc1 read as 1 chem + 2 diseases and as 2 chems + 1 disease
+    docs = [
+        (ids[0], masks[0], [1], [2]),
+        (ids[1], masks[1], [1], [2, 3]),
+        (ids[1], masks[1], [1, 3], [2]),
     ]
-    got = head.apply(E.alps_pooled(
-        w,
-        [r[0] for r in rows], [r[1] for r in rows],
-        [r[2] for r in rows], [r[3] for r in rows], [r[4] for r in rows],
-    ))
-    t = max(len(r[0]) for r in rows)
-    for i, (tid, msk, cc, dc, oc) in enumerate(rows):
-        pad = t - len(tid)
+    got = _alps_margins(w, head, _fulltext_frame(*map(list, zip(*docs))))
+    branch = {  # kind -> (chem, dis, other) code
+        "chem_dis": lambda cc, dc: (cc[0], dc[0], -1),
+        "other_dis": lambda cc, dc: (-1, dc[0], cc[1]),
+        "other_chem": lambda cc, dc: (cc[0], -1, dc[1]),
+    }
+    assert sorted(zip(got["url"], got["kind"])) == [
+        ("d0", "chem_dis"), ("d1", "chem_dis"), ("d1", "other_chem"),
+        ("d2", "chem_dis"), ("d2", "other_dis"),
+    ]
+    for r in got.itertuples(index=False):
+        tid, msk, cc, dc = docs[int(r.url[1:])]
         ref = P.alps_forward_one(
-            w, head,
-            list(tid) + [0] * pad, [1] * len(tid) + [0] * pad,
-            list(msk) + [-1] * pad, cc, dc, oc,
+            w, head, tid, [1] * len(tid), msk, *branch[r.kind](cc, dc)
         )
-        assert np.allclose(got[i], ref, atol=5e-5), f"row {i}"
+        assert np.isclose(r.margin, ref[1] - ref[0], atol=1e-4), (r.url, r.kind)
 
 
 def test_score_fulltext_spark_matches_local_twin(spark, fixtures, mesh):
@@ -429,13 +433,11 @@ def test_score_fulltext_spark_matches_local_twin(spark, fixtures, mesh):
         assert row["label"] == lab
         assert abs(row["margin"] - margin) < 5e-5, (row["url"], row["chem_mesh"])
 
-    # batch_size=1 (what q87 runs): per-doc padding makes the margins
-    # BIT-EQUAL to the single-doc kernel under any partition layout —
-    # the determinism contract the gate's micro-unit quantization needs
+    # the margins are BIT-EQUAL to the single-doc kernel under any
+    # partition layout — the determinism contract the gate's micro-unit
+    # quantization needs
     for parts in (2, 5):
-        exact = score_fulltext(
-            ft.repartition(parts), config=cfg, seed=6, batch_size=1
-        ).collect()
+        exact = score_fulltext(ft.repartition(parts), config=cfg, seed=6).collect()
         assert len(exact) == len(expect)
         for row in exact:
             lab, margin = expect[(row["url"], row["chem_mesh"], row["dis_mesh"])]
@@ -592,10 +594,10 @@ def test_encoder_equal_length_batching_bit_exact(spark, fixtures, mesh):
 
 
 def test_score_fulltext_batched_bit_identical(spark, fixtures, mesh):
-    """score_fulltext / score_alps_3way at batch_size>1 emit BIT-IDENTICAL
-    values to batch_size=1 (the round-3 gate mode) under different
-    partitionings — the q87/q89 hash-stability contract for the
-    equal-length-grouped batching path."""
+    """score_fulltext / score_alps_3way emit BIT-IDENTICAL values on one
+    partition and under different partitionings — the q87/q89
+    hash-stability contract for the equal-length-grouped batching
+    path."""
     from relation_extraction_cdr_spark.plans.pipeline import _mesh_artifacts, extracted_docs
     from relation_extraction_cdr_spark.operators.features import fulltext_features
     from relation_extraction_cdr_spark.operators.mentions import detect_mentions
@@ -625,20 +627,95 @@ def test_score_fulltext_batched_bit_identical(spark, fixtures, mesh):
         return (x["url"], x["chem_mesh"], x["dis_mesh"])
 
     ref = {k87(x): (x["logit_neg"], x["logit_pos"], x["margin"])
-           for x in score_fulltext(ft, config=cfg, seed=3, batch_size=1).collect()}
+           for x in score_fulltext(ft.coalesce(1), config=cfg, seed=3).collect()}
     assert len(ref) > 5
-    for bs, parts in ((8, None), (16, 7)):
-        src = ft.repartition(parts) if parts else ft
-        got = {k87(x): (x["logit_neg"], x["logit_pos"], x["margin"])
-               for x in score_fulltext(src, config=cfg, seed=3, batch_size=bs).collect()}
-        assert got == ref, f"bs={bs} parts={parts} not bit-identical"
+    got = {k87(x): (x["logit_neg"], x["logit_pos"], x["margin"])
+           for x in score_fulltext(ft.repartition(7), config=cfg, seed=3).collect()}
+    assert got == ref, "repartition(7) not bit-identical"
 
     def k89(x):
         return (x["url"], x["kind"], x["e1"], x["e2"])
 
     ref_a = {k89(x): x["margin"]
-             for x in score_alps_3way(ft, config=cfg, seed=3, head_seed=5, batch_size=1).collect()}
+             for x in score_alps_3way(ft.coalesce(1), config=cfg, seed=3, head_seed=5).collect()}
     got_a = {k89(x): x["margin"]
-             for x in score_alps_3way(ft.repartition(5), config=cfg, seed=3, head_seed=5, batch_size=8).collect()}
+             for x in score_alps_3way(ft.repartition(5), config=cfg, seed=3, head_seed=5).collect()}
     assert got_a == ref_a and len(ref_a) > 5
     ft.unpersist()
+
+
+def test_encoder_batch_size_never_changes_an_output(monkeypatch):
+    """Every consumer of the one encoder loop (electra.encoded) emits
+    bit-identical rows at ENCODER_BATCH 1, 3 and 8: fullsample margins,
+    ALPS pooling + head, NER gather + head and first-token pooling, over
+    mixed-length documents whose largest equal-length group (11) exceeds
+    every batch size.  No SparkSession."""
+    import pandas as pd
+
+    from relation_extraction_cdr_spark.operators.ner import _ner_margins
+    from relation_extraction_cdr_spark.scoring.scorer import (
+        _alps_margins,
+        _fullsample_margins,
+    )
+    from relation_extraction_cdr_spark.scoring.train import _first_token_features
+
+    rng = np.random.default_rng(21)
+    lengths = [12] * 11 + [17] * 4 + [9, 23, 30, 17]
+    docs = []
+    for b, n in enumerate(lengths):
+        ids = [101, *rng.integers(1000, 30000, n - 2).tolist(), 102]
+        mask = [0] * n
+        for code, lo in ((1, 1), (2, 4), (3, 6), (1, 8)):  # code 1: two runs
+            mask[lo] = code
+        ccs, dcs = ([1, 3], [2]) if b % 2 else ([1], [2, 3])
+        docs.append(dict(url=f"d{b}", token_ids=ids, entity_mask=mask,
+                         chem_codes=ccs, dis_codes=dcs))
+    ft = pd.DataFrame([
+        {**d, "labels": [b % 2] * (len(d["chem_codes"]) * len(d["dis_codes"])),
+         "chem_meshes": [f"C{c}" for c in d["chem_codes"]],
+         "dis_meshes": [f"D{c}" for c in d["dis_codes"]]}
+        for b, d in enumerate(docs)
+    ])
+    ner = pd.DataFrame([
+        {"url": d["url"], "token_ids": d["token_ids"],
+         "entity_token_idx": [1, 4, 6, 8], "labels": [0, 1, 1, 0]}
+        for d in docs
+    ])
+    feats = pd.DataFrame([
+        {"url": d["url"], "chem_mesh": "C", "dis_mesh": "D", "label": b % 2,
+         "evidence_type": "intra", "token_ids": d["token_ids"],
+         "entity_mask": d["entity_mask"], "chem_code": 1,
+         "dis_code": 2 if b % 5 else 9}  # every 5th row is degenerate
+        for b, d in enumerate(docs)
+    ])
+    w = E.ElectraWeights.seeded(CONSISTENT, seed=18)
+    alps_head = E.AlpsHead.seeded(CONSISTENT, seed=19)
+    ner_head = E.NerHead.seeded(CONSISTENT, seed=20)
+
+    def canon(df):
+        return [
+            tuple(v.tobytes() if isinstance(v, np.ndarray) else v for v in row)
+            for row in df.itertuples(index=False)
+        ]
+
+    forward = E.encoder_forward
+    rows_per_call: list[int] = []
+
+    def counting_forward(w_, ids, att):
+        rows_per_call.append(len(ids))
+        return forward(w_, ids, att)
+
+    monkeypatch.setattr(E, "encoder_forward", counting_forward)
+    outs = {}
+    for batch in (1, 3, 8):
+        monkeypatch.setattr(E, "ENCODER_BATCH", batch)
+        rows_per_call.clear()
+        outs[batch] = [
+            canon(_fullsample_margins(w, ft)),
+            canon(_alps_margins(w, alps_head, ft)),
+            canon(_ner_margins(w, ner_head, ner)),
+            canon(_first_token_features(w, feats)),
+        ]
+        assert max(rows_per_call) == batch
+    assert len(outs[8][2]) == 4 * len(docs) and len(outs[8][3]) == len(docs)
+    assert outs[1] == outs[3] == outs[8]

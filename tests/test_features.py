@@ -3,21 +3,22 @@
 
 from __future__ import annotations
 
-from relation_extraction_cdr_spark.functions.tokenize import (
+from relation_extraction_cdr_spark.functions.wordpiece import (
     E_END_ID,
     E_START_ID,
     encode,
-    piece_to_id,
-    tokenize_pieces,
+    token_to_id,
+    tokenize,
 )
 from relation_extraction_cdr_spark.operators.features import (
     featurize_py,
     fulltext_featurize_py,
 )
+from relation_extraction_cdr_spark.operators.ner import ner_featurize_py
 
 
 def test_tokenizer_markers():
-    pieces = tokenize_pieces("x [E] lithium [/E] y")
+    pieces = tokenize("x [E] lithium [/E] y")
     assert pieces == ["x", "[e]", "lithium", "[/e]", "y"]
     # encode wraps with [CLS] ... [SEP] like the reference's .encode()
     ids = encode("x [E] lithium [/E] y")
@@ -40,7 +41,7 @@ def test_marker_insertion_and_mask():
     assert mask[1] == mask[2] == mask[3] == feat["chem_code"]
     assert mask[4] == o_code
     # disease span carries dis_code
-    tremor_pos = ids.index(piece_to_id("tremor"))
+    tremor_pos = ids.index(token_to_id("tremor"))
     assert mask[tremor_pos] == feat["dis_code"]
     assert mask[tremor_pos - 1] == feat["dis_code"]  # [e] marker
     assert mask[tremor_pos + 1] == feat["dis_code"]  # [/e] marker
@@ -54,7 +55,7 @@ def test_marker_insertion_disease_first():
     # earlier-starting entity (disease) is 'first' in mask-walk order
     # (mask[0] is the [CLS] 'O' row; the disease marker opens at 1)
     assert mask[1] == feat["dis_code"]
-    li = ids.index(piece_to_id("lithium"))
+    li = ids.index(token_to_id("lithium"))
     assert mask[li] == feat["chem_code"]
 
 
@@ -113,8 +114,9 @@ def test_fulltext_dual_typed_mesh_keeps_labels_aligned():
 def test_literal_marker_in_text_drops_row():
     """Page text holding the tokenizer's own ``[e]``/``[/e]`` marker
     tokens would add a marker span the featurizer did not insert (a
-    mask longer than the ids, or a span with no code): both featurizers
-    drop such a row instead of emitting a desynced mask or raising."""
+    mask longer than the ids, or a span with no code): every featurizer
+    drops such a row instead of emitting a desynced mask, shifted NER
+    labels or raising."""
     for junk in ("[e]", "[/e]", "[E] [/E]"):
         sent = f"lithium induced tremor {junk} in rats."
         ds = sent.find("tremor")
@@ -126,6 +128,11 @@ def test_literal_marker_in_text_drops_row():
              "positions": [{"start": ds, "end": ds + 6}]},
         ]
         assert fulltext_featurize_py(sent, ents, []) is None
+        ner_ms = [
+            {"start": 0, "end": 7, "type": "Chemical"},
+            {"start": ds, "end": ds + 6, "type": "Disease"},
+        ]
+        assert ner_featurize_py(sent, ner_ms) is None
         # the literal marker AFTER the fulltext window's last [/e] still
         # drops the document
         long_text = sent.replace(junk, "word " * 600 + junk)
@@ -133,3 +140,4 @@ def test_literal_marker_in_text_drops_row():
     clean = "lithium induced tremor in rats."
     assert featurize_py(clean, 0, "D910001", "D010001", 0, 7, 16, 22) is not None
     assert fulltext_featurize_py(clean, ents, []) is not None
+    assert ner_featurize_py(clean, ner_ms)["labels"] == [0, 1]

@@ -176,32 +176,47 @@ def test_unidentified_image_falls_to_fake_with_accel_present(monkeypatch):
     """Installing Pillow must not change the output for payloads it
     cannot identify (q37's synthetic text blobs): the accel branch
     falls through to the same deterministic fake, byte-identical to
-    the no-Pillow run.  Identified-but-corrupt images quarantine."""
+    the no-Pillow run.  The error is matched by type, so a subclass
+    under another name falls through too.  Identified-but-corrupt
+    images quarantine."""
     import numpy as np
 
-    class UnidentifiedImageError(Exception):
+    class UnidentifiedImageError(OSError):
         pass
 
-    class _StubPIL:
-        @staticmethod
-        def open(fp):
-            raise UnidentifiedImageError("cannot identify image file")
+    class PluginCannotIdentify(UnidentifiedImageError):
+        pass
+
+    def stub_pil(exc):
+        class _StubPIL:
+            @staticmethod
+            def open(fp):
+                raise exc
+
+        _StubPIL.UnidentifiedImageError = UnidentifiedImageError
+        return _StubPIL
 
     payload = b"blob42:deadbeefdeadbeefdeadbeef"
     monkeypatch.setattr(MM, "accel_image", lambda: None)
     without = MM._decode(payload, "image")
-    monkeypatch.setattr(MM, "accel_image", lambda: _StubPIL)
-    with_accel = MM._decode(payload, "image")
-    assert np.array_equal(without, with_accel)
+    for exc in (
+        UnidentifiedImageError("cannot identify image file"),
+        PluginCannotIdentify("cannot identify image file"),
+    ):
+        monkeypatch.setattr(MM, "accel_image", lambda: stub_pil(exc))
+        with_accel = MM._decode(payload, "image")
+        assert np.array_equal(without, with_accel), type(exc).__name__
 
-    class _CorruptPIL:
-        @staticmethod
-        def open(fp):
-            raise OSError("broken data stream when reading image file")
-
-    monkeypatch.setattr(MM, "accel_image", lambda: _CorruptPIL)
-    with pytest.raises(ValueError, match="accel image decode failed"):
-        MM._decode(payload, "image")
+    # any other exception, a same-named unrelated class included,
+    # quarantines
+    LookAlike = type("UnidentifiedImageError", (OSError,), {})
+    for exc in (
+        OSError("broken data stream when reading image file"),
+        LookAlike("cannot identify image file"),
+    ):
+        monkeypatch.setattr(MM, "accel_image", lambda: stub_pil(exc))
+        with pytest.raises(ValueError, match="accel image decode failed"):
+            MM._decode(payload, "image")
 
 
 def test_codec_fuzz_respects_quarantine_contract():

@@ -2,11 +2,11 @@
 
 from __future__ import annotations
 
-from relation_extraction_cdr_spark.functions.tokenize import (
+from relation_extraction_cdr_spark.functions.wordpiece import (
     E_END_ID,
     E_START_ID,
     encode,
-    piece_to_id,
+    token_to_id,
 )
 from relation_extraction_cdr_spark.operators.ner import (
     docs_with_mentions,
@@ -25,8 +25,8 @@ def test_whole_doc_markers_and_labels():
     ids = feat["token_ids"]
     assert feat["labels"] == [0, 1]
     i0, i1 = feat["entity_token_idx"]
-    assert ids[i0] == piece_to_id("lithium")
-    assert ids[i1] == piece_to_id("tremor")
+    assert ids[i0] == token_to_id("lithium")
+    assert ids[i1] == token_to_id("tremor")
     assert ids[i0 - 1] == E_START_ID and ids[i1 - 1] == E_START_ID
 
 
@@ -39,8 +39,8 @@ def test_reverse_insertion_preserves_offsets():
     ]
     feat = ner_featurize_py(text, mentions)
     ids = feat["token_ids"]
-    assert ids[feat["entity_token_idx"][0]] == piece_to_id("aa")
-    assert ids[feat["entity_token_idx"][1]] == piece_to_id("dd")
+    assert ids[feat["entity_token_idx"][0]] == token_to_id("aa")
+    assert ids[feat["entity_token_idx"][1]] == token_to_id("dd")
 
 
 def test_truncate_back_to_last_marker():
@@ -92,9 +92,9 @@ def test_macro_report_empty_frame_all_zeros(spark):
 
 def test_score_types_layout_independent(spark, fixtures, mesh):
     """Equal-length-grouped NER scoring: emitted (pred, margin) rows are
-    bit-identical to the batch_size=1 / single-partition result at any
-    batch size or partitioning (the scorer.score_fulltext shape
-    discipline, applied to the token head)."""
+    bit-identical to the single-partition result at any partitioning
+    (the scorer.score_fulltext shape discipline, applied to the token
+    head)."""
     import numpy as np
 
     from relation_extraction_cdr_spark.operators.mentions import detect_mentions
@@ -118,15 +118,9 @@ def test_score_types_layout_independent(spark, fixtures, mesh):
             for r in rows
         }
 
-    base = as_map(
-        score_types(feats.coalesce(1), config=cfg, seed=3, batch_size=1).collect()
-    )
+    base = as_map(score_types(feats.coalesce(1), config=cfg, seed=3).collect())
     assert base
-    got = as_map(
-        score_types(
-            feats.repartition(5), config=cfg, seed=3, batch_size=4
-        ).collect()
-    )
+    got = as_map(score_types(feats.repartition(5), config=cfg, seed=3).collect())
     assert got.keys() == base.keys()
     for k, (lab, pred, margin) in got.items():
         blab, bpred, bmargin = base[k]

@@ -19,7 +19,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from relation_extraction_cdr_spark.functions.text import split_sentences_py
-from relation_extraction_cdr_spark.functions.tokenize import E_END_ID, E_START_ID, encode
+from relation_extraction_cdr_spark.functions.wordpiece import E_END_ID, E_START_ID, encode
 from relation_extraction_cdr_spark.operators.evidence import select_evidence_py
 from relation_extraction_cdr_spark.operators.features import featurize_py
 

@@ -378,74 +378,13 @@ class TestPoolFeatures:
             got = np.array(row["feat"], np.float32)
             assert np.allclose(got, expect, atol=2e-5), (row["url"], src["chem_mesh"])
 
-    def test_pooling_variants_match_kernels(self, spark, fixtures, mesh, tiny_cfg):
-        """pool_features(pooling=run_mean|all_match) == the electra.py
-        pooling kernels (themselves literal-port parity-tested) run
-        per row — the A3 variants are selectable for training."""
-        from relation_extraction_cdr_spark.operators.candidates import (
-            candidate_pairs,
-            label_pairs,
-        )
-        from relation_extraction_cdr_spark.operators.evidence import select_evidence
-        from relation_extraction_cdr_spark.operators.features import featurize
-        from relation_extraction_cdr_spark.operators.mentions import (
-            detect_mentions,
-            entity_inventory,
-        )
-        from relation_extraction_cdr_spark.plans.pipeline import (
-            _mesh_artifacts,
-            extracted_docs,
-        )
-        from relation_extraction_cdr_spark.scoring.electra import (
-            ElectraWeights,
-            all_match_pool,
-            encoder_forward,
-            run_counting_mean_pool,
-        )
-
-        pages, _, gold = fixtures
-        docs = extracted_docs(pages.limit(8))
-        gaz, _, _ = _mesh_artifacts(mesh, "type")
-        inv = entity_inventory(detect_mentions(docs, gaz))
-        pairs = label_pairs(candidate_pairs(inv), gold)
-        feats = featurize(select_evidence(pairs.join(docs, "url")))
-        raw = {
-            (r["url"], r["chem_mesh"], r["dis_mesh"]): r for r in feats.collect()
-        }
-        assert raw
-        w = ElectraWeights.seeded(tiny_cfg, seed=11)
-        hs = tiny_cfg.hidden_size
-        kernels = {"run_mean": run_counting_mean_pool, "all_match": all_match_pool}
-        for pooling, kern in kernels.items():
-            pooled = pool_features(
-                feats, config=tiny_cfg, seed=11, pooling=pooling
-            ).collect()
-            assert len(pooled) == len(raw)
-            for row in pooled:
-                src = raw[(row["url"], row["chem_mesh"], row["dis_mesh"])]
-                ids = np.array([src["token_ids"]], np.int64)
-                hidden = encoder_forward(w, ids, np.ones_like(ids, np.float32))[0]
-                msk = np.array(src["entity_mask"], np.int64)
-                c = kern(hidden, msk, int(src["chem_code"]))
-                d = kern(hidden, msk, int(src["dis_code"]))
-                expect = np.zeros(2 * hs, np.float32)
-                # all_match returns zeros (not None) for absent codes;
-                # the degenerate gate still zeroes BOTH halves
-                c_has = (msk == int(src["chem_code"])).any()
-                d_has = (msk == int(src["dis_code"])).any()
-                if c_has and d_has:
-                    expect[:hs] = c
-                    expect[hs:] = d
-                got = np.array(row["feat"], np.float32)
-                assert np.allclose(got, expect, atol=2e-5), (pooling, row["url"])
-
     def test_doc_level_pooling_matches_kernel_and_trains(
         self, spark, fixtures, mesh, tiny_cfg
     ):
         """The levi trainer's document granularity
         (cdr_trainer_levi.py:316-390): pool_fulltext_features ==
         scorer.fullsample_pooled run locally one document at a time
-        (bit-equal at batch_size=1), and a head trained on the
+        (bit-equal), and a head trained on the
         doc-level rows is bit-identical across parallelism — the same
         allreduce contract as the sentence-level path."""
         import pandas as pd
@@ -500,18 +439,14 @@ class TestPoolFeatures:
             for k, x in enumerate(keys.itertuples(index=False)):
                 expect[(x.url, x.chem_mesh, x.dis_mesh)] = (int(x.label), pooled[k].copy())
 
-        got = pool_fulltext_features(
-            ft.repartition(3), config=tiny_cfg, seed=7, batch_size=1
-        ).collect()
+        got = pool_fulltext_features(ft.repartition(3), config=tiny_cfg, seed=7).collect()
         assert len(got) == len(expect) > 0
         for row in got:
             lab, feat = expect[(row["url"], row["chem_mesh"], row["dis_mesh"])]
             assert row["label"] == lab
             assert np.array_equal(np.array(row["feat"], np.float32), feat)
 
-        pooled_df = pool_fulltext_features(
-            ft, config=tiny_cfg, seed=7, batch_size=1
-        ).cache()
+        pooled_df = pool_fulltext_features(ft, config=tiny_cfg, seed=7).cache()
         try:
             r2 = train_pair_head(pooled_df.repartition(2), epochs=2, seed=5)
             r5 = train_pair_head(pooled_df.repartition(5), epochs=2, seed=5)
@@ -521,11 +456,10 @@ class TestPoolFeatures:
             pooled_df.unpersist()
 
     def test_pooling_layout_independent(self, spark, fixtures, mesh, tiny_cfg):
-        """Equal-length-grouped pooling (electra.length_grouped_batches)
-        makes BOTH training pooling paths layout-independent: every
-        pooled feature is bit-identical to its batch_size=1 /
-        single-partition result at any batch size, partitioning, or
-        Arrow-chunk layout.  This is the property that lets the q93
+        """Equal-length-grouped encoding (electra.encoded) makes BOTH
+        training pooling paths layout-independent: every pooled feature
+        is bit-identical to its single-partition result at any
+        partitioning or Arrow-chunk layout.  This is the property that lets the q93
         lifecycle oracle pin exact integers regardless of how the
         driver partitions the features frame."""
         import pyspark.sql.functions as F
@@ -568,16 +502,12 @@ class TestPoolFeatures:
             for r in rows}
 
         base = as_map(
-            pool_features(
-                feats.coalesce(1), config=tiny_cfg, seed=9, batch_size=1
-            ).collect()
+            pool_features(feats.coalesce(1), config=tiny_cfg, seed=9).collect()
         )
         assert base
         for layout in (
             pool_features(feats.repartition(7), config=tiny_cfg, seed=9),
-            pool_features(
-                feats.repartition(2), config=tiny_cfg, seed=9, batch_size=5
-            ),
+            pool_features(feats.repartition(2), config=tiny_cfg, seed=9),
         ):
             got = as_map(layout.collect())
             assert got.keys() == base.keys()
@@ -606,29 +536,16 @@ class TestPoolFeatures:
         )
         ft = fulltext_features(docs.join(ents, "url").join(g, "url", "left"))
         base_ft = as_map(
-            pool_fulltext_features(
-                ft.coalesce(1), config=tiny_cfg, seed=7, batch_size=1
-            ).collect()
+            pool_fulltext_features(ft.coalesce(1), config=tiny_cfg, seed=7).collect()
         )
         assert base_ft
         got_ft = as_map(
-            pool_fulltext_features(
-                ft.repartition(5), config=tiny_cfg, seed=7, batch_size=4
-            ).collect()
+            pool_fulltext_features(ft.repartition(5), config=tiny_cfg, seed=7).collect()
         )
         assert got_ft.keys() == base_ft.keys()
         for k, (lab, feat) in got_ft.items():
             assert lab == base_ft[k][0]
             assert np.array_equal(feat, base_ft[k][1]), k
-
-    def test_pooling_variant_rejects_unknown(self, spark, tiny_cfg):
-        import pytest
-
-        from relation_extraction_cdr_spark.operators.features import FEATURES_SCHEMA
-
-        empty = spark.createDataFrame([], FEATURES_SCHEMA)
-        with pytest.raises(ValueError, match="unknown pooling"):
-            pool_features(empty, config=tiny_cfg, pooling="cls")
 
     def test_end_to_end_train_on_cdr_features(self, spark, fixtures, mesh, tiny_cfg):
         """The full M4/M5 path: corpus → features → frozen-encoder
