@@ -49,6 +49,9 @@ _ADAM7 = (
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
 )
+# decode budget: IHDR may declare at most this many pixels (an 8K frame
+# fits), and IDAT inflates to at most the length IHDR implies
+PNG_MAX_PIXELS = 1 << 25
 
 
 def _chunk(tag: bytes, body: bytes) -> bytes:
@@ -339,12 +342,29 @@ def png_decode(payload: bytes) -> np.ndarray:
         raise ValueError("PNG: truncated stream (no IEND)")
     if color == 3 and plte is None:
         raise ValueError("palette PNG missing PLTE")
-    raw = zlib.decompress(bytes(idat))
+    if w * h > PNG_MAX_PIXELS:
+        raise ValueError(f"PNG: {w}x{h} exceeds {PNG_MAX_PIXELS} pixels")
+    # the filtered scanlines IHDR implies (a filter byte + stride per
+    # row of each pass); inflating one byte past them detects a longer
+    # stream without materializing it (an inflate bomb)
+    passes = _ADAM7 if interlace else ((0, 0, 1, 1),)
+    expected = 0
+    for x0, y0, dx, dy in passes:
+        pw = (w - x0 + dx - 1) // dx
+        ph = (h - y0 + dy - 1) // dy
+        if ph > 0 and (pw > 0 or not interlace):
+            expected += ph * (-(-pw * ch * depth // 8) + 1)
+    inflate = zlib.decompressobj()
+    raw = inflate.decompress(bytes(idat), expected + 1)
+    if len(raw) <= expected and not inflate.eof:
+        raise zlib.error(
+            "Error -5 while decompressing data: incomplete or truncated stream"
+        )
+    if len(raw) != expected:
+        raise ValueError("PNG data length mismatch")
     if depth in (1, 2, 4):  # single-channel sub-byte: unfilter packed
         if not interlace:  # bytes (bpp=1), then unpack samples
             stride = -(-w * depth // 8)
-            if len(raw) != h * (stride + 1):
-                raise ValueError("PNG data length mismatch")
             rows = _unpack_bits(_unfilter(raw, h, stride, 1, 0), w, depth)
         else:
             rows = np.zeros((h, w), np.uint8)
@@ -359,16 +379,11 @@ def png_decode(payload: bytes) -> np.ndarray:
                     _unfilter(raw, ph, stride, 1, off), pw, depth
                 )
                 off += ph * (stride + 1)
-            if off != len(raw):
-                raise ValueError("PNG data length mismatch")
         rows = rows.reshape(h, w, 1)
         bypp = 1
     elif not interlace:
         bypp = ch * (depth // 8)
-        stride = w * bypp
-        if len(raw) != h * (stride + 1):
-            raise ValueError("PNG data length mismatch")
-        rows = _unfilter(raw, h, stride, bypp, 0).reshape(h, w, bypp)
+        rows = _unfilter(raw, h, w * bypp, bypp, 0).reshape(h, w, bypp)
     else:  # Adam7: 7 independently-filtered sub-images, scattered back
         bypp = ch * (depth // 8)
         rows = np.zeros((h, w, bypp), np.uint8)
@@ -383,8 +398,6 @@ def png_decode(payload: bytes) -> np.ndarray:
                 ph, pw, bypp
             )
             off += ph * (stride + 1)
-        if off != len(raw):
-            raise ValueError("PNG data length mismatch")
     if depth == 16:
         out = (
             rows.reshape(h, w, ch, 2)[..., 0].astype(np.uint16) << 8

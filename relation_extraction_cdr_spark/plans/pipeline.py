@@ -4,15 +4,19 @@ Lifecycle (SURVEY §3.1 Spark equivalent):
 
     pages --extract_text(JVM)--> docs(url, text)
           [--left join gold_pairs (eval mode)]
-          [--url-hash repartition of heavy docs (salt_partitions)]
+          [--url-hash repartition of heavy docs into k partitions]
           --ONE mapInPandas per doc (scoring.scorer.fused_score_docs):
             mentions -> pairs + Levi filter -> evidence -> features
             -> scorer--> scored
           --groupBy dedup--> triples + adjacency
 
 Shuffle budget (scale analysis, 100 TB target):
-  1. heavy-doc salt repartition (only with ``salt_partitions``) — moves
-     only the pages longer than HEAVY_DOC_CHARS (~1%), keyed on url
+  1. heavy-doc salt repartition (only with ``salt_partitions``, and only
+     when the heavy text pays for its tasks) — moves only the pages
+     longer than HEAVY_DOC_CHARS (~1%), keyed on url, into
+     k = min(salt_partitions, heavy_chars // CHARS_PER_TASK) partitions.
+     heavy_chars comes from one eager JVM-only probe (a one-row sum);
+     k = 0 builds no exchange at all
   2. final triple groupBy(chem, dis) — output is tiny relative to input
      (dimension-bounded)
   In eval mode the gold table adds a groupBy(url) and its join to the
@@ -34,6 +38,12 @@ from ..sources.mesh import gazetteer, tree_multimap
 # Pages longer than this many characters are "heavy": with
 # ``salt_partitions`` set they are spread by url hash before scoring.
 HEAVY_DOC_CHARS = 20_000
+# Heavy text one extra Python task must carry to pay for itself.  Each
+# Python task pays a fixed init of about 0.37 s (4-core host); one core
+# runs the stub kernel over heavy pages at 0.09 MB/s (entity-dense) to
+# 1.6 MB/s (filler-padded), so 1 MB is 0.6-11 s of work, at least
+# 1.7x the init it adds.
+CHARS_PER_TASK = 1_000_000
 
 
 def extracted_docs(pages: DataFrame, lang: str | None = None) -> DataFrame:
@@ -68,6 +78,17 @@ def _mesh_artifacts(mesh_tree, mesh_type_col):
     return gaz, gd, max_words
 
 
+def heavy_partitions(docs: DataFrame, salt_partitions: int) -> int:
+    """Partition count of the heavy-page exchange over ``docs(url,
+    text)``: ``min(salt_partitions, heavy_chars // CHARS_PER_TASK)``,
+    where heavy_chars sums the text length of the docs longer than
+    HEAVY_DOC_CHARS.  One eager JVM-only job that returns one row; 0
+    means the heavy pages cannot pay for one extra task."""
+    n = F.length("text")
+    heavy_chars = docs.where(n > HEAVY_DOC_CHARS).agg(F.sum(n)).collect()[0][0]
+    return min(salt_partitions, (heavy_chars or 0) // CHARS_PER_TASK)
+
+
 def score_candidates(
     pages: DataFrame,
     mesh_tree: DataFrame,
@@ -88,6 +109,13 @@ def score_candidates(
     ``fused_score_docs``, so the document text crosses the Arrow
     boundary once.
 
+    ``salt_partitions``: upper bound on the url-hash partitions the
+    pages longer than HEAVY_DOC_CHARS are spread over.  The exchange is
+    built only when the heavy text pays for its tasks (one per
+    CHARS_PER_TASK characters, see ``heavy_partitions``), which costs
+    one eager JVM-only job per call; None builds no exchange and runs
+    no job.
+
     ``scorer_backend``: "stub" (the trigger-rule decision) or "electra"
     (the same decision, the exact-architecture document-level encoder
     modulating the probability tail).
@@ -103,6 +131,7 @@ def score_candidates(
     _gaz, gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
 
     payload = extracted_docs(pages)
+    k = heavy_partitions(payload, salt_partitions) if salt_partitions else 0
     if gold is not None:
         gold_arr = gold.groupBy("url").agg(
             F.collect_list(F.struct("chem_mesh", "dis_mesh")).alias("gold_pairs")
@@ -113,20 +142,23 @@ def score_candidates(
             "gold_pairs",
             F.lit(None).cast("array<struct<chem_mesh:string,dis_mesh:string>>"),
         )
-    if salt_partitions:
+    if k:
         # SKEW-AWARE salting: shuffling every page would move the whole
         # corpus (at 100 TB, the whole 100 TB) through the exchange just
         # to protect against a skewed tail.  Instead only documents above
         # HEAVY_DOC_CHARS are redistributed by url-hash (a ~1% shuffle);
         # the light majority flows through narrow.  union of the two
-        # branches is itself narrow.  The branches are filter-complements
-        # of the same payload, so both scan the pages and run the
-        # JVM-side text extraction: persisting the payload would save
-        # that only by caching the whole extracted corpus, a cache that
-        # outlives the call and that nobody owns.
+        # branches is itself narrow.  Each of the k partitions is one
+        # more Python task with its fixed init, so k grows with the heavy
+        # text (heavy_partitions) and a few heavy pages that cannot pay
+        # for one task flow narrow with the rest.  The branches are
+        # filter-complements of the same payload, so both scan the pages
+        # and run the JVM-side text extraction: persisting the payload
+        # would save that only by caching the whole extracted corpus, a
+        # cache that outlives the call and that nobody owns.
         heavy = F.length("text") > HEAVY_DOC_CHARS
         payload = payload.where(~heavy).unionByName(
-            payload.where(heavy).repartition(salt_partitions, F.xxhash64("url"))
+            payload.where(heavy).repartition(k, F.xxhash64("url"))
         )
     tm = (
         {r["mesh_id"]: list(r["tree_numbers"]) for r in tree_multimap(mesh_tree).collect()}

@@ -24,7 +24,10 @@ Spark-free kernel ``score_document`` (inventory: ``entity_inventory_py``); with
 ``salt_partitions`` the pipeline first repartitions only the documents
 longer than plans.pipeline.HEAVY_DOC_CHARS on xxhash64(url), so a
 cluster of pathologically long documents spreads across executors
-(BASELINE north_star).
+(BASELINE north_star).  That exchange is built only when the heavy text
+pays for its extra Python tasks (one per plans.pipeline.CHARS_PER_TASK
+characters, at most ``salt_partitions``); one eager JVM-only probe sums
+the heavy text first.
 """
 
 from __future__ import annotations

@@ -5,11 +5,13 @@ with the skew-aware salting OFF vs ON.
 
 Salting design under test (plans/pipeline.py score_candidates): only
 documents above HEAVY_DOC_CHARS are repartitioned by url-hash (a ~1%
-shuffle); the light majority never crosses an exchange. OFF = every
+shuffle), into k = min(salt_partitions, heavy_chars // CHARS_PER_TASK)
+partitions; the light majority never crosses an exchange. OFF = every
 partition keeps its input layout, so the heavy cluster becomes a
 straggler tail.
 
-Writes BENCH/SKEW.md and prints one JSON line.
+Runs at local[nproc] with salt_partitions = 2 x nproc (the bound
+perfbench passes). Writes BENCH/SKEW.md and prints one JSON line.
 
 Usage: python scripts/skew_bench.py [n_light] [n_heavy]
 """
@@ -17,6 +19,7 @@ Usage: python scripts/skew_bench.py [n_light] [n_heavy]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -28,6 +31,10 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from relation_extraction_cdr_spark import datagen  # noqa: E402
 from relation_extraction_cdr_spark.plans.pipeline import (  # noqa: E402
+    CHARS_PER_TASK,
+    HEAVY_DOC_CHARS,
+    extracted_docs,
+    heavy_partitions,
     materialize_triples,
     score_candidates,
 )
@@ -35,49 +42,58 @@ from relation_extraction_cdr_spark.session import spark_session  # noqa: E402
 
 
 def main() -> None:
-    n_light = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    n_heavy = int(sys.argv[2]) if len(sys.argv) > 2 else 200
-    parts = 64
+    n_light = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
+    n_heavy = int(sys.argv[2]) if len(sys.argv) > 2 else 24
+    parts = len(os.sched_getaffinity(0))
+    salt = 2 * parts
 
-    spark = spark_session("skew-bench", master="local[32]", shuffle_partitions=64)
+    spark = spark_session(
+        "skew-bench", master=f"local[{parts}]", shuffle_partitions=parts
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     light = datagen.gen_pages_df(spark, n_light, seed=42, doc_scale=8)
     heavy = datagen.gen_pages_df(spark, n_heavy, seed=43, doc_scale=800)
-    # crawl-segment layout: order by length so the heavy pages land
-    # together in the tail partitions of the input
+    # crawl-segment layout: range-partitioned by length, so the heavy
+    # pages land together in the last input partition
     corpus = (
         light.unionByName(heavy)
         .withColumn("_len", F.length("text"))
-        .orderBy("_len")
+        .repartitionByRange(parts, "_len")
         .drop("_len")
-        .coalesce(parts)
         .cache()
     )
     n = corpus.count()
     mesh = datagen.mesh_df(spark)
+    n_len = F.length("text")
+    heavy_chars = (
+        extracted_docs(corpus).where(n_len > HEAVY_DOC_CHARS).agg(F.sum(n_len)).first()[0]
+    )
+    k = heavy_partitions(extracted_docs(corpus), salt)
 
     # stub scorer: the skew lives in the per-document kernels (mentions,
     # evidence, featurize), which scale with page length; the encoder
     # input is capped at 512 tokens, so it would add no heavy-page skew
-    def run(salt: int | None) -> float:
+    def run(salt_partitions: int | None) -> float:
         t0 = time.perf_counter()
         materialize_triples(
             score_candidates(
-                corpus, mesh, salt_partitions=salt, scorer_backend="stub"
+                corpus, mesh, salt_partitions=salt_partitions, scorer_backend="stub"
             )
         ).count()
         return round(time.perf_counter() - t0, 3)
 
-    run(parts)  # warm-up (worker pool, broadcasts, codegen)
+    run(salt)  # warm-up (worker pool, broadcasts, codegen)
     unsalted = min(run(None), run(None))
-    salted = min(run(parts), run(parts))
+    salted = min(run(salt), run(salt))
     result = {
         "metric": "skew_salting_speedup",
         "value": round(unsalted / salted, 3),
         "unit": "ratio",
         "pages": n,
         "heavy_pages": n_heavy,
+        "heavy_chars": heavy_chars,
+        "heavy_partitions": k,
         "wall_unsalted_sec": unsalted,
         "wall_salted_sec": salted,
     }
@@ -86,27 +102,34 @@ def main() -> None:
     (REPO / "BENCH" / "SKEW.md").write_text(
         f"""# BENCH/SKEW.md — skew-aware salting evidence
 
+Written by `python scripts/skew_bench.py {n_light} {n_heavy}`.
+
 Corpus: {n_light} light pages (doc_scale=8) + {n_heavy} heavy pages
-(doc_scale=800, ~100x longer), globally length-ordered and coalesced to
-{parts} partitions so the heavy pages cluster in the tail partitions —
-the layout a real crawl segment produces. About half the total compute
-lives in the {n_heavy} heavy pages. local[32], stub scorer, best of 2
+(doc_scale=800, ~100x longer, {heavy_chars / 1e6:.2f} MB of heavy
+text), range-partitioned by length into {parts} partitions so the heavy
+pages cluster in the last one — the layout a real crawl segment
+produces. local[{parts}] on a {parts}-core host, stub scorer, best of 2
 runs each, warm-up excluded.
+
+Salting ON passes `salt_partitions={salt}` (the upper bound); the
+pipeline sized the heavy exchange from the heavy text:
+k = min({salt}, {heavy_chars} // {CHARS_PER_TASK}) = **{k}** partitions.
 
 | variant | wall (s) |
 |---|---|
 | salting OFF (input layout kept) | {unsalted} |
-| salting ON (heavy-only url-hash repartition) | {salted} |
+| salting ON (heavy-only url-hash repartition, k = {k}) | {salted} |
 
 speedup from salting: **{unsalted / salted:.2f}x**
 
 The salting path shuffles ONLY documents longer than HEAVY_DOC_CHARS
-(~{n_heavy}/{n} of rows here, ~1%): the light majority stays narrow, so
-the exchange moves a tiny fraction of the corpus while the straggler
-tail is spread across all executors. At 100 TB the same threshold rule
-moves ~1 TB instead of re-shuffling the full corpus.
+({n_heavy}/{n} of rows here): the light majority stays narrow, so the
+exchange moves a small fraction of the corpus while the straggler tail
+is spread across the cores. When the heavy text cannot pay for one
+extra Python task (k = 0) no exchange is built at all.
 """
     )
+    spark.stop()
 
 
 if __name__ == "__main__":

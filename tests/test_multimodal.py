@@ -989,6 +989,55 @@ class TestCodecs:
             assert np.array_equal(with_trns, plain)
             assert plain.reshape(2, -1).tolist() == rows
 
+    def test_png_inflate_bomb_is_bounded(self):
+        """A ~250 KB PNG whose IHDR declares 1x1 but whose IDAT inflates
+        to 256 MB raises the length-mismatch ValueError after inflating
+        only the bytes IHDR implies (plain and Adam7); a header that
+        declares more than PNG_MAX_PIXELS raises before any inflate."""
+        import struct
+        import tracemalloc
+        import zlib
+
+        import pytest
+
+        from relation_extraction_cdr_spark.functions.codecs import (
+            PNG_MAX_PIXELS,
+            png_decode,
+        )
+
+        def chunk(tag, body):
+            return (
+                struct.pack(">I", len(body)) + tag + body
+                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
+            )
+
+        deflate = zlib.compressobj(9)
+        zeros = bytes(1 << 20)
+        bomb = b"".join(deflate.compress(zeros) for _ in range(256)) + deflate.flush()
+        assert len(bomb) < 300_000
+
+        def png(w, h, interlace, idat):
+            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, interlace)
+            return (
+                b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+                + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
+            )
+
+        for interlace in (0, 1):
+            blob = png(1, 1, interlace, bomb)
+            tracemalloc.start()
+            try:
+                with pytest.raises(ValueError, match="length mismatch"):
+                    png_decode(blob)
+                peak = tracemalloc.get_traced_memory()[1]
+            finally:
+                tracemalloc.stop()
+            assert peak < 8 << 20, (interlace, peak)
+        side = 1 << 13  # 8192 x 8192 = 2 * PNG_MAX_PIXELS
+        assert side * side > PNG_MAX_PIXELS
+        with pytest.raises(ValueError, match="exceeds"):
+            png_decode(png(side, side, 0, bomb))
+
     def test_avi_audio_stream_strf_ignored(self):
         """An AVI that carries an audio stream alongside the video one
         still decodes: the audio strl's strf is a WAVEFORMATEX, not a

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -92,6 +93,41 @@ def test_salted_repartition_runs(spark, fixtures, mesh, monkeypatch):
         )
         expect = sorted(plain.collect())
         assert expect and sorted(salted.collect()) == expect, backend
+
+
+def _heavy_exchange_partitions(df) -> list[int]:
+    """Partition counts of the url-hash exchanges in the final adaptive
+    plan the last action on ``df`` executed."""
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    pattern = r"hashpartitioning\(xxhash64\(url#\d+, 42\), (\d+)\)"
+    return [int(k) for k in re.findall(pattern, plan)]
+
+
+def test_heavy_exchange_sized_by_heavy_text(spark, fixtures, mesh, monkeypatch):
+    """The heavy-page exchange gets min(salt_partitions, heavy_chars //
+    CHARS_PER_TASK) partitions and none at all when that is 0; every
+    size returns exactly the unsalted rows on both scorer backends."""
+    pages, _, gold = fixtures
+    monkeypatch.setattr(pipeline, "HEAVY_DOC_CHARS", 175)
+    n = F.length("text")
+    heavy_chars = extracted_docs(pages).where(n > 175).agg(F.sum(n)).first()[0]
+    default = pipeline.CHARS_PER_TASK
+    assert 0 < heavy_chars < default
+    for backend in ("stub", "electra"):
+        plain = score_candidates(pages, mesh, gold=gold, scorer_backend=backend)
+        expect = sorted(plain.collect())
+        assert expect
+        for chars_per_task, k in (
+            (default, 0),  # too little heavy text to pay for one task
+            (heavy_chars // 2, 2),
+            (1, 4),  # capped at salt_partitions
+        ):
+            monkeypatch.setattr(pipeline, "CHARS_PER_TASK", chars_per_task)
+            salted = score_candidates(
+                pages, mesh, gold=gold, scorer_backend=backend, salt_partitions=4
+            )
+            assert sorted(salted.collect()) == expect, (backend, k)
+            assert _heavy_exchange_partitions(salted) == ([k] if k else []), (backend, k)
 
 
 def test_empty_gazetteer_fails_fast_and_is_not_cached(spark, fixtures, mesh):

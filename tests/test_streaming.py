@@ -214,6 +214,49 @@ def test_stream_pages_with_dedup(spark, mesh, tmp_path):
     assert n_scored_pages == len(urls)
 
 
+def test_stream_pages_heavy_exchange_matches_unsalted(spark, mesh, tmp_path, monkeypatch):
+    """Inside foreachBatch the heavy-text probe re-executes the
+    micro-batch, stateful dedup included: with a threshold and a task
+    size that give the heavy exchange k > 0 partitions, the salted
+    stream scores exactly the rows of the unsalted one."""
+    from relation_extraction_cdr_spark.plans import pipeline
+
+    pages, _, _ = datagen.gen_fixture_dfs(spark, 12)
+    recrawl = pages.withColumn(
+        "url", F.concat(F.col("url"), F.lit("?mirror=1"))
+    ).withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 HOUR"))
+    in_dir = str(tmp_path / "in")
+    pages.unionByName(recrawl).write.mode("overwrite").parquet(in_dir)
+    monkeypatch.setattr(pipeline, "HEAVY_DOC_CHARS", 175)
+    monkeypatch.setattr(pipeline, "CHARS_PER_TASK", 1)
+    n_heavy = pipeline.extracted_docs(pages).where(F.length("text") > 175).count()
+    assert 0 < n_heavy < pages.count()
+    sizes = []
+    probe = pipeline.heavy_partitions
+
+    def spy(docs, salt_partitions):
+        sizes.append(probe(docs, salt_partitions))
+        return sizes[-1]
+
+    monkeypatch.setattr(pipeline, "heavy_partitions", spy)
+
+    def scored(name, **kw):
+        out = str(tmp_path / name)
+        stream_pages(
+            spark, in_dir, mesh, out, str(tmp_path / f"cp_{name}"),
+            schema=datagen.PAGES_SCHEMA, trigger_once=True,
+            dedup_watermark="24 hours", **kw,
+        ).awaitTermination(120)
+        return sorted(spark.read.parquet(out).drop("batch_id").collect())
+
+    plain = scored("plain")
+    assert plain and not sizes
+    assert scored("salted", salt_partitions=4) == plain
+    # the first micro-batch carries every page; the no-data batch that
+    # advances the dedup watermark probes an empty frame
+    assert sizes[0] == 4 and not any(sizes[1:])
+
+
 def test_stream_dedup_html_only_pages_not_collapsed(spark):
     """Pages whose content lives only in html (text NULL) must NOT all
     collapse onto one NULL fingerprint: the dedup key is the EXTRACTED
