@@ -15,6 +15,14 @@ Layout
 - ``scoring``    deterministic batch scorer (pandas-UDF shaped)
 - ``plans``      end-to-end triple-factory pipeline + metrics
 - ``streaming``  incremental / resumable execution (checkpoint lineage)
+- ``_zipstamp``  installed on import: Python workers skip re-reading
+                 unchanged zip archives on every task (Python < 3.13)
 """
 
 __version__ = "0.1.0"
+
+# every Python worker that unpickles an engine UDF imports this package,
+# so every worker stops re-reading unchanged zip archives per task
+from . import _zipstamp
+
+_zipstamp.install()

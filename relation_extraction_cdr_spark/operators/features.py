@@ -83,8 +83,9 @@ def _encoded_marker_mask(
             i += 1
     if not use_entity_token:
         ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
-    classes, enc = np.unique(np.array(mask, dtype=object), return_inverse=True)
-    return ids, [int(x) for x in enc], {c: j for j, c in enumerate(classes)}
+    # LabelEncoder order: sorted values, as np.unique over the objects
+    lookup = {c: j for j, c in enumerate(sorted(set(mask)))}
+    return ids, [lookup[c] for c in mask], lookup
 
 
 def featurize_py(
@@ -126,8 +127,8 @@ def featurize_py(
     return dict(
         token_ids=ids,
         entity_mask=enc,
-        chem_code=int(lookup[chem_mesh]),
-        dis_code=int(lookup[dis_mesh]),
+        chem_code=lookup[chem_mesh],
+        dis_code=lookup[dis_mesh],
     )
 
 
@@ -213,8 +214,8 @@ def fulltext_featurize_py(
     return dict(
         token_ids=[int(x) for x in ids],
         entity_mask=enc,
-        chem_codes=[int(lookup[c]) for c in chem_meshes],
-        dis_codes=[int(lookup[d]) for d in dis_meshes],
+        chem_codes=[lookup[c] for c in chem_meshes],
+        dis_codes=[lookup[d] for d in dis_meshes],
         labels=labels,
         chem_meshes=chem_meshes,
         dis_meshes=dis_meshes,

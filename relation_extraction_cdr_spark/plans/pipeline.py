@@ -39,10 +39,12 @@ from ..sources.mesh import gazetteer, tree_multimap
 # ``salt_partitions`` set they are spread by url hash before scoring.
 HEAVY_DOC_CHARS = 20_000
 # Heavy text one extra Python task must carry to pay for itself.  Each
-# Python task pays a fixed init of about 0.37 s (4-core host); one core
+# Python task pays a fixed init: a trivial 4-task mapInPandas job on
+# reused workers takes about 0.22 s (4-core host; 0.46 s while every
+# task re-read the worker's zip archives, see _zipstamp).  One core
 # runs the stub kernel over heavy pages at 0.09 MB/s (entity-dense) to
 # 1.6 MB/s (filler-padded), so 1 MB is 0.6-11 s of work, at least
-# 1.7x the init it adds.
+# 2.7x the init it adds.
 CHARS_PER_TASK = 1_000_000
 
 
@@ -113,8 +115,8 @@ def score_candidates(
     pages longer than HEAVY_DOC_CHARS are spread over.  The exchange is
     built only when the heavy text pays for its tasks (one per
     CHARS_PER_TASK characters, see ``heavy_partitions``), which costs
-    one eager JVM-only job per call; None builds no exchange and runs
-    no job.
+    one eager JVM-only job per call; None or 0 builds no exchange and
+    runs no job, and a negative value raises before any job.
 
     ``scorer_backend``: "stub" (the trigger-rule decision) or "electra"
     (the same decision, the exact-architecture document-level encoder
@@ -124,6 +126,10 @@ def score_candidates(
     if scorer_backend not in allowed:
         raise ValueError(
             f"scorer_backend={scorer_backend!r}: expected one of {allowed}"
+        )
+    if salt_partitions is not None and salt_partitions < 0:
+        raise ValueError(
+            f"salt_partitions={salt_partitions!r}: expected None or >= 0"
         )
     # empty-gazetteer fail-fast lives inside _mesh_artifacts: a silently
     # successful no-op run (zero mentions -> zero triples) is an

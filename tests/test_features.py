@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import random
+
+import numpy as np
+
 from relation_extraction_cdr_spark.functions.wordpiece import (
     E_END_ID,
     E_START_ID,
@@ -11,6 +15,7 @@ from relation_extraction_cdr_spark.functions.wordpiece import (
     tokenize,
 )
 from relation_extraction_cdr_spark.operators.features import (
+    _encoded_marker_mask,
     featurize_py,
     fulltext_featurize_py,
 )
@@ -141,3 +146,24 @@ def test_literal_marker_in_text_drops_row():
     assert featurize_py(clean, 0, "D910001", "D010001", 0, 7, 16, 22) is not None
     assert fulltext_featurize_py(clean, ents, []) is not None
     assert ner_featurize_py(clean, ner_ms)["labels"] == [0, 1]
+
+
+def test_label_encoding_matches_np_unique():
+    """The mask's codes are the LabelEncoder's: np.unique over the mask
+    values as Python objects, on codes that sort around "O" both ways."""
+    rng = random.Random(7)
+    pool = ["D012345", "C-1", "o", "-1", "Z9", "O1", "D9"]
+    for _ in range(200):
+        ids, codes = [101], []
+        for _ in range(rng.randint(0, 4)):
+            ids += [7] * rng.randint(0, 3) + [E_START_ID, 9, E_END_ID]
+            codes.append(rng.choice(pool))
+        for use_entity_token in (True, False):
+            ids_out, enc, lookup = _encoded_marker_mask(
+                "", ids, codes or ["O"], use_entity_token
+            )
+            values = {j: c for c, j in lookup.items()}
+            mask = [values[j] for j in enc]
+            classes, ref = np.unique(np.array(mask, dtype=object), return_inverse=True)
+            assert enc == ref.tolist() and list(lookup) == classes.tolist()
+            assert len(enc) == len(ids_out)

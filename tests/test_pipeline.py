@@ -42,6 +42,40 @@ def test_unknown_scorer_backend_rejected(spark, fixtures, mesh, backend):
         score_candidates(pages, mesh, scorer_backend=backend)
 
 
+@pytest.mark.parametrize("salt", [-1, -8])
+def test_negative_salt_partitions_rejected_before_any_job(
+    spark, fixtures, mesh, salt
+):
+    """A negative salt_partitions raises ValueError up front instead of
+    running the heavy-text probe and then failing in repartition."""
+    pages, _, _ = fixtures
+    sc = spark.sparkContext
+    group = f"negative-salt{salt}"
+    sc.setJobGroup(group, "must stay empty")
+    try:
+        with pytest.raises(ValueError, match="salt_partitions"):
+            score_candidates(pages, mesh, salt_partitions=salt)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_zero_salt_partitions_builds_no_exchange(spark, fixtures, mesh, monkeypatch):
+    """0, like None, means no heavy-page exchange and no probe job."""
+    pages, _, gold = fixtures
+    monkeypatch.setattr(pipeline, "HEAVY_DOC_CHARS", 175)
+    monkeypatch.setattr(pipeline, "CHARS_PER_TASK", 1)
+    monkeypatch.setattr(
+        pipeline, "heavy_partitions", lambda *a: pytest.fail("probe ran")
+    )
+    plain = sorted(score_candidates(pages, mesh, gold=gold).collect())
+    zero = score_candidates(pages, mesh, gold=gold, salt_partitions=0)
+    assert sorted(zero.collect()) == plain
+    assert _heavy_exchange_partitions(zero) == []
+
+
 def test_url_level_pr(spark, fixtures, mesh):
     pages, _, gold = fixtures
     scored = score_candidates(pages, mesh, gold=gold).cache()
