@@ -8,38 +8,24 @@ Reference semantics reproduced (SURVEY.md §2.8, citations into
   sentence in the document: utils/text_utils.py:86 — a duplicated
   sentence is located at its first occurrence, so downstream span checks
   use those offsets.  Our ``split_sentences`` reproduces this exactly.
-- NFKC normalization: convert_alps_to_cdr.py:10,32
 - sentence tokenizer: the reference uses NLTK Punkt
   (utils/text_utils.py:73).  NLTK is not a dependency of this engine; we
   define a deterministic rule-based splitter (``SENT_BOUNDARY``) that is
-  the engine's contract and implement it twice — once as a plain-Python
-  reference (used by tests as the byte-identity oracle) and once as the
-  distributed pandas-UDF / JVM path.  Both must agree byte-for-byte.
+  the engine's contract, plus the vendored Punkt algorithm as the
+  fidelity alternative.  Both run inside the per-document kernel
+  (scoring.scorer.score_document), once per document.
 
 Design note (scale): ``extract_text``/``lower`` are pure JVM column
 expressions — they stay inside whole-stage codegen and never cross the
-Python boundary.  Sentence splitting returns an
-``array<struct<idx:int,start:int,end:int,text:string>>`` column computed
-by a vectorized pandas UDF (Arrow batches), so a 100 TB pages table maps
-to a single narrow (no-shuffle) stage.
+Python boundary.
 """
 
 from __future__ import annotations
 
 import re
-import unicodedata
-from typing import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 # ---------------------------------------------------------------------------
 # deterministic sentence-boundary rule (the engine contract)
@@ -100,42 +86,6 @@ def split_sentences_punkt_py(text: str, splitter=None) -> list[dict]:
         start = text.find(sent)  # first-occurrence semantics (quirk F4)
         out.append({"idx": i, "start": start, "end": start + len(sent), "text": sent})
     return out
-
-
-SENTENCES_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("idx", IntegerType()),
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("text", StringType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(SENTENCES_SCHEMA)
-def split_sentences_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Arrow-batched distributed splitter; must equal split_sentences_py."""
-    for batch in texts:
-        yield batch.map(
-            lambda t: [
-                (s["idx"], s["start"], s["end"], s["text"])
-                for s in split_sentences_py(t)
-            ]
-            if t is not None
-            else None
-        )
-
-
-@F.pandas_udf(StringType())
-def nfkc_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """NFKC normalization (convert_alps_to_cdr.py:10,32). In-UDF because
-    F.translate cannot express full unicode normalization."""
-    for batch in texts:
-        yield batch.map(
-            lambda t: unicodedata.normalize("NFKC", t) if t is not None else None
-        )
 
 
 def extract_text(html_col: Column, text_col: Column) -> Column:

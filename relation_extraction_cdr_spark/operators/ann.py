@@ -9,7 +9,7 @@ Design for 100 TB:
 - the scale path is sign-random-projection LSH: each vector hashes to a
   short bit-bucket via fixed pseudo-random hyperplanes (deterministic,
   seed-derived); only same-bucket pairs are compared — candidate cost
-  O(bucket), not O(n^2).  Recall is tunable via n_planes/multi-probe.
+  O(bucket), not O(n^2).  Recall is tunable via n_planes.
 
 Float determinism: cosine accumulations fold left-to-right in index
 order via F.aggregate (deterministic), cast to double before summation,
@@ -161,73 +161,6 @@ def srp_bucket_sql(qcol: str, n_planes: int = 8, dim: int = 64, seed: int = 42) 
         terms = " + ".join(f"{qcol}[{d + 1}] * ({weights[p][d]})" for d in range(dim))
         bits.append(f"(CASE WHEN ({terms}) >= 0 THEN {1 << p} ELSE 0 END)")
     return "(" + " + ".join(bits) + ")"
-
-
-def ann_lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    dim: int = 64,
-    multiprobe: int = 1,
-) -> DataFrame:
-    """Approximate top-k: compare only vectors in the query's SRP bucket
-    plus (multi-probe) every bucket within Hamming distance ``multiprobe``
-    of it — the standard recall knob for sign-LSH.
-
-    At corpus scale the bucket equi-join replaces the cross join; recall
-    vs the exact baseline is measured in tests.
-    """
-    cb = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cvec"),
-        srp_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
-    )
-    qb0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        srp_bucket(F.col(vec_col), n_planes, dim).alias("bucket0"),
-    )
-    # probe set: the home bucket plus all single-bit flips (and, for
-    # multiprobe=2, double flips) — exploded on the small query side only
-    probes = [F.col("bucket0")]
-    if multiprobe >= 1:
-        probes += [
-            F.col("bucket0").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)
-        ]
-    if multiprobe >= 2:
-        probes += [
-            F.col("bucket0").bitwiseXOR(F.lit((1 << p) | (1 << r)))
-            for p in range(n_planes)
-            for r in range(p + 1, n_planes)
-        ]
-    qb = F.broadcast(
-        qb0.select(
-            "query_id", "qvec", F.explode(F.array(*probes)).alias("bucket")
-        )
-    )
-    sim = (
-        cb.join(qb, "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (_norm(F.col("qvec")) * _norm(F.col("cvec"))),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos_sim", "rank")
-    )
 
 
 def cosine_neardup_pairs(

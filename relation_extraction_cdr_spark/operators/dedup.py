@@ -277,16 +277,6 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     return agg.select(F.col(id_col), sig.cast("int").alias("simhash"))
 
 
-def simhash_buckets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Near-dup groups: docs sharing an identical simhash signature."""
-    s = simhash(docs, id_col, text_col)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count("*").alias("bucket_size"), F.min(id_col).alias("rep_id"))
-        .where(F.col("bucket_size") > 1)
-    )
-
-
 def connected_components(
     edges: DataFrame, a_col: str = "a", b_col: str = "b", max_iter: int = 25
 ) -> DataFrame:

@@ -20,28 +20,21 @@ Decision procedure reproduced exactly (including quirks):
      (text_utils.py:102-105).
 2. Any intra candidate → return the min-token-distance one (ties: first
    encountered, Python list.index(min) semantics; text_utils.py:149-150).
-3. Else, in inter mode: same-sentence fallback if any (min distance,
-   text_utils.py:110-112); else nearest chem-sentence/dis-sentence pair
-   with |i-j| <= 3 becomes a sentence-window evidence
-   (text_utils.py:114-143, including the find()-failure swap at :136-141);
-   else the pair is dropped.
-4. In global mode (extract_inter=False) a pair with no intra evidence gets
-   the whole document (text_utils.py:146-147).
+3. Else (the reference's inter-sentence mode): same-sentence fallback if
+   any (min distance, text_utils.py:110-112); else nearest
+   chem-sentence/dis-sentence pair with |i-j| <= 3 becomes a
+   sentence-window evidence (text_utils.py:114-143, including the
+   find()-failure swap at :136-141); else the pair is dropped.  The
+   reference's whole-document mode is the document-level featurizer
+   (features.fulltext_featurize_py).
 
-Execution shape: ``mapInPandas`` — each input row is self-contained
-(text + both mention position lists), so this is a NARROW stage: no
-shuffle, Arrow batches in/out, sentence splits memoized per document
-within a batch.  At 100 TB this stage scales embarrassingly; the upstream
-join that attached ``text`` to pairs is the only exchange.
+Execution shape: Spark-free.  ``scoring.scorer.score_document`` builds
+one ``DocIndex`` per document and calls ``select_evidence_py`` once per
+candidate pair, inside the fused per-document stage — the document text
+crosses the Arrow boundary once, not once per pair.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
 
 from ..functions.text import split_sentences_punkt_py, split_sentences_py
 
@@ -49,12 +42,6 @@ from ..functions.text import split_sentences_punkt_py, split_sentences_py
 # contract (oracle parity); 'punkt' is the vendored Kiss & Strunk
 # algorithm for nltk.sent_tokenize fidelity (text_utils.py:73)
 SPLITTERS = {"regex": split_sentences_py, "punkt": split_sentences_punkt_py}
-
-EVIDENCE_SCHEMA = (
-    "url string, chem_mesh string, dis_mesh string, label int, "
-    "evidence_type string, sentence string, sent_pos int, "
-    "chem_start int, chem_end int, dis_start int, dis_end int"
-)
 
 
 def _token_distance(chem_code: str, chem_start: int, dis_code: str,
@@ -91,12 +78,11 @@ def select_evidence_py(
     chem_text: str,
     dis_text: str,
     label: int,
-    extract_inter: bool = True,
     sents: list[dict] | None = None,
     pos_index: dict[int, list[int]] | None = None,
     splitter: str = "regex",
 ) -> dict | None:
-    """Single-pair reference implementation (also the pytest oracle).
+    """One pair's evidence (``score_document`` calls it per pair).
 
     ``pos_index`` (optional): a per-document position->sentence-idx index
     shared across all pairs of the document — turns the per-pair cost
@@ -145,20 +131,6 @@ def select_evidence_py(
     if intra:
         best = intra[intra_d.index(min(intra_d))]
         return dict(label=label, evidence_type="intra", **best)
-    if not extract_inter:
-        # document-level fallback (text_utils.py:146-147: the pair is
-        # STILL scored over the whole document).  The reference's global
-        # path marks every mention of every entity (make_example,
-        # cdr_dataset.py:102-127); this engine's per-pair featurizer
-        # marks one span per entity, so the FIRST mention of each is
-        # emitted as the document-absolute span — documented divergence,
-        # chosen over silently losing the pair
-        cs, ce = min(chem_positions)
-        ds, de = min(dis_positions)
-        return dict(
-            label=label, evidence_type="global", sentence=text, sent_pos=None,
-            chem_start=cs, chem_end=ce, dis_start=ds, dis_end=de,
-        )
     if far:
         best = far[far_d.index(min(far_d))]
         return dict(label=label, evidence_type="inter_fartoken", **best)
@@ -198,10 +170,10 @@ def select_evidence_py(
 
 
 class DocIndex:
-    """Per-document shared state for evidence selection inside a UDF
-    batch: the sentence list plus a lazily-grown position->sentences
-    index (each distinct mention position is located once per document,
-    not once per pair)."""
+    """Per-document shared state for evidence selection: the sentence
+    list plus a lazily-grown position->sentences index (each distinct
+    mention position is located once per document, not once per
+    pair)."""
 
     __slots__ = ("sents", "idx")
 
@@ -214,54 +186,3 @@ class DocIndex:
         if missing:
             self.idx.update(build_pos_index(self.sents, missing))
         return self.idx
-
-
-class DocIndexCache:
-    """Bounded per-batch url -> DocIndex cache."""
-
-    def __init__(self, cap: int = 256):
-        self.cap = cap
-        self.data: dict[str, DocIndex] = {}
-
-    def get(self, url: str, text: str, splitter: str = "regex") -> DocIndex:
-        d = self.data.get(url)
-        if d is None:
-            if len(self.data) > self.cap:
-                self.data.clear()
-            d = DocIndex(text, splitter)
-            self.data[url] = d
-        return d
-
-
-def select_evidence(
-    pairs_with_text: DataFrame, extract_inter: bool = True, splitter: str = "regex"
-) -> DataFrame:
-    """Distributed evidence selection.
-
-    Input columns: url, text, chem_mesh, dis_mesh, chem_positions,
-    dis_positions, chem_text, dis_text, label.
-    Output: EVIDENCE_SCHEMA rows (pairs with no evidence are dropped,
-    matching the reference's None return).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache = DocIndexCache()
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                d = cache.get(r.url, r.text, splitter)
-                cpos = [(int(p["start"]), int(p["end"])) for p in r.chem_positions]
-                dpos = [(int(p["start"]), int(p["end"])) for p in r.dis_positions]
-                row = select_evidence_py(
-                    r.text, r.chem_mesh, r.dis_mesh, cpos, dpos,
-                    r.chem_text, r.dis_text, int(r.label),
-                    extract_inter=extract_inter, sents=d.sents,
-                    pos_index=d.index_for([p for p, _ in cpos] + [p for p, _ in dpos]),
-                )
-                if row is not None:
-                    out.append({"url": r.url, "chem_mesh": r.chem_mesh,
-                                "dis_mesh": r.dis_mesh, **row})
-            cols = [c.split(" ")[0] for c in EVIDENCE_SCHEMA.split(", ")]
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
-
-    return pairs_with_text.mapInPandas(run, schema=EVIDENCE_SCHEMA)

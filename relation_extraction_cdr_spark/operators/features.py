@@ -15,18 +15,19 @@ Reference semantics (cdr_dataset.py:294-376, make_example_non_global):
   are stripped from the token list (P8, cdr_dataset.py:357-358).
 - label encoding: sklearn LabelEncoder == dense codes over the
   LEXICOGRAPHICALLY SORTED distinct mask values (cdr_dataset.py:363-367);
-  reproduced with numpy unique (which sorts) — per-row, no shuffle.
+  reproduced with a dict over the sorted set — per-row, no shuffle.
 
-Execution: one ``mapInPandas`` over evidence rows — narrow stage, Arrow
-batches; all heavy string surgery is per-row Python on short evidence
-sentences (bounded by 512 tokens), vectorized at the batch level.
+Execution: ``featurize_py`` is Spark-free; ``scoring.scorer.score_document``
+calls it once per pair with evidence inside the fused per-document stage
+(``fused_score_docs``, ``document_features``), on short evidence sentences
+(bounded by 512 tokens).  ``fulltext_features`` is the document-level
+featurizer's own narrow ``mapInPandas`` stage.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -83,7 +84,7 @@ def _encoded_marker_mask(
             i += 1
     if not use_entity_token:
         ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
-    # LabelEncoder order: sorted values, as np.unique over the objects
+    # LabelEncoder order: dense codes over the sorted distinct values
     lookup = {c: j for j, c in enumerate(sorted(set(mask)))}
     return ids, [lookup[c] for c in mask], lookup
 
@@ -233,13 +234,13 @@ def fulltext_features(
     entities array<struct<mesh_id, type, positions array<struct<start,
     end>>>>, gold_pairs array<struct<chem_mesh, dis_mesh>> | null).
     Output: FULLTEXT_SCHEMA, one row per surviving document.  Narrow
-    mapInPandas stage; same scale shape as ``featurize``.
+    mapInPandas stage.
 
     The per-row ``itertuples`` loop is measured, not assumed, to be
     off the critical path: on the real sf0.01 payload the featurize
     kernel is 93.6% of batch wall (15.6x the iteration+unpack cost;
     BENCH/ATTRIBUTION.md), and the heavier encoder-wrapping loops
-    (ner/scorer/evidence) dominate by more still."""
+    (ner/scorer) dominate by more still."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in FULLTEXT_SCHEMA.split(", ")]
@@ -338,36 +339,3 @@ def sp_segments(words: DataFrame, word_col: str = "word") -> DataFrame:
     return words.mapInPandas(
         run, schema="word string, n_pieces int, ids_csv string, cost_e6 long"
     )
-
-
-def featurize(evidence: DataFrame, use_entity_token: bool = True, max_len: int = 512) -> DataFrame:
-    """Distributed featurization over EVIDENCE_SCHEMA rows.
-
-    Global evidence rows (sent_pos null) use offset base 0 and the whole
-    document as the sentence.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in FEATURES_SCHEMA.split(", ")]
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.chem_start is None or (isinstance(r.chem_start, float) and np.isnan(r.chem_start)):
-                    continue  # global rows carry no span offsets
-                feat = featurize_py(
-                    r.sentence,
-                    int(r.sent_pos) if r.sent_pos is not None else 0,
-                    r.chem_mesh, r.dis_mesh,
-                    int(r.chem_start), int(r.chem_end),
-                    int(r.dis_start), int(r.dis_end),
-                    use_entity_token=use_entity_token, max_len=max_len,
-                )
-                if feat is not None:
-                    out.append(
-                        {"url": r.url, "chem_mesh": r.chem_mesh,
-                         "dis_mesh": r.dis_mesh, "label": int(r.label),
-                         "evidence_type": r.evidence_type, **feat}
-                    )
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
-
-    return evidence.mapInPandas(run, schema=FEATURES_SCHEMA)

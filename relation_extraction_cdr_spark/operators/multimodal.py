@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata; decode / feature-extract / resize / frame-sample as
+with typed metadata; decode / feature-extract / frame-sample as
 Arrow-batched pandas UDFs over mapInPandas.
 
 PNG + JPEG images, PCM/float WAV audio, and uncompressed-AVI video all
@@ -33,8 +33,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions import codecs as _codecs
 
@@ -91,24 +90,6 @@ FEATURES_SCHEMA = (
     "media_id long, kind string, feature array<float>, n_frames int, "
     "decode_err string"
 )
-
-
-def gen_media_df(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic synthetic media table (payload = seeded bytes)."""
-    return spark.range(n).select(
-        F.col("id").alias("media_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("kind"),
-        F.encode(F.concat(F.lit(f"blob{seed}:"), F.md5(F.col("id").cast("string"))), "UTF-8").alias("payload"),
-        F.struct(
-            (F.col("id") % 640 + 32).cast("int").alias("width"),
-            (F.col("id") % 480 + 32).cast("int").alias("height"),
-            (F.col("id") * 100).cast("int").alias("duration_ms"),
-            F.lit("fake").alias("codec"),
-        ).alias("meta"),
-    )
 
 
 def _decode(payload: bytes, kind: str) -> np.ndarray:
@@ -354,17 +335,3 @@ def extract_features(media: DataFrame, frame_stride: int = 2) -> DataFrame:
             yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
 
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-def resize_meta(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning as a pure column computation (aspect-preserving
-    target dims); the pixel work happens inside the decode UDF in a real
-    deployment."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(max_side) / w, F.lit(max_side) / h, F.lit(1.0))
-    return media.select(
-        "media_id",
-        "kind",
-        F.round(w * scale).cast("int").alias("target_w"),
-        F.round(h * scale).cast("int").alias("target_h"),
-    )

@@ -130,19 +130,6 @@ def _lane_sql(expr: str, i: int, m: int) -> str:
     return f"(({nib(1)} * 4096 + {nib(2)} * 256 + {nib(3)} * 16 + {nib(4)}) % {m})"
 
 
-def bloom_might_contain_sql(
-    expr: str, words: list[int], m: int = DEFAULT_M, k: int = DEFAULT_K
-) -> str:
-    """SQL rendering of ``bloom_might_contain`` with the words embedded
-    as a list literal — same bits, same lanes, any engine."""
-    wl = "[" + ", ".join(f"CAST({w} AS BIGINT)" for w in words) + "]"
-    conds = []
-    for i in range(k):
-        p = _lane_sql(expr, i, m)
-        conds.append(f"(({wl}[CAST({p} // 32 AS INT) + 1] >> ({p} % 32)) & 1) = 1")
-    return "(" + " AND ".join(conds) + ")"
-
-
 def with_bloom_pass(
     df,
     key_col: str,

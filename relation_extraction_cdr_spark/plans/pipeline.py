@@ -32,7 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.text import extract_text
-from ..scoring.scorer import fused_score_docs
+from ..scoring.scorer import document_features, fused_score_docs
 from ..sources.mesh import gazetteer, tree_multimap
 
 # Pages longer than this many characters are "heavy": with
@@ -78,6 +78,35 @@ def _mesh_artifacts(mesh_tree, mesh_type_col):
         )
     max_words = max(t.count(" ") + 1 for t in gd)
     return gaz, gd, max_words
+
+
+def with_gold_pairs(docs: DataFrame, gold: DataFrame | None) -> DataFrame:
+    """docs(url, text) + gold_pairs array<struct<chem_mesh, dis_mesh>>:
+    each url's gold relations (NULL for a url without any), or NULL
+    throughout when ``gold`` is None.  The document payload of
+    scoring.scorer.fused_score_docs and document_features."""
+    if gold is None:
+        return docs.withColumn(
+            "gold_pairs",
+            F.lit(None).cast("array<struct<chem_mesh:string,dis_mesh:string>>"),
+        )
+    gold_arr = gold.groupBy("url").agg(
+        F.collect_list(F.struct("chem_mesh", "dis_mesh")).alias("gold_pairs")
+    )
+    return docs.join(gold_arr, "url", "left")
+
+
+def training_features(
+    pages: DataFrame, mesh_tree: DataFrame, gold: DataFrame
+) -> DataFrame:
+    """FEATURES_SCHEMA rows of ``pages`` labelled by ``gold`` (a
+    fixture-shaped mesh table, ``type`` column), from the fused stage's
+    own kernel (scoring.scorer.document_features): the feature source
+    of the training queries q86 and q93."""
+    _gaz, gd, max_words = _mesh_artifacts(mesh_tree, "type")
+    return document_features(
+        with_gold_pairs(extracted_docs(pages), gold), gd, max_words
+    )
 
 
 def heavy_partitions(docs: DataFrame, salt_partitions: int) -> int:
@@ -136,18 +165,9 @@ def score_candidates(
     # expensive nothing at corpus scale
     _gaz, gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
 
-    payload = extracted_docs(pages)
-    k = heavy_partitions(payload, salt_partitions) if salt_partitions else 0
-    if gold is not None:
-        gold_arr = gold.groupBy("url").agg(
-            F.collect_list(F.struct("chem_mesh", "dis_mesh")).alias("gold_pairs")
-        )
-        payload = payload.join(gold_arr, "url", "left")
-    else:
-        payload = payload.withColumn(
-            "gold_pairs",
-            F.lit(None).cast("array<struct<chem_mesh:string,dis_mesh:string>>"),
-        )
+    docs = extracted_docs(pages)
+    k = heavy_partitions(docs, salt_partitions) if salt_partitions else 0
+    payload = with_gold_pairs(docs, gold)
     if k:
         # SKEW-AWARE salting: shuffling every page would move the whole
         # corpus (at 100 TB, the whole 100 TB) through the exchange just

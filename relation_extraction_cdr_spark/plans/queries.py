@@ -4185,10 +4185,12 @@ def _epoch_rows(spark, res):
 @register("q86_head_training")  # rows-only: encoder+optimizer kernels not SQL-expressible
 def q86(spark, sf_dir):
     """Distributed pair-head training end-to-end (SURVEY §2.9 M4/M5,
-    scoring/train.py): seeded synthetic CDR corpus -> mentions ->
-    candidates -> evidence -> features -> frozen-encoder pooling
-    (mapInPandas) -> 3 full-batch epochs of the reference AdamW update
-    rule with integer-exact gradient aggregation.  One row per epoch:
+    scoring/train.py): seeded synthetic CDR corpus -> per-document
+    features from the fused stage's own kernel (pipeline.
+    training_features: mentions -> pairs -> evidence -> featurize, no
+    Levi filter) -> frozen-encoder pooling (mapInPandas) -> 3
+    full-batch epochs of the reference AdamW update rule with
+    integer-exact gradient aggregation.  One row per epoch:
     (epoch, loss_q, n_valid, params_checksum) — loss_q is the EXACT
     int64 fixed-point loss sum (units 1/Q_LOSS) and params_checksum the
     int64 sum of the final quantized weights, so the output is
@@ -4197,21 +4199,12 @@ def q86(spark, sf_dir):
     tests/test_train.py.  Spark==oracle value-hash is impossible here
     (DuckDB cannot run the encoder), hence rows-only."""
     from .. import datagen
-    from ..operators.candidates import candidate_pairs, label_pairs
-    from ..operators.evidence import select_evidence
-    from ..operators.features import featurize
-    from ..operators.mentions import detect_mentions, entity_inventory
     from ..scoring.electra import ElectraConfig
     from ..scoring.train import pool_features, train_pair_head
-    from .pipeline import _mesh_artifacts, extracted_docs
+    from .pipeline import training_features
 
-    n_docs = 80 if "0.1" in sf_dir else 40
-    pages, _gm, gold = datagen.gen_fixture_dfs(spark, n_docs)
-    docs = extracted_docs(pages)
-    gaz, _gd, _mw = _mesh_artifacts(datagen.mesh_df(spark), "type")
-    inv = entity_inventory(detect_mentions(docs, gaz))
-    pairs = label_pairs(candidate_pairs(inv), gold)
-    feats = featurize(select_evidence(pairs.join(docs, "url")))
+    pages, _gm, gold = datagen.gen_fixture_dfs(spark, 80 if "0.1" in sf_dir else 40)
+    feats = training_features(pages, datagen.mesh_df(spark), gold)
     cfg = ElectraConfig(
         vocab_size=30524, embedding_size=32, hidden_size=32,
         num_hidden_layers=2, num_attention_heads=2, intermediate_size=64,
@@ -4566,10 +4559,11 @@ def q93(spark, sf_dir):
     """The full reference lifecycle as ONE gate row (cdr_trainer.py:
     214-331 / 441-468: train -> evaluate per epoch -> save on best F1
     -> serve from the saved checkpoint): seeded synthetic CDR corpus ->
-    mentions -> candidates -> evidence -> features -> frozen-encoder
-    pooling -> deterministic 80/20 url-hash doc split -> 24 full-batch
-    AdamW epochs on the train split with per-epoch dev evaluation and
-    strict-greater best-F1 checkpointing (checkpoint.BestCheckpoint) ->
+    per-document features (pipeline.training_features, as q86) ->
+    frozen-encoder pooling -> deterministic 80/20 url-hash doc split ->
+    24 full-batch AdamW epochs on the train split with per-epoch dev
+    evaluation and strict-greater best-F1 checkpointing
+    (checkpoint.BestCheckpoint) ->
     reload the best .npz through the executor npz plug point
     (pool_features(npz_path=...) re-derives the dev features THROUGH
     the checkpoint, proving the encoder roundtrips) -> distributed head
@@ -4585,10 +4579,6 @@ def q93(spark, sf_dir):
     import tempfile
 
     from .. import datagen
-    from ..operators.candidates import candidate_pairs, label_pairs
-    from ..operators.evidence import select_evidence
-    from ..operators.features import featurize
-    from ..operators.mentions import detect_mentions, entity_inventory
     from ..scoring.checkpoint import BestCheckpoint, load_checkpoint, with_head
     from ..scoring.electra import ElectraConfig, resolve_weights
     from ..scoring.train import (
@@ -4597,14 +4587,10 @@ def q93(spark, sf_dir):
         score_pooled,
         train_pair_head,
     )
-    from .pipeline import _mesh_artifacts, extracted_docs
+    from .pipeline import training_features
 
     pages, _gm, gold = datagen.gen_fixture_dfs(spark, 40)
-    docs = extracted_docs(pages)
-    gaz, _gd, _mw = _mesh_artifacts(datagen.mesh_df(spark), "type")
-    inv = entity_inventory(detect_mentions(docs, gaz))
-    pairs = label_pairs(candidate_pairs(inv), gold)
-    feats = featurize(select_evidence(pairs.join(docs, "url")))
+    feats = training_features(pages, datagen.mesh_df(spark), gold)
     cfg = ElectraConfig(
         vocab_size=30524, embedding_size=32, hidden_size=32,
         num_hidden_layers=2, num_attention_heads=2, intermediate_size=64,

@@ -42,7 +42,11 @@ from pyspark.sql import DataFrame
 from ..functions.wordpiece import vocab_id
 from ..operators.candidates import levi_rejected_py
 from ..operators.evidence import DocIndex, select_evidence_py
-from ..operators.features import featurize_py, fulltext_featurize_py
+from ..operators.features import (
+    FEATURES_SCHEMA,
+    featurize_py,
+    fulltext_featurize_py,
+)
 from ..operators.mentions import detect_mentions_py, entity_inventory_py
 
 SCORED_SCHEMA = (
@@ -369,7 +373,7 @@ def score_document(
         if ev is None:
             continue
         feat = featurize_py(
-            ev["sentence"], ev["sent_pos"] or 0,
+            ev["sentence"], ev["sent_pos"],
             c["mesh_id"], d["mesh_id"],
             ev["chem_start"], ev["chem_end"],
             ev["dis_start"], ev["dis_end"],
@@ -381,6 +385,61 @@ def score_document(
              "label": label, "evidence_type": ev["evidence_type"], **feat}
         )
     return rows, (None if ft is None else {"url": url, **ft})
+
+
+def _batch_documents(
+    pdf: pd.DataFrame,
+    gazetteer: dict[str, list[tuple[str, str]]],
+    max_term_words: int,
+    tree_map: dict[str, list[str]],
+    sentence_splitter: str,
+    fulltext: bool,
+) -> tuple[list[dict], list[dict]]:
+    """One Arrow batch of (url, text, gold_pairs) documents through
+    ``score_document``: all their FEATURES rows and, with ``fulltext``,
+    their FULLTEXT_SCHEMA rows.  The document loop of both
+    ``fused_score_docs`` and ``document_features``."""
+    feat_rows: list[dict] = []
+    fulltext_rows: list[dict] = []
+    for r in pdf.itertuples(index=False):
+        gold = (
+            [(g["chem_mesh"], g["dis_mesh"]) for g in r.gold_pairs]
+            if r.gold_pairs is not None
+            else []
+        )
+        rows, ft = score_document(
+            r.url, r.text, gold, gazetteer, max_term_words, tree_map,
+            sentence_splitter, fulltext=fulltext,
+        )
+        feat_rows += rows
+        if ft is not None:
+            fulltext_rows.append(ft)
+    return feat_rows, fulltext_rows
+
+
+def document_features(
+    doc_payload: DataFrame,
+    gazetteer: dict[str, list[tuple[str, str]]],
+    max_term_words: int,
+) -> DataFrame:
+    """The FEATURES_SCHEMA rows ``fused_score_docs`` scores, unscored and
+    without the Levi filter: ``score_document`` per document in one
+    narrow mapInPandas stage over the same input, (url, text,
+    gold_pairs) rows (plans.pipeline.with_gold_pairs).  The feature
+    source of the training queries (q86, q93), which train and evaluate
+    on every labelled candidate pair: the filter would drop 2-3
+    negative pairs per corpus and move q93's pinned oracle row, hence
+    the empty tree map."""
+    cols = [c.split(" ")[0] for c in FEATURES_SCHEMA.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows, _ = _batch_documents(
+                pdf, gazetteer, max_term_words, {}, "regex", False
+            )
+            yield pd.DataFrame(rows, columns=cols)
+
+    return doc_payload.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
 def fused_score_docs(
@@ -413,10 +472,11 @@ def fused_score_docs(
     relational operator), so no token explode and no per-doc window
     shuffle precede it.
 
-    Semantically identical to the relational operator chain
-    (detect_mentions |> entity_inventory |> candidate_pairs |>
-    label_pairs |> levi_filter |> select_evidence |> featurize |>
-    ``_score_rows``), which tests/test_fused.py composes as its oracle.
+    Semantically identical to the relational chain tests/test_fused.py
+    composes as its oracle: detect_mentions |> entity_inventory |>
+    candidate_pairs |> label_pairs |> levi_filter, then per collected
+    pair row ``select_evidence_py`` (a fresh sentence index per pair)
+    |> ``featurize_py`` |> ``_score_rows``.
     """
     use_electra = backend == "electra"
 
@@ -426,21 +486,10 @@ def fused_score_docs(
 
             w = resolve_weights(DEFAULT_CONFIG, seed=0)
         for pdf in batches:
-            feat_rows = []
-            fulltext_rows: list[dict] = []
-            for r in pdf.itertuples(index=False):
-                gold = (
-                    [(g["chem_mesh"], g["dis_mesh"]) for g in r.gold_pairs]
-                    if r.gold_pairs is not None
-                    else []
-                )
-                rows, ft = score_document(
-                    r.url, r.text, gold, gazetteer, max_term_words, tree_map,
-                    sentence_splitter, fulltext=use_electra,
-                )
-                feat_rows += rows
-                if ft is not None:
-                    fulltext_rows.append(ft)
+            feat_rows, fulltext_rows = _batch_documents(
+                pdf, gazetteer, max_term_words, tree_map, sentence_splitter,
+                use_electra,
+            )
             fdf = pd.DataFrame(feat_rows)
             if use_electra and feat_rows:
                 # exact-architecture DOCUMENT-LEVEL forward (the

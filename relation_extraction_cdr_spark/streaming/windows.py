@@ -1,38 +1,22 @@
-"""Structured Streaming operators over the events stream: watermarked
-windowed aggregation (late data handling) and a custom stateful
-sessionizer via applyInPandasWithState.
+"""Structured Streaming operators: watermarked windowed aggregation
+over the events stream (late data handling) and watermarked exact dedup
+of a page feed.
 
 The reference is pure batch (SURVEY §2.10); these are the engine's
-stream-side obligations for a continuously-fed triple factory — the same
-shapes (tumbling counts per key, session roll-ups with timeout) a page
-ingest feed needs for rate metrics and per-host sessionization.
+stream-side obligations for a continuously-fed triple factory — the
+tumbling counts per key a page ingest feed needs for rate metrics (the
+batch session roll-up is q16_sessionize).
 
-Scale notes:
-- the windowed count is a streaming hash aggregation: partial aggregates
-  live in the state store keyed by (window, event_type); the watermark
-  bounds state size — without it, state grows without limit at 10^12
-  scale.
-- the sessionizer keeps ONE state row per live key; GroupStateTimeout
-  evicts idle keys, so state is proportional to the number of concurrent
-  sessions, not the stream length.
+Scale note: the windowed count is a streaming hash aggregation: partial
+aggregates live in the state store keyed by (window, event_type); the
+watermark bounds state size — without it, state grows without limit at
+10^12 scale.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_OUTPUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long, total_value double"
-)
-SESSION_STATE_SCHEMA = (
-    "start long, last long, n long, total double"
-)
 
 
 def windowed_event_counts(
@@ -57,95 +41,6 @@ def windowed_event_counts(
             "n",
             "total_value",
         )
-    )
-
-
-def sessionize_stateful(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    idle_timeout: bool = True,
-) -> DataFrame:
-    """Custom stateful sessionizer (applyInPandasWithState): per user,
-    events closer than ``gap_minutes`` chain into one session; with
-    ``idle_timeout`` a processing-time timeout flushes idle sessions.
-
-    ``idle_timeout=False`` is for availableNow drain jobs: a pending
-    processing-time timeout keeps the query alive firing timeout batches,
-    so a drain run never terminates — without timeouts the query stops
-    cleanly once the data is exhausted (open session tails stay in state
-    for the next run, exactly like the batch resume path).
-
-    Batch-equivalent semantics: q16_sessionize (lag/cumsum windows) —
-    the streaming version emits the same (user, session) roll-ups
-    incrementally with O(live sessions) state.
-    """
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            # the timeout path must not touch the data iterator: the API
-            # contract says it may be empty for timed-out keys, in which
-            # case pd.concat(list(pdfs)) would raise ValueError
-            start, last, n, total = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start, unit="us")],
-                    "session_end": [pd.Timestamp(last, unit="us")],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-            return
-
-        rows = pd.concat(list(pdfs)).sort_values("ts")
-        # normalize to microseconds regardless of the incoming pandas
-        # datetime resolution (Arrow hands over ns or us depending on
-        # the source type)
-        ts_us = rows["ts"].astype("datetime64[us]").astype("int64")
-        vals = rows["value"].astype("float64")
-
-        start, last, n, total = state.get if state.exists else (None, None, 0, 0.0)
-        done = []
-        for t, v in zip(ts_us, vals):
-            t, v = int(t), float(v)
-            if start is None:
-                start, last, n, total = t, t, 1, v
-            elif t - last <= gap_us:
-                last, n, total = t, n + 1, total + v
-            else:
-                done.append((start, last, n, total))
-                start, last, n, total = t, t, 1, v
-        state.update((start, last, n, total))
-        if idle_timeout:
-            state.setTimeoutDuration(gap_minutes * 60 * 1000)
-        if done:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(done),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _, _, _ in done],
-                    "session_end": [pd.Timestamp(l, unit="us") for _, l, _, _ in done],
-                    "n_events": [d[2] for d in done],
-                    "total_value": [d[3] for d in done],
-                }
-            )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout
-            else GroupStateTimeout.NoTimeout
-        ),
     )
 
 

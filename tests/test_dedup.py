@@ -81,8 +81,6 @@ def test_simhash(docs):
     # near dup within small hamming distance
     ham = bin(sh[0] ^ sh[2]).count("1")
     assert ham <= 6
-    buckets = DD.simhash_buckets(docs).collect()
-    assert any(r["bucket_size"] >= 2 for r in buckets)
 
 
 def test_connected_components_matches_union_find(spark):

@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-from relation_extraction_cdr_spark.functions.text import split_sentences_py
-from relation_extraction_cdr_spark.operators.evidence import (
-    select_evidence,
-    select_evidence_py,
-)
+from relation_extraction_cdr_spark.operators.evidence import select_evidence_py
 
 
 def _mk(text, chem_surf, dis_surf):
@@ -65,21 +61,6 @@ def test_too_far_dropped():
     assert row is None
 
 
-def test_global_mode():
-    text = (
-        "lithium was administered. f one. f two. f three. f four. "
-        "tremor was recorded."
-    )
-    row = select_evidence_py(**_mk(text, "lithium", "tremor"), extract_inter=False)
-    assert row["evidence_type"] == "global"
-    assert row["sentence"] == text
-    # the pair is still SCORED document-level: first-mention spans are
-    # emitted (document-absolute) so featurization does not drop the row
-    assert row["chem_start"] == text.find("lithium")
-    assert row["dis_start"] == text.find("tremor")
-    assert row["sent_pos"] is None
-
-
 def test_min_distance_tie_first_wins():
     # two intra candidates; reference picks list.index(min) — the FIRST
     text = "lithium caused tremor. lithium induced tremor."
@@ -92,44 +73,3 @@ def test_min_distance_tie_first_wins():
     row = select_evidence_py(**k)
     assert row["evidence_type"] == "intra"
     assert row["sent_pos"] == 0  # first sentence wins the tie
-
-
-def test_distributed_matches_py(spark, fixtures, mesh):
-    """Distributed mapInPandas output == per-row python oracle."""
-    from relation_extraction_cdr_spark.operators.candidates import (
-        candidate_pairs,
-        label_pairs,
-    )
-    from relation_extraction_cdr_spark.operators.mentions import (
-        detect_mentions,
-        entity_inventory,
-    )
-    from relation_extraction_cdr_spark.plans.pipeline import extracted_docs
-    from relation_extraction_cdr_spark.sources.mesh import gazetteer
-
-    pages, _, gold = fixtures
-    docs = extracted_docs(pages)
-    inv = entity_inventory(detect_mentions(docs, gazetteer(mesh, type_col="type")))
-    pairs = label_pairs(candidate_pairs(inv), gold).join(docs, "url")
-    got = {
-        (r["url"], r["chem_mesh"], r["dis_mesh"]): r.asDict()
-        for r in select_evidence(pairs).collect()
-    }
-    rows = pairs.collect()
-    n_checked = 0
-    for r in rows:
-        expect = select_evidence_py(
-            r["text"], r["chem_mesh"], r["dis_mesh"],
-            [(p["start"], p["end"]) for p in r["chem_positions"]],
-            [(p["start"], p["end"]) for p in r["dis_positions"]],
-            r["chem_text"], r["dis_text"], r["label"],
-        )
-        key = (r["url"], r["chem_mesh"], r["dis_mesh"])
-        if expect is None:
-            assert key not in got
-        else:
-            g = got[key]
-            for f in ("evidence_type", "sentence", "sent_pos", "chem_start", "dis_start", "label"):
-                assert g[f] == expect[f], (key, f, g[f], expect[f])
-            n_checked += 1
-    assert n_checked > 20

@@ -4,7 +4,6 @@ exactly."""
 from __future__ import annotations
 
 from datetime import datetime
-from typing import Iterator
 
 import pandas as pd
 
@@ -14,8 +13,11 @@ from relation_extraction_cdr_spark.operators.candidates import (
     label_pairs,
     levi_filter,
 )
-from relation_extraction_cdr_spark.operators.evidence import select_evidence
-from relation_extraction_cdr_spark.operators.features import featurize
+from relation_extraction_cdr_spark.operators.evidence import select_evidence_py
+from relation_extraction_cdr_spark.operators.features import (
+    FEATURES_SCHEMA,
+    featurize_py,
+)
 from relation_extraction_cdr_spark.operators.mentions import (
     detect_mentions,
     entity_inventory,
@@ -24,13 +26,15 @@ from relation_extraction_cdr_spark.plans.pipeline import (
     _mesh_artifacts,
     extracted_docs,
     score_candidates,
+    training_features,
 )
 from relation_extraction_cdr_spark.scoring.scorer import (
-    SCORED_SCHEMA,
     _score_rows,
     score_document,
 )
 from relation_extraction_cdr_spark.sources.mesh import tree_multimap
+
+FEATURE_COLS = [c.split(" ")[0] for c in FEATURES_SCHEMA.split(", ")]
 
 # DX is a Chemical through "alphazine" and a Disease through "betaosis"
 # (the real MeSH tree types a descriptor by tree number, so one with
@@ -46,32 +50,53 @@ DUAL_URL = "https://dual.example/1"
 DUAL_TEXT = "alphazine induced gammitis in rats. deltamide induced betaosis in rats."
 
 
-def _rows(df):
+def _rows(scored):
+    """Sorted scored rows of a Spark frame or of an oracle pandas frame."""
+    records = scored.to_dict("records") if isinstance(scored, pd.DataFrame) else scored.collect()
     return sorted(
         (r["url"], r["chem_mesh"], r["dis_mesh"], r["label"], r["evidence_type"],
          r["pred"], round(r["prob"], 9))
-        for r in df.collect()
+        for r in records
     )
 
 
-def score_pairs(features):
-    """features (FEATURES_SCHEMA) -> scored pairs (SCORED_SCHEMA) by the
-    stub decision rule: the oracle chain's last step."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _score_rows(pdf)
-
-    return features.mapInPandas(run, schema=SCORED_SCHEMA)
+def _feature_rows(rows):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows
+    )
 
 
-def _relational_chain(pages, mesh, gold):
-    """The oracle: the same decision as one relational operator per step."""
+def _relational_features(pages, mesh, gold, levi=True):
+    """The oracle: the relational operators up to labelled (optionally
+    Levi-filtered) pairs, then per collected pair row the Spark-free
+    evidence kernel with a fresh sentence index and featurize_py.
+    ``_score_rows`` over it is the stub decision."""
     docs = extracted_docs(pages)
     gaz, _, _ = _mesh_artifacts(mesh, "type")
     pairs = label_pairs(candidate_pairs(entity_inventory(detect_mentions(docs, gaz))), gold)
-    pairs = levi_filter(pairs, gold, tree_multimap(mesh))
-    return score_pairs(featurize(select_evidence(pairs.join(docs, "url"))))
+    if levi:
+        pairs = levi_filter(pairs, gold, tree_multimap(mesh))
+    out = []
+    for r in pairs.join(docs, "url").collect():
+        ev = select_evidence_py(
+            r["text"], r["chem_mesh"], r["dis_mesh"],
+            [(p["start"], p["end"]) for p in r["chem_positions"]],
+            [(p["start"], p["end"]) for p in r["dis_positions"]],
+            r["chem_text"], r["dis_text"], r["label"],
+        )
+        if ev is None:
+            continue
+        feat = featurize_py(
+            ev["sentence"], ev["sent_pos"], r["chem_mesh"], r["dis_mesh"],
+            ev["chem_start"], ev["chem_end"], ev["dis_start"], ev["dis_end"],
+        )
+        if feat is not None:
+            out.append(
+                {"url": r["url"], "chem_mesh": r["chem_mesh"],
+                 "dis_mesh": r["dis_mesh"], "label": r["label"],
+                 "evidence_type": ev["evidence_type"], **feat}
+            )
+    return pd.DataFrame(out, columns=FEATURE_COLS)
 
 
 def _dual_typed_inputs(spark):
@@ -89,10 +114,21 @@ def _dual_typed_inputs(spark):
 def test_fused_equals_modular(spark, fixtures, mesh):
     pages, _, gold = fixtures
     fused = score_candidates(pages, mesh, gold=gold)
-    assert _rows(fused) == _rows(_relational_chain(pages, mesh, gold))
+    oracle = _relational_features(pages, mesh, gold)
+    assert _rows(fused) == _rows(_score_rows(oracle))
+
+    # the training queries' features: the same kernel without the Levi
+    # filter, equal in every column to the oracle without levi_filter
+    feats = training_features(pages, mesh, gold)
+    assert feats.columns == FEATURE_COLS
+    expect = _relational_features(pages, mesh, gold, levi=False)
+    assert len(expect) > len(oracle)  # the Levi filter drops pairs here
+    assert _feature_rows(feats.collect()) == _feature_rows(
+        expect.itertuples(index=False)
+    )
 
     pages, mesh, gold = _dual_typed_inputs(spark)
-    oracle = _rows(_relational_chain(pages, mesh, gold))
+    oracle = _rows(_score_rows(_relational_features(pages, mesh, gold)))
     assert [r[1:4] + r[5:6] for r in oracle] == [("DD", "DG", 0, 0), ("DD", "DX", 1, 1)]
     assert _rows(score_candidates(pages, mesh, gold=gold)) == oracle
 

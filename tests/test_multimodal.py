@@ -2,13 +2,32 @@
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 import pytest
 
 from relation_extraction_cdr_spark.operators import multimodal as MM
 
 
+def gen_media_df(spark, n: int = 64, seed: int = 42):
+    """Deterministic synthetic media table (payload = seeded bytes)."""
+    return spark.range(n).select(
+        F.col("id").alias("media_id"),
+        F.element_at(
+            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+            (F.col("id") % 3 + 1).cast("int"),
+        ).alias("kind"),
+        F.encode(F.concat(F.lit(f"blob{seed}:"), F.md5(F.col("id").cast("string"))), "UTF-8").alias("payload"),
+        F.struct(
+            (F.col("id") % 640 + 32).cast("int").alias("width"),
+            (F.col("id") % 480 + 32).cast("int").alias("height"),
+            (F.col("id") * 100).cast("int").alias("duration_ms"),
+            F.lit("fake").alias("codec"),
+        ).alias("meta"),
+    )
+
+
 def test_media_schema(spark):
-    media = MM.gen_media_df(spark, 12)
+    media = gen_media_df(spark, 12)
     assert media.schema.simpleString() == (
         "struct<media_id:bigint,kind:string,payload:binary,"
         "meta:struct<width:int,height:int,duration_ms:int,codec:string>>"
@@ -17,7 +36,7 @@ def test_media_schema(spark):
 
 
 def test_extract_features_shapes(spark):
-    media = MM.gen_media_df(spark, 12)
+    media = gen_media_df(spark, 12)
     feats = MM.extract_features(media).collect()
     assert len(feats) == 12
     for r in feats:
@@ -28,7 +47,7 @@ def test_extract_features_shapes(spark):
 
 
 def test_extract_deterministic(spark):
-    media = MM.gen_media_df(spark, 6)
+    media = gen_media_df(spark, 6)
     a = sorted(map(tuple, MM.extract_features(media).collect()))
     b = sorted(map(tuple, MM.extract_features(media).collect()))
     assert a == b
@@ -111,13 +130,6 @@ def test_media_survives_poison_payloads(spark):
     assert mixed[13]["decode_err"].startswith("ValueError: AVI: LIST nesting")
     for mid in (10, 11, 12, 13):
         assert mixed[mid]["feature"] == [] and mixed[mid]["n_frames"] == 0
-
-
-def test_resize_meta(spark):
-    media = MM.gen_media_df(spark, 8)
-    plan = MM.resize_meta(media, max_side=128).collect()
-    for r in plan:
-        assert max(r["target_w"], r["target_h"]) <= 128
 
 
 # --------------------------------------------------------------------------

@@ -125,7 +125,6 @@ def test_evidence_selection_invariants(case):
     text, cspan, dspan, c_sent, d_sent = case
     row = select_evidence_py(
         text, "C1", "D1", [cspan], [dspan], "aspirin", "headache", 0,
-        extract_inter=True,
     )
     sents = split_sentences_py(text)
     if row is None:
@@ -134,7 +133,7 @@ def test_evidence_selection_invariants(case):
         assert abs(c_sent - d_sent) > 3
         return
     kind = row["evidence_type"]
-    assert kind in ("intra", "inter_fartoken", "inter_window", "global")
+    assert kind in ("intra", "inter_fartoken", "inter_window")
     # every evidence string must contain both surfaces
     assert "aspirin" in row["sentence"] and "headache" in row["sentence"]
     if kind in ("intra", "inter_fartoken"):

@@ -39,20 +39,21 @@ def test_python_and_spark_lanes_agree(spark):
 
 
 def test_sql_rendering_matches_python(spark):
-    """bloom_might_contain_sql (embedded-words form) agrees with the
-    Python build and the Spark column on the same keys — the
-    'same bits, same lanes, any engine' claim, gated."""
+    """``_lane_sql`` (the DuckDB lane rendering q54's oracle uses) and
+    the Python-built words agree with the Spark column on the same keys
+    — the 'same bits, same lanes, any engine' claim, gated."""
     import duckdb
 
     keys = ["3", "1234", "99999"]
     words = SK.build_bloom(keys, m=4096, k=3)
-    sql = SK.bloom_might_contain_sql("x", words, m=4096, k=3)
+    lanes = ", ".join(SK._lane_sql("x", i, 4096) for i in range(3))
     con = duckdb.connect()
-    got = dict(
-        con.execute(
-            f"SELECT x, {sql} FROM (VALUES ('3'), ('1234'), ('99999'), ('7'), ('424242')) t(x)"
+    got = {
+        x: all((words[p // 32] >> (p % 32)) & 1 for p in ps)
+        for x, *ps in con.execute(
+            f"SELECT x, {lanes} FROM (VALUES ('3'), ('1234'), ('99999'), ('7'), ('424242')) t(x)"
         ).fetchall()
-    )
+    }
     assert got["3"] and got["1234"] and got["99999"]
     df = spark.createDataFrame([("3",), ("7",), ("424242",)], "x string")
     spark_got = {

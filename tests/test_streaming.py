@@ -84,69 +84,6 @@ def test_windowed_counts_with_watermark(spark, tmp_path):
     assert all(k in emitted for k in missing)
 
 
-def test_sessionize_stateful_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionizer: sessions flushed by a later
-    event (gap exceeded) match the batch lag/cumsum sessionization."""
-    from relation_extraction_cdr_spark.streaming.windows import sessionize_stateful
-    from pyspark.sql import Window as W
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    batch = spark.read.parquet(src).select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
-    in_dir = str(tmp_path / "ss_in"); out_dir = str(tmp_path / "ss_out")
-    cp = str(tmp_path / "ss_cp")
-    batch.write.mode("overwrite").parquet(in_dir)
-
-    stream = spark.readStream.schema(batch.schema).parquet(in_dir)
-    # idle_timeout=False: an availableNow drain must terminate once data
-    # is exhausted (a pending processing-time timeout would keep the
-    # query alive firing timeout batches forever)
-    q = (
-        sessionize_stateful(stream, gap_minutes=30, idle_timeout=False)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300), "drain query did not terminate"
-    q.stop()
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-
-    # batch truth: gap>30min starts a new session
-    w = W.partitionBy("user_id").orderBy("ts")
-    sess = (
-        batch.withColumn("prev", F.lag("ts").over(w))
-        .withColumn(
-            "new_s",
-            (F.col("prev").isNull()
-             | (F.unix_timestamp("ts") - F.unix_timestamp("prev") > 1800)).cast("int"),
-        )
-        .withColumn("sid", F.sum("new_s").over(w))
-        .groupBy("user_id", "sid")
-        .agg(F.min("ts").alias("s"), F.max("ts").alias("e"), F.count("*").alias("n"))
-    )
-    expect_all = {
-        (r["user_id"], r["s"], r["e"], r["n"]) for r in sess.collect()
-    }
-    # the stream (availableNow, single batch) only flushes sessions that a
-    # LATER in-batch event closed; open tails stay in state. Everything
-    # emitted must be a true batch session.
-    assert got, "no sessions flushed"
-    assert got <= expect_all, got - expect_all
-    # ...and users with multiple sessions must have flushed all but the tail
-    from collections import Counter
-    per_user_exp = Counter(u for (u, _, _, _) in expect_all)
-    per_user_got = Counter(u for (u, _, _, _) in got)
-    for u, cnt in per_user_exp.items():
-        assert per_user_got.get(u, 0) >= cnt - 1, (u, cnt, per_user_got.get(u))
-
-
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """Streaming exact dedup: a re-crawl of every page (same text, new
     url/ts) is dropped inside the watermark horizon; one row per

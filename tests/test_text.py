@@ -7,8 +7,6 @@ import pyspark.sql.functions as F
 
 from relation_extraction_cdr_spark.functions.text import (
     split_sentences_py,
-    split_sentences_udf,
-    nfkc_udf,
     extract_text,
 )
 
@@ -33,27 +31,6 @@ def test_split_first_occurrence_quirk():
 def test_split_abbreviation_guard():
     s = split_sentences_py("dr. smith treated rats. outcome was fine.")
     assert len(s) == 2
-
-
-def test_udf_matches_py(spark):
-    texts = [
-        "alpha beta. gamma delta! epsilon?",
-        "same words here. other stuff now. same words here.",
-        "one sentence only",
-        "",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = df.select(split_sentences_udf("text").alias("s")).collect()
-    for t, row in zip(texts, got):
-        expect = [
-            (x["idx"], x["start"], x["end"], x["text"]) for x in split_sentences_py(t)
-        ]
-        assert [tuple(r) for r in row["s"]] == expect
-
-
-def test_nfkc(spark):
-    df = spark.createDataFrame([("ﬁne ４２",)], "text string")
-    assert df.select(nfkc_udf("text").alias("t")).first()["t"] == "fine 42"
 
 
 def test_extract_text_byte_identity(spark):

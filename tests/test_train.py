@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from relation_extraction_cdr_spark.plans.pipeline import training_features
 from relation_extraction_cdr_spark.scoring.train import (
     AdamWRef,
     BertAdamRef,
@@ -324,21 +325,6 @@ class TestPoolFeatures:
     def test_pooled_matches_direct_numpy(self, spark, fixtures, mesh, tiny_cfg):
         """pool_features (mapInPandas) == encoder+first_token_pool run
         directly on the collected feature rows."""
-        from relation_extraction_cdr_spark.plans.pipeline import score_candidates
-        from relation_extraction_cdr_spark.operators.features import featurize
-        from relation_extraction_cdr_spark.operators.candidates import (
-            candidate_pairs,
-            label_pairs,
-        )
-        from relation_extraction_cdr_spark.operators.mentions import (
-            detect_mentions,
-            entity_inventory,
-        )
-        from relation_extraction_cdr_spark.operators.evidence import select_evidence
-        from relation_extraction_cdr_spark.plans.pipeline import (
-            _mesh_artifacts,
-            extracted_docs,
-        )
         from relation_extraction_cdr_spark.scoring.electra import (
             ElectraWeights,
             encoder_forward,
@@ -346,12 +332,7 @@ class TestPoolFeatures:
         )
 
         pages, _, gold = fixtures
-        docs = extracted_docs(pages.limit(12))
-        gaz, _, _ = _mesh_artifacts(mesh, "type")
-        inv = entity_inventory(detect_mentions(docs, gaz))
-        pairs = label_pairs(candidate_pairs(inv), gold)
-        evidence = select_evidence(pairs.join(docs, "url"))
-        feats = featurize(evidence)
+        feats = training_features(pages.limit(12), mesh, gold)
         pooled = pool_features(feats, config=tiny_cfg, seed=9).collect()
         assert len(pooled) > 0
 
@@ -464,19 +445,10 @@ class TestPoolFeatures:
         driver partitions the features frame."""
         import pyspark.sql.functions as F
 
-        from relation_extraction_cdr_spark.operators.candidates import (
-            candidate_pairs,
-            label_pairs,
-        )
-        from relation_extraction_cdr_spark.operators.evidence import select_evidence
         from relation_extraction_cdr_spark.operators.features import (
-            featurize,
             fulltext_features,
         )
-        from relation_extraction_cdr_spark.operators.mentions import (
-            detect_mentions,
-            entity_inventory,
-        )
+        from relation_extraction_cdr_spark.operators.mentions import detect_mentions
         from relation_extraction_cdr_spark.plans.pipeline import (
             _mesh_artifacts,
             extracted_docs,
@@ -489,9 +461,7 @@ class TestPoolFeatures:
         docs = extracted_docs(pages.limit(10))
         gaz, _, _ = _mesh_artifacts(mesh, "type")
         m = detect_mentions(docs, gaz)
-        inv = entity_inventory(m)
-        pairs = label_pairs(candidate_pairs(inv), gold)
-        feats = featurize(select_evidence(pairs.join(docs, "url")))
+        feats = training_features(pages.limit(10), mesh, gold)
 
         def as_map(rows):
             return {
@@ -551,28 +521,8 @@ class TestPoolFeatures:
         """The full M4/M5 path: corpus → features → frozen-encoder
         pooling → distributed head training; standard-CE mode learns
         (loss decreases), and the run is reproducible bit-for-bit."""
-        from relation_extraction_cdr_spark.operators.features import featurize
-        from relation_extraction_cdr_spark.operators.candidates import (
-            candidate_pairs,
-            label_pairs,
-        )
-        from relation_extraction_cdr_spark.operators.mentions import (
-            detect_mentions,
-            entity_inventory,
-        )
-        from relation_extraction_cdr_spark.operators.evidence import select_evidence
-        from relation_extraction_cdr_spark.plans.pipeline import (
-            _mesh_artifacts,
-            extracted_docs,
-        )
-
         pages, _, gold = fixtures
-        docs = extracted_docs(pages.limit(25))
-        gaz, _, _ = _mesh_artifacts(mesh, "type")
-        inv = entity_inventory(detect_mentions(docs, gaz))
-        pairs = label_pairs(candidate_pairs(inv), gold)
-        evidence = select_evidence(pairs.join(docs, "url"))
-        feats = featurize(evidence)
+        feats = training_features(pages.limit(25), mesh, gold)
         pooled = pool_features(feats, config=tiny_cfg, seed=9).cache()
         try:
             n = pooled.count()
