@@ -1,5 +1,5 @@
 """Featurization: entity-marker insertion, tokenization, entity mask,
-per-row label encoding (SURVEY §2.5 W1/W2/W5, §2.4 A10, §2.2 P7/P8).
+per-row label encoding (SURVEY §2.5 W1/W2/W5, §2.4 A10, §2.2 P7).
 
 Reference semantics (cdr_dataset.py:294-376, make_example_non_global):
 
@@ -7,21 +7,22 @@ Reference semantics (cdr_dataset.py:294-376, make_example_non_global):
   entity's char offsets stay valid (cdr_dataset.py:301-319); ``first`` is
   the earlier-starting entity's mesh code, ``second`` the later's.
 - sentence offsets are evidence-relative: mention start minus sent_pos.
-- candidates whose marked text tokenizes to > 512 ids are DROPPED
+- candidates whose marked text tokenizes to > MAX_IDS ids are DROPPED
   (cdr_dataset.py:323-325, filter P7).
 - entity mask: 'O' everywhere except marker spans, which carry the
-  entity's mesh code, marker tokens included when use_entity_token
-  (cdr_dataset.py:328-353); with use_entity_token=False the marker ids
-  are stripped from the token list (P8, cdr_dataset.py:357-358).
+  entity's mesh code, marker tokens included (cdr_dataset.py:328-353,
+  the entity-token setting the reference trains with, SURVEY §3.1).
 - label encoding: sklearn LabelEncoder == dense codes over the
   LEXICOGRAPHICALLY SORTED distinct mask values (cdr_dataset.py:363-367);
   reproduced with a dict over the sorted set — per-row, no shuffle.
 
-Execution: ``featurize_py`` is Spark-free; ``scoring.scorer.score_document``
-calls it once per pair with evidence inside the fused per-document stage
-(``fused_score_docs``, ``document_features``), on short evidence sentences
-(bounded by 512 tokens).  ``fulltext_features`` is the document-level
-featurizer's own narrow ``mapInPandas`` stage.
+Execution: everything here is Spark-free.  ``scoring.scorer.score_document``
+calls ``featurize_py`` once per pair with evidence inside the fused
+per-document stage (``fused_score_docs``, ``document_features``), and
+``fulltext_featurize_py`` once per document on the same entity
+inventory (there and in ``document_fulltext``).  ``marked_document`` is
+the whole-document marked example of both document-level featurizers
+(``fulltext_featurize_py`` and operators.ner.ner_featurize_py).
 """
 
 from __future__ import annotations
@@ -39,6 +40,10 @@ FEATURES_SCHEMA = (
     "chem_code int, dis_code int"
 )
 
+# the reference's fixed cap on an example's token ids (cdr_dataset.py:323,
+# :407, :477)
+MAX_IDS = 512
+
 
 def has_literal_marker(text: str) -> bool:
     """True when ``text`` itself holds the tokenizer's ``[e]``/``[/e]``
@@ -48,21 +53,40 @@ def has_literal_marker(text: str) -> bool:
     return "[e]" in lowered or "[/e]" in lowered
 
 
-def _encoded_marker_mask(
-    text: str,
-    ids: list[int],
-    codes: list[str],
-    use_entity_token: bool,
-    cut: int | None = None,
-) -> tuple[list[int], list[int], dict[str, int]] | None:
-    """The module docstring's entity mask + label encoding for ``ids`` =
-    ``text`` with markers inserted; span i carries ``codes[i]`` (later
-    spans the last).  Returns (ids[:cut], encoded mask, value -> code),
-    or None when ``text`` holds a literal ``[e]``/``[/e]``: that span was
-    never inserted, has no code and would desync the mask from the ids."""
+def marked_document(text: str, spans: list[tuple]) -> tuple[list[int], list] | None:
+    """The whole-document marked example (cdr_dataset.py:395-411 for
+    NER, :449-481 for is_full_sample): every (start, end, tag) span
+    marker-wrapped, sorted by start and inserted in reverse so earlier
+    offsets stay valid (W1/W2); the marked text encoded; over MAX_IDS
+    ids, truncated to the window and cut BACK to just after the last
+    [/e] inside it, so no span is half-truncated (W5).
+
+    Returns (ids, the tags in marker order), or None when the window
+    holds no [/e] (the reference would IndexError on
+    ``e_end_last_idx[-1]``) or ``text`` holds a literal marker, which
+    would open a span with no tag and shift every later one."""
     if has_literal_marker(text):
         return None
-    ids = ids[:cut]
+    spans = sorted(spans, key=lambda sp: sp[0])
+    t = text
+    for s, e, _ in reversed(spans):
+        t = t[:s] + " [E] " + t[s:e] + " [/E] " + t[e:]
+    ids = encode(t)
+    if len(ids) > MAX_IDS:
+        ids = ids[:MAX_IDS]
+        if E_END_ID not in ids:
+            return None
+        ids = ids[: MAX_IDS - ids[::-1].index(E_END_ID)]
+    return ids, [tag for _, _, tag in spans]
+
+
+def _encoded_marker_mask(
+    ids: list[int], codes: list[str]
+) -> tuple[list[int], dict[str, int]]:
+    """The module docstring's entity mask + label encoding for ``ids``
+    (a text with markers inserted and no literal one); span i carries
+    ``codes[i]`` (later spans the last).  Returns (encoded mask, value
+    -> code)."""
     mask: list[str] = []
     i = 0
     span = 0
@@ -72,21 +96,17 @@ def _encoded_marker_mask(
             i += 1
         else:
             code = codes[min(span, len(codes) - 1)]
-            if use_entity_token:
-                mask.append(code)
+            mask.append(code)
             i += 1
             while i < len(ids) and ids[i] != E_END_ID:
                 mask.append(code)
                 i += 1
-            if use_entity_token:
-                mask.append(code)
+            mask.append(code)
             span += 1
             i += 1
-    if not use_entity_token:
-        ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
     # LabelEncoder order: dense codes over the sorted distinct values
     lookup = {c: j for j, c in enumerate(sorted(set(mask)))}
-    return ids, [lookup[c] for c in mask], lookup
+    return [lookup[c] for c in mask], lookup
 
 
 def featurize_py(
@@ -98,10 +118,12 @@ def featurize_py(
     chem_end: int,
     dis_start: int,
     dis_end: int,
-    use_entity_token: bool = True,
-    max_len: int = 512,
 ) -> dict | None:
-    """Single-row reference implementation (pytest oracle)."""
+    """Single-row reference implementation (pytest oracle).  None for a
+    sentence holding a literal ``[e]``/``[/e]`` (that span was never
+    inserted, has no code and would desync the mask from the ids)."""
+    if has_literal_marker(sentence):
+        return None
     cs, ce = chem_start - sent_pos, chem_end - sent_pos
     ds, de = dis_start - sent_pos, dis_end - sent_pos
     if cs > ds:
@@ -113,12 +135,9 @@ def featurize_py(
         t = t[:cs] + " [E] " + t[cs:ce] + " [/E] " + t[ce:]
         first, second = chem_mesh, dis_mesh
     ids = encode(t)
-    if len(ids) > max_len:
+    if len(ids) > MAX_IDS:
         return None
-    marked = _encoded_marker_mask(sentence, ids, [first, second], use_entity_token)
-    if marked is None:
-        return None
-    ids, enc, lookup = marked
+    enc, lookup = _encoded_marker_mask(ids, [first, second])
     if chem_mesh not in lookup or dis_mesh not in lookup:
         # pathological offsets (e.g. a find()-failure span from the
         # reproduced inter_window quirk) can corrupt a marker so an
@@ -144,18 +163,12 @@ def fulltext_featurize_py(
     text: str,
     entities: list[dict],
     gold_pairs: list[tuple[str, str]],
-    use_entity_token: bool = True,
-    max_len: int = 512,
 ) -> dict | None:
     """The document-level (is_full_sample) example builder — reference
     ``make_example_fulltext`` (cdr_dataset.py:449-545) semantics:
 
-    - EVERY mention of EVERY entity is marker-wrapped, sorted by start,
-      inserted in reverse so earlier offsets stay valid (W1/W2)
-    - tokenize the whole marked document; if > max_len ids, truncate to
-      the window then cut BACK to just after the last [/e] inside it
-      (W5, cdr_dataset.py:477-481; a window with no [/e] drops the doc
-      — the reference would IndexError on ``e_end_last_idx[-1]``)
+    - EVERY mention of EVERY entity is marker-wrapped and the document
+      encoded and cut to its window: ``marked_document`` (W1/W2/W5)
     - mask + LabelEncoder: ``_encoded_marker_mask`` (cdr_dataset.py:
       506-507, 533-535), which also re-encodes both code lists
     - chem/dis code lists: the doc's codes of that type FILTERED to
@@ -167,37 +180,26 @@ def fulltext_featurize_py(
     Returns token_ids / entity_mask / encoded code lists / labels plus
     the mesh-id lists in pair order (so logits can be joined back).
     """
-    spans = sorted(
-        ((int(p["start"]), int(p["end"]), e["mesh_id"])
-         for e in entities for p in e["positions"]),
-        key=lambda sp: sp[0],
-    )
-    if not spans:
-        return None
-    t = text
-    for s, e_, _ in reversed(spans):
-        t = t[:s] + " [E] " + t[s:e_] + " [/E] " + t[e_:]
-    ids = encode(t)
-    cut = None
-    if len(ids) > max_len:
-        window = ids[:max_len]
-        if E_END_ID not in window:
-            return None
-        cut = max_len - window[::-1].index(E_END_ID)  # just after the last [/e]
-    marked = _encoded_marker_mask(
-        text, ids, [c for _, _, c in spans], use_entity_token, cut
-    )
-    if marked is None:
-        return None
-    ids, enc, lookup = marked
-    # one entity per mesh_id (the reference inventory is a dict keyed by
-    # mesh_id, so duplicates cannot exist there; caller-supplied entity
-    # lists CAN repeat an id — last type wins, like the dict overwrite —
-    # and the ordered dedup keeps labels aligned with the
-    # chem_meshes × dis_meshes pair order the scorer reconstructs)
+    # one entity per mesh_id: the callers pass the inventory
+    # (mentions.entity_inventory_py, a dict keyed by mesh_id like the
+    # reference's), so an id cannot repeat there; for any other list the
+    # last type wins (the dict overwrite) and the ordered dedup keeps
+    # labels aligned with the chem_meshes × dis_meshes pair order the
+    # scorer reconstructs
     types = {e["mesh_id"]: e["type"] for e in entities}
     chem_all = [m for m, typ in types.items() if typ == "Chemical"]
     dis_all = [m for m, typ in types.items() if typ == "Disease"]
+    if not chem_all or not dis_all:
+        return None
+    marked = marked_document(
+        text,
+        [(int(p["start"]), int(p["end"]), e["mesh_id"])
+         for e in entities for p in e["positions"]],
+    )
+    if marked is None:
+        return None
+    ids, codes = marked
+    enc, lookup = _encoded_marker_mask(ids, codes)
     gold = set(gold_pairs)
     chem_meshes: list[str] = []
     dis_meshes: list[str] = []
@@ -221,59 +223,6 @@ def fulltext_featurize_py(
         chem_meshes=chem_meshes,
         dis_meshes=dis_meshes,
     )
-
-
-def fulltext_features(
-    docs_with_entities: DataFrame,
-    use_entity_token: bool = True,
-    max_len: int = 512,
-) -> DataFrame:
-    """Distributed document-level featurization.
-
-    Input: one row per doc — (url, text,
-    entities array<struct<mesh_id, type, positions array<struct<start,
-    end>>>>, gold_pairs array<struct<chem_mesh, dis_mesh>> | null).
-    Output: FULLTEXT_SCHEMA, one row per surviving document.  Narrow
-    mapInPandas stage.
-
-    The per-row ``itertuples`` loop is measured, not assumed, to be
-    off the critical path: on the real sf0.01 payload the featurize
-    kernel is 93.6% of batch wall (15.6x the iteration+unpack cost;
-    BENCH/ATTRIBUTION.md), and the heavier encoder-wrapping loops
-    (ner/scorer) dominate by more still."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in FULLTEXT_SCHEMA.split(", ")]
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.text is None or not r.text:
-                    continue
-                ents = [
-                    {
-                        "mesh_id": e["mesh_id"],
-                        "type": e["type"],
-                        "positions": [
-                            {"start": p["start"], "end": p["end"]}
-                            for p in e["positions"]
-                        ],
-                    }
-                    for e in r.entities
-                ]
-                gold = (
-                    [(g["chem_mesh"], g["dis_mesh"]) for g in r.gold_pairs]
-                    if getattr(r, "gold_pairs", None) is not None
-                    else []
-                )
-                feat = fulltext_featurize_py(
-                    r.text, ents, gold,
-                    use_entity_token=use_entity_token, max_len=max_len,
-                )
-                if feat is not None:
-                    out.append({"url": r.url, **feat})
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
-
-    return docs_with_entities.mapInPandas(run, schema=FULLTEXT_SCHEMA)
 
 
 def wordpiece_segments(words: DataFrame, word_col: str = "word") -> DataFrame:

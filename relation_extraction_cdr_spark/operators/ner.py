@@ -9,6 +9,8 @@ Semantics reproduced:
 - truncate to 512 ids, then cut BACK to just after the last ``[/e]``
   marker id inside the window (W5, cdr_dataset.py:407-411) — a
   candidate span must never be half-truncated
+  (these three steps: features.marked_document, shared with the
+  is_full_sample featurizer)
 - one output row per marked span: the position of the span's FIRST
   inner token + the type label Chemical=0 / Disease=1
   (cdr_dataset.py:439-445)
@@ -25,8 +27,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.wordpiece import E_END_ID, E_START_ID, encode
-from .features import has_literal_marker
+from ..functions.wordpiece import E_START_ID
+from .features import marked_document
 
 NER_SCHEMA = (
     "url string, token_ids array<int>, entity_token_idx array<int>, "
@@ -36,45 +38,30 @@ NER_SCHEMA = (
 TYPE_LABELS = {"Chemical": 0, "Disease": 1}
 
 
-def ner_featurize_py(text: str, mentions: list[dict], max_len: int = 512) -> dict | None:
+def ner_featurize_py(text: str, mentions: list[dict]) -> dict | None:
     """mentions: [{'start','end','type'}]; returns token_ids +
     per-marked-span first-token index + type labels, or None when no
-    span survives or the text holds a literal marker (a span with no
-    mention would shift every later label)."""
-    if has_literal_marker(text):
+    span survives or ``features.marked_document`` drops the text."""
+    marked = marked_document(
+        text, [(int(m["start"]), int(m["end"]), m["type"]) for m in mentions]
+    )
+    if marked is None:
         return None
-    ms = sorted(mentions, key=lambda m: int(m["start"]))
-    t = text
-    for m in reversed(ms):
-        s, e = int(m["start"]), int(m["end"])
-        t = t[:s] + " [E] " + t[s:e] + " [/E] " + t[e:]
-    ids = encode(t)
-    if len(ids) > max_len:
-        ids = ids[:max_len]
-        # cut back to just after the last [/e] in the window (W5)
-        last_end = -1
-        for i, x in enumerate(ids):
-            if x == E_END_ID:
-                last_end = i
-        if last_end < 0:
-            return None
-        ids = ids[: last_end + 1]
+    ids, types = marked
     token_idx: list[int] = []
     labels: list[int] = []
     span = 0
-    i = 0
-    while i < len(ids):
-        if ids[i] == E_START_ID and i + 1 < len(ids):
+    for i, x in enumerate(ids):
+        if x == E_START_ID and i + 1 < len(ids):
             token_idx.append(i + 1)  # first inner token of the span
-            labels.append(TYPE_LABELS.get(ms[span]["type"], -1) if span < len(ms) else -1)
+            labels.append(TYPE_LABELS.get(types[span], -1) if span < len(types) else -1)
             span += 1
-        i += 1
     if not token_idx:
         return None
     return dict(token_ids=ids, entity_token_idx=token_idx, labels=labels)
 
 
-def ner_features(docs_with_mentions: DataFrame, max_len: int = 512) -> DataFrame:
+def ner_features(docs_with_mentions: DataFrame) -> DataFrame:
     """Input: (url, text, mentions array<struct<start,end,type>>);
     output: NER_SCHEMA rows."""
 
@@ -83,11 +70,7 @@ def ner_features(docs_with_mentions: DataFrame, max_len: int = 512) -> DataFrame
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                feat = ner_featurize_py(
-                    r.text,
-                    [dict(start=m["start"], end=m["end"], type=m["type"]) for m in r.mentions],
-                    max_len=max_len,
-                )
+                feat = ner_featurize_py(r.text, r.mentions)
                 if feat is not None:
                     out.append({"url": r.url, **feat})
             yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)

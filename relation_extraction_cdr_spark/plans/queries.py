@@ -4237,37 +4237,26 @@ def _kernel_cfg():
 
 
 def _doc_fulltext(spark, sf_dir):
-    """Document-level (is_full_sample) features over the corpus:
-    make_example_fulltext semantics (operators/features.fulltext_features)
-    with entities from the gazetteer mentions and gold from the cooc
-    window.  Persisted — q87/q89 share the subtree."""
+    """Document-level (is_full_sample) features over the corpus: the
+    fused stage's own featurizer (scoring.scorer.document_fulltext, the
+    gazetteer inventory per document) with gold from the cooc window.
+    Persisted — q87/q89/q91 share the subtree."""
     from pyspark import StorageLevel
 
-    from ..operators.features import fulltext_features
+    from ..operators.mentions import gazetteer_dict
+    from ..scoring.scorer import document_fulltext
+    from .pipeline import with_gold_pairs
 
-    m = _doc_mentions(spark, sf_dir)
-    ents = (
-        m.groupBy("url", "mesh_id", "type")
-        .agg(F.array_sort(F.collect_list(F.struct("start", "end"))).alias("positions"))
-        .groupBy("url")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("mesh_id", "type", "positions"))
-            ).alias("entities")
-        )
-    )
-    gold = _doc_cooc(spark, sf_dir).groupBy("url").agg(
-        F.array_sort(F.collect_list(F.struct("chem_mesh", "dis_mesh"))).alias(
-            "gold_pairs"
-        )
-    )
-    t = _t(spark, sf_dir, "documents")
-    docs = t["documents"].select(
+    gd = gazetteer_dict(_doc_gazetteer(spark))
+    docs = _t(spark, sf_dir, "documents")["documents"].select(
         F.col("doc_id").cast("string").alias("url"),
         F.lower(F.col("text")).alias("text"),
     )
-    payload = docs.join(ents, "url").join(gold, "url", "left")
-    return fulltext_features(payload).persist(StorageLevel.MEMORY_AND_DISK)
+    return document_fulltext(
+        with_gold_pairs(docs, _doc_cooc(spark, sf_dir)),
+        gd,
+        max(t.count(" ") + 1 for t in gd),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 @register("q87_fullsample_logits")  # rows-only: numpy encoder not SQL-expressible
@@ -4277,6 +4266,9 @@ def q87(spark, sf_dir):
     score_fulltext): ONE encoder pass per document scores ALL its
     (chem, dis) pairs — the engine's preferred batching shape — and the
     OUTPUT IS THE LOGITS THEMSELVES, quantized to exact micro-units.
+    Its FULLTEXT rows (``_doc_fulltext``) come from the fused stage's
+    own featurizer, scorer.document_fulltext: pairs in the inventory's
+    first-mention order, chem-major.
     Parity of the same kernel (scorer.fullsample_pooled + electra.
     pair_head) vs the literal port is pinned in tests/test_electra.py;
     the Spark twin (distributed == local single-doc kernel) by
@@ -4503,8 +4495,9 @@ def q92(spark, sf_dir):
 def q91(spark, sf_dir):
     """Distributed head training at the levi trainer's DOCUMENT
     granularity (reference cdr_trainer_levi.py:316-390), end-to-end
-    over the corpus: documents -> gazetteer mentions -> fulltext
-    (is_full_sample) features -> ONE frozen-encoder pass per document
+    over the corpus: documents -> fulltext (is_full_sample) features
+    from the fused stage's inventory (``_doc_fulltext``:
+    scorer.document_fulltext) -> ONE frozen-encoder pass per document
     pooling ALL its (chem, dis) pairs (scoring/train.
     pool_fulltext_features over scorer.fullsample_pooled, the exact
     pooling of electra_model.py:626-641) -> 3 full-batch epochs of the

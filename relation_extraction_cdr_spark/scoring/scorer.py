@@ -44,6 +44,7 @@ from ..operators.candidates import levi_rejected_py
 from ..operators.evidence import DocIndex, select_evidence_py
 from ..operators.features import (
     FEATURES_SCHEMA,
+    FULLTEXT_SCHEMA,
     featurize_py,
     fulltext_featurize_py,
 )
@@ -244,7 +245,7 @@ def score_fulltext(
     npz_path: str | None = None,
 ) -> DataFrame:
     """Document-level exact-architecture scoring: FULLTEXT_SCHEMA rows
-    (operators/features.fulltext_features) -> one row per REAL pair with
+    (``document_fulltext``) -> one row per REAL pair with
     the is_full_sample logits, via ``_fullsample_margins`` (bit-identical
     at any partitioning).  Weights are lazy per executor from (config,
     seed) or the .npz plug point."""
@@ -387,6 +388,14 @@ def score_document(
     return rows, (None if ft is None else {"url": url, **ft})
 
 
+def _gold_pairs(gold_pairs) -> list[tuple[str, str]]:
+    """One payload row's gold_pairs array<struct<chem_mesh, dis_mesh>>
+    (NULL: no gold) as (chem, dis) tuples."""
+    if gold_pairs is None:
+        return []
+    return [(g["chem_mesh"], g["dis_mesh"]) for g in gold_pairs]
+
+
 def _batch_documents(
     pdf: pd.DataFrame,
     gazetteer: dict[str, list[tuple[str, str]]],
@@ -402,14 +411,9 @@ def _batch_documents(
     feat_rows: list[dict] = []
     fulltext_rows: list[dict] = []
     for r in pdf.itertuples(index=False):
-        gold = (
-            [(g["chem_mesh"], g["dis_mesh"]) for g in r.gold_pairs]
-            if r.gold_pairs is not None
-            else []
-        )
         rows, ft = score_document(
-            r.url, r.text, gold, gazetteer, max_term_words, tree_map,
-            sentence_splitter, fulltext=fulltext,
+            r.url, r.text, _gold_pairs(r.gold_pairs), gazetteer,
+            max_term_words, tree_map, sentence_splitter, fulltext=fulltext,
         )
         feat_rows += rows
         if ft is not None:
@@ -440,6 +444,38 @@ def document_features(
             yield pd.DataFrame(rows, columns=cols)
 
     return doc_payload.mapInPandas(run, schema=FEATURES_SCHEMA)
+
+
+def document_fulltext(
+    doc_payload: DataFrame,
+    gazetteer: dict[str, list[tuple[str, str]]],
+    max_term_words: int,
+) -> DataFrame:
+    """The FULLTEXT_SCHEMA rows ``fused_score_docs`` encodes, one per
+    document with both entity types: per (url, text, gold_pairs) row
+    (plans.pipeline.with_gold_pairs) the call ``score_document`` makes
+    with ``fulltext`` — ``fulltext_featurize_py`` on the inventory, so
+    entities come in first-mention order, each typed by its last
+    mention — in one narrow mapInPandas stage.  No pair loop: these rows
+    feed the document-level queries (q87, q89, q91), which would throw
+    the pairs' evidence away."""
+    cols = [c.split(" ")[0] for c in FULLTEXT_SCHEMA.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                if not r.text:
+                    continue
+                ents = entity_inventory_py(
+                    detect_mentions_py(r.text, gazetteer, max_term_words)
+                )
+                ft = fulltext_featurize_py(r.text, ents, _gold_pairs(r.gold_pairs))
+                if ft is not None:
+                    rows.append({"url": r.url, **ft})
+            yield pd.DataFrame(rows, columns=cols)
+
+    return doc_payload.mapInPandas(run, schema=FULLTEXT_SCHEMA)
 
 
 def fused_score_docs(

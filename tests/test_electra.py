@@ -382,19 +382,18 @@ def test_score_fulltext_spark_matches_local_twin(spark, fixtures, mesh):
     (scorer._fullsample_margins) run locally one document at a time:
     one row per real pair, margins equal to the single-doc forward
     (padding differences bounded by float32 GEMM noise)."""
-    from relation_extraction_cdr_spark.operators.features import fulltext_features
-    from relation_extraction_cdr_spark.operators.mentions import detect_mentions
     from relation_extraction_cdr_spark.plans.pipeline import (
         _mesh_artifacts,
         extracted_docs,
+        with_gold_pairs,
     )
     from relation_extraction_cdr_spark.scoring.scorer import (
         _fullsample_margins,
+        document_fulltext,
         score_fulltext,
     )
 
     import pandas as pd
-    import pyspark.sql.functions as F
 
     cfg = E.ElectraConfig(
         vocab_size=30524, embedding_size=32, hidden_size=32,
@@ -402,19 +401,10 @@ def test_score_fulltext_spark_matches_local_twin(spark, fixtures, mesh):
         max_position_embeddings=512,
     )
     pages, _, gold = fixtures
-    docs = extracted_docs(pages.limit(10))
-    gaz, _, _ = _mesh_artifacts(mesh, "type")
-    m = detect_mentions(docs, gaz)
-    ents = (
-        m.groupBy("url", "mesh_id", "type")
-        .agg(F.array_sort(F.collect_list(F.struct("start", "end"))).alias("positions"))
-        .groupBy("url")
-        .agg(F.array_sort(F.collect_list(F.struct("mesh_id", "type", "positions"))).alias("entities"))
+    _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+    ft = document_fulltext(
+        with_gold_pairs(extracted_docs(pages.limit(10)), gold), gd, max_words
     )
-    g = gold.groupBy("url").agg(
-        F.array_sort(F.collect_list(F.struct("chem_mesh", "dis_mesh"))).alias("gold_pairs")
-    )
-    ft = fulltext_features(docs.join(ents, "url").join(g, "url", "left"))
     local_rows = ft.collect()
     assert local_rows
 
@@ -598,25 +588,22 @@ def test_score_fulltext_batched_bit_identical(spark, fixtures, mesh):
     partition and under different partitionings — the q87/q89
     hash-stability contract for the equal-length-grouped batching
     path."""
-    from relation_extraction_cdr_spark.plans.pipeline import _mesh_artifacts, extracted_docs
-    from relation_extraction_cdr_spark.operators.features import fulltext_features
-    from relation_extraction_cdr_spark.operators.mentions import detect_mentions
-    from relation_extraction_cdr_spark.scoring.electra import ElectraConfig
-    from relation_extraction_cdr_spark.scoring.scorer import score_alps_3way, score_fulltext
-    import pyspark.sql.functions as F
-
-    pages, _, gold = fixtures
-    docs = extracted_docs(pages)
-    gaz, _gd, _mw = _mesh_artifacts(mesh, "type")
-    m = detect_mentions(docs, gaz)
-    ents = (
-        m.groupBy("url", "mesh_id", "type")
-        .agg(F.array_sort(F.collect_list(F.struct("start", "end"))).alias("positions"))
-        .groupBy("url")
-        .agg(F.collect_list(F.struct("mesh_id", "positions", "type")).alias("entities"))
+    from relation_extraction_cdr_spark.plans.pipeline import (
+        _mesh_artifacts,
+        extracted_docs,
+        with_gold_pairs,
     )
-    ft = fulltext_features(
-        docs.join(ents, "url").select("url", "text", "entities")
+    from relation_extraction_cdr_spark.scoring.electra import ElectraConfig
+    from relation_extraction_cdr_spark.scoring.scorer import (
+        document_fulltext,
+        score_alps_3way,
+        score_fulltext,
+    )
+
+    pages, _, _ = fixtures
+    _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+    ft = document_fulltext(
+        with_gold_pairs(extracted_docs(pages), None), gd, max_words
     ).persist()
     cfg = ElectraConfig(
         vocab_size=30524, embedding_size=32, hidden_size=32,

@@ -79,16 +79,6 @@ def test_overlong_dropped():
     assert featurize_py(sent, 0, "C", "D", cs, cs + 7, ds, ds + 6) is None
 
 
-def test_use_entity_token_false_strips_markers():
-    sent = "lithium induced tremor."
-    feat = featurize_py(
-        sent, 0, "D910001", "D010001", 0, 7, 16, 22, use_entity_token=False
-    )
-    assert E_START_ID not in feat["token_ids"]
-    assert E_END_ID not in feat["token_ids"]
-    assert len(feat["token_ids"]) == len(feat["entity_mask"])
-
-
 def test_fulltext_dual_typed_mesh_keeps_labels_aligned():
     """A mesh_id supplied under BOTH entity types (possible only with
     caller-supplied entity lists — the reference inventory is a dict)
@@ -141,7 +131,7 @@ def test_literal_marker_in_text_drops_row():
         # the literal marker AFTER the fulltext window's last [/e] still
         # drops the document
         long_text = sent.replace(junk, "word " * 600 + junk)
-        assert fulltext_featurize_py(long_text, ents, [], max_len=64) is None
+        assert fulltext_featurize_py(long_text, ents, []) is None
     clean = "lithium induced tremor in rats."
     assert featurize_py(clean, 0, "D910001", "D010001", 0, 7, 16, 22) is not None
     assert fulltext_featurize_py(clean, ents, []) is not None
@@ -158,12 +148,9 @@ def test_label_encoding_matches_np_unique():
         for _ in range(rng.randint(0, 4)):
             ids += [7] * rng.randint(0, 3) + [E_START_ID, 9, E_END_ID]
             codes.append(rng.choice(pool))
-        for use_entity_token in (True, False):
-            ids_out, enc, lookup = _encoded_marker_mask(
-                "", ids, codes or ["O"], use_entity_token
-            )
-            values = {j: c for c, j in lookup.items()}
-            mask = [values[j] for j in enc]
-            classes, ref = np.unique(np.array(mask, dtype=object), return_inverse=True)
-            assert enc == ref.tolist() and list(lookup) == classes.tolist()
-            assert len(enc) == len(ids_out)
+        enc, lookup = _encoded_marker_mask(ids, codes or ["O"])
+        values = {j: c for c, j in lookup.items()}
+        mask = [values[j] for j in enc]
+        classes, ref = np.unique(np.array(mask, dtype=object), return_inverse=True)
+        assert enc == ref.tolist() and list(lookup) == classes.tolist()
+        assert len(enc) == len(ids)

@@ -3,9 +3,11 @@ exactly."""
 
 from __future__ import annotations
 
+import hashlib
 from datetime import datetime
 
 import pandas as pd
+import pytest
 
 from relation_extraction_cdr_spark import datagen
 from relation_extraction_cdr_spark.operators.candidates import (
@@ -27,9 +29,12 @@ from relation_extraction_cdr_spark.plans.pipeline import (
     extracted_docs,
     score_candidates,
     training_features,
+    with_gold_pairs,
 )
 from relation_extraction_cdr_spark.scoring.scorer import (
+    _gold_pairs,
     _score_rows,
+    document_fulltext,
     score_document,
 )
 from relation_extraction_cdr_spark.sources.mesh import tree_multimap
@@ -131,6 +136,44 @@ def test_fused_equals_modular(spark, fixtures, mesh):
     oracle = _rows(_score_rows(_relational_features(pages, mesh, gold)))
     assert [r[1:4] + r[5:6] for r in oracle] == [("DD", "DG", 0, 0), ("DD", "DX", 1, 1)]
     assert _rows(score_candidates(pages, mesh, gold=gold)) == oracle
+
+
+@pytest.mark.parametrize(
+    "backend, digest",
+    [("stub", "c480f58a3317dcb8"), ("electra", "3ebcf2428b63fbcd")],
+)
+def test_fused_output_pinned(spark, fixtures, mesh, backend, digest):
+    """The fused pipeline's scored rows on the 60-doc fixture, per
+    scorer backend, as one digest: the first 16 hex digits of the
+    sha256 of ``repr`` of the sorted row tuples.  A change that moves
+    any row, label, decision or probability bit moves the digest."""
+    pages, _, gold = fixtures
+    rows = score_candidates(pages, mesh, gold=gold, scorer_backend=backend).collect()
+    assert len(rows) == 117
+    got = hashlib.sha256(repr(sorted(tuple(r) for r in rows)).encode()).hexdigest()
+    assert got[:16] == digest
+
+
+def test_document_fulltext_is_the_fused_kernel(spark, fixtures, mesh):
+    """document_fulltext emits, per document, exactly the FULLTEXT row
+    score_document builds for the electra backend (the same inventory),
+    including the dual-typed page, whose DX is a Disease by its last
+    mention."""
+    pages, _, gold = fixtures
+    for p, m, g in ((pages, mesh, gold), _dual_typed_inputs(spark)):
+        _gaz, gd, max_words = _mesh_artifacts(m, "type")
+        payload = with_gold_pairs(extracted_docs(p), g)
+        expect = {}
+        for r in payload.collect():
+            _, ft = score_document(
+                r["url"], r["text"], _gold_pairs(r["gold_pairs"]), gd, max_words,
+                {}, fulltext=True,
+            )
+            if ft is not None:
+                expect[r["url"]] = ft
+        got = {r["url"]: r.asDict() for r in document_fulltext(payload, gd, max_words).collect()}
+        assert got == expect and got
+    assert (got[DUAL_URL]["chem_meshes"], got[DUAL_URL]["dis_meshes"]) == (["DD"], ["DX", "DG"])
 
 
 def _gazetteer(mesh_rows):

@@ -46,9 +46,7 @@ def sentence_with_spans(draw):
 @given(sentence_with_spans())
 def test_featurize_mask_aligns_and_strips_clean(case):
     sent, (cs, ce), (ds, de) = case
-    row = featurize_py(
-        sent, 0, "C1", "D1", cs, ce, ds, de, use_entity_token=True, max_len=512
-    )
+    row = featurize_py(sent, 0, "C1", "D1", cs, ce, ds, de)
     assert row is not None
     ids, mask = row["token_ids"], row["entity_mask"]
     # the reference's own invariant (cdr_dataset.py:149-151)

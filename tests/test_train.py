@@ -369,46 +369,26 @@ class TestPoolFeatures:
         doc-level rows is bit-identical across parallelism — the same
         allreduce contract as the sentence-level path."""
         import pandas as pd
-        import pyspark.sql.functions as F
 
-        from relation_extraction_cdr_spark.operators.features import (
-            fulltext_features,
-        )
-        from relation_extraction_cdr_spark.operators.mentions import detect_mentions
         from relation_extraction_cdr_spark.plans.pipeline import (
             _mesh_artifacts,
             extracted_docs,
+            with_gold_pairs,
         )
         from relation_extraction_cdr_spark.scoring.electra import ElectraWeights
-        from relation_extraction_cdr_spark.scoring.scorer import fullsample_pooled
+        from relation_extraction_cdr_spark.scoring.scorer import (
+            document_fulltext,
+            fullsample_pooled,
+        )
         from relation_extraction_cdr_spark.scoring.train import (
             pool_fulltext_features,
         )
 
         pages, _, gold = fixtures
-        docs = extracted_docs(pages.limit(10))
-        gaz, _, _ = _mesh_artifacts(mesh, "type")
-        m = detect_mentions(docs, gaz)
-        ents = (
-            m.groupBy("url", "mesh_id", "type")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("start", "end"))
-                ).alias("positions")
-            )
-            .groupBy("url")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("mesh_id", "type", "positions"))
-                ).alias("entities")
-            )
+        _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+        ft = document_fulltext(
+            with_gold_pairs(extracted_docs(pages.limit(10)), gold), gd, max_words
         )
-        g = gold.groupBy("url").agg(
-            F.array_sort(
-                F.collect_list(F.struct("chem_mesh", "dis_mesh"))
-            ).alias("gold_pairs")
-        )
-        ft = fulltext_features(docs.join(ents, "url").join(g, "url", "left"))
         local = ft.collect()
         assert local
 
@@ -443,24 +423,17 @@ class TestPoolFeatures:
         partitioning or Arrow-chunk layout.  This is the property that lets the q93
         lifecycle oracle pin exact integers regardless of how the
         driver partitions the features frame."""
-        import pyspark.sql.functions as F
-
-        from relation_extraction_cdr_spark.operators.features import (
-            fulltext_features,
-        )
-        from relation_extraction_cdr_spark.operators.mentions import detect_mentions
         from relation_extraction_cdr_spark.plans.pipeline import (
             _mesh_artifacts,
             extracted_docs,
+            with_gold_pairs,
         )
+        from relation_extraction_cdr_spark.scoring.scorer import document_fulltext
         from relation_extraction_cdr_spark.scoring.train import (
             pool_fulltext_features,
         )
 
         pages, _, gold = fixtures
-        docs = extracted_docs(pages.limit(10))
-        gaz, _, _ = _mesh_artifacts(mesh, "type")
-        m = detect_mentions(docs, gaz)
         feats = training_features(pages.limit(10), mesh, gold)
 
         def as_map(rows):
@@ -485,26 +458,10 @@ class TestPoolFeatures:
                 assert lab == base[k][0]
                 assert np.array_equal(feat, base[k][1]), k
 
-        ents = (
-            m.groupBy("url", "mesh_id", "type")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("start", "end"))
-                ).alias("positions")
-            )
-            .groupBy("url")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("mesh_id", "type", "positions"))
-                ).alias("entities")
-            )
+        _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+        ft = document_fulltext(
+            with_gold_pairs(extracted_docs(pages.limit(10)), gold), gd, max_words
         )
-        g = gold.groupBy("url").agg(
-            F.array_sort(
-                F.collect_list(F.struct("chem_mesh", "dis_mesh"))
-            ).alias("gold_pairs")
-        )
-        ft = fulltext_features(docs.join(ents, "url").join(g, "url", "left"))
         base_ft = as_map(
             pool_fulltext_features(ft.coalesce(1), config=tiny_cfg, seed=7).collect()
         )
