@@ -424,7 +424,7 @@ WAV_MAGIC = b"RIFF"
 # G.711 companding (µ-law format code 7, a-law code 6), pure numpy.
 # Table-driven both ways; tests pin byte-exact parity with the stdlib
 # audioop implementation across the full 8-bit / 16-bit domains.
-_ULAW_BIAS, _G711_CLIP = 0x84, 32635
+_ULAW_BIAS = 0x84
 
 
 def _g711_tables() -> tuple[np.ndarray, np.ndarray]:

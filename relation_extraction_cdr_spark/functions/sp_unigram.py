@@ -1,14 +1,12 @@
-"""SentencePiece unigram encoder (the reference's ALPS/Japanese tokenizer).
+"""SentencePiece unigram segmentation (the reference's ALPS/Japanese
+tokenizer), the per-word kernel of q61 (operators.features.sp_segments).
 
 The reference tokenizes ALPS (Japanese) text with the wiki-ja
-SentencePiece unigram model, through two equivalent wrappers:
-``models/tokenization.py:155-194`` (FullTokenizer: lower() →
-``sp.EncodeAsPieces`` → ids from the .vocab TSV line order, unk=0) and
-``alps_trainer.py:74`` (``XLNetTokenizer.from_pretrained(
-'model_sentence_piece/wiki-ja.model')``).  The container has no
-``sentencepiece`` package, so this module implements the unigram
-encoding algorithm itself (Kudo 2018, "Subword Regularization"; the
-``EncodeAsPieces`` Viterbi path of sentencepiece's public
+SentencePiece unigram model (``models/tokenization.py:155-194``,
+FullTokenizer: lower() → ``sp.EncodeAsPieces`` → ids from the .vocab
+TSV line order, unk=0).  No ``sentencepiece`` package is a dependency,
+so this module implements the unigram encoding algorithm itself (Kudo
+2018, "Subword Regularization"; the ``EncodeAsPieces`` Viterbi path of sentencepiece's public
 ``unigram_model.cc``) over the piece/score table extracted from the
 shipped model protobuf (data/sp_wiki_ja.tsv, produced by
 scripts/extract_sp_model.py — which also verifies that model piece
@@ -19,25 +17,21 @@ Algorithm, per whitespace-delimited token (pieces never contain an
 internal ``▁`` in this model — verified at extraction — so per-word
 lattices are exactly equivalent to the whole-sentence lattice):
 
-1. normalize: NFKC + collapse whitespace runs + strip (an approximation
-   of the model's nmt_nfkc precompiled charsmap; divergence is possible
-   on exotic control characters, none of which survive normalization
-   anyway), lower() first per FullTokenizer's do_lower_case=True;
-2. dummy-prefix: each word becomes ``▁word`` (add_dummy_prefix +
-   whitespace escaping);
-3. lattice: every vocab piece of type NORMAL matching a substring is a
+1. the caller hands each word in already normalized and ``▁``-prefixed
+   (add_dummy_prefix + whitespace escaping);
+2. lattice: every vocab piece of type NORMAL matching a substring is a
    node scored by its unigram log-prob; positions not covered by any
    single-character piece get a one-character ``<unk>`` node scored
    ``min_normal_score - 10.0`` (sentencepiece's kUnkPenalty, with the
    has_single_node guard from unigram_model.cc Lattice population);
-4. Viterbi: max-total-score segmentation.  Score ties (exactly equal
+3. Viterbi: max-total-score segmentation.  Score ties (exactly equal
    float64 sums of different piece sets) are broken deterministically:
    fewer pieces first, then lexicographically smallest ids-CSV string —
    sentencepiece itself resolves such ties by lattice insertion order;
    with real-valued scores ties are measure-zero, and a fixed rule keeps
    this kernel bit-reproducible across engines (the DuckDB oracle
    implements the identical comparator);
-5. ids: piece → model index (== .vocab line, == load_vocab id), unknown
+4. ids: piece → model index (== .vocab line, == load_vocab id), unknown
    surface → 0 (models/tokenization.py:168: ``unk_info=0``).
 
 Pure deterministic module state loaded once per process; executors need
@@ -49,7 +43,6 @@ stages only.
 from __future__ import annotations
 
 import functools
-import unicodedata
 from pathlib import Path
 
 _SP_FILE = "sp_wiki_ja.tsv"
@@ -84,19 +77,13 @@ UNK_SCORE = MIN_SCORE - _UNK_PENALTY
 _SINGLE_CHARS = frozenset(p for p in PIECES if len(p) == 1)
 
 
-def normalize(text: str) -> str:
-    """FullTokenizer preprocessing: lower, then the nmt_nfkc
-    approximation (NFKC + whitespace collapse + strip)."""
-    return " ".join(unicodedata.normalize("NFKC", text.lower()).split())
-
-
 @functools.lru_cache(maxsize=1 << 17)
 def viterbi(word: str) -> tuple[tuple[str, ...], tuple[int, ...], float]:
     """Max-score unigram segmentation of one (already ▁-prefixed) word.
 
     Returns (piece surfaces, piece ids, total log-prob).  best[j] holds
     the winning (neg_cost, n_pieces, ids_csv, pieces, ids) prefix ending
-    at char j; comparison order IS the tie-break contract (step 4 of the
+    at char j; comparison order IS the tie-break contract (step 3 of the
     module docstring) — ids_csv is compared as an ASCII string, matching
     the DuckDB oracle's VARCHAR comparator byte for byte.
     """
@@ -141,24 +128,3 @@ def viterbi(word: str) -> tuple[tuple[str, ...], tuple[int, ...], float]:
                 best[i + 1] = cand
     cost, _, _, pcs, ids = best[n]  # type: ignore[misc]
     return pcs, ids, -cost
-
-
-def encode_as_pieces(text: str) -> list[str]:
-    """``FullTokenizer.tokenize(text)``: piece surfaces for the whole
-    text (unknown characters appear as their own surface, exactly like
-    sentencepiece's EncodeAsPieces)."""
-    out: list[str] = []
-    for w in normalize(text).split(" "):
-        if w:
-            out.extend(viterbi("▁" + w)[0])
-    return out
-
-
-def encode_as_ids(text: str) -> list[int]:
-    """``FullTokenizer.convert_tokens_to_ids(tokenize(text))`` — model
-    indices, unknown → 0."""
-    out: list[int] = []
-    for w in normalize(text).split(" "):
-        if w:
-            out.extend(viterbi("▁" + w)[1])
-    return out

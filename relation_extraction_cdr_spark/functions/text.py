@@ -8,12 +8,12 @@ Reference semantics reproduced (SURVEY.md §2.8, citations into
   sentence in the document: utils/text_utils.py:86 — a duplicated
   sentence is located at its first occurrence, so downstream span checks
   use those offsets.  Our ``split_sentences`` reproduces this exactly.
-- sentence tokenizer: the reference uses NLTK Punkt
-  (utils/text_utils.py:73).  NLTK is not a dependency of this engine; we
-  define a deterministic rule-based splitter (``SENT_BOUNDARY``) that is
-  the engine's contract, plus the vendored Punkt algorithm as the
-  fidelity alternative.  Both run inside the per-document kernel
-  (scoring.scorer.score_document), once per document.
+- sentence tokenizer: the reference uses NLTK sent_tokenize
+  (utils/text_utils.py:73).  NLTK is not a dependency of this engine;
+  the deterministic rule-based splitter ``split_sentences_py``
+  (``SENT_BOUNDARY`` plus an abbreviation guard) is the engine's one
+  sentence contract.  Every query, oracle and the per-document kernel
+  (scoring.scorer.score_document, once per document) use it.
 
 Design note (scale): ``extract_text``/``lower`` are pure JVM column
 expressions — they stay inside whole-stage codegen and never cross the
@@ -65,24 +65,6 @@ def split_sentences_py(text: str) -> list[dict]:
         pieces.append(rest)
     out = []
     for i, sent in enumerate(pieces):
-        start = text.find(sent)  # first-occurrence semantics (quirk F4)
-        out.append({"idx": i, "start": start, "end": start + len(sent), "text": sent})
-    return out
-
-
-def split_sentences_punkt_py(text: str, splitter=None) -> list[dict]:
-    """Punkt-equivalent splitter with the same output contract as
-    ``split_sentences_py`` (incl. the first-occurrence ``text.find``
-    offset quirk, F4).  Backed by the vendored Kiss & Strunk algorithm
-    (functions/punkt.py) — the fidelity path for reference parity with
-    nltk.sent_tokenize (text_utils.py:46,73,153); the regex rule above
-    remains the SQL-expressible engine contract for oracle queries."""
-    if text is None:
-        return []
-    from .punkt import sent_tokenize_punkt
-
-    out = []
-    for i, sent in enumerate(sent_tokenize_punkt(text, splitter)):
         start = text.find(sent)  # first-occurrence semantics (quirk F4)
         out.append({"idx": i, "start": start, "end": start + len(sent), "text": sent})
     return out

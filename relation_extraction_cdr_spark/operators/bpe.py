@@ -1,25 +1,15 @@
-"""Distributed BPE tokenizer training (corpus-scale vocabulary learning).
+"""BPE pair statistics (the inner loop of corpus-scale tokenizer
+learning, Sennrich et al. 2016), the kernels of q78_bpe_pair_stats.
 
-A training-data platform doesn't just apply tokenizers — it trains them
-on the corpus it curates (Sennrich et al. 2016).  The BPE loop is:
+One BPE training round tokenizes every word into characters, counts
+adjacent symbol pairs over the corpus weighted by word frequency, and
+merges the most frequent pair.  This module computes the counts of the
+first round; the top of that ranking is the next merge.
 
-  1. tokenize every word into characters;
-  2. count adjacent symbol pairs over the corpus (weighted by word
-     frequency);
-  3. merge the most frequent pair everywhere; repeat K times.
-
-Scale shape: step 2 is ONE explode + groupBy per round over the
-distinct-WORD dimension (the Zipf trick — the corpus collapses to
-(word, freq) once, and every later round works on vocabulary-sized
-data).  Step 3 is a pure JVM higher-order fold (F.aggregate) over the
-symbol arrays — no Python in the loop.  The driver carries only the
-winning pair per round (a few bytes); per-round localCheckpoint keeps
-lineage flat exactly like connected_components.
-
-Determinism: ties on count break by lexicographically smallest (a, b)
-pair — reference BPE implementations use dict order; a distributed
-trainer must pin this, and the literal-port parity tests use the same
-rule.
+Scale shape: ONE explode + groupBy over the distinct-WORD dimension
+(the Zipf trick — the corpus collapses to (word, freq) once, so the
+pair count works on vocabulary-sized data).  Pure JVM expressions, no
+Python.
 """
 
 from __future__ import annotations
@@ -65,61 +55,3 @@ def pair_counts(symbols: DataFrame) -> DataFrame:
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.sum("freq").alias("cnt"))
     )
-
-
-def apply_merge(symbols: DataFrame, a: str, b: str) -> DataFrame:
-    """Merge every left-to-right non-overlapping (a, b) occurrence into
-    the symbol a+b — a JVM-side fold over the array (F.aggregate), no
-    Python.  Left-to-right: 'a a a' with merge (a,a) becomes
-    '(aa) a', matching the sequential reference scan."""
-    merged = F.lit(a + b)
-    folded = F.aggregate(
-        "syms",
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (x == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-    return symbols.select("word", "freq", folded.alias("syms"))
-
-
-def train_bpe(
-    docs: DataFrame, n_merges: int, text_col: str = "text"
-) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Learn n_merges BPE merges over the corpus.
-
-    Returns (merges in order, final symbol table).  Stops early when no
-    pair remains.  The driver holds one (a, b, cnt) row per round —
-    never corpus data."""
-    symbols = to_symbols(word_freqs(docs, text_col)).localCheckpoint()
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        top = (
-            pair_counts(symbols)
-            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .head(1)
-        )
-        if not top:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merges.append((a, b))
-        symbols = apply_merge(symbols, a, b).localCheckpoint()
-    return merges, symbols
-
-
-def segment_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Apply learned merges to one word (inference-side helper; pure
-    Python, mirrors apply_merge's left-to-right scan)."""
-    syms = list(word[:-1]) + [word[-1] + "</w>"] if word else []
-    for a, b in merges:
-        out: list[str] = []
-        for s in syms:
-            if out and out[-1] == a and s == b:
-                out[-1] = a + b
-            else:
-                out.append(s)
-        syms = out
-    return syms

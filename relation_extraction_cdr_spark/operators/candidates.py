@@ -166,65 +166,3 @@ def levi_rejected_py(
         if hit:
             rejected.add((c, d))
     return rejected
-
-
-def candidate_pairs_3way(inventory: DataFrame, gold: DataFrame | None = None) -> DataFrame:
-    """ALPS 3-way candidate generation (J1 variant, alps_dataset.py:152-237):
-    per document, pairs of kinds (chem, dis), (other, dis), (other, chem)
-    over the Chemical/Disease/Other entity inventory.
-
-    Reference quirks reproduced:
-    - the triple nested loop emits NOTHING for a document missing any of
-      the three types (alps_dataset.py:152-160: the inner bodies are
-      unreachable unless all three lists are non-empty) — a per-doc
-      type-presence gate;
-    - symmetric dedup via check_pair_code (each unordered pair once per
-      kind; the loop would otherwise re-emit (chem, dis) for every
-      other_code) — the relational equi-joins generate each pair exactly
-      once, so the check collapses to a no-op;
-    - symmetric gold labeling: label=1 iff (a, b) OR (b, a) is a gold
-      pair (alps_dataset.py:168).
-
-    Returns (url, kind, e1, e2, label?); label only when gold given.
-    """
-    def side(t: str, alias: str) -> DataFrame:
-        return inventory.where(F.col("type") == t).select(
-            "url", F.col("mesh_id").alias(alias)
-        )
-
-    present = (
-        inventory.groupBy("url")
-        .agg(F.collect_set("type").alias("_types"))
-        .where(
-            F.array_contains("_types", "Chemical")
-            & F.array_contains("_types", "Disease")
-            & F.array_contains("_types", "Other")
-        )
-        .select("url")
-    )
-    chem, dis, oth = side("Chemical", "e1"), side("Disease", "e2"), side("Other", "e1")
-    kinds = (
-        chem.join(dis, "url").withColumn("kind", F.lit("chem_dis"))
-        .unionByName(oth.join(dis, "url").withColumn("kind", F.lit("other_dis")))
-        .unionByName(
-            oth.join(chem.withColumnRenamed("e1", "e2"), "url").withColumn(
-                "kind", F.lit("other_chem")
-            )
-        )
-        .join(present, "url", "left_semi")
-    )
-    if gold is None:
-        return kinds
-    g = gold.select(
-        "url",
-        F.least("chem_mesh", "dis_mesh").alias("_lo"),
-        F.greatest("chem_mesh", "dis_mesh").alias("_hi"),
-    ).distinct().withColumn("_g", F.lit(1))
-    labeled = (
-        kinds.withColumn("_lo", F.least("e1", "e2"))
-        .withColumn("_hi", F.greatest("e1", "e2"))
-        .join(g, ["url", "_lo", "_hi"], "left")
-        .withColumn("label", F.when(F.col("_g") == 1, 1).otherwise(0))
-        .drop("_lo", "_hi", "_g")
-    )
-    return labeled

@@ -28,6 +28,10 @@ Decision procedure reproduced exactly (including quirks):
    reference's whole-document mode is the document-level featurizer
    (features.fulltext_featurize_py).
 
+Sentences come from ``functions.text.split_sentences_py``, the
+engine's one splitter (the reference's NLTK sent_tokenize is not
+reproduced).
+
 Execution shape: Spark-free.  ``scoring.scorer.score_document`` builds
 one ``DocIndex`` per document and calls ``select_evidence_py`` once per
 candidate pair, inside the fused per-document stage — the document text
@@ -36,12 +40,7 @@ crosses the Arrow boundary once, not once per pair.
 
 from __future__ import annotations
 
-from ..functions.text import split_sentences_punkt_py, split_sentences_py
-
-# pluggable sentence splitters: 'regex' is the SQL-expressible engine
-# contract (oracle parity); 'punkt' is the vendored Kiss & Strunk
-# algorithm for nltk.sent_tokenize fidelity (text_utils.py:73)
-SPLITTERS = {"regex": split_sentences_py, "punkt": split_sentences_punkt_py}
+from ..functions.text import split_sentences_py
 
 
 def _token_distance(chem_code: str, chem_start: int, dis_code: str,
@@ -80,7 +79,6 @@ def select_evidence_py(
     label: int,
     sents: list[dict] | None = None,
     pos_index: dict[int, list[int]] | None = None,
-    splitter: str = "regex",
 ) -> dict | None:
     """One pair's evidence (``score_document`` calls it per pair).
 
@@ -92,7 +90,7 @@ def select_evidence_py(
     text_utils.py:149 list.index(min)).
     """
     if sents is None:
-        sents = SPLITTERS[splitter](text)
+        sents = split_sentences_py(text)
     by_idx = {s["idx"]: s for s in sents}
     if pos_index is None:
         pos_index = build_pos_index(
@@ -177,8 +175,8 @@ class DocIndex:
 
     __slots__ = ("sents", "idx")
 
-    def __init__(self, text: str, splitter: str = "regex"):
-        self.sents = SPLITTERS[splitter](text)
+    def __init__(self, text: str):
+        self.sents = split_sentences_py(text)
         self.idx: dict[int, list[int]] = {}
 
     def index_for(self, positions: list[int]) -> dict[int, list[int]]:

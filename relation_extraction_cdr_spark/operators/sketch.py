@@ -98,28 +98,6 @@ def _lane_expr(col, i: int, m: int):
     return F.conv(hex4, 16, 10).cast("long") % m
 
 
-def bloom_might_contain(col, words: list[int], m: int = DEFAULT_M, k: int = DEFAULT_K):
-    """Boolean column: all k lanes of ``col`` are set in the filter.
-
-    For hot paths prefer ``with_bloom_pass`` — it binds the lane
-    positions to projection columns so each md5 is computed once per
-    row; inlined here, word-index and shift both re-derive the lane."""
-    _check_m(m)
-    if len(words) != m // 32:
-        raise ValueError(f"words has {len(words)} entries, want {m // 32}")
-    arr = F.array(*[F.lit(w).cast("long") for w in words])
-    cond = F.lit(True)
-    for i in range(k):
-        p = _lane_expr(col, i, m)
-        # floor division explicitly: DuckDB CAST(float AS INT) rounds to
-        # nearest while Spark truncates — // on both sides instead
-        word = F.element_at(arr, F.floor(p / 32).cast("int") + 1)
-        # call_function: the DSL shiftright() only takes a literal shift
-        shifted = F.call_function("shiftright", word, (p % 32).cast("int"))
-        cond = cond & (shifted.bitwiseAND(F.lit(1)) == 1)
-    return cond
-
-
 def _lane_sql(expr: str, i: int, m: int) -> str:
     """SQL rendering of ``_lane_expr`` (DuckDB: nibble-trick hex->int,
     no conv())."""
@@ -153,7 +131,10 @@ def with_bloom_pass(
     cond = F.lit(True)
     for c in lane_cols:
         p = F.col(c)
+        # floor division explicitly: DuckDB CAST(float AS INT) rounds to
+        # nearest while Spark truncates — // on both sides instead
         word = F.element_at(arr, F.floor(p / 32).cast("int") + 1)
+        # call_function: the DSL shiftright() only takes a literal shift
         shifted = F.call_function("shiftright", word, (p % 32).cast("int"))
         cond = cond & (shifted.bitwiseAND(F.lit(1)) == 1)
     return bound.withColumn(out_col, cond).drop(*lane_cols)

@@ -201,7 +201,7 @@ def unrounded_decimal_quotients(df: DataFrame) -> list[str]:
 
 # Per-query expectations. Keys are query names from plans.queries; each
 # value is a dict of PlanFacts-field -> (op, bound) checks applied by
-# `audit_query`. Queries not listed get only the global invariant
+# `audit_facts`. Queries not listed get only the global invariant
 # (no cartesian product).
 EXPECTATIONS: dict[str, dict[str, tuple[str, int]]] = {
     # single wide agg: exactly one shuffle pre-AQE, map-side combine,
@@ -368,15 +368,11 @@ _OPS = {
 }
 
 
-def audit_query(name: str, df: DataFrame) -> list[str]:
-    """Return a list of human-readable violations (empty = plan is good)."""
-    return audit_facts(name, plan_facts(df))
-
-
 def audit_facts(name: str, facts: PlanFacts) -> list[str]:
-    """Violations for precomputed facts — callers that also display the
-    facts (scripts/explain_audit.py) pass them here so the physical plan
-    is compiled once per query, not twice."""
+    """Human-readable violations of ``facts`` (``plan_facts`` of the
+    query's DataFrame); empty = the plan is good.  Callers that also
+    display the facts (scripts/explain_audit.py) compile the physical
+    plan once per query."""
     violations: list[str] = []
     if facts.cartesian_products:
         violations.append(f"{name}: {facts.cartesian_products} CartesianProduct")

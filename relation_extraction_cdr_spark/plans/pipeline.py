@@ -48,12 +48,10 @@ HEAVY_DOC_CHARS = 20_000
 CHARS_PER_TASK = 1_000_000
 
 
-def extracted_docs(pages: DataFrame, lang: str | None = None) -> DataFrame:
+def extracted_docs(pages: DataFrame) -> DataFrame:
     """docs(url, text): html->text with lowercase normalization —
     byte-identical per url to the reference preprocessing
     (cdr_dataset.py:41-44)."""
-    if lang is not None:
-        pages = pages.where(F.col("lang") == lang)
     return pages.select(
         "url", extract_text(F.col("html"), F.col("text")).alias("text")
     )
@@ -65,10 +63,11 @@ def extracted_docs(pages: DataFrame, lang: str | None = None) -> DataFrame:
 # __eq__/__hash__, so the key is the mesh_tree object's identity.
 @functools.lru_cache(maxsize=1)
 def _mesh_artifacts(mesh_tree, mesh_type_col):
+    """(surface-form dict, longest term's word count) of the
+    ``mesh_tree`` gazetteer: what the per-document kernel needs."""
     from ..operators.mentions import gazetteer_dict
 
-    gaz = gazetteer(mesh_tree, type_col=mesh_type_col)
-    gd = gazetteer_dict(gaz)
+    gd = gazetteer_dict(gazetteer(mesh_tree, type_col=mesh_type_col))
     if not gd:
         raise ValueError(
             "empty gazetteer: no mesh rows produced a Chemical/Disease "
@@ -77,7 +76,7 @@ def _mesh_artifacts(mesh_tree, mesh_type_col):
             "None for the real 2017 MeSH tree (D*/C* branch letters)."
         )
     max_words = max(t.count(" ") + 1 for t in gd)
-    return gaz, gd, max_words
+    return gd, max_words
 
 
 def with_gold_pairs(docs: DataFrame, gold: DataFrame | None) -> DataFrame:
@@ -103,7 +102,7 @@ def training_features(
     fixture-shaped mesh table, ``type`` column), from the fused stage's
     own kernel (scoring.scorer.document_features): the feature source
     of the training queries q86 and q93."""
-    _gaz, gd, max_words = _mesh_artifacts(mesh_tree, "type")
+    gd, max_words = _mesh_artifacts(mesh_tree, "type")
     return document_features(
         with_gold_pairs(extracted_docs(pages), gold), gd, max_words
     )
@@ -127,7 +126,6 @@ def score_candidates(
     mesh_type_col: str | None = "type",
     scorer_backend: str = "stub",
     salt_partitions: int | None = None,
-    sentence_splitter: str = "regex",
 ) -> DataFrame:
     """pages -> scored pairs (one row per candidate with pred/prob).
 
@@ -163,7 +161,7 @@ def score_candidates(
     # empty-gazetteer fail-fast lives inside _mesh_artifacts: a silently
     # successful no-op run (zero mentions -> zero triples) is an
     # expensive nothing at corpus scale
-    _gaz, gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
+    gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
 
     docs = extracted_docs(pages)
     k = heavy_partitions(docs, salt_partitions) if salt_partitions else 0
@@ -194,7 +192,7 @@ def score_candidates(
     return fused_score_docs(
         payload, tree_map=tm,
         gazetteer=gd, max_term_words=max_words,
-        backend=scorer_backend, sentence_splitter=sentence_splitter,
+        backend=scorer_backend,
     )
 
 

@@ -335,7 +335,6 @@ def score_document(
     gazetteer: dict[str, list[tuple[str, str]]],
     max_term_words: int,
     tree_map: dict[str, list[str]],
-    sentence_splitter: str = "regex",
     fulltext: bool = False,
 ) -> tuple[list[dict], dict | None]:
     """One document's decision, Spark-free, in the reference's order
@@ -358,7 +357,7 @@ def score_document(
     keys = [(c["mesh_id"], d["mesh_id"]) for c, d in pairs]
     rejected = levi_rejected_py(keys, gold_pairs, tree_map) if gold_pairs else set()
     gold_set = set(gold_pairs)
-    doc = DocIndex(text, sentence_splitter)
+    doc = DocIndex(text)
     for (c, d), key in zip(pairs, keys):
         if key in rejected:
             continue
@@ -401,7 +400,6 @@ def _batch_documents(
     gazetteer: dict[str, list[tuple[str, str]]],
     max_term_words: int,
     tree_map: dict[str, list[str]],
-    sentence_splitter: str,
     fulltext: bool,
 ) -> tuple[list[dict], list[dict]]:
     """One Arrow batch of (url, text, gold_pairs) documents through
@@ -413,7 +411,7 @@ def _batch_documents(
     for r in pdf.itertuples(index=False):
         rows, ft = score_document(
             r.url, r.text, _gold_pairs(r.gold_pairs), gazetteer,
-            max_term_words, tree_map, sentence_splitter, fulltext=fulltext,
+            max_term_words, tree_map, fulltext=fulltext,
         )
         feat_rows += rows
         if ft is not None:
@@ -438,9 +436,7 @@ def document_features(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows, _ = _batch_documents(
-                pdf, gazetteer, max_term_words, {}, "regex", False
-            )
+            rows, _ = _batch_documents(pdf, gazetteer, max_term_words, {}, False)
             yield pd.DataFrame(rows, columns=cols)
 
     return doc_payload.mapInPandas(run, schema=FEATURES_SCHEMA)
@@ -484,7 +480,6 @@ def fused_score_docs(
     max_term_words: int,
     tree_map: dict[str, list[str]],
     backend: str = "stub",
-    sentence_splitter: str = "regex",
 ) -> DataFrame:
     """Doc-level fused stage: ``score_document`` (mentions +
     ``entity_inventory_py`` + pairs + Levi filter + evidence + featurize)
@@ -523,8 +518,7 @@ def fused_score_docs(
             w = resolve_weights(DEFAULT_CONFIG, seed=0)
         for pdf in batches:
             feat_rows, fulltext_rows = _batch_documents(
-                pdf, gazetteer, max_term_words, tree_map, sentence_splitter,
-                use_electra,
+                pdf, gazetteer, max_term_words, tree_map, use_electra
             )
             fdf = pd.DataFrame(feat_rows)
             if use_electra and feat_rows:

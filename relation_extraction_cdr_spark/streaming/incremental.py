@@ -142,8 +142,8 @@ def stream_pages(
     """Structured Streaming variant: continuously arriving page files →
     triples; the batch plan is reused verbatim inside foreachBatch, and
     ``pipeline_kwargs`` forward to score_candidates exactly like
-    run_resumable (scorer_backend, salt_partitions, sentence_splitter,
-    ...).
+    run_resumable (gold, mesh_type_col, scorer_backend,
+    salt_partitions).
 
     Exactly-once OUTPUT: foreachBatch is an at-least-once contract (a
     crash between the sink write and the checkpoint commit replays the

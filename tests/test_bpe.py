@@ -1,46 +1,29 @@
-"""Distributed BPE training vs a literal single-process reference
-implementation (Sennrich et al. 2016 learn_bpe shape): identical merge
-sequences, identical final segmentations."""
+"""q78's BPE pair statistics vs a literal single-process reference
+(the first round of a Sennrich et al. 2016 learn_bpe loop): identical
+frequency-weighted adjacent-pair counts."""
 
 from __future__ import annotations
 
 from collections import Counter
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from relation_extraction_cdr_spark.operators import bpe as B
 
 
-def _reference_bpe(word_freqs: dict[str, int], n_merges: int):
-    """Plain-Python BPE trainer with the same (count desc, pair lex asc)
-    tie-break — the oracle the distributed trainer must match."""
-    vocab = {
-        tuple(list(w[:-1]) + [w[-1] + "</w>"]): f for w, f in word_freqs.items() if w
-    }
-    merges = []
-    for _ in range(n_merges):
-        pairs: Counter = Counter()
-        for syms, f in vocab.items():
-            for x, y in zip(syms, syms[1:]):
-                pairs[(x, y)] += f
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        a, b = best
-        new_vocab = {}
-        for syms, f in vocab.items():
-            out = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = a + b
-                else:
-                    out.append(s)
-            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + f
-        vocab = new_vocab
-    return merges, vocab
+def _reference_pair_counts(word_freqs: dict[str, int]) -> Counter:
+    """Plain-Python first BPE round: every word as characters with the
+    </w> end-of-word marker on the last one, adjacent pairs counted with
+    the word's frequency — the oracle of q78's kernels."""
+    pairs: Counter = Counter()
+    for w, f in word_freqs.items():
+        if not w:
+            continue
+        syms = list(w[:-1]) + [w[-1] + "</w>"]
+        for x, y in zip(syms, syms[1:]):
+            pairs[(x, y)] += f
+    return pairs
 
 
 CORPUS = [
@@ -59,23 +42,17 @@ def _freqs(rows):
     return dict(c)
 
 
-def test_train_bpe_matches_reference(spark):
-    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    merges, symbols = B.train_bpe(docs, n_merges=8)
-    ref_merges, _ = _reference_bpe(_freqs(CORPUS), 8)
-    assert merges == ref_merges
-    # final distributed symbol table == reference segmentation per word
-    got = {r["word"]: tuple(r["syms"]) for r in symbols.collect()}
-    for w in got:
-        assert got[w] == tuple(B.segment_word(w, merges)), w
+def _pair_counts(docs) -> Counter:
+    rows = B.pair_counts(B.to_symbols(B.word_freqs(docs))).collect()
+    return Counter({(r["a"], r["b"]): r["cnt"] for r in rows})
 
 
-def test_segment_word_mirrors_apply_merge(spark):
+def test_pair_counts_match_reference(spark):
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    merges, symbols = B.train_bpe(docs, n_merges=5)
-    got = {r["word"]: list(r["syms"]) for r in symbols.collect()}
-    for w, syms in got.items():
-        assert B.segment_word(w, merges) == syms
+    got = _pair_counts(docs)
+    assert got == _reference_pair_counts(_freqs(CORPUS))
+    # the top of the ranking is the reference's first merge
+    assert min(got.items(), key=lambda kv: (-kv[1], kv[0]))[0] == ("l", "o")
 
 
 @settings(max_examples=30, deadline=None)
@@ -84,16 +61,12 @@ def test_segment_word_mirrors_apply_merge(spark):
         st.text(alphabet="abcde", min_size=1, max_size=6), min_size=1, max_size=12
     )
 )
-def test_train_bpe_property(spark, words):
-    docs = spark.createDataFrame(
-        [(0, " ".join(words))], "doc_id long, text string"
-    )
-    merges, _ = B.train_bpe(docs, n_merges=4)
-    ref_merges, _ = _reference_bpe(_freqs([(0, " ".join(words))]), 4)
-    assert merges == ref_merges
+def test_pair_counts_property(spark, words):
+    rows = [(0, " ".join(words))]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    assert _pair_counts(docs) == _reference_pair_counts(_freqs(rows))
 
 
-def test_train_bpe_empty_corpus(spark):
+def test_pair_counts_empty_corpus(spark):
     docs = spark.createDataFrame([(0, "")], "doc_id long, text string")
-    merges, symbols = B.train_bpe(docs, n_merges=3)
-    assert merges == [] and symbols.count() == 0
+    assert _pair_counts(docs) == Counter()

@@ -196,61 +196,3 @@ def test_levi_property_random(spark):
         for r in levi_reject(pairs_df, gold_df, tree_df).collect()
     }
     assert got_rej == expect_rej
-
-
-def test_candidate_pairs_3way_matches_reference_loop(spark):
-    """ALPS 3-way generation vs a literal Python port of the reference's
-    triple loop (alps_dataset.py:152-237), including the all-three-types
-    gate and symmetric labeling."""
-    inv_rows = [
-        # doc a: full 3-type inventory
-        ("a", "C1", "Chemical"), ("a", "C2", "Chemical"),
-        ("a", "D1", "Disease"), ("a", "O1", "Other"),
-        # doc b: NO Other -> the reference triple loop emits nothing
-        ("b", "C1", "Chemical"), ("b", "D1", "Disease"),
-    ]
-    inv = spark.createDataFrame(inv_rows, "url string, mesh_id string, type string")
-    gold = spark.createDataFrame(
-        [("a", "C1", "D1"), ("a", "O1", "C2")],  # second is reversed vs kind order
-        "url string, chem_mesh string, dis_mesh string",
-    )
-
-    # literal reference port
-    def ref_pairs(ents, answers):
-        chems = [e for e, t in ents if t == "Chemical"]
-        diss = [e for e, t in ents if t == "Disease"]
-        oths = [e for e, t in ents if t == "Other"]
-        out, seen = [], set()
-        for c in chems:
-            for d in diss:
-                for o in oths:
-                    if (c, d) not in seen and (d, c) not in seen:
-                        seen.add((c, d))
-                        lab = 1 if (c, d) in answers or (d, c) in answers else 0
-                        out.append(("chem_dis", c, d, lab))
-                    if (o, d) not in seen:
-                        seen.add((o, d))
-                        lab = 1 if (o, d) in answers or (d, o) in answers else 0
-                        out.append(("other_dis", o, d, lab))
-                    if (o, c) not in seen and (c, o) not in seen:
-                        seen.add((o, c))
-                        lab = 1 if (o, c) in answers or (c, o) in answers else 0
-                        out.append(("other_chem", o, c, lab))
-        return out
-
-    expect = set()
-    for url, ents, answers in [
-        ("a", [("C1", "Chemical"), ("C2", "Chemical"), ("D1", "Disease"), ("O1", "Other")],
-         {("C1", "D1"), ("O1", "C2")}),
-        ("b", [("C1", "Chemical"), ("D1", "Disease")], set()),
-    ]:
-        for kind, e1, e2, lab in ref_pairs(ents, answers):
-            expect.add((url, kind, e1, e2, lab))
-
-    from relation_extraction_cdr_spark.operators.candidates import candidate_pairs_3way
-
-    got = {
-        (r["url"], r["kind"], r["e1"], r["e2"], r["label"])
-        for r in candidate_pairs_3way(inv, gold).collect()
-    }
-    assert got == expect

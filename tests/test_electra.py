@@ -401,7 +401,7 @@ def test_score_fulltext_spark_matches_local_twin(spark, fixtures, mesh):
         max_position_embeddings=512,
     )
     pages, _, gold = fixtures
-    _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+    gd, max_words = _mesh_artifacts(mesh, "type")
     ft = document_fulltext(
         with_gold_pairs(extracted_docs(pages.limit(10)), gold), gd, max_words
     )
@@ -601,7 +601,7 @@ def test_score_fulltext_batched_bit_identical(spark, fixtures, mesh):
     )
 
     pages, _, _ = fixtures
-    _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+    gd, max_words = _mesh_artifacts(mesh, "type")
     ft = document_fulltext(
         with_gold_pairs(extracted_docs(pages), None), gd, max_words
     ).persist()

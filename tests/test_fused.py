@@ -37,7 +37,7 @@ from relation_extraction_cdr_spark.scoring.scorer import (
     document_fulltext,
     score_document,
 )
-from relation_extraction_cdr_spark.sources.mesh import tree_multimap
+from relation_extraction_cdr_spark.sources.mesh import gazetteer, tree_multimap
 
 FEATURE_COLS = [c.split(" ")[0] for c in FEATURES_SCHEMA.split(", ")]
 
@@ -77,7 +77,7 @@ def _relational_features(pages, mesh, gold, levi=True):
     evidence kernel with a fresh sentence index and featurize_py.
     ``_score_rows`` over it is the stub decision."""
     docs = extracted_docs(pages)
-    gaz, _, _ = _mesh_artifacts(mesh, "type")
+    gaz = gazetteer(mesh, type_col="type")
     pairs = label_pairs(candidate_pairs(entity_inventory(detect_mentions(docs, gaz))), gold)
     if levi:
         pairs = levi_filter(pairs, gold, tree_multimap(mesh))
@@ -161,7 +161,7 @@ def test_document_fulltext_is_the_fused_kernel(spark, fixtures, mesh):
     mention."""
     pages, _, gold = fixtures
     for p, m, g in ((pages, mesh, gold), _dual_typed_inputs(spark)):
-        _gaz, gd, max_words = _mesh_artifacts(m, "type")
+        gd, max_words = _mesh_artifacts(m, "type")
         payload = with_gold_pairs(extracted_docs(p), g)
         expect = {}
         for r in payload.collect():

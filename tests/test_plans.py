@@ -12,7 +12,7 @@ import pytest
 
 from relation_extraction_cdr_spark.plans.audit import (
     EXPECTATIONS,
-    audit_query,
+    audit_facts,
     plan_facts,
     unrounded_decimal_quotients,
 )
@@ -40,7 +40,7 @@ SKIP_Q82 = not os.path.exists(_MESH_TSV)
     ],
 )
 def test_audited_plan(spark, name):
-    violations = audit_query(name, QUERIES[name](spark, SF_DIR))
+    violations = audit_facts(name, plan_facts(QUERIES[name](spark, SF_DIR)))
     assert not violations, "; ".join(violations)
 
 

@@ -148,69 +148,3 @@ def test_real_alps_candidates_and_labels(spark):
     }
     assert got == expect
     assert sum(1 for *_x, l in expect if l == 1) > 30  # real positives present
-
-
-def test_real_alps_3way_candidates(spark):
-    """The ALPS 3-way generation (alps_dataset.py:152-237) on the REAL
-    corpus it was written for (556 Other mentions in alps_test.txt), vs
-    a literal Python port of the reference triple loop — including the
-    all-three-types per-doc gate and symmetric labeling."""
-    import pyspark.sql.functions as F
-
-    from relation_extraction_cdr_spark.operators.candidates import (
-        candidate_pairs_3way,
-    )
-    from relation_extraction_cdr_spark.operators.mentions import entity_inventory
-
-    path = f"{ALPS_DIR}/alps_test.txt"
-    _, exp_ments, exp_rels = _py_parse(path)
-
-    # reference entities_list: per (doc, mesh) the LAST mention's type
-    typed: dict = {}
-    for d, s, _e, _t, typ, mesh in sorted(exp_ments, key=lambda r: (r[0], int(r[1]))):
-        typed[(d, mesh)] = typ
-    by_doc: dict = {}
-    for (d, mesh), typ in typed.items():
-        by_doc.setdefault(d, []).append((mesh, typ))
-    gold_by_doc: dict = {}
-    for d, c, m in exp_rels:
-        gold_by_doc.setdefault(d, set()).add((c, m))
-
-    expect = set()
-    for d, ents in by_doc.items():
-        chems = [e for e, t in ents if t == "Chemical"]
-        diss = [e for e, t in ents if t == "Disease"]
-        oths = [e for e, t in ents if t == "Other"]
-        answers = gold_by_doc.get(d, set())
-        seen = set()
-        for c in chems:
-            for dd in diss:
-                for o in oths:
-                    if (c, dd) not in seen and (dd, c) not in seen:
-                        seen.add((c, dd))
-                        lab = 1 if (c, dd) in answers or (dd, c) in answers else 0
-                        expect.add((d, "chem_dis", c, dd, lab))
-                    if (o, dd) not in seen:
-                        seen.add((o, dd))
-                        lab = 1 if (o, dd) in answers or (dd, o) in answers else 0
-                        expect.add((d, "other_dis", o, dd, lab))
-                    if (o, c) not in seen and (c, o) not in seen:
-                        seen.add((o, c))
-                        lab = 1 if (o, c) in answers or (c, o) in answers else 0
-                        expect.add((d, "other_chem", o, c, lab))
-
-    blocks = PT.read_pubtator(spark, path)
-    mentions = PT.parse_mentions(blocks).select(
-        F.col("doc_id").alias("url"), "mesh_id", "mention_text", "type", "start", "end"
-    )
-    inv = entity_inventory(mentions)
-    gold = spark.createDataFrame(
-        [(d, c, m) for d, c, m in exp_rels],
-        "url string, chem_mesh string, dis_mesh string",
-    )
-    got = {
-        (r["url"], r["kind"], r["e1"], r["e2"], r["label"])
-        for r in candidate_pairs_3way(inv, gold).collect()
-    }
-    assert got == expect
-    assert len(expect) > 100  # real corpus is non-trivial

@@ -4,8 +4,6 @@ plain-Python build."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from relation_extraction_cdr_spark.operators import sketch as SK
 
 
@@ -15,9 +13,7 @@ def test_no_false_negatives_and_bounded_fp(spark):
     df = spark.createDataFrame([(i,) for i in range(2000)], "k long")
     got = {
         r["k"]: r["pass"]
-        for r in df.select(
-            "k", SK.bloom_might_contain(F.col("k"), words, m=16384, k=3).alias("pass")
-        ).collect()
+        for r in SK.with_bloom_pass(df, "k", words, m=16384, k=3, out_col="pass").collect()
     }
     # every member passes (no false negatives)
     assert all(got[k] for k in keys)
@@ -31,9 +27,7 @@ def test_python_and_spark_lanes_agree(spark):
     df = spark.createDataFrame([("7",), ("42",), ("43",)], "k string")
     got = {
         r["k"]: r["pass"]
-        for r in df.select(
-            "k", SK.bloom_might_contain(F.col("k"), words, m=4096, k=3).alias("pass")
-        ).collect()
+        for r in SK.with_bloom_pass(df, "k", words, m=4096, k=3, out_col="pass").collect()
     }
     assert got["7"] and got["42"]
 

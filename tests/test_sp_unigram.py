@@ -1,9 +1,8 @@
 """SentencePiece unigram kernel tests (functions/sp_unigram.py).
 
 Covers: hand-computed Viterbi goldens on a controlled mini-vocab, the
-documented tie-break, the has_single_node <unk> guard, brute-force
-equivalence on the REAL wiki-ja model for short words, and the
-FullTokenizer-contract surfaces (models/tokenization.py:155-194)."""
+documented tie-break, the has_single_node <unk> guard and brute-force
+equivalence on the REAL wiki-ja model for short words."""
 
 from __future__ import annotations
 
@@ -107,23 +106,6 @@ def test_brute_force_equivalence_real_model():
         assert got_ids == ids, w
         assert -logprob == pytest.approx(key[0]), w
         assert "".join(pieces) == w, w  # surfaces reconstruct the word
-
-
-def test_encode_surfaces_and_ids_real_model():
-    pieces = sp.encode_as_pieces("日本語のテストです。")
-    assert "".join(pieces) == "▁日本語のテストです。"
-    ids = sp.encode_as_ids("日本語のテストです。")
-    assert len(ids) == len(pieces)
-    assert all(0 <= i < 32000 for i in ids)
-    # ▁の is Zipf-frequent: the model should not split の off as unk
-    assert 0 not in sp.encode_as_ids("の")
-
-
-def test_normalize_is_nfkc_lower_collapse():
-    assert sp.normalize("Ｈｅｌｌｏ　 Ｗｏｒｌｄ") == "hello world"
-    assert sp.normalize("  A\t\nB  ") == "a b"
-    # dummy prefix: every whitespace-delimited token gets its own ▁
-    assert sp.encode_as_pieces("a b")[0].startswith("▁")
 
 
 def test_cost_e6_fixed_point_contract():

@@ -1,4 +1,4 @@
-"""Sentence splitter + text normalization contracts (SURVEY §2.8 F4/F6,
+"""Sentence splitter + text normalization contracts (SURVEY §2.8 F4,
 byte-identity invariant)."""
 
 from __future__ import annotations

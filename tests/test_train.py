@@ -385,7 +385,7 @@ class TestPoolFeatures:
         )
 
         pages, _, gold = fixtures
-        _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+        gd, max_words = _mesh_artifacts(mesh, "type")
         ft = document_fulltext(
             with_gold_pairs(extracted_docs(pages.limit(10)), gold), gd, max_words
         )
@@ -458,7 +458,7 @@ class TestPoolFeatures:
                 assert lab == base[k][0]
                 assert np.array_equal(feat, base[k][1]), k
 
-        _gaz, gd, max_words = _mesh_artifacts(mesh, "type")
+        gd, max_words = _mesh_artifacts(mesh, "type")
         ft = document_fulltext(
             with_gold_pairs(extracted_docs(pages.limit(10)), gold), gd, max_words
         )
