@@ -14,9 +14,10 @@ Shuffle budget (scale analysis, 100 TB target):
   1. heavy-doc salt repartition (only with ``salt_partitions``, and only
      when the heavy text pays for its tasks) — moves only the pages
      longer than HEAVY_DOC_CHARS (~1%), keyed on url, into
-     k = min(salt_partitions, heavy_chars // CHARS_PER_TASK) partitions.
-     heavy_chars comes from one eager JVM-only probe (a one-row sum);
-     k = 0 builds no exchange at all
+     k = min(salt_partitions, heavy // CHARS_PER_TASK) partitions, where
+     heavy sums ``heavy_chars`` in one eager JVM-only probe (a one-row
+     sum; a resume bucket that cannot reach k > 0 skips it, see
+     streaming.incremental); k = 0 builds no exchange at all
   2. final triple groupBy(chem, dis) — output is tiny relative to input
      (dimension-bounded)
   In eval mode the gold table adds a groupBy(url) and its join to the
@@ -29,7 +30,7 @@ from __future__ import annotations
 import functools
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..functions.text import extract_text
 from ..scoring.scorer import document_features, fused_score_docs
@@ -108,15 +109,33 @@ def training_features(
     )
 
 
+def heavy_chars(text: Column) -> Column:
+    """The length of ``text`` when it is over HEAVY_DOC_CHARS, else
+    null: summed, the heavy text the salt exchange is sized by."""
+    n = F.length(text)
+    return F.when(n > HEAVY_DOC_CHARS, n)
+
+
+def check_salt_partitions(salt_partitions: int | None) -> None:
+    """Reject a negative ``salt_partitions`` before any job runs."""
+    if salt_partitions is not None and salt_partitions < 0:
+        raise ValueError(
+            f"salt_partitions={salt_partitions!r}: expected None or >= 0"
+        )
+
+
+def salt_tasks(salt_partitions: int, heavy: int | None) -> int:
+    """Partition count of the heavy-page exchange for ``heavy`` summed
+    ``heavy_chars``: ``min(salt_partitions, heavy // CHARS_PER_TASK)``.
+    0 means the heavy pages cannot pay for one extra task."""
+    return min(salt_partitions, (heavy or 0) // CHARS_PER_TASK)
+
+
 def heavy_partitions(docs: DataFrame, salt_partitions: int) -> int:
-    """Partition count of the heavy-page exchange over ``docs(url,
-    text)``: ``min(salt_partitions, heavy_chars // CHARS_PER_TASK)``,
-    where heavy_chars sums the text length of the docs longer than
-    HEAVY_DOC_CHARS.  One eager JVM-only job that returns one row; 0
-    means the heavy pages cannot pay for one extra task."""
-    n = F.length("text")
-    heavy_chars = docs.where(n > HEAVY_DOC_CHARS).agg(F.sum(n)).collect()[0][0]
-    return min(salt_partitions, (heavy_chars or 0) // CHARS_PER_TASK)
+    """``salt_tasks`` of the heavy text of ``docs(url, text)``, summed
+    by one eager JVM-only job that returns one row."""
+    heavy = docs.agg(F.sum(heavy_chars(F.col("text")))).collect()[0][0]
+    return salt_tasks(salt_partitions, heavy)
 
 
 def score_candidates(
@@ -154,10 +173,7 @@ def score_candidates(
         raise ValueError(
             f"scorer_backend={scorer_backend!r}: expected one of {allowed}"
         )
-    if salt_partitions is not None and salt_partitions < 0:
-        raise ValueError(
-            f"salt_partitions={salt_partitions!r}: expected None or >= 0"
-        )
+    check_salt_partitions(salt_partitions)
     # empty-gazetteer fail-fast lives inside _mesh_artifacts: a silently
     # successful no-op run (zero mentions -> zero triples) is an
     # expensive nothing at corpus scale

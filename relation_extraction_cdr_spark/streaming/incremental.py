@@ -12,11 +12,16 @@ Resume = anti-join pending buckets against the checkpoint — processed
 buckets are never recomputed and the final triple table is byte-identical
 to an uninterrupted run (pytest-verified).
 
-Bookkeeping costs one Spark job per run plus one small append per
-bucket, and starts no Python task: ``url_count`` for every pending
-bucket comes from a single ``groupBy("bucket").count()``, ``row_count``
-from an ``Observation`` attached to the bucket's scoring write, and the
-lineage row is a ``spark.range(1)`` projection built in the JVM.
+A pending bucket starts exactly one Spark job, its scoring write, and
+the run one more: a single ``groupBy("bucket")`` job gives every pending
+bucket its ``url_count`` and, with ``salt_partitions``, its heavy text
+(``pipeline.heavy_chars``), so a bucket whose heavy text cannot pay for
+one salt task runs no probe.  ``row_count`` comes from an
+``Observation`` on the scoring write; the driver encodes the lineage row
+with pyarrow and writes it through the checkpoint URI's Hadoop
+FileSystem (hidden temp file, then rename), so bookkeeping starts no
+job and no Python task; the read-back declares SCORED_SCHEMA, so no
+footer is inferred.
 
 On a real cluster each bucket is itself a distributed job over many
 executors; n_buckets controls restart granularity, not parallelism.
@@ -28,10 +33,18 @@ idempotent per-batch partition overwrites.
 from __future__ import annotations
 
 import os
+import uuid
 from datetime import datetime
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+from ..functions.text import extract_text
+from ..scoring.scorer import SCORED_SCHEMA
 
 CHECKPOINT_SCHEMA = (
     "run_id string, stage string, partition_id int, url_count long, "
@@ -45,6 +58,40 @@ def bucketed(pages: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def _filesystem(spark: SparkSession, uri: str):
+    """(Hadoop FileSystem, Path) of ``uri`` under the session's Hadoop
+    configuration."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    return path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()), path
+
+
+def _append_lineage(spark: SparkSession, checkpoint_dir: str, row: dict) -> None:
+    """Commit one CHECKPOINT_SCHEMA row as its own parquet file, written
+    by the driver with no Spark job: the row is encoded with pyarrow,
+    written to a hidden ``.<name>.tmp`` (readers skip dot files) and
+    renamed to ``part-<uuid>.parquet``, so a torn write never shows as a
+    committed bucket.  This suits the path-based parquet checkpoint; a
+    catalog (Iceberg) checkpoint table would need its own commit."""
+    schema = to_arrow_schema(StructType.fromDDL(CHECKPOINT_SCHEMA))
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([row], schema=schema), buf)
+    fs, path = _filesystem(spark, checkpoint_dir)
+    name = f"part-{uuid.uuid4()}.parquet"
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = hpath(path, f".{name}.tmp")
+    out = fs.create(tmp)
+    try:
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        if not fs.rename(tmp, hpath(path, name)):
+            raise OSError(f"lineage commit failed: rename of {tmp} to {name}")
+    except BaseException:
+        fs.delete(tmp, False)  # a failed commit leaves no file behind
+        raise
+
+
 def completed_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str, stage: str) -> set[int]:
     """Bucket ids with committed lineage rows.  The not-yet-created case
     is detected with the Hadoop FileSystem of the checkpoint URI, NOT
@@ -54,9 +101,7 @@ def completed_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str, sta
     makes Spark log a listener stack trace once any Observation has run
     in the session.)  The read takes CHECKPOINT_SCHEMA, so an existing
     but empty directory yields no buckets and no footer is inferred."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
-    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    fs, path = _filesystem(spark, checkpoint_dir)
     if not fs.exists(path):
         return set()
     rows = (
@@ -82,50 +127,71 @@ def run_resumable(
     **pipeline_kwargs,
 ) -> DataFrame:
     """Process pages bucket-by-bucket with lineage; returns the scored
-    pairs read back from ``out_dir``.
+    pairs read back from ``out_dir`` with the declared SCORED_SCHEMA.
 
-    Per pending bucket the only Spark work is the scoring write and the
-    lineage append.  ``url_count`` comes from one ``groupBy("bucket")``
-    count job over all pending buckets (a bucket with no pages reads 0);
-    ``row_count`` from an ``Observation`` on the scoring write, read
-    after the write commits (it counts the committed result stage, so
-    task retries do not inflate it); the lineage row is built in the JVM,
-    so bookkeeping starts no Python task.
+    Spark work: one ``groupBy("bucket")`` job per run over all pending
+    buckets, then one scoring write per pending bucket.  The job gives
+    each bucket its ``url_count`` (a bucket with no pages reads 0) and,
+    when ``salt_partitions`` is set, its heavy text: a bucket whose heavy
+    text cannot pay for one salt task (``pipeline.salt_tasks`` is 0) is
+    scored unsalted, so only a bucket with at least CHARS_PER_TASK of
+    heavy text runs the probe, and that bucket's text is extracted once
+    more than with a url-only count.
+    ``row_count`` comes from an ``Observation`` on the scoring write,
+    read after the write commits (it counts the committed result stage,
+    so task retries do not inflate it).  The driver then writes the
+    lineage row itself (``_append_lineage``), so bookkeeping starts no
+    job and no Python task.  A negative ``salt_partitions`` raises
+    before any job.
 
     ``fail_after``: test hook — raise after N buckets to simulate a kill.
     """
-    # imported at call time: instrumentation wraps it by module attribute
-    from ..plans.pipeline import score_candidates
+    # imported at call time: instrumentation wraps score_candidates by
+    # module attribute
+    from ..plans.pipeline import (
+        check_salt_partitions,
+        heavy_chars,
+        salt_tasks,
+        score_candidates,
+    )
 
+    salt = pipeline_kwargs.get("salt_partitions")
+    check_salt_partitions(salt)
     pages_b = bucketed(pages, n_buckets)
     done = completed_buckets(spark, checkpoint_dir, run_id, "score")
     pending = [b for b in range(n_buckets) if b not in done]
-    url_counts = (
-        {r["bucket"]: r["count"] for r in pages_b.groupBy("bucket").count().collect()}
+    aggs = [F.count(F.lit(1)).alias("urls")]
+    if salt:
+        text = extract_text(F.col("html"), F.col("text"))
+        aggs.append(F.sum(heavy_chars(text)).alias("heavy"))
+    stats = (
+        {r["bucket"]: r.asDict() for r in pages_b.groupBy("bucket").agg(*aggs).collect()}
         if pending
         else {}
     )
     for processed, b in enumerate(pending):
         if fail_after is not None and processed >= fail_after:
             raise RuntimeError(f"simulated kill after {processed} buckets")
+        st = stats.get(b, {})
+        kwargs = pipeline_kwargs
+        if salt and not salt_tasks(salt, st.get("heavy")):
+            # the probe in score_candidates would build no exchange
+            kwargs = {**pipeline_kwargs, "salt_partitions": None}
         part = pages_b.where(F.col("bucket") == b).drop("bucket")
-        scored = score_candidates(part, mesh_tree, **pipeline_kwargs)
+        scored = score_candidates(part, mesh_tree, **kwargs)
         rows = Observation()
         scored.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"bucket={b}")
         )
-        # CHECKPOINT_SCHEMA's row as a JVM projection: createDataFrame
-        # would parallelize it over defaultParallelism Python tasks
-        lineage = spark.range(1).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit("score").alias("stage"),
-            F.lit(b).cast("int").alias("partition_id"),
-            F.lit(url_counts.get(b, 0)).cast("long").alias("url_count"),
-            F.lit(rows.get["n"]).cast("long").alias("row_count"),
-            F.lit(datetime.now()).alias("written_at"),
-        )
-        lineage.write.mode("append").parquet(checkpoint_dir)
-    return spark.read.parquet(os.path.join(out_dir, "bucket=*"))
+        _append_lineage(spark, checkpoint_dir, {
+            "run_id": run_id,
+            "stage": "score",
+            "partition_id": b,
+            "url_count": st.get("urls", 0),
+            "row_count": rows.get["n"],
+            "written_at": datetime.now().astimezone(),
+        })
+    return spark.read.schema(SCORED_SCHEMA).parquet(os.path.join(out_dir, "bucket=*"))
 
 
 def stream_pages(
