@@ -221,9 +221,14 @@ EXPECTATIONS: dict[str, dict[str, tuple[str, int]]] = {
     },
     "q04_semi_join": {"sort_merge_joins": ("==", 0)},
     "q05_anti_join": {"sort_merge_joins": ("==", 0)},
-    # gazetteer mention detection: the ~58k-row MeSH dimension must come
-    # in as a broadcast, never a shuffle of the exploded n-gram stream
-    "q28_cdr_mentions": {"broadcast_hash_joins": (">=", 1)},
+    # gazetteer mention detection and the pair step: the ~58k-row MeSH
+    # dimension rides in the per-document kernel's closure, so each is
+    # one narrow pass over the scan — no join, no shuffle of any token,
+    # n-gram or mention stream
+    "q28_cdr_mentions": {"exchanges": ("==", 0), "broadcast_hash_joins": ("==", 0)},
+    "q29_cdr_candidates": {"exchanges": ("==", 0), "broadcast_hash_joins": ("==", 0)},
+    # the co-occurrence chem x dis join over the persisted mentions
+    # broadcasts at this scale
     "q30_cdr_triples": {"broadcast_hash_joins": (">=", 1)},
     # exact dedup is one hash agg: one shuffle, combiner on
     "q21_exact_dedup": {

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..functions.text import extract_text
+from ..operators.mentions import gazetteer_dict, longest_term_words
 from ..scoring.scorer import document_features, fused_score_docs
 from ..sources.mesh import gazetteer, tree_multimap
 
@@ -66,9 +67,7 @@ def extracted_docs(pages: DataFrame) -> DataFrame:
 def _mesh_artifacts(mesh_tree, mesh_type_col):
     """(surface-form dict, longest term's word count) of the
     ``mesh_tree`` gazetteer: what the per-document kernel needs."""
-    from ..operators.mentions import gazetteer_dict
-
-    gd = gazetteer_dict(gazetteer(mesh_tree, type_col=mesh_type_col))
+    gd = gazetteer_dict(gazetteer(mesh_tree, type_col=mesh_type_col).collect())
     if not gd:
         raise ValueError(
             "empty gazetteer: no mesh rows produced a Chemical/Disease "
@@ -76,8 +75,19 @@ def _mesh_artifacts(mesh_tree, mesh_type_col):
             "mesh_type_col='type' for fixture-shaped mesh tables, or "
             "None for the real 2017 MeSH tree (D*/C* branch letters)."
         )
-    max_words = max(t.count(" ") + 1 for t in gd)
-    return gd, max_words
+    return gd, longest_term_words(gd)
+
+
+# Memoized like _mesh_artifacts, for the eval-mode runs that pass gold:
+# the multimap collect is two eager jobs per call otherwise.
+@functools.lru_cache(maxsize=1)
+def _tree_map(mesh_tree):
+    """mesh_id -> tree numbers of ``mesh_tree``: the Levi filter's
+    multimap as the plain dict the per-document kernel reads."""
+    return {
+        r["mesh_id"]: list(r["tree_numbers"])
+        for r in tree_multimap(mesh_tree).collect()
+    }
 
 
 def with_gold_pairs(docs: DataFrame, gold: DataFrame | None) -> DataFrame:
@@ -200,13 +210,8 @@ def score_candidates(
         payload = payload.where(~heavy).unionByName(
             payload.where(heavy).repartition(k, F.xxhash64("url"))
         )
-    tm = (
-        {r["mesh_id"]: list(r["tree_numbers"]) for r in tree_multimap(mesh_tree).collect()}
-        if gold is not None
-        else {}
-    )
     return fused_score_docs(
-        payload, tree_map=tm,
+        payload, tree_map=_tree_map(mesh_tree) if gold is not None else {},
         gazetteer=gd, max_term_words=max_words,
         backend=scorer_backend,
     )

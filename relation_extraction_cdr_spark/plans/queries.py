@@ -32,9 +32,9 @@ pytest against the reference's Python kernels):
   ties (e.g. 3/20000) can round apart; sums are already routed through
   DECIMAL, ratios are not.
 - The mentions-family SQL renders a simplified space-split candidate
-  stream; detect_mentions additionally strips token-edge punctuation
-  (the exact kernel is parity-tested against the real ALPS corpus in
-  pytest, which is the authoritative check).
+  stream; the engine's detector (operators.mentions.detect_mentions_py)
+  additionally strips token-edge punctuation (pytest checks it against
+  the generator's gold offsets, which is the authoritative check).
 """
 
 from __future__ import annotations
@@ -49,6 +49,7 @@ from ..functions import quality as Q
 from ..functions.text import BPEISH_PATTERN
 from ..operators import ann as ANN
 from ..operators import dedup as DD
+from ..operators.mentions import gazetteer_dict, longest_term_words
 from ..session import load_tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -862,6 +863,10 @@ _GAZ_ROWS = [
     ("small", "DZ2", "Disease", "X01.200"),
     ("big", "DZ3", "Disease", "X01.200.500"),
 ]
+# the same dimensions as the plain dicts the per-document kernels read
+_DOC_GAZ = gazetteer_dict((t, m, ty) for t, m, ty, _ in _GAZ_ROWS)
+_DOC_MAX_WORDS = longest_term_words(_DOC_GAZ)
+_DOC_TREE_MAP = {m: [tr] for _, m, _, tr in _GAZ_ROWS}
 _COOC_WINDOW = 60  # chars between mention starts = co-occurrence rule
 
 _GAZ_VALUES = ", ".join(f"('{t}', '{m}', '{ty}', '{tr}')" for t, m, ty, tr in _GAZ_ROWS)
@@ -974,51 +979,52 @@ def _wordpiece_cte() -> str:
 
 # The doc-family helpers are plain functions: every call builds a new
 # DataFrame, and Spark's CacheManager shares the persisted ones because
-# two builds are canonically equal plans (sameResult).  That holds only
-# for deterministic leaves: the gazetteer dimensions are an inline VALUES
-# table (LocalRelation), not createDataFrame, whose fresh ExistingRDD
-# per call would make every build a new cache entry.
-_GAZ_TABLE = f"VALUES {_GAZ_VALUES} AS gaz(term, mesh_id, type, tree_number)"
+# two builds are canonically equal plans (sameResult).
 
 
-def _doc_gazetteer(spark):
-    return spark.sql(f"SELECT term, mesh_id, type FROM {_GAZ_TABLE}")
-
-
-def _doc_tree_map(spark):
-    return spark.sql(
-        f"SELECT mesh_id, array(tree_number) AS tree_numbers FROM {_GAZ_TABLE}"
+def _doc_texts(spark, sf_dir):
+    """docs(url, text) of the documents table: ``url`` is the bigint
+    doc_id, the text lowercased."""
+    return _t(spark, sf_dir, "documents")["documents"].select(
+        F.col("doc_id").alias("url"), F.lower(F.col("text")).alias("text")
     )
 
 
 def _doc_mentions(spark, sf_dir):
     from pyspark import StorageLevel
 
-    from ..operators.mentions import detect_mentions
+    from ..scoring.scorer import document_mentions
 
-    t = _t(spark, sf_dir, "documents")
-    docs = t["documents"].select(
-        F.col("doc_id").alias("url"), F.lower(F.col("text")).alias("text")
-    )
     # persisted: the cooc queries reference mentions on BOTH sides of
-    # the chem x dis join, and predicate pushdown (type filter below
-    # the window exchange) defeats ReusedExchange — without the
-    # persist the whole detection subtree (scan + explode + broadcast
-    # join + window) runs twice, doubling the dominant stage at
-    # corpus scale.  Every query in the family rebuilds the same plan,
-    # so all of them hit one cache entry.
-    return detect_mentions(docs, _doc_gazetteer(spark)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # the chem x dis join; without the persist the detection stage
+    # (scan + the Python pass) runs twice.  Every query in the family
+    # rebuilds the same plan, so all of them hit one cache entry.
+    return document_mentions(
+        _doc_texts(spark, sf_dir), _DOC_GAZ, _DOC_MAX_WORDS
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _doc_pairs(spark, sf_dir, gold, tree_map):
+    """(url, chem_mesh, dis_mesh, label) candidates of the documents
+    table, labelled by ``gold`` (None: no gold) and Levi-filtered under
+    ``tree_map``: the pipeline's per-document inventory and pair steps
+    (scoring.scorer.document_pairs)."""
+    from ..scoring.scorer import document_pairs
+    from .pipeline import with_gold_pairs
+
+    return document_pairs(
+        with_gold_pairs(_doc_texts(spark, sf_dir), gold),
+        _DOC_GAZ, _DOC_MAX_WORDS, tree_map,
     )
 
 
 def _doc_cooc(spark, sf_dir):
     """Per-doc co-occurrence pairs (the labeling 'gold' for this family).
 
-    Persisted for the same reason as _doc_mentions: q31 references this
-    subtree three times (labeling, plus both gold-tree aggregations) and
-    q30/q33/q35 share it across the family; the cache manager keys on the
-    canonicalized plan so all references hit one copy.
+    Persisted for the same reason as _doc_mentions: q30/q31/q33/q35 and
+    the later cooc consumers share it across the family; the cache
+    manager keys on the canonicalized plan so all references hit one
+    copy.
     """
     from pyspark import StorageLevel
 
@@ -1062,11 +1068,7 @@ def q28(spark, sf_dir):
 )
 def q29(spark, sf_dir):
     """Per-doc chemical x disease candidate generation (J1)."""
-    from ..operators.candidates import candidate_pairs
-    from ..operators.mentions import entity_inventory
-
-    inv = entity_inventory(_doc_mentions(spark, sf_dir))
-    return candidate_pairs(inv).select(
+    return _doc_pairs(spark, sf_dir, None, {}).select(
         F.col("url").alias("doc_id"), "chem_mesh", "dis_mesh"
     )
 
@@ -1129,21 +1131,8 @@ def q31(spark, sf_dir):
     """Levi hypernym anti-join (J3) with substring-containment semantics
     (cdr_dataset.py:227-242) — negatives whose disease tree is contained
     in a same-endpoint gold pair's tree are dropped."""
-    from pyspark import StorageLevel
-
-    from ..operators.candidates import candidate_pairs, label_pairs, levi_filter
-    from ..operators.mentions import entity_inventory
-
-    inv = entity_inventory(_doc_mentions(spark, sf_dir))
-    pairs = candidate_pairs(inv)
-    gold = _doc_cooc(spark, sf_dir)
-    # labeled feeds both the reject computation and the final anti-join;
-    # persist so the inventory/pair/label joins execute once
-    labeled = label_pairs(pairs, gold).persist(StorageLevel.MEMORY_AND_DISK)
-    kept = levi_filter(labeled, gold, _doc_tree_map(spark))
-    return kept.select(
-        F.col("url").alias("doc_id"), "chem_mesh", "dis_mesh", F.col("label").cast("int").alias("label")
-    )
+    kept = _doc_pairs(spark, sf_dir, _doc_cooc(spark, sf_dir), _DOC_TREE_MAP)
+    return kept.select(F.col("url").alias("doc_id"), "chem_mesh", "dis_mesh", "label")
 
 
 @register(
@@ -4243,19 +4232,17 @@ def _doc_fulltext(spark, sf_dir):
     Persisted — q87/q89/q91 share the subtree."""
     from pyspark import StorageLevel
 
-    from ..operators.mentions import gazetteer_dict
     from ..scoring.scorer import document_fulltext
     from .pipeline import with_gold_pairs
 
-    gd = gazetteer_dict(_doc_gazetteer(spark))
     docs = _t(spark, sf_dir, "documents")["documents"].select(
         F.col("doc_id").cast("string").alias("url"),
         F.lower(F.col("text")).alias("text"),
     )
     return document_fulltext(
         with_gold_pairs(docs, _doc_cooc(spark, sf_dir)),
-        gd,
-        max(t.count(" ") + 1 for t in gd),
+        _DOC_GAZ,
+        _DOC_MAX_WORDS,
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
 

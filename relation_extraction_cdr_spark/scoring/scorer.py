@@ -20,7 +20,7 @@ Batch shape: Arrow batches via ``mapInPandas``; per-batch numpy span
 gathers (the segment-mean pooling of electra_model.py:618-641 would
 operate on the same gathered indices).  The whole per-document decision
 runs in ONE mapInPandas stage: ``fused_score_docs`` loops over the
-Spark-free kernel ``score_document`` (inventory: ``entity_inventory_py``); with
+Spark-free kernel ``score_document`` (inventory: ``document_inventory``); with
 ``salt_partitions`` the pipeline first repartitions only the documents
 longer than plans.pipeline.HEAVY_DOC_CHARS on xxhash64(url), so a
 cluster of pathologically long documents spreads across executors
@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.wordpiece import vocab_id
-from ..operators.candidates import levi_rejected_py
+from ..operators.candidates import candidate_pairs_py
 from ..operators.evidence import DocIndex, select_evidence_py
 from ..operators.features import (
     FEATURES_SCHEMA,
@@ -48,7 +48,7 @@ from ..operators.features import (
     featurize_py,
     fulltext_featurize_py,
 )
-from ..operators.mentions import detect_mentions_py, entity_inventory_py
+from ..operators.mentions import detect_mentions_py, document_inventory
 
 SCORED_SCHEMA = (
     "url string, chem_mesh string, dis_mesh string, label int, "
@@ -347,21 +347,12 @@ def score_document(
     # strips to empty and text is NULL (no mentions => no pairs anyway)
     if not text:
         return rows, None
-    ents = entity_inventory_py(detect_mentions_py(text, gazetteer, max_term_words))
-    chems = [e for e in ents if e["type"] == "Chemical"]
-    diss = [e for e in ents if e["type"] == "Disease"]
-    if not chems or not diss:
-        return rows, None
+    ents = document_inventory(text, gazetteer, max_term_words)
+    # None unless the inventory has both entity types
     ft = fulltext_featurize_py(text, ents, gold_pairs) if fulltext else None
-    pairs = [(c, d) for c in chems for d in diss]
-    keys = [(c["mesh_id"], d["mesh_id"]) for c, d in pairs]
-    rejected = levi_rejected_py(keys, gold_pairs, tree_map) if gold_pairs else set()
-    gold_set = set(gold_pairs)
-    doc = DocIndex(text)
-    for (c, d), key in zip(pairs, keys):
-        if key in rejected:
-            continue
-        label = 1 if key in gold_set else 0
+    pairs = candidate_pairs_py(ents, gold_pairs, tree_map)
+    doc = DocIndex(text) if pairs else None
+    for c, d, label in pairs:
         cpos = [(int(p["start"]), int(p["end"])) for p in c["positions"]]
         dpos = [(int(p["start"]), int(p["end"])) for p in d["positions"]]
         ev = select_evidence_py(
@@ -419,6 +410,73 @@ def _batch_documents(
     return feat_rows, fulltext_rows
 
 
+def _keyed_schema(docs: DataFrame, fields: str) -> str:
+    """``fields`` after a ``url`` column of the type ``docs`` gives it."""
+    return f"url {docs.schema['url'].dataType.simpleString()}, {fields}"
+
+
+def document_mentions(
+    docs: DataFrame,
+    gazetteer: dict[str, list[tuple[str, str]]],
+    max_term_words: int,
+) -> DataFrame:
+    """mentions(url, mesh_id, mention_text, type, start, end) of
+    docs(url, text): the detector ``score_document`` runs,
+    ``detect_mentions_py``, per document in one narrow mapInPandas
+    stage.  ``url`` keeps the type ``docs`` gives it."""
+    schema = _keyed_schema(
+        docs, "mesh_id string, mention_text string, type string, start int, end int"
+    )
+    cols = [c.split(" ")[0] for c in schema.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    (url, m["mesh_id"], m["mention_text"], m["type"], m["start"], m["end"])
+                    for url, text in zip(pdf["url"], pdf["text"])
+                    if text
+                    for m in detect_mentions_py(text, gazetteer, max_term_words)
+                ],
+                columns=cols,
+            )
+
+    return docs.select("url", "text").mapInPandas(run, schema=schema)
+
+
+def document_pairs(
+    doc_payload: DataFrame,
+    gazetteer: dict[str, list[tuple[str, str]]],
+    max_term_words: int,
+    tree_map: dict[str, list[str]],
+) -> DataFrame:
+    """(url, chem_mesh, dis_mesh, label) candidate pairs of (url, text,
+    gold_pairs) rows (plans.pipeline.with_gold_pairs): per document the
+    inventory step and the pair step ``score_document`` runs
+    (``document_inventory``, then ``candidate_pairs_py`` with the Levi
+    filter under ``tree_map``), in one narrow mapInPandas stage, without
+    evidence or features.  ``url`` keeps the type the payload gives it."""
+    schema = _keyed_schema(doc_payload, "chem_mesh string, dis_mesh string, label int")
+    cols = [c.split(" ")[0] for c in schema.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                if not r.text:
+                    continue
+                ents = document_inventory(r.text, gazetteer, max_term_words)
+                rows += [
+                    (r.url, c["mesh_id"], d["mesh_id"], label)
+                    for c, d, label in candidate_pairs_py(
+                        ents, _gold_pairs(r.gold_pairs), tree_map
+                    )
+                ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return doc_payload.mapInPandas(run, schema=schema)
+
+
 def document_features(
     doc_payload: DataFrame,
     gazetteer: dict[str, list[tuple[str, str]]],
@@ -463,9 +521,7 @@ def document_fulltext(
             for r in pdf.itertuples(index=False):
                 if not r.text:
                     continue
-                ents = entity_inventory_py(
-                    detect_mentions_py(r.text, gazetteer, max_term_words)
-                )
+                ents = document_inventory(r.text, gazetteer, max_term_words)
                 ft = fulltext_featurize_py(r.text, ents, _gold_pairs(r.gold_pairs))
                 if ft is not None:
                     rows.append({"url": r.url, **ft})
@@ -482,7 +538,7 @@ def fused_score_docs(
     backend: str = "stub",
 ) -> DataFrame:
     """Doc-level fused stage: ``score_document`` (mentions +
-    ``entity_inventory_py`` + pairs + Levi filter + evidence + featurize)
+    inventory + pairs + Levi filter + evidence + featurize)
     per document and one ``_score_rows`` per Arrow batch, ALL of a
     document's pairs in one pass — the reference's own batching shape
     ("one encoder pass per document", electra_model.py:711-734).
@@ -499,15 +555,14 @@ def fused_score_docs(
     ``tree_map`` (the MeSH multimap) ride along in the UDF closure — a
     few MB, the same payload a broadcast variable would carry.  Mention
     detection runs in this same pass
-    (operators.mentions.detect_mentions_py — semantics identical to the
-    relational operator), so no token explode and no per-doc window
-    shuffle precede it.
+    (operators.mentions.detect_mentions_py), so no token explode and no
+    per-doc window shuffle precede it.
 
-    Semantically identical to the relational chain tests/test_fused.py
-    composes as its oracle: detect_mentions |> entity_inventory |>
-    candidate_pairs |> label_pairs |> levi_filter, then per collected
-    pair row ``select_evidence_py`` (a fresh sentence index per pair)
-    |> ``featurize_py`` |> ``_score_rows``.
+    tests/test_fused.py pins it to its oracle: the relational mentions,
+    inventory and labelled pairs of tests/relational_oracle.py, the
+    independent Levi rule of tests/test_candidates.py, then per
+    collected pair row ``select_evidence_py`` (a fresh sentence index
+    per pair) |> ``featurize_py`` |> ``_score_rows``.
     """
     use_electra = backend == "electra"
 

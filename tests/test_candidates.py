@@ -2,26 +2,24 @@
 
 The Levi oracle below is an independent plain-Python rendering of the
 documented reference decision rule (cdr_dataset.py:227-242, substring
-containment) — the Spark anti-join must agree on every fixture doc.
+containment) — the per-document pair step must agree on every fixture
+doc.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from relation_extraction_cdr_spark.operators.candidates import (
-    candidate_pairs,
-    label_pairs,
-    levi_filter,
-    levi_reject,
+    candidate_pairs_py,
+    levi_rejected_py,
 )
-from relation_extraction_cdr_spark.operators.mentions import (
-    detect_mentions,
-    entity_inventory,
+from relation_extraction_cdr_spark.operators.mentions import document_inventory
+from relation_extraction_cdr_spark.plans.pipeline import (
+    _mesh_artifacts,
+    _tree_map,
+    extracted_docs,
+    with_gold_pairs,
 )
-from relation_extraction_cdr_spark.plans.pipeline import extracted_docs
-from relation_extraction_cdr_spark.sources.mesh import gazetteer, tree_multimap
-from relation_extraction_cdr_spark import datagen
+from relation_extraction_cdr_spark.scoring.scorer import _gold_pairs
 
 
 def _levi_rejected_oracle(neg_pairs, gold_pairs, tree_map):
@@ -51,40 +49,59 @@ def _levi_rejected_oracle(neg_pairs, gold_pairs, tree_map):
     return rejected
 
 
+def _fixture_documents(fixtures, mesh):
+    """Per fixture document (url, inventory, gold pairs)."""
+    pages, _, gold = fixtures
+    gd, max_words = _mesh_artifacts(mesh, "type")
+    return [
+        (r["url"], document_inventory(r["text"], gd, max_words), _gold_pairs(r["gold_pairs"]))
+        for r in with_gold_pairs(extracted_docs(pages), gold).collect()
+    ]
+
+
+def _rejected(url_pairs, gold, tree_map):
+    """levi_rejected_py per url over (url, c, d) rows."""
+    got = set()
+    for url in {u for u, _, _ in url_pairs}:
+        got |= {
+            (url, c, d)
+            for c, d in levi_rejected_py(
+                [(c, d) for u, c, d in url_pairs if u == url],
+                [(c, d) for u, c, d in gold if u == url],
+                tree_map,
+            )
+        }
+    return got
+
+
 def test_candidate_pairs_shape(spark, fixtures, mesh):
-    pages, _, _ = fixtures
-    inv = entity_inventory(
-        detect_mentions(extracted_docs(pages), gazetteer(mesh, type_col="type"))
-    )
-    pairs = candidate_pairs(inv)
-    # per-doc cross product: n_chem * n_dis for every doc
-    counts = (
-        inv.groupBy("url")
-        .agg(
-            F.sum(F.when(F.col("type") == "Chemical", 1).otherwise(0)).alias("nc"),
-            F.sum(F.when(F.col("type") == "Disease", 1).otherwise(0)).alias("nd"),
-        )
-        .collect()
-    )
-    expect = sum(r["nc"] * r["nd"] for r in counts)
-    assert pairs.count() == expect
+    n_pairs = 0
+    for _url, inv, _gold in _fixture_documents(fixtures, mesh):
+        pairs = candidate_pairs_py(inv, [], {})
+        chems = [e["mesh_id"] for e in inv if e["type"] == "Chemical"]
+        diss = [e["mesh_id"] for e in inv if e["type"] == "Disease"]
+        # per-doc cross product, chem-major in inventory order
+        assert [(c["mesh_id"], d["mesh_id"]) for c, d, _ in pairs] == [
+            (c, d) for c in chems for d in diss
+        ]
+        assert all(label == 0 for _, _, label in pairs)
+        n_pairs += len(pairs)
+    assert n_pairs > 100
 
 
 def test_labeling(spark, fixtures, mesh):
-    pages, _, gold = fixtures
-    inv = entity_inventory(
-        detect_mentions(extracted_docs(pages), gazetteer(mesh, type_col="type"))
-    )
-    labeled = label_pairs(candidate_pairs(inv), gold)
+    _, _, gold = fixtures
     pos = {
-        (r["url"], r["chem_mesh"], r["dis_mesh"])
-        for r in labeled.where("label=1").collect()
+        (url, c["mesh_id"], d["mesh_id"])
+        for url, inv, gp in _fixture_documents(fixtures, mesh)
+        for c, d, label in candidate_pairs_py(inv, gp, {})
+        if label == 1
     }
     gold_set = {(r["url"], r["chem_mesh"], r["dis_mesh"]) for r in gold.collect()}
     assert pos == gold_set
 
 
-def test_levi_filter_matches_oracle(spark):
+def test_levi_filter_matches_oracle():
     """Hand-built doc exercising both rejection branches + survivors."""
     tree_map = {
         "C1": ["T01.100"],
@@ -111,48 +128,43 @@ def test_levi_filter_matches_oracle(spark):
     # tree X01.300.500 contains X01.300; D3 pairs survive
     assert ("u1", "C1", "D3") not in expect_rej
 
-    pairs_df = spark.createDataFrame(
-        all_pairs, "url string, chem_mesh string, dis_mesh string, label int"
-    )
-    gold_df = spark.createDataFrame(gold, "url string, chem_mesh string, dis_mesh string")
-    tree_df = spark.createDataFrame(
-        [(k, v) for k, v in tree_map.items()], "mesh_id string, tree_numbers array<string>"
-    )
-    got_rej = {
-        (r["url"], r["chem_mesh"], r["dis_mesh"])
-        for r in levi_reject(pairs_df, gold_df, tree_df).collect()
+    assert _rejected([p[:3] for p in all_pairs], gold, tree_map) == expect_rej
+    # the pair step drops exactly those negatives from the inventory's
+    # cross product and keeps the gold pairs' labels
+    inv = [{"mesh_id": e, "type": "Chemical" if e[0] == "C" else "Disease"}
+           for e in ("C1", "C2", "D1", "D2", "D3")]
+    kept = candidate_pairs_py(inv, [(c, d) for _, c, d in gold], tree_map)
+    assert {("u1", c["mesh_id"], d["mesh_id"], label) for c, d, label in kept} == {
+        p for p in all_pairs if p[:3] not in expect_rej
     }
-    assert got_rej == expect_rej
-    kept = levi_filter(pairs_df, gold_df, tree_df)
-    assert kept.count() == len(all_pairs) - len(expect_rej)
 
 
 def test_levi_on_fixture_corpus(spark, fixtures, mesh):
-    pages, _, gold = fixtures
-    inv = entity_inventory(
-        detect_mentions(extracted_docs(pages), gazetteer(mesh, type_col="type"))
-    )
-    labeled = label_pairs(candidate_pairs(inv), gold)
-    tree_df = tree_multimap(mesh)
-    tree_map = {r["mesh_id"]: r["tree_numbers"] for r in tree_df.collect()}
-    neg = [
-        (r["url"], r["chem_mesh"], r["dis_mesh"])
-        for r in labeled.where("label=0").collect()
-    ]
+    _, _, gold = fixtures
+    tree_map = _tree_map(mesh)
+    neg, got = [], set()
+    for url, inv, gp in _fixture_documents(fixtures, mesh):
+        labelled = {
+            (url, c["mesh_id"], d["mesh_id"]): label
+            for c, d, label in candidate_pairs_py(inv, gp, {})
+        }
+        kept = {
+            (url, c["mesh_id"], d["mesh_id"])
+            for c, d, _ in candidate_pairs_py(inv, gp, tree_map)
+        }
+        neg += [k for k, label in labelled.items() if label == 0]
+        got |= labelled.keys() - kept
     gold_rows = [(r["url"], r["chem_mesh"], r["dis_mesh"]) for r in gold.collect()]
     expect = _levi_rejected_oracle(neg, gold_rows, tree_map)
-    got = {
-        (r["url"], r["chem_mesh"], r["dis_mesh"])
-        for r in levi_reject(labeled, gold, tree_df).collect()
-    }
+    assert expect  # the fixture corpus exercises the filter
     assert got == expect
 
 
-def test_levi_property_random(spark):
+def test_levi_property_random():
     """Property test: on a randomized corpus engineered for substring
     collisions (short dotted tree numbers drawn from a tiny alphabet,
-    including exact-equal and non-boundary substrings), the Spark
-    anti-join agrees with the independent Python oracle on every doc."""
+    including exact-equal and non-boundary substrings), levi_rejected_py
+    agrees with the independent Python oracle on every doc."""
     import random
 
     rng = random.Random(1234)
@@ -183,16 +195,4 @@ def test_levi_property_random(spark):
     assert expect_rej, "random corpus produced no rejections; regen seeds"
     assert len(expect_rej) < len(neg), "all negatives rejected; degenerate"
 
-    pairs_df = spark.createDataFrame(
-        all_pairs, "url string, chem_mesh string, dis_mesh string, label int"
-    )
-    gold_df = spark.createDataFrame(gold, "url string, chem_mesh string, dis_mesh string")
-    tree_df = spark.createDataFrame(
-        [(k, v) for k, v in tree_map.items()],
-        "mesh_id string, tree_numbers array<string>",
-    )
-    got_rej = {
-        (r["url"], r["chem_mesh"], r["dis_mesh"])
-        for r in levi_reject(pairs_df, gold_df, tree_df).collect()
-    }
-    assert got_rej == expect_rej
+    assert _rejected([p[:3] for p in all_pairs], gold, tree_map) == expect_rej

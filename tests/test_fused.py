@@ -1,5 +1,6 @@
 """The fused per-document stage must equal the relational operator chain
-exactly."""
+(tests/relational_oracle.py, with the independent Levi rule of
+tests/test_candidates.py) exactly."""
 
 from __future__ import annotations
 
@@ -10,19 +11,14 @@ import pandas as pd
 import pytest
 
 from relation_extraction_cdr_spark import datagen
-from relation_extraction_cdr_spark.operators.candidates import (
-    candidate_pairs,
-    label_pairs,
-    levi_filter,
-)
 from relation_extraction_cdr_spark.operators.evidence import select_evidence_py
 from relation_extraction_cdr_spark.operators.features import (
     FEATURES_SCHEMA,
     featurize_py,
 )
 from relation_extraction_cdr_spark.operators.mentions import (
-    detect_mentions,
-    entity_inventory,
+    gazetteer_dict,
+    longest_term_words,
 )
 from relation_extraction_cdr_spark.plans.pipeline import (
     _mesh_artifacts,
@@ -38,6 +34,13 @@ from relation_extraction_cdr_spark.scoring.scorer import (
     score_document,
 )
 from relation_extraction_cdr_spark.sources.mesh import gazetteer, tree_multimap
+from tests.relational_oracle import (
+    candidate_pairs,
+    detect_mentions,
+    entity_inventory,
+    label_pairs,
+)
+from tests.test_candidates import _levi_rejected_oracle
 
 FEATURE_COLS = [c.split(" ")[0] for c in FEATURES_SCHEMA.split(", ")]
 
@@ -72,17 +75,27 @@ def _feature_rows(rows):
 
 
 def _relational_features(pages, mesh, gold, levi=True):
-    """The oracle: the relational operators up to labelled (optionally
-    Levi-filtered) pairs, then per collected pair row the Spark-free
-    evidence kernel with a fresh sentence index and featurize_py.
-    ``_score_rows`` over it is the stub decision."""
+    """The oracle: the relational operators up to labelled pairs,
+    optionally without the negatives the independent Levi rule rejects,
+    then per collected pair row the Spark-free evidence kernel with a
+    fresh sentence index and featurize_py.  ``_score_rows`` over it is
+    the stub decision."""
     docs = extracted_docs(pages)
     gaz = gazetteer(mesh, type_col="type")
     pairs = label_pairs(candidate_pairs(entity_inventory(detect_mentions(docs, gaz))), gold)
+    rows = pairs.join(docs, "url").collect()
+    rejected = set()
     if levi:
-        pairs = levi_filter(pairs, gold, tree_multimap(mesh))
+        tree_map = {r["mesh_id"]: r["tree_numbers"] for r in tree_multimap(mesh).collect()}
+        rejected = _levi_rejected_oracle(
+            [(r["url"], r["chem_mesh"], r["dis_mesh"]) for r in rows if r["label"] == 0],
+            [(r["url"], r["chem_mesh"], r["dis_mesh"]) for r in gold.collect()],
+            tree_map,
+        )
     out = []
-    for r in pairs.join(docs, "url").collect():
+    for r in rows:
+        if (r["url"], r["chem_mesh"], r["dis_mesh"]) in rejected:
+            continue
         ev = select_evidence_py(
             r["text"], r["chem_mesh"], r["dis_mesh"],
             [(p["start"], p["end"]) for p in r["chem_positions"]],
@@ -123,7 +136,7 @@ def test_fused_equals_modular(spark, fixtures, mesh):
     assert _rows(fused) == _rows(_score_rows(oracle))
 
     # the training queries' features: the same kernel without the Levi
-    # filter, equal in every column to the oracle without levi_filter
+    # filter, equal in every column to the oracle without the Levi filter
     feats = training_features(pages, mesh, gold)
     assert feats.columns == FEATURE_COLS
     expect = _relational_features(pages, mesh, gold, levi=False)
@@ -177,10 +190,8 @@ def test_document_fulltext_is_the_fused_kernel(spark, fixtures, mesh):
 
 
 def _gazetteer(mesh_rows):
-    gaz: dict[str, list[tuple[str, str]]] = {}
-    for _tree, mesh_id, term, typ in mesh_rows:
-        gaz.setdefault(term, []).append((mesh_id, typ))
-    return gaz, max(t.count(" ") + 1 for t in gaz)
+    gaz = gazetteer_dict((term, mesh_id, typ) for _tree, mesh_id, term, typ in mesh_rows)
+    return gaz, longest_term_words(gaz)
 
 
 def test_score_document_kernel():

@@ -2,20 +2,18 @@
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from relation_extraction_cdr_spark.operators.mentions import (
-    detect_mentions,
-    entity_inventory,
+    detect_mentions_py,
+    document_inventory,
 )
-from relation_extraction_cdr_spark.plans.pipeline import extracted_docs
-from relation_extraction_cdr_spark.sources.mesh import gazetteer
+from relation_extraction_cdr_spark.plans.pipeline import _mesh_artifacts, extracted_docs
+from relation_extraction_cdr_spark.scoring.scorer import document_mentions
 
 
 def test_detect_matches_gold_offsets(spark, fixtures, mesh):
     pages, gold_m, _ = fixtures
     docs = extracted_docs(pages)
-    got = detect_mentions(docs, gazetteer(mesh, type_col="type"))
+    got = document_mentions(docs, *_mesh_artifacts(mesh, "type"))
     got_set = {
         (r["url"], r["mesh_id"], r["start"], r["end"])
         for r in got.collect()
@@ -34,12 +32,9 @@ def test_detect_matches_gold_offsets(spark, fixtures, mesh):
 
 
 def test_longest_match_wins(spark, mesh):
-    df = spark.createDataFrame(
-        [("u1", "acute renal failure was observed after lithium use.")],
-        "url string, text string",
-    )
-    got = detect_mentions(df, gazetteer(mesh, type_col="type")).collect()
-    by_id = {r["mesh_id"]: r for r in got}
+    text = "acute renal failure was observed after lithium use."
+    got = detect_mentions_py(text, *_mesh_artifacts(mesh, "type"))
+    by_id = {m["mesh_id"]: m for m in got}
     assert "D010005" in by_id  # acute renal failure (longest)
     assert "D010004" not in by_id  # contained 'renal failure' suppressed
     assert by_id["D010005"]["start"] == 0
@@ -48,20 +43,16 @@ def test_longest_match_wins(spark, mesh):
 
 
 def test_punctuation_stripped_offsets(spark, mesh):
-    df = spark.createDataFrame(
-        [("u1", "tremor, and seizures! were seen.")], "url string, text string"
-    )
-    got = {r["mesh_id"]: r for r in detect_mentions(df, gazetteer(mesh, type_col="type")).collect()}
+    text = "tremor, and seizures! were seen."
+    got = {m["mesh_id"]: m for m in detect_mentions_py(text, *_mesh_artifacts(mesh, "type"))}
     assert got["D010001"]["start"] == 0 and got["D010001"]["end"] == 6
     assert got["D010002"]["start"] == 12 and got["D010002"]["end"] == 20
 
 
 def test_entity_inventory_last_mention_wins(spark, mesh):
-    df = spark.createDataFrame(
-        [("u1", "lithium early. later lithium again.")], "url string, text string"
-    )
-    inv = entity_inventory(detect_mentions(df, gazetteer(mesh, type_col="type")))
-    row = inv.where(F.col("mesh_id") == "D910001").first()
+    text = "lithium early. later lithium again."
+    inv = document_inventory(text, *_mesh_artifacts(mesh, "type"))
+    row = next(e for e in inv if e["mesh_id"] == "D910001")
     assert len(row["positions"]) == 2
     assert row["rep_text"] == "lithium"
     assert row["type"] == "Chemical"

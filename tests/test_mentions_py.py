@@ -1,26 +1,27 @@
-"""In-UDF python gazetteer matcher must equal the relational operator."""
+"""The per-document gazetteer matcher must equal its relational
+restatement (tests/relational_oracle.py)."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from relation_extraction_cdr_spark.operators.mentions import (
-    detect_mentions,
     detect_mentions_py,
-    entity_inventory,
     entity_inventory_py,
     gazetteer_dict,
+    longest_term_words,
 )
 from relation_extraction_cdr_spark.plans.pipeline import extracted_docs
 from relation_extraction_cdr_spark.sources.mesh import gazetteer
+from tests.relational_oracle import detect_mentions, entity_inventory
 
 
 def test_python_matcher_equals_relational(spark, fixtures, mesh):
     pages, _, _ = fixtures
     docs = extracted_docs(pages)
     gaz = gazetteer(mesh, type_col="type")
-    gd = gazetteer_dict(gaz)
-    max_words = max(t.count(" ") + 1 for t in gd)
+    gd = gazetteer_dict(gaz.collect())
+    max_words = longest_term_words(gd)
 
     relational = {}
     for r in detect_mentions(docs, gaz).collect():
@@ -58,7 +59,7 @@ def test_python_matcher_on_documents_table(spark):
     gaz = spark.createDataFrame(
         [(t, m, ty) for t, m, ty, _ in _GAZ_ROWS], "term string, mesh_id string, type string"
     )
-    gd = gazetteer_dict(gaz)
+    gd = gazetteer_dict(gaz.collect())
     relational = {}
     for r in detect_mentions(docs, gaz).collect():
         relational.setdefault(r["url"], set()).add((r["mesh_id"], r["start"], r["end"]))

@@ -1,9 +1,9 @@
 """Golden-input parity on the REAL 2017 MeSH tree the reference ships
 (data_loaders/2017MeshTree.txt, 57,840 TSV rows) — the dimension table
 the whole design broadcasts. Verifies scan fidelity, the id->tree
-multimap aggregation (A2, cdr_dataset.py:22-34), and that real-size
-gazetteer mention detection works end-to-end through the broadcast
-join on genuine multi-word medical terms."""
+multimap aggregation (A2, cdr_dataset.py:22-34), and that the
+per-document mention detector works on the real-size gazetteer dict
+with genuine multi-word medical terms."""
 
 from __future__ import annotations
 
@@ -12,7 +12,11 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from relation_extraction_cdr_spark.operators.mentions import detect_mentions
+from relation_extraction_cdr_spark.operators.mentions import (
+    detect_mentions_py,
+    gazetteer_dict,
+    longest_term_words,
+)
 from relation_extraction_cdr_spark.sources.mesh import (
     gazetteer,
     read_mesh_tree,
@@ -56,18 +60,17 @@ def test_real_mesh_scan_and_multimap(spark, mesh_real):
 
 def test_real_mesh_gazetteer_detection(spark, mesh_real):
     """Detect real MeSH terms (incl. multi-word, longest-match shadowing)
-    in a composed abstract using the full 58k-row broadcast gazetteer.
+    in a composed abstract using the full 58k-row gazetteer.
     Only C* (disease) and D* (chemical) branches are linkable — anatomy
     (A*) terms like 'body regions' must NOT produce mentions."""
     text = (
         "exposure to aspirin induced erythema chronicum migrans and "
         "migraine disorders while body regions showed edema."
     ).lower()
-    docs = spark.createDataFrame([("u1", text)], "url string, text string")
-    gaz = gazetteer(mesh_real)
+    gd = gazetteer_dict(gazetteer(mesh_real).collect())
     got = {
-        (r["mention_text"], r["mesh_id"], r["type"])
-        for r in detect_mentions(docs, gaz).collect()
+        (m["mention_text"], m["mesh_id"], m["type"])
+        for m in detect_mentions_py(text, gd, longest_term_words(gd))
     }
     surfaces = {s for s, _, _ in got}
     # multi-word disease terms match whole

@@ -58,13 +58,12 @@ def test_truncate_back_to_last_marker():
 
 
 def test_distributed(spark, fixtures, mesh):
-    from relation_extraction_cdr_spark.operators.mentions import detect_mentions
-    from relation_extraction_cdr_spark.plans.pipeline import extracted_docs
-    from relation_extraction_cdr_spark.sources.mesh import gazetteer
+    from relation_extraction_cdr_spark.plans.pipeline import _mesh_artifacts, extracted_docs
+    from relation_extraction_cdr_spark.scoring.scorer import document_mentions
 
     pages, _, _ = fixtures
     docs = extracted_docs(pages)
-    mentions = detect_mentions(docs, gazetteer(mesh, type_col="type"))
+    mentions = document_mentions(docs, *_mesh_artifacts(mesh, "type"))
     rows = ner_features(docs_with_mentions(docs, mentions)).collect()
     assert len(rows) > 30
     for r in rows[:10]:
@@ -97,11 +96,10 @@ def test_score_types_layout_independent(spark, fixtures, mesh):
     head)."""
     import numpy as np
 
-    from relation_extraction_cdr_spark.operators.mentions import detect_mentions
     from relation_extraction_cdr_spark.operators.ner import score_types
-    from relation_extraction_cdr_spark.plans.pipeline import extracted_docs
+    from relation_extraction_cdr_spark.plans.pipeline import _mesh_artifacts, extracted_docs
     from relation_extraction_cdr_spark.scoring.electra import ElectraConfig
-    from relation_extraction_cdr_spark.sources.mesh import gazetteer
+    from relation_extraction_cdr_spark.scoring.scorer import document_mentions
 
     cfg = ElectraConfig(
         vocab_size=30524, embedding_size=32, hidden_size=32,
@@ -109,7 +107,7 @@ def test_score_types_layout_independent(spark, fixtures, mesh):
     )
     pages, _, _ = fixtures
     docs = extracted_docs(pages.limit(12))
-    mentions = detect_mentions(docs, gazetteer(mesh, type_col="type"))
+    mentions = document_mentions(docs, *_mesh_artifacts(mesh, "type"))
     feats = ner_features(docs_with_mentions(docs, mentions))
 
     def as_map(rows):

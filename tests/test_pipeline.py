@@ -7,6 +7,7 @@ import re
 import subprocess
 import sys
 import textwrap
+from contextlib import contextmanager
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -42,6 +43,23 @@ def test_unknown_scorer_backend_rejected(spark, fixtures, mesh, backend):
         score_candidates(pages, mesh, scorer_backend=backend)
 
 
+@contextmanager
+def _job_group(spark, group):
+    """Tag the jobs the block starts with ``group``, then clear the tag."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def _group_jobs(spark, group) -> list[int]:
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("salt", [-1, -8])
 def test_negative_salt_partitions_rejected_before_any_job(
     spark, fixtures, mesh, salt
@@ -49,17 +67,22 @@ def test_negative_salt_partitions_rejected_before_any_job(
     """A negative salt_partitions raises ValueError up front instead of
     running the heavy-text probe and then failing in repartition."""
     pages, _, _ = fixtures
-    sc = spark.sparkContext
     group = f"negative-salt{salt}"
-    sc.setJobGroup(group, "must stay empty")
-    try:
+    with _job_group(spark, group):
         with pytest.raises(ValueError, match="salt_partitions"):
             score_candidates(pages, mesh, salt_partitions=salt)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _group_jobs(spark, group) == []
+
+
+def test_repeat_call_with_gold_starts_no_job(spark, fixtures, mesh):
+    """The gazetteer dict and the Levi tree map are collected once per
+    mesh table: after a first call, a plan-only call with the same mesh
+    table and gold starts no Spark job."""
+    pages, _, gold = fixtures
+    score_candidates(pages, mesh, gold=gold)
+    with _job_group(spark, "repeat-with-gold"):
+        score_candidates(pages, mesh, gold=gold)
+    assert _group_jobs(spark, "repeat-with-gold") == []
 
 
 def test_zero_salt_partitions_builds_no_exchange(spark, fixtures, mesh, monkeypatch):

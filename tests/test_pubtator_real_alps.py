@@ -105,13 +105,8 @@ def test_real_alps_candidates_and_labels(spark):
     with gold-pair labels over alps_test.txt, vs an independent
     double-loop oracle. Exercises Other-typed entities (excluded from
     pair gen) and multi-mention entities on non-synthetic text."""
-    import pyspark.sql.functions as F
-
-    from relation_extraction_cdr_spark.operators.candidates import (
-        candidate_pairs,
-        label_pairs,
-    )
-    from relation_extraction_cdr_spark.operators.mentions import entity_inventory
+    from relation_extraction_cdr_spark.operators.candidates import candidate_pairs_py
+    from relation_extraction_cdr_spark.operators.mentions import entity_inventory_py
 
     path = f"{ALPS_DIR}/alps_test.txt"
     _, exp_ments, exp_rels = _py_parse(path)
@@ -132,19 +127,25 @@ def test_real_alps_candidates_and_labels(spark):
         for m in diss[d]
     }
 
+    # each document's parsed mentions in (start, end, surface, type)
+    # order, the last-mention tiebreak, through the per-document
+    # inventory and pair steps
     blocks = PT.read_pubtator(spark, path)
-    mentions = PT.parse_mentions(blocks).select(
-        F.col("doc_id").alias("url"), "mesh_id", "mention_text", "type", "start", "end"
-    )
-    inv = entity_inventory(mentions)
-    pairs = candidate_pairs(inv)
-    gold_df = PT.parse_relations(blocks, PT.parse_mentions(blocks)).select(
-        F.col("doc_id").alias("url"), "chem_mesh", "dis_mesh"
-    )
-    labeled = label_pairs(pairs, gold_df)
+    mentions: dict[str, list[dict]] = {}
+    for r in sorted(
+        PT.parse_mentions(blocks).collect(),
+        key=lambda r: (r["start"], r["end"], r["mention_text"], r["type"]),
+    ):
+        mentions.setdefault(r["doc_id"], []).append(r.asDict())
+    gold_pairs: dict[str, list[tuple[str, str]]] = {}
+    for r in PT.parse_relations(blocks, PT.parse_mentions(blocks)).collect():
+        gold_pairs.setdefault(r["doc_id"], []).append((r["chem_mesh"], r["dis_mesh"]))
     got = {
-        (r["url"], r["chem_mesh"], r["dis_mesh"], r["label"])
-        for r in labeled.collect()
+        (doc, c["mesh_id"], d["mesh_id"], label)
+        for doc, ms in mentions.items()
+        for c, d, label in candidate_pairs_py(
+            entity_inventory_py(ms), gold_pairs.get(doc, []), {}
+        )
     }
     assert got == expect
     assert sum(1 for *_x, l in expect if l == 1) > 30  # real positives present

@@ -27,6 +27,7 @@ SUBSET = [
     "q25_simhash",
     "q26_ann_cosine_topk",
     "q28_cdr_mentions",
+    "q29_cdr_candidates",
     "q30_cdr_triples",
     "q31_levi_filter",
 ]

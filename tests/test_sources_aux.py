@@ -72,13 +72,8 @@ def test_gda_to_cdr_end_to_end(spark, tmp_path):
     plays the chemical role).  Includes the reference quirk: a label=0
     row still becomes a CID relation line (write_cdr_file ignores the
     label value, convert_gda_to_cdr.py:112-113)."""
-    import pyspark.sql.functions as F
-
-    from relation_extraction_cdr_spark.operators.candidates import (
-        candidate_pairs,
-        label_pairs,
-    )
-    from relation_extraction_cdr_spark.operators.mentions import entity_inventory
+    from relation_extraction_cdr_spark.operators.candidates import candidate_pairs_py
+    from relation_extraction_cdr_spark.operators.mentions import entity_inventory_py
     from relation_extraction_cdr_spark.sources.gda import (
         gda_to_cdr,
         read_gda_abstracts,
@@ -126,24 +121,23 @@ def test_gda_to_cdr_end_to_end(spark, tmp_path):
     assert rt_docs.count() == 2 and rt_mentions.count() == 4
     assert rt_relations.count() == 2
 
-    # the gda_trainer pipeline shape: Gene as the 'Chemical' role
-    inv = entity_inventory(
-        rt_mentions.select(
-            F.col("doc_id").alias("url"), "mesh_id", "start", "end",
-            F.col("mention_text"),
-            F.when(F.col("type") == "Gene", "Chemical").otherwise(F.col("type")).alias("type"),
-        )
-    )
-    pairs = candidate_pairs(inv)
-    labeled = label_pairs(
-        pairs,
-        rt_relations.select(
-            F.col("doc_id").alias("url"), "chem_mesh", "dis_mesh"
-        ),
-    )
+    # the gda_trainer pipeline shape: Gene as the 'Chemical' role, each
+    # document's mentions in start order through the per-document
+    # inventory and pair steps
+    mentions: dict[str, list[dict]] = {}
+    for r in sorted(rt_mentions.collect(), key=lambda r: (r["start"], r["end"])):
+        m = r.asDict()
+        m["type"] = "Chemical" if m["type"] == "Gene" else m["type"]
+        mentions.setdefault(r["doc_id"], []).append(m)
+    gold: dict[str, list[tuple[str, str]]] = {}
+    for r in rt_relations.collect():
+        gold.setdefault(r["doc_id"], []).append((r["chem_mesh"], r["dis_mesh"]))
     got = {
-        (r["url"], r["chem_mesh"], r["dis_mesh"]): r["label"]
-        for r in labeled.collect()
+        (doc, c["mesh_id"], d["mesh_id"]): label
+        for doc, ms in mentions.items()
+        for c, d, label in candidate_pairs_py(
+            entity_inventory_py(ms), gold.get(doc, []), {}
+        )
     }
     assert got == {
         ("doc1", "G672", "D001943"): 1,
