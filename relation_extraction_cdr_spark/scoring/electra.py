@@ -56,6 +56,13 @@ the ALPS head on ``alps_pooled`` in scorer.score_alps_3way; the NER
 head in ner.score_types.  The literal-port parity tests
 (tests/test_electra.py) pin those kernels directly.
 
+Float bits are per OpenBLAS kernel: the GEMMs round by the kernel numpy's
+bundled OpenBLAS loads, which session.py pins by the CPU's instruction-set
+tier (``_blas.pin_kernel``: SkylakeX on AVX-512, Haswell on AVX2+FMA) in
+local mode.  Within one kernel, batching equal-length documents is
+bit-exact (tests/test_electra.py), so ``encoded``'s outputs do not depend
+on partitioning.
+
 GELU: x * 0.5 * (1 + erf(x / sqrt(2))).  numpy has no erf; the engine
 uses the Abramowitz-Stegun 7.1.26 rational approximation (|err| <=
 1.5e-7, i.e. float32-exact); the pytest literal port uses math.erf, so

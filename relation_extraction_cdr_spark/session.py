@@ -7,13 +7,30 @@ Scale rationale (100 TB / 1000-executor target, tested on local[N]):
 - Arrow on: every Python boundary is an Arrow batch, never per-row.
 - shuffle.partitions: small default for local tests; production submits
   override via spark-submit conf (or rely on AQE coalescing).
+- BLAS: one thread per Python worker, and OpenBLAS's GEMM kernel pinned
+  by the driver CPU's instruction-set tier (``_blas.pin_kernel``:
+  AVX-512 → SkylakeX, AVX2+FMA → Haswell), so the encoder never runs the
+  generic Prescott kernel OpenBLAS falls back to on a CPU model it does
+  not know, and its float bits are those of the tier's kernel.  In local
+  mode the JVM, and through it every Python worker, inherits the pin
+  from this process's environment.  It is deliberately NOT sent as
+  ``spark.executorEnv``: the driver's CPU does not describe a cluster's
+  executors, and an AVX-512 kernel on an executor without AVX-512 dies
+  of SIGILL.  Executors keep OpenBLAS's own pick.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from ._blas import pin_kernel
+
+# before pyspark, which loads numpy: OpenBLAS reads the kernel when it
+# loads.  Python workers inherit it through the JVM (local mode only, see
+# above); a kernel the user exported is kept
+pin_kernel()
+
+from pyspark.sql import SparkSession  # noqa: E402
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 

@@ -11,15 +11,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
 # Pinned float outputs (test_fused_output_pinned) are the bits of the
-# numpy encoder's float32 GEMMs, and OpenBLAS picks its GEMM kernel by
-# CPU when it loads: on one host the electra digest read 4debd357686a3b1f
-# (SapphireRapids kernel), 31b07bfea5ab7c97 (SkylakeX), 50deaa7c80d532eb
-# (Haswell) and 3ebcf2428b63fbcd (Prescott).  Fix the kernel to the
-# generic x86-64 one so the pins name the code, not the host.  Set
-# before numpy loads, here and in the Spark workers this process starts.
-# A stopgap for the suite only: the engine and perfbench run the host's
-# own kernel (ROADMAP item 9).
-os.environ.setdefault("OPENBLAS_CORETYPE", "Prescott")
+# numpy encoder's float32 GEMMs, which depend on OpenBLAS's GEMM kernel.
+# Pin it by instruction-set tier as the engine does (session.py), before
+# numpy loads, so this process and the Spark workers it starts run one
+# kernel: the driver-vs-worker parity tests compare their bits exactly.
+from relation_extraction_cdr_spark._blas import pin_kernel  # noqa: E402
+
+pin_kernel()
 
 
 @pytest.fixture(scope="session")

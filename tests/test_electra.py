@@ -583,6 +583,34 @@ def test_encoder_equal_length_batching_bit_exact(spark, fixtures, mesh):
             assert (solo == batch[b]).all(), f"T={T} row {b} not bit-identical"
 
 
+def test_encoder_batching_bit_exact_at_default_config():
+    """The same contract at the engine's own shape (DEFAULT_CONFIG, the
+    12-layer encoder electra.encoded runs), up to the 512-token window
+    and the ENCODER_BATCH width, under whichever OpenBLAS kernel this
+    process loaded: the partition invariance of electra.encoded rests on
+    it."""
+    import numpy as np
+
+    from relation_extraction_cdr_spark.scoring.electra import (
+        DEFAULT_CONFIG,
+        ENCODER_BATCH,
+        encoder_forward,
+        resolve_weights,
+    )
+
+    w = resolve_weights(DEFAULT_CONFIG, 0)
+    rng = np.random.default_rng(11)
+    for T in (29, 149, 512):
+        ids = rng.integers(1, 30000, size=(ENCODER_BATCH, T)).astype(np.int64)
+        att = np.ones((ENCODER_BATCH, T), np.float32)
+        solo = [encoder_forward(w, ids[b : b + 1], att[b : b + 1])[0]
+                for b in range(ENCODER_BATCH)]
+        for B in (2, ENCODER_BATCH):
+            batch = encoder_forward(w, ids[:B], att[:B])
+            for b in range(B):
+                assert (solo[b] == batch[b]).all(), f"T={T} B={B} row {b} not bit-identical"
+
+
 def test_score_fulltext_batched_bit_identical(spark, fixtures, mesh):
     """score_fulltext / score_alps_3way emit BIT-IDENTICAL values on one
     partition and under different partitionings — the q87/q89

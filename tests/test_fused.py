@@ -40,6 +40,7 @@ from tests.relational_oracle import (
     entity_inventory,
     label_pairs,
 )
+from tests.test_blas import worker_corename
 from tests.test_candidates import _levi_rejected_oracle
 
 FEATURE_COLS = [c.split(" ")[0] for c in FEATURES_SCHEMA.split(", ")]
@@ -151,15 +152,29 @@ def test_fused_equals_modular(spark, fixtures, mesh):
     assert _rows(score_candidates(pages, mesh, gold=gold)) == oracle
 
 
-@pytest.mark.parametrize(
-    "backend, digest",
-    [("stub", "c480f58a3317dcb8"), ("electra", "3ebcf2428b63fbcd")],
-)
-def test_fused_output_pinned(spark, fixtures, mesh, backend, digest):
+# the electra rows are the bits of the encoder's float32 GEMMs, so their
+# digest is one per OpenBLAS kernel; the engine pins the kernel by
+# instruction-set tier (relation_extraction_cdr_spark._blas)
+ELECTRA_DIGESTS = {
+    "SkylakeX": "31b07bfea5ab7c97",
+    "Haswell": "50deaa7c80d532eb",
+    "Prescott": "3ebcf2428b63fbcd",  # OpenBLAS's generic x86-64 kernel
+}
+
+
+@pytest.mark.parametrize("backend", ["stub", "electra"])
+def test_fused_output_pinned(spark, fixtures, mesh, backend):
     """The fused pipeline's scored rows on the 60-doc fixture, per
     scorer backend, as one digest: the first 16 hex digits of the
     sha256 of ``repr`` of the sorted row tuples.  A change that moves
-    any row, label, decision or probability bit moves the digest."""
+    any row, label, decision or probability bit moves the digest.  The
+    electra digest is looked up by the kernel a Spark worker runs."""
+    if backend == "stub":
+        digest = "c480f58a3317dcb8"
+    else:
+        kernel = worker_corename(spark)
+        assert kernel in ELECTRA_DIGESTS, f"no electra digest for OpenBLAS kernel {kernel}"
+        digest = ELECTRA_DIGESTS[kernel]
     pages, _, gold = fixtures
     rows = score_candidates(pages, mesh, gold=gold, scorer_backend=backend).collect()
     assert len(rows) == 117
