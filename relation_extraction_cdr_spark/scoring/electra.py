@@ -110,31 +110,57 @@ DEFAULT_CONFIG = ElectraConfig()
 
 
 def _erf(x: np.ndarray) -> np.ndarray:
-    """Vectorized erf, Abramowitz & Stegun 7.1.26 (|err| <= 1.5e-7)."""
+    """Vectorized erf, Abramowitz & Stegun 7.1.26 (|err| <= 1.5e-7):
+    sign(x) * (1 - poly(t) * exp(-|x|^2)), t = 1 / (1 + p|x|).  The
+    float ops and their order are the textbook expression's; each step
+    writes into one of four temporaries this function owns."""
     sign = np.sign(x)
-    x = np.abs(x)
-    t = 1.0 / (1.0 + 0.3275911 * x)
-    poly = t * (
-        0.254829592
-        + t * (-0.284496736 + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429)))
-    )
-    return sign * (1.0 - poly * np.exp(-x * x))
+    a = np.abs(x)
+    t = a * 0.3275911
+    t += 1.0
+    np.divide(1.0, t, out=t)
+    poly = t * 1.061405429
+    for c in (-1.453152027, 1.421413741, -0.284496736, 0.254829592):
+        poly += c
+        poly *= t
+    a *= a
+    np.negative(a, out=a)  # (-|x|) * |x|: negation is exact
+    np.exp(a, out=a)
+    poly *= a
+    np.subtract(1.0, poly, out=poly)
+    poly *= sign
+    return poly
 
 
 def gelu(x: np.ndarray) -> np.ndarray:
     """transformers.activations.gelu: x * 0.5 * (1 + erf(x / sqrt 2))."""
-    return x * 0.5 * (1.0 + _erf(x / np.sqrt(2.0)))
+    y = x / np.sqrt(2.0)
+    e = _erf(y)
+    e += 1.0
+    np.multiply(x, 0.5, out=y)
+    y *= e
+    return y
 
 
 def layer_norm(x: np.ndarray, w: np.ndarray, b: np.ndarray, eps: float) -> np.ndarray:
-    mu = x.mean(axis=-1, keepdims=True)
-    var = x.var(axis=-1, keepdims=True)
-    return (x - mu) / np.sqrt(var + eps) * w + b
+    """(x - mean) / sqrt(var + eps) * w + b over the last axis; ``var``
+    is numpy's (the mean of the squared centred values), computed from
+    the one centred array."""
+    d = x - x.mean(axis=-1, keepdims=True)
+    var = np.square(d).mean(axis=-1, keepdims=True)
+    var += eps
+    np.sqrt(var, out=var)
+    d /= var
+    d *= w
+    d += b
+    return d
 
 
 def softmax(x: np.ndarray) -> np.ndarray:
-    e = np.exp(x - x.max(axis=-1, keepdims=True))
-    return e / e.sum(axis=-1, keepdims=True)
+    e = x - x.max(axis=-1, keepdims=True)
+    np.exp(e, out=e)
+    e /= e.sum(axis=-1, keepdims=True)
+    return e
 
 
 class ElectraWeights:
@@ -281,14 +307,15 @@ def encoder_forward(
     if attention_mask is None:
         attention_mask = np.ones((B, T), np.float32)
 
-    h = (
-        p["emb.word"][input_ids]
-        + p["emb.pos"][np.arange(T)][None, :, :]
-        + p["emb.type"][0][None, None, :]
-    )
+    # bias, residual and scale steps write into the fresh array the
+    # gather or GEMM before them returned
+    h = p["emb.word"][input_ids]
+    h += p["emb.pos"][:T]
+    h += p["emb.type"][0]
     h = layer_norm(h, p["emb.ln.w"], p["emb.ln.b"], c.layer_norm_eps)
     if "proj.w" in p:
-        h = h @ p["proj.w"] + p["proj.b"]
+        h = h @ p["proj.w"]
+        h += p["proj.b"]
 
     # get_extended_attention_mask: (1 - m) * -10000, broadcast over heads
     ext = ((1.0 - attention_mask.astype(np.float32)) * -10000.0)[:, None, None, :]
@@ -296,23 +323,32 @@ def encoder_forward(
     nh = c.num_attention_heads
     dh = c.hidden_size // nh
 
+    def dense(x, name, residual=None):  # x @ w + b (+ residual)
+        y = x @ p[f"{name}.w"]
+        y += p[f"{name}.b"]
+        if residual is not None:
+            y += residual
+        return y
+
     def split_heads(x):  # [B,T,H] -> [B,nh,T,dh]
         return x.reshape(B, T, nh, dh).transpose(0, 2, 1, 3)
 
     for i in range(c.num_hidden_layers):
-        q = split_heads(h @ p[f"l{i}.q.w"] + p[f"l{i}.q.b"])
-        k = split_heads(h @ p[f"l{i}.k.w"] + p[f"l{i}.k.b"])
-        v = split_heads(h @ p[f"l{i}.v.w"] + p[f"l{i}.v.b"])
-        scores = q @ k.transpose(0, 1, 3, 2) / np.sqrt(dh) + ext
+        q = split_heads(dense(h, f"l{i}.q"))
+        k = split_heads(dense(h, f"l{i}.k"))
+        v = split_heads(dense(h, f"l{i}.v"))
+        scores = q @ k.transpose(0, 1, 3, 2)
+        scores /= np.sqrt(dh)
+        scores += ext
         ctx = softmax(scores) @ v  # [B,nh,T,dh]
         ctx = ctx.transpose(0, 2, 1, 3).reshape(B, T, c.hidden_size)
         attn = layer_norm(
-            ctx @ p[f"l{i}.ao.w"] + p[f"l{i}.ao.b"] + h,
+            dense(ctx, f"l{i}.ao", h),
             p[f"l{i}.aln.w"], p[f"l{i}.aln.b"], c.layer_norm_eps,
         )
-        inter = gelu(attn @ p[f"l{i}.i.w"] + p[f"l{i}.i.b"])
+        inter = gelu(dense(attn, f"l{i}.i"))
         h = layer_norm(
-            inter @ p[f"l{i}.o.w"] + p[f"l{i}.o.b"] + attn,
+            dense(inter, f"l{i}.o", attn),
             p[f"l{i}.oln.w"], p[f"l{i}.oln.b"], c.layer_norm_eps,
         )
     return h

@@ -23,8 +23,19 @@ FileSystem (hidden temp file, then rename), so bookkeeping starts no
 job and no Python task; the read-back declares SCORED_SCHEMA, so no
 footer is inferred.
 
-On a real cluster each bucket is itself a distributed job over many
-executors; n_buckets controls restart granularity, not parallelism.
+Two buckets are in flight (``IN_FLIGHT``): the calling thread plans
+bucket b+1 and submits its scoring write to a thread pool before it
+waits for bucket b's write and commits b's lineage row, so b+1's driver
+set-up and first tasks overlap b's straggler tail and commit.  Lineage
+rows are still committed one at a time, in bucket order, each only
+after its own write returned; the first failure stops every later
+commit and is re-raised once the in-flight write has finished.  Under
+the session's default FIFO scheduling all of bucket b's tasks launch
+before b+1's, so a kill loses at most one bucket's work more than a
+one-at-a-time run, and a deeper queue would only queue tasks behind the
+same cores.  On a real cluster each bucket is itself a distributed job
+over many executors.
+
 A Structured Streaming variant (`stream_pages`) expresses the same plan
 over readStream+foreachBatch for continuously arriving pages with
 idempotent per-batch partition overwrites.
@@ -34,11 +45,14 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -50,6 +64,9 @@ CHECKPOINT_SCHEMA = (
     "run_id string, stage string, partition_id int, url_count long, "
     "row_count long, written_at timestamp"
 )
+
+# scoring writes in flight at once (see the module docstring)
+IN_FLIGHT = 2
 
 
 def bucketed(pages: DataFrame, n_buckets: int) -> DataFrame:
@@ -92,6 +109,15 @@ def _append_lineage(spark: SparkSession, checkpoint_dir: str, row: dict) -> None
         raise
 
 
+def _write_observed(scored: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``scored`` as parquet; returns the written
+    row count from an ``Observation``, read after the commit (it counts
+    the committed result stage, so task retries do not inflate it)."""
+    rows = Observation()
+    scored.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return rows.get["n"]
+
+
 def completed_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str, stage: str) -> set[int]:
     """Bucket ids with committed lineage rows.  The not-yet-created case
     is detected with the Hadoop FileSystem of the checkpoint URI, NOT
@@ -123,7 +149,6 @@ def run_resumable(
     checkpoint_dir: str,
     run_id: str = "run1",
     n_buckets: int = 8,
-    fail_after: int | None = None,
     **pipeline_kwargs,
 ) -> DataFrame:
     """Process pages bucket-by-bucket with lineage; returns the scored
@@ -136,15 +161,19 @@ def run_resumable(
     text cannot pay for one salt task (``pipeline.salt_tasks`` is 0) is
     scored unsalted, so only a bucket with at least CHARS_PER_TASK of
     heavy text runs the probe, and that bucket's text is extracted once
-    more than with a url-only count.
-    ``row_count`` comes from an ``Observation`` on the scoring write,
-    read after the write commits (it counts the committed result stage,
-    so task retries do not inflate it).  The driver then writes the
-    lineage row itself (``_append_lineage``), so bookkeeping starts no
-    job and no Python task.  A negative ``salt_partitions`` raises
-    before any job.
+    more than with a url-only count.  A negative ``salt_partitions``
+    raises before any job.
 
-    ``fail_after``: test hook — raise after N buckets to simulate a kill.
+    The calling thread plans each bucket (``score_candidates``, with
+    its probe) and submits the bucket's observed scoring write to a pool
+    of ``IN_FLIGHT`` threads that inherit its job group and tags; with
+    two buckets in flight it then waits for the older write and commits
+    that bucket's lineage row (``_append_lineage``, written by the
+    driver: no job, no Python task).  Rows are committed in bucket
+    order, each after its own write returned.  The first error (a
+    failed write, plan or commit) stops every later commit and is
+    re-raised after the in-flight write has finished, so a rerun
+    recomputes exactly the uncommitted buckets.
     """
     # imported at call time: instrumentation wraps score_candidates by
     # module attribute
@@ -169,28 +198,37 @@ def run_resumable(
         if pending
         else {}
     )
-    for processed, b in enumerate(pending):
-        if fail_after is not None and processed >= fail_after:
-            raise RuntimeError(f"simulated kill after {processed} buckets")
-        st = stats.get(b, {})
-        kwargs = pipeline_kwargs
-        if salt and not salt_tasks(salt, st.get("heavy")):
-            # the probe in score_candidates would build no exchange
-            kwargs = {**pipeline_kwargs, "salt_partitions": None}
-        part = pages_b.where(F.col("bucket") == b).drop("bucket")
-        scored = score_candidates(part, mesh_tree, **kwargs)
-        rows = Observation()
-        scored.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"bucket={b}")
-        )
+
+    def commit(b, write) -> None:
         _append_lineage(spark, checkpoint_dir, {
             "run_id": run_id,
             "stage": "score",
             "partition_id": b,
-            "url_count": st.get("urls", 0),
-            "row_count": rows.get["n"],
+            "url_count": stats.get(b, {}).get("urls", 0),
+            "row_count": write.result(),
             "written_at": datetime.now().astimezone(),
         })
+
+    # the wrapper copies the caller's job group and tags into the pool
+    write_observed = inheritable_thread_target(spark)(_write_observed)
+    in_flight: deque = deque()
+    # leaving the block waits for every submitted write, so an error is
+    # re-raised only after the in-flight write has finished
+    with ThreadPoolExecutor(IN_FLIGHT) as pool:
+        for b in pending:
+            kwargs = pipeline_kwargs
+            if salt and not salt_tasks(salt, stats.get(b, {}).get("heavy")):
+                # the probe in score_candidates would build no exchange
+                kwargs = {**pipeline_kwargs, "salt_partitions": None}
+            part = pages_b.where(F.col("bucket") == b).drop("bucket")
+            scored = score_candidates(part, mesh_tree, **kwargs)
+            in_flight.append((b, pool.submit(
+                write_observed, scored, os.path.join(out_dir, f"bucket={b}")
+            )))
+            if len(in_flight) == IN_FLIGHT:
+                commit(*in_flight.popleft())
+        while in_flight:
+            commit(*in_flight.popleft())
     return spark.read.schema(SCORED_SCHEMA).parquet(os.path.join(out_dir, "bucket=*"))
 
 

@@ -46,6 +46,58 @@ def test_erf_accuracy():
     assert np.max(np.abs(E._erf(xs) - P.erf_exact(xs))) < 2e-7
 
 
+def _oracle_erf(x):
+    sign = np.sign(x)
+    x = np.abs(x)
+    t = 1.0 / (1.0 + 0.3275911 * x)
+    poly = t * (
+        0.254829592
+        + t * (-0.284496736 + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429)))
+    )
+    return sign * (1.0 - poly * np.exp(-x * x))
+
+
+def _oracle_gelu(x):
+    return x * 0.5 * (1.0 + _oracle_erf(x / np.sqrt(2.0)))
+
+
+def _oracle_layer_norm(x, w, b, eps):
+    mu = x.mean(axis=-1, keepdims=True)
+    var = x.var(axis=-1, keepdims=True)
+    return (x - mu) / np.sqrt(var + eps) * w + b
+
+
+def _oracle_softmax(x):
+    e = np.exp(x - x.max(axis=-1, keepdims=True))
+    return e / e.sum(axis=-1, keepdims=True)
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_elementwise_kernels_match_expressions_bitwise(dtype):
+    """_erf, gelu, layer_norm and softmax, which write into their own
+    temporaries, equal the plain numpy expressions bit for bit (float32
+    as in the encoder, float64 as in train.py) and leave their inputs
+    unchanged."""
+    rng = np.random.default_rng(11)
+    for shape in [(1,), (7, 1024), (3, 5, 256), (2, 4, 9, 9)]:
+        x = (rng.standard_normal(shape) * 4).astype(dtype)
+        x.flat[0] = 0.0  # sign(0) == 0
+        w = rng.standard_normal(shape[-1]).astype(dtype)
+        b = rng.standard_normal(shape[-1]).astype(dtype)
+        before = [a.copy() for a in (x, w, b)]
+        pairs = [
+            (E._erf(x), _oracle_erf(x)),
+            (E.gelu(x), _oracle_gelu(x)),
+            (E.softmax(x), _oracle_softmax(x)),
+            (E.layer_norm(x, w, b, 1e-12), _oracle_layer_norm(x, w, b, 1e-12)),
+        ]
+        for got, want in pairs:
+            assert got.dtype == want.dtype == dtype
+            assert got.tobytes() == want.tobytes()
+        for a, a0 in zip((x, w, b), before):
+            assert a.tobytes() == a0.tobytes()
+
+
 def _batch(config, seed=7):
     """A real tokenized batch: marked CDR-style sentences."""
     rng = np.random.default_rng(seed)

@@ -4,6 +4,7 @@ kill mid-run, rerun, identical triples, no reprocessing."""
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 from datetime import datetime
 
@@ -45,6 +46,25 @@ def _assert_lineage(spark, pages, out_dir, checkpoint_dir, n_buckets):
     return counts
 
 
+def _kill_at_third_commit(monkeypatch):
+    """Simulate a kill: the third lineage commit of the run raises
+    instead of writing its row."""
+    calls = []
+    real = incremental._append_lineage
+
+    def append(*a):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("simulated kill")
+        real(*a)
+
+    monkeypatch.setattr(incremental, "_append_lineage", append)
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 @contextmanager
 def _job_group(sc, group):
     """Run the body in job group ``group``; yields the list the group's
@@ -60,7 +80,7 @@ def _job_group(sc, group):
         jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_kill_and_resume_identical(spark, fixtures, mesh, tmp_path):
+def test_kill_and_resume_identical(spark, fixtures, mesh, tmp_path, monkeypatch):
     pages, _, gold = fixtures
     out1 = str(tmp_path / "full_out")
     cp1 = str(tmp_path / "full_cp")
@@ -74,11 +94,13 @@ def test_kill_and_resume_identical(spark, fixtures, mesh, tmp_path):
 
     out2 = str(tmp_path / "kill_out")
     cp2 = str(tmp_path / "kill_cp")
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        run_resumable(
-            spark, pages, mesh, out2, cp2, run_id="kill", n_buckets=4,
-            fail_after=2, gold=gold,
-        )
+    with monkeypatch.context() as m:
+        _kill_at_third_commit(m)
+        with pytest.raises(RuntimeError, match="simulated kill"):
+            run_resumable(
+                spark, pages, mesh, out2, cp2, run_id="kill", n_buckets=4,
+                gold=gold,
+            )
     done_after_kill = completed_buckets(spark, cp2, "kill", "score")
     assert len(done_after_kill) == 2
 
@@ -261,11 +283,13 @@ def test_mixed_old_and_new_lineage_files(spark, fixtures, mesh, tmp_path, monkey
     written_at is the driver's clock during the run."""
     pages, _, gold = fixtures
     out, cp = tmp_path / "out", tmp_path / "cp"
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        run_resumable(
-            spark, pages, mesh, str(out), str(cp), run_id="mixed", n_buckets=4,
-            fail_after=2, gold=gold,
-        )
+    with monkeypatch.context() as m:
+        _kill_at_third_commit(m)
+        with pytest.raises(RuntimeError, match="simulated kill"):
+            run_resumable(
+                spark, pages, mesh, str(out), str(cp), run_id="mixed", n_buckets=4,
+                gold=gold,
+            )
     old = spark.read.schema(CHECKPOINT_SCHEMA).parquet(str(cp)).collect()
     assert len(old) == 2
     for p in cp.iterdir():
@@ -307,3 +331,71 @@ def test_mixed_old_and_new_lineage_files(spark, fixtures, mesh, tmp_path, monkey
     assert len(new) == 2
     assert all(before <= t <= after for t in new)
     assert not [p.name for p in cp.iterdir() if p.name.endswith((".tmp", ".tmp.crc"))]
+
+
+def test_next_bucket_planned_before_commit(spark, fixtures, mesh, tmp_path, monkeypatch):
+    """Two buckets in flight: bucket b+1 is planned (and its write
+    submitted) before bucket b's lineage row is committed, and rows are
+    committed in bucket order."""
+    pages, _, gold = fixtures
+    events = []
+    real_plan = pipeline.score_candidates
+    real_commit = incremental._append_lineage
+
+    def plan(*a, **k):
+        events.append("plan")
+        return real_plan(*a, **k)
+
+    def commit(spark, checkpoint_dir, row):
+        events.append(f"commit {row['partition_id']}")
+        real_commit(spark, checkpoint_dir, row)
+
+    monkeypatch.setattr(pipeline, "score_candidates", plan)
+    monkeypatch.setattr(incremental, "_append_lineage", commit)
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    run_resumable(spark, pages, mesh, out, cp, run_id="order", n_buckets=4, gold=gold)
+    assert events == [
+        "plan", "plan", "commit 0", "plan", "commit 1", "plan", "commit 2", "commit 3",
+    ]
+    _assert_lineage(spark, pages, out, cp, 4)
+
+
+def test_failing_write_stops_later_commits(spark, fixtures, mesh, tmp_path, monkeypatch):
+    """The second bucket's scoring write fails at execution: the run
+    re-raises that error once the in-flight write has finished, only
+    bucket 0 is committed, the write threads are gone, and a rerun
+    completes the other buckets with the rows of an uninterrupted run."""
+    pages, _, gold = fixtures
+    full = run_resumable(
+        spark, pages, mesh, str(tmp_path / "full_out"), str(tmp_path / "full_cp"),
+        run_id="full", n_buckets=4, gold=gold,
+    )
+    expected = _sorted_rows(full)
+
+    planned = []
+    real = pipeline.score_candidates
+
+    def plan(*a, **k):
+        planned.append(1)
+        scored = real(*a, **k)
+        if len(planned) == 2:
+            scored = scored.withColumn("pred", F.raise_error(F.lit("failed bucket write")).cast("int"))
+        return scored
+
+    out, cp = tmp_path / "out", tmp_path / "cp"
+    threads = threading.active_count()
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "score_candidates", plan)
+        with pytest.raises(Exception, match="failed bucket write"):
+            run_resumable(
+                spark, pages, mesh, str(out), str(cp), run_id="fail", n_buckets=4,
+                gold=gold,
+            )
+    assert threading.active_count() == threads
+    assert completed_buckets(spark, str(cp), "fail", "score") == {0}
+
+    resumed = run_resumable(
+        spark, pages, mesh, str(out), str(cp), run_id="fail", n_buckets=4, gold=gold
+    )
+    _assert_lineage(spark, pages, str(out), str(cp), 4)
+    assert _sorted_rows(resumed) == expected
